@@ -32,16 +32,16 @@ Cluster:
     spark-submit ... jobs/query_job.py ndv --data ... --col tag --where ...
     spark-submit ... jobs/query_job.py explain --data ... --where ...
         (what WOULD a scan read: block classes + exact payload bytes,
-         from metadata alone)
+         from metadata alone, classified on the driver: no Spark job)
     spark-submit ... jobs/query_job.py stats --data ...
     spark-submit ... jobs/query_job.py ctas --data ... --output dst \
         --where '[["prefix","tag","w0"]]' [--cluster-by v]
     spark-submit ... jobs/query_job.py join --data encA --data2 encB \
         --on k[,k2] [--where ...] [--where2 ...] \
-        [--columns a1,a2] [--columns2 b1] --output dst
-        (general encoded x encoded inner join: both sides through their
-         own pruned scans; broadcast + runtime filter decided from the
-         format's metadata)
+        [--columns a1,a2] [--columns2 b1] [--how inner|left] --output dst
+        (general encoded x encoded inner or LEFT join: both sides through
+         their own pruned scans; broadcast + runtime filter decided from
+         the format's metadata)
 
 Sandbox: python jobs/query_job.py <action> ... --cpus 32
 """

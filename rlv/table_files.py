@@ -1476,12 +1476,25 @@ def _query_tasks(enc_dir: str) -> pd.DataFrame:
 
 
 def _spark_tasks(spark: SparkSession, tasks: pd.DataFrame):
-    """Spark task DataFrame from a :func:`_query_tasks` frame, one
-    partition per task."""
-    return spark.createDataFrame(
-        [(f, s) for f, s in zip(tasks["file"], tasks["segment"])],
-        "file string, segment string",
-    ).repartition(len(tasks))
+    """Spark task DataFrame from a :func:`_query_tasks` frame: task i is
+    the one row of partition i.  Built from ``spark.range`` with one
+    slice per id, each task column picked out of an array literal by id,
+    so the relation runs in the JVM alone: no Python-worker stage to
+    deserialize a driver list and no shuffle to spread it, ahead of the
+    operator's own ``mapInPandas`` worker."""
+    from pyspark.sql import functions as F
+
+    n = len(tasks)
+    pick = (F.col("id") + 1).cast("int")
+    return spark.range(0, n, 1, n).select(
+        F.element_at(
+            F.array(*[F.lit(str(f)) for f in tasks["file"]]), pick
+        ).alias("file"),
+        F.element_at(
+            F.array(*[F.lit(s).cast("string") for s in tasks["segment"]]),
+            pick,
+        ).alias("segment"),
+    )
 
 
 def _typed_field_type(schema: dict, c: str) -> str:
@@ -2982,10 +2995,11 @@ def join_table_files(
     payload byte moves:
 
     * **Broadcast** — each side's exact decode bill comes from the
-      EXPLAIN classification (:func:`explain_scan_table_files`, a
-      payload-free metadata pass); when the smaller side's bill is
-      ``<= broadcast_bytes`` it broadcasts, otherwise Spark's shuffle
-      join runs (AQE may still re-plan at runtime).
+      EXPLAIN classification (:func:`explain_scan_table_files`'s bill, a
+      payload-free metadata pass run on the driver, no Spark job); when
+      the smaller side's bill is ``<= broadcast_bytes`` it broadcasts,
+      otherwise Spark's shuffle join runs (AQE may still re-plan at
+      runtime).
     * **Runtime filter** — on a single-column join whose key is a plain
       int or string column, the smaller side's distinct keys (metadata-
       cheap: dictionary sidecars / codec-level distinct through
@@ -3067,11 +3081,9 @@ def join_table_files(
             f"how must be 'inner' or 'left', got {how!r}"
         )
     for s in sides:
-        [bill] = explain_scan_table_files(
-            spark, s["enc"], s["preds"], columns=s["columns"]
-        ).collect()
-        s["payload_bytes"] = int(bill["payload_bytes"])
-        s["rows_surviving"] = int(bill["rows_surviving"])
+        bill = _scan_bill(s["enc"], s["preds"], s["columns"])
+        s["payload_bytes"] = bill.get("payload_bytes", 0)
+        s["rows_surviving"] = bill.get("rows_surviving", 0)
     small, big = sorted(sides, key=lambda s: s["payload_bytes"])
     if how == "left":
         # only side B may broadcast (Spark cannot broadcast the
@@ -3321,9 +3333,10 @@ def _scan_out_names(schema: dict, col: str,
 
 def _run_scan_tasks(spark: SparkSession, enc_dir: str, schema: dict,
                     out_names: list[str], worker):
-    """One task per live (blocks file, segment), zero shuffle; ints come
-    back cast to their recorded source widths (shared tail of both
-    scans)."""
+    """One task per live (blocks file, segment) on the shuffle-free
+    :func:`_spark_tasks` relation, zero shuffle and no Python stage ahead
+    of the scan worker; ints come back cast to their recorded source
+    widths (shared tail of both scans)."""
     tasks = _query_tasks(enc_dir)
     str_cols = set(schema["str_cols"])
     scan_schema = ", ".join(
@@ -4228,7 +4241,7 @@ def count_table_files_where(spark: SparkSession, enc_dir: str, preds):
             0 if live is None
             else int(sum(int(n) for n in live["n_docs"]))
         )
-        return spark.createDataFrame([(total,)], "n_rows bigint")
+        return _one_row_frame(spark, {"n_rows": total}, "n_rows bigint")
     specs = _norm_preds(schema, list(preds))
     worker = _make_count_worker(specs, symbols_hex=_symbols_hex(enc_dir))
     tasks = _query_tasks(enc_dir)
@@ -5452,185 +5465,146 @@ EXPLAIN_SCHEMA = (
     "rows_pruned bigint, rows_surviving bigint, payload_bytes bigint"
 )
 
+AGG_EXPLAIN_SCHEMA = (
+    "files bigint, blocks_total bigint, blocks_pruned bigint, "
+    "blocks_full bigint, blocks_partial bigint, blocks_meta_served bigint, "
+    "rows_total bigint, payload_bytes bigint"
+)
 
-def _make_explain_worker(preds: list[dict], read_cols: list[str],
-                         symbols_hex: tuple[str, ...] | None):
-    """EXPLAIN worker over one blocks file: run the EXACT phase-1
-    classification the scan would run (shared :func:`_pred_classify` —
+
+def _explain_scan_task(path: str, seg: str | None, preds: list[dict],
+                       read_cols: list[str], symbols) -> dict:
+    """Scan EXPLAIN bill of one task: run the EXACT phase-1
+    classification the scan would run (shared :func:`_classify_file` —
     metadata + dictionary sidecars, zero payload bytes) and report what
     phase 2 WOULD read: per-class block/row counts and the exact sum of
     surviving blocks' ``enc_bytes`` across the columns the scan fetches
     (predicate + projected)."""
-    from rlv.util import tune_malloc
-
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
-    pred_cols = _spec_cols(preds)
-    all_cols = list(dict.fromkeys([*pred_cols, *read_cols]))
-
-    def run_explain(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, pred_cls, _, _, _, ebytes, _ = \
-                    _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols, with_enc_bytes=True,
-                    )
-                # mirror the scan's payload planner: a pred that
-                # full-matches EVERY surviving key never reads its column
-                # (unless projected or referenced by an OR leaf)
-                surv_keys = set(cls)
-                needed = set(read_cols) | {
-                    atom["col"] for node in or_nodes for leaf in node
-                    for atom in _leaf_atoms(leaf)
-                }
-                leaf_preds = [*int_preds, *mem_preds]
-                for i, p in enumerate(leaf_preds):
-                    if p.get("mask_free"):
-                        continue  # classification-only: never read
-                    if not all(
-                        pred_cls[i].get(k) == "full" for k in surv_keys
-                    ) or not surv_keys:
-                        needed.add(p["col"])
-                billed = [c for c in all_cols if c in needed]
-                n_full = n_part = rows_surv = rows_total = 0
-                payload = 0
-                for key in keys:
-                    nv = info[all_cols[0]][key][0]
-                    rows_total += nv
-                    kind = cls.get(key)
-                    if kind is None:
-                        continue
-                    if kind == "full":
-                        n_full += 1
-                    else:
-                        n_part += 1
-                    rows_surv += nv
-                    payload += sum(
-                        ebytes[c].get(key, 0) for c in billed
-                    )
-                yield pd.DataFrame(
-                    {
-                        "files": pd.Series([1], dtype="int64"),
-                        "blocks_total": pd.Series([len(keys)],
-                                                  dtype="int64"),
-                        "blocks_pruned": pd.Series(
-                            [len(keys) - n_full - n_part], dtype="int64"
-                        ),
-                        "blocks_full": pd.Series([n_full], dtype="int64"),
-                        "blocks_partial": pd.Series([n_part],
-                                                    dtype="int64"),
-                        "rows_total": pd.Series([rows_total],
-                                                dtype="int64"),
-                        "rows_pruned": pd.Series(
-                            [rows_total - rows_surv], dtype="int64"
-                        ),
-                        "rows_surviving": pd.Series([rows_surv],
-                                                    dtype="int64"),
-                        "payload_bytes": pd.Series([payload],
-                                                   dtype="int64"),
-                    }
-                )
-
-    return run_explain
+    all_cols = list(dict.fromkeys([*_spec_cols(preds), *read_cols]))
+    file_sid = os.path.splitext(os.path.basename(path))[0]
+    info, keys, cls, pred_cls, _, _, _, ebytes, _ = _classify_file(
+        path, file_sid, seg, all_cols, int_preds, mem_preds, or_nodes,
+        symbols, with_enc_bytes=True,
+    )
+    # mirror the scan's payload planner: a pred that full-matches EVERY
+    # surviving key never reads its column (unless projected or
+    # referenced by an OR leaf)
+    surv_keys = set(cls)
+    needed = set(read_cols) | {
+        atom["col"] for node in or_nodes for leaf in node
+        for atom in _leaf_atoms(leaf)
+    }
+    for i, p in enumerate([*int_preds, *mem_preds]):
+        if p.get("mask_free"):
+            continue  # classification-only: never read
+        if not all(
+            pred_cls[i].get(k) == "full" for k in surv_keys
+        ) or not surv_keys:
+            needed.add(p["col"])
+    billed = [c for c in all_cols if c in needed]
+    n_full = n_part = rows_surv = rows_total = payload = 0
+    for key in keys:
+        nv = info[all_cols[0]][key][0]
+        rows_total += nv
+        kind = cls.get(key)
+        if kind is None:
+            continue
+        if kind == "full":
+            n_full += 1
+        else:
+            n_part += 1
+        rows_surv += nv
+        payload += sum(ebytes[c].get(key, 0) for c in billed)
+    return {
+        "blocks_total": len(keys),
+        "blocks_pruned": len(keys) - n_full - n_part,
+        "blocks_full": n_full,
+        "blocks_partial": n_part,
+        "rows_total": rows_total,
+        "rows_pruned": rows_total - rows_surv,
+        "rows_surviving": rows_surv,
+        "payload_bytes": payload,
+    }
 
 
-def _make_agg_explain_worker(value_cols: list[str], preds: list[dict],
-                             symbols_hex: tuple[str, ...] | None):
-    """EXPLAIN worker for the aggregate: the exact phase-1 classification
-    :func:`_make_agg_worker` runs, reporting what its phase 2 WOULD read —
-    full blocks with a recorded ``sum_val`` are served from the stats row
-    (zero payload), so the bill is value payload at partial keys (plus
-    full keys of pre-``sum_val`` files) and predicate payload at partial
-    keys where that predicate is not full."""
-    from rlv.util import tune_malloc
-
+def _explain_agg_task(path: str, seg: str | None, value_cols: list[str],
+                      preds: list[dict], symbols) -> dict:
+    """Aggregate EXPLAIN bill of one task: the exact phase-1
+    classification :func:`_make_agg_worker` runs, reporting what its
+    phase 2 WOULD read — full blocks with a recorded ``sum_val`` are
+    served from the stats row (zero payload), so the bill is value
+    payload at partial keys (plus full keys of pre-``sum_val`` files) and
+    predicate payload at partial keys where that predicate is not
+    full."""
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
-    pred_cols = _spec_cols(preds)
-    all_cols = list(dict.fromkeys([*pred_cols, *value_cols]))
-
-    def run_explain(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
+    all_cols = list(dict.fromkeys([*_spec_cols(preds), *value_cols]))
+    file_sid = os.path.splitext(os.path.basename(path))[0]
+    info, keys, cls, pred_cls, _, _, or_data, ebytes, sums = \
+        _classify_file(
+            path, file_sid, seg, all_cols, int_preds, mem_preds, or_nodes,
+            symbols, with_enc_bytes=True,
         )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, pred_cls, _, _, or_data, ebytes, sums = \
-                    _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols, with_enc_bytes=True,
-                    )
-                n_full = n_part = n_meta = rows_total = 0
-                payload = 0
-                for key in keys:
-                    nv = info[all_cols[0]][key][0]
-                    rows_total += nv
-                    kind = cls.get(key)
-                    if kind is None:
-                        continue
-                    if kind == "full":
-                        n_full += 1
-                        served = True
-                        for vc in value_cols:
-                            if sums[vc].get(key) is None:
-                                payload += ebytes[vc].get(key, 0)
-                                served = False
-                        if served:
-                            n_meta += 1
-                        continue
-                    n_part += 1
-                    for vc in value_cols:
-                        payload += ebytes[vc].get(key, 0)
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes,
-                                             or_data):
-                        if c not in value_cols:
-                            payload += ebytes[c].get(key, 0)
-                yield pd.DataFrame(
-                    {
-                        "blocks_total": pd.Series([len(keys)],
-                                                  dtype="int64"),
-                        "blocks_pruned": pd.Series(
-                            [len(keys) - n_full - n_part], dtype="int64"
-                        ),
-                        "blocks_full": pd.Series([n_full], dtype="int64"),
-                        "blocks_partial": pd.Series([n_part],
-                                                    dtype="int64"),
-                        "blocks_meta_served": pd.Series([n_meta],
-                                                        dtype="int64"),
-                        "rows_total": pd.Series([rows_total],
-                                                dtype="int64"),
-                        "payload_bytes": pd.Series([payload],
-                                                   dtype="int64"),
-                    }
-                )
-
-    return run_explain
+    n_full = n_part = n_meta = rows_total = payload = 0
+    for key in keys:
+        rows_total += info[all_cols[0]][key][0]
+        kind = cls.get(key)
+        if kind is None:
+            continue
+        if kind == "full":
+            n_full += 1
+            served = True
+            for vc in value_cols:
+                if sums[vc].get(key) is None:
+                    payload += ebytes[vc].get(key, 0)
+                    served = False
+            if served:
+                n_meta += 1
+            continue
+        n_part += 1
+        for vc in value_cols:
+            payload += ebytes[vc].get(key, 0)
+        for c in _pred_need_cols(key, pred_cls, int_preds, mem_preds,
+                                 or_nodes, or_data):
+            if c not in value_cols:
+                payload += ebytes[c].get(key, 0)
+    return {
+        "blocks_total": len(keys),
+        "blocks_pruned": len(keys) - n_full - n_part,
+        "blocks_full": n_full,
+        "blocks_partial": n_part,
+        "blocks_meta_served": n_meta,
+        "rows_total": rows_total,
+        "payload_bytes": payload,
+    }
 
 
-AGG_EXPLAIN_SCHEMA = (
-    "blocks_total bigint, blocks_pruned bigint, blocks_full bigint, "
-    "blocks_partial bigint, blocks_meta_served bigint, rows_total bigint, "
-    "payload_bytes bigint"
-)
+def _explain_bill(enc_dir: str, bill_of_task) -> dict:
+    """Sum ``bill_of_task(path, segment, symbols)`` over the dataset's
+    query tasks ON THE DRIVER: the pass reads only metadata columns and
+    sidecars (a few KB per file), so it runs in-process, not as a Spark
+    job.  ``files`` counts LIVE FILES (planner-known), not tasks: a
+    compacted bin fans out to several segment tasks but is still one
+    file."""
+    tasks = _query_tasks(enc_dir)
+    symbols = engine_files._load_symbols(enc_dir)
+    bill = {"files": int(tasks["file"].nunique())}
+    for path, seg in zip(tasks["file"], tasks["segment"]):
+        for k, v in bill_of_task(path, seg, symbols).items():
+            bill[k] = bill.get(k, 0) + int(v)
+    return bill
+
+
+def _one_row_frame(spark: SparkSession, values: dict, out_schema: str):
+    """One-row DataFrame of ``values`` (0 where a field is missing),
+    built from pandas: a local relation, so collecting it launches no
+    Spark job (a Python-list frame runs a Python-worker job)."""
+    names = [f.split()[0] for f in out_schema.split(", ")]
+    return spark.createDataFrame(
+        pd.DataFrame({c: pd.Series([values.get(c, 0)], dtype="int64")
+                      for c in names}),
+        out_schema,
+    )
 
 
 def explain_agg_table_files(
@@ -5644,7 +5618,9 @@ def explain_agg_table_files(
     rest (value blocks at predicate boundaries, plus full blocks of
     pre-``sum_val`` files).  A full-range aggregate on a ``sum_val``
     dataset reports ``payload_bytes = 0`` — the number that makes
-    "SUM over 100 TB reads only stats rows" checkable."""
+    "SUM over 100 TB reads only stats rows" checkable.  The
+    classification runs on the driver (:func:`_explain_bill`), the same
+    code the aggregate's workers run, so no Spark job is launched."""
     value_cols = (
         list(value_col) if isinstance(value_col, (list, tuple))
         else [value_col]
@@ -5653,30 +5629,30 @@ def explain_agg_table_files(
         schema = _require_int_col(enc_dir, vc)
         _require_summable(schema, vc)
     specs = _norm_preds(schema, list(preds))
-    worker = _make_agg_explain_worker(
-        value_cols, specs, symbols_hex=_symbols_hex(enc_dir)
+    bill = _explain_bill(
+        enc_dir,
+        lambda path, seg, symbols: _explain_agg_task(
+            path, seg, value_cols, specs, symbols),
     )
-    tasks = _query_tasks(enc_dir)
-    from pyspark.sql import functions as F
+    return _one_row_frame(spark, bill, AGG_EXPLAIN_SCHEMA)
 
-    if tasks.empty:
-        parts = spark.createDataFrame([], AGG_EXPLAIN_SCHEMA)
+
+def _scan_bill(enc_dir: str, preds, columns: list[str] | None) -> dict:
+    """The scan EXPLAIN bill as a dict (see
+    :func:`explain_scan_table_files`)."""
+    schema = _load_table_schema(enc_dir)
+    if schema is None:
+        raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
+    specs = _norm_preds(schema, list(preds))
+    pred_cols = _spec_cols(specs)
+    if columns is None:
+        out_names = list(dict.fromkeys([schema["order_col"], *pred_cols]))
     else:
-        parts = _spark_tasks(spark, tasks).mapInPandas(
-            worker, AGG_EXPLAIN_SCHEMA
-        )
-    sum_cols = ["blocks_total", "blocks_pruned", "blocks_full",
-                "blocks_partial", "blocks_meta_served", "rows_total",
-                "payload_bytes"]
-    return parts.agg(
-        *[
-            F.coalesce(F.sum(c), F.lit(0)).cast("bigint").alias(c)
-            for c in sum_cols
-        ]
-    ).select(
-        F.lit(int(tasks["file"].nunique()) if not tasks.empty else 0)
-        .cast("bigint").alias("files"),
-        *[F.col(c) for c in sum_cols],
+        out_names = _scan_out_names(schema, pred_cols[0], columns)
+    return _explain_bill(
+        enc_dir,
+        lambda path, seg, symbols: _explain_scan_task(
+            path, seg, specs, out_names, symbols),
     )
 
 
@@ -5695,7 +5671,8 @@ def explain_scan_table_files(
     per-block tests the scan's phase 1 runs (shared ``_classify_file``
     machinery — IN-list literal membership included).  The
     operator-facing answer to "how much will this query read?" before
-    committing a 100 TB scan.
+    committing a 100 TB scan.  The classification runs on the driver over
+    the scan's own task list (:func:`_explain_bill`): zero Spark jobs.
 
     Honest granularity caveat: this is the decode bill, byte-exact; the
     parquet TRANSPORT serving it reads whole column-chunk pages of row
@@ -5703,42 +5680,8 @@ def explain_scan_table_files(
     after compaction), so wire-level bytes can exceed it on a segment
     that only partially survives.  On a zone-map-clustered predicate the
     two converge (segments survive or prune wholesale)."""
-    schema = _load_table_schema(enc_dir)
-    if schema is None:
-        raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
-    specs = _norm_preds(schema, list(preds))
-    pred_cols = _spec_cols(specs)
-    if columns is None:
-        out_names = list(dict.fromkeys([schema["order_col"], *pred_cols]))
-    else:
-        out_names = _scan_out_names(schema, pred_cols[0], columns)
-    worker = _make_explain_worker(
-        specs, out_names, symbols_hex=_symbols_hex(enc_dir),
-    )
-    tasks = _query_tasks(enc_dir)
-    from pyspark.sql import functions as F
-
-    if tasks.empty:
-        parts = spark.createDataFrame([], EXPLAIN_SCHEMA)
-    else:
-        parts = _spark_tasks(spark, tasks).mapInPandas(
-            worker, EXPLAIN_SCHEMA
-        )
-    # `files` counts LIVE FILES (planner-known), not tasks — a compacted
-    # bin fans out to several segment tasks but is still one file
-    sum_cols = [
-        "blocks_total", "blocks_pruned", "blocks_full",
-        "blocks_partial", "rows_total", "rows_pruned",
-        "rows_surviving", "payload_bytes",
-    ]
-    return parts.agg(
-        *[
-            F.coalesce(F.sum(c), F.lit(0)).cast("bigint").alias(c)
-            for c in sum_cols
-        ]
-    ).select(
-        F.lit(int(tasks["file"].nunique())).cast("bigint").alias("files"),
-        *[F.col(c) for c in sum_cols],
+    return _one_row_frame(
+        spark, _scan_bill(enc_dir, preds, columns), EXPLAIN_SCHEMA
     )
 
 

@@ -3965,6 +3965,91 @@ def test_explain_counts_files_not_tasks(spark, orders_dir, tmp_path):
         assert after[k] == before[k], k
 
 
+def _spark_jobs(spark, fn, group: str) -> int:
+    """Number of Spark jobs ``fn()`` launches, counted under a job group
+    once the listener bus has drained (the status store is fed
+    asynchronously)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_spark_tasks_relation_is_shuffle_free(spark, orders_dir,
+                                              tmp_path):
+    """The query task relation has no Exchange, one partition per task,
+    task i alone in partition i, and carries each task's segment exactly
+    (null for a whole-file task) — checked on a mix of a compacted
+    dataset's segment tasks and a fresh dataset's whole-file tasks."""
+    import pandas as pd
+
+    merged = str(tmp_path / "merged")
+    _encode(spark, orders_dir, merged)
+    engine_files.compact_blocks(spark, merged, target_bytes=1 << 40)
+    fresh = str(tmp_path / "fresh")
+    _encode(spark, orders_dir, fresh)
+    seg_tasks = table_files._query_tasks(merged)
+    whole_tasks = table_files._query_tasks(fresh)
+    assert len(seg_tasks) >= 2 and seg_tasks["segment"].notna().all()
+    assert whole_tasks["segment"].isna().all()
+    tasks = pd.concat([seg_tasks, whole_tasks], ignore_index=True)
+
+    rel = table_files._spark_tasks(spark, tasks)
+    plan = rel._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert rel.rdd.getNumPartitions() == len(tasks)
+    rows = rel.select(
+        F.spark_partition_id().alias("pid"), "file", "segment"
+    ).collect()
+    assert sorted(r["pid"] for r in rows) == list(range(len(tasks)))
+    by_pid = {r["pid"]: (r["file"], r["segment"]) for r in rows}
+    for i, (f, s) in enumerate(zip(tasks["file"], tasks["segment"])):
+        assert by_pid[i] == (f, s), i
+
+
+def test_explain_and_metadata_count_launch_no_spark_job(spark, orders_dir,
+                                                         tmp_path):
+    """EXPLAIN (scan and aggregate) classifies on the driver and returns a
+    local relation, and a predicate-free COUNT(*) is served from the
+    manifest: collecting any of them launches zero Spark jobs."""
+    out = str(tmp_path / "enc")
+    _encode(spark, orders_dir, out)
+    preds = [("between", "o_orderkey", 0, 5000)]
+    res = {}
+
+    def explain_scan():
+        res["scan"] = table_files.explain_scan_table_files(
+            spark, out, preds, columns=["o_orderkey", "o_custkey"]
+        ).collect()
+
+    def explain_agg():
+        res["agg"] = table_files.explain_agg_table_files(
+            spark, out, "o_custkey", preds).collect()
+
+    def count_all():
+        res["count"] = table_files.count_table_files_where(
+            spark, out, []).collect()
+
+    # control: the counter is not blind
+    assert _spark_jobs(spark, lambda: spark.range(3).collect(),
+                       "rlv-control") >= 1
+    assert _spark_jobs(spark, explain_scan, "rlv-explain-scan") == 0
+    assert _spark_jobs(spark, explain_agg, "rlv-explain-agg") == 0
+    assert _spark_jobs(spark, count_all, "rlv-count-all") == 0
+    n = spark.read.parquet(orders_dir).count()
+    [scan], [agg], [cnt] = res["scan"], res["agg"], res["count"]
+    assert cnt["n_rows"] == n
+    assert scan["files"] == agg["files"] == len(
+        glob.glob(f"{out}/blocks/*.parquet"))
+    assert scan["rows_total"] == agg["rows_total"] == n
+    assert scan["blocks_full"] + scan["blocks_partial"] > 0
+    assert agg["blocks_total"] == scan["blocks_total"]
+
+
 def test_count_pushdown_matches_python(spark, tmp_path):
     """COUNT(*) pushdown: full blocks count from metadata only, partial
     blocks decode only predicate columns; matches a Python reference on
