@@ -325,23 +325,28 @@ def _idx_key_array(valid_vals: np.ndarray):
     )
 
 
-def _int_col_types(input_files: list[str], int_cols: list[str]) -> dict:
+def _int_col_types(input_files: list[str], int_cols: list[str],
+                   str_cols: list[str]) -> dict:
     """{col: arrow type alias} from the first file's footer (driver metadata
     only).  Beside the plain int widths, timestamps/dates record their
     epoch-integer alias and float32/float64 their total-order-key alias
     (both decode back exactly).  Unknown/wider types record as int64 — the
     engine's internal width; uint64 records as int64 too, and a uint64
     VALUE above 2^63-1 fails the worker's checked Arrow cast loudly (never
-    numpy-wraps)."""
+    numpy-wraps).  A declared int or string column the footer lacks raises
+    ``ValueError`` here, on the driver, instead of a worker ``KeyError``."""
     import pyarrow.parquet as pq
 
     sch = pq.ParquetFile(input_files[0]).schema_arrow
+    missing = [c for c in [*int_cols, *str_cols] if c not in sch.names]
+    if missing:
+        raise ValueError(
+            f"column(s) {missing} not in {input_files[0]} "
+            f"(columns: {sch.names})"
+        )
     out = {}
     for c in int_cols:
-        try:
-            t = str(sch.field(c).type)
-        except KeyError:
-            t = "int64"
+        t = str(sch.field(c).type)
         if t in _INT_TYPE_ALIASES or _plane_kind(t) != "int":
             out[c] = t
         else:
@@ -719,7 +724,8 @@ def encode_table_files(
             f"order_col {order_col!r} must be one of int_cols so the decoded "
             "table is self-describing"
         )
-    col_types = _int_col_types(list(input_files), list(int_cols))
+    col_types = _int_col_types(list(input_files), list(int_cols),
+                               list(str_cols))
     for c, scale in (decimal_cols or {}).items():
         if c not in col_types or col_types[c] not in ("float", "double"):
             raise ValueError(
@@ -1497,6 +1503,73 @@ def _spark_tasks(spark: SparkSession, tasks: pd.DataFrame):
     )
 
 
+# Cap on a plan's surviving cells (rows of surviving blocks x columns the
+# operator reads) for running it on the driver, see :func:`_run_tasks`.
+# On a 4-core host a 3-column scan runs faster in-process than as a Spark
+# job up to ~100k rows (300k cells); the cap sits below that crossover.
+_DRIVER_LOCAL_MAX_CELLS = 1 << 18
+
+
+def _driver_local_pdf(enc_dir: str, tasks: pd.DataFrame, worker,
+                      out_schema: str, specs: list[dict],
+                      read_cols: list[str]) -> pd.DataFrame | None:
+    """``worker``'s output over ``tasks``, run in this process, or None
+    when the plan is not tiny.  The decision walks the tasks through the
+    scan EXPLAIN classification (:func:`_explain_scan_task`, the same
+    :func:`_classify_file` the workers run) and stops as soon as the
+    summed ``rows_surviving x len(read_cols)`` passes
+    ``_DRIVER_LOCAL_MAX_CELLS``, so a large plan pays only the metadata
+    reads of its first tasks.  Columns come back in ``out_schema`` order
+    (``mapInPandas`` matches them by name)."""
+    from pyspark.sql.types import StructType
+
+    symbols = engine_files._load_symbols(enc_dir)
+    cells = 0
+    for path, seg in zip(tasks["file"], tasks["segment"]):
+        cells += len(read_cols) * _explain_scan_task(
+            path, seg, specs, read_cols, symbols)["rows_surviving"]
+        if cells > _DRIVER_LOCAL_MAX_CELLS:
+            return None
+    names = StructType.fromDDL(out_schema).names
+    parts = list(worker(iter([tasks])))
+    if not parts:
+        return pd.DataFrame({c: [] for c in names})
+    return pd.concat(parts, ignore_index=True)[names]
+
+
+def _run_tasks(spark: SparkSession, enc_dir: str, tasks: pd.DataFrame,
+               worker, out_schema: str, specs: list[dict],
+               read_cols: list[str]):
+    """Run a query operator's ``worker`` over its :func:`_query_tasks`
+    frame, as a DataFrame of ``out_schema``.  A tiny plan (see
+    :func:`_driver_local_pdf`; an empty task list is one) runs the worker
+    in this process and returns a local relation: no Spark job until the
+    caller's own operators, and never a Python-worker stage, whose fixed
+    cost (~0.4 s on a 4-core host) dwarfs decoding a few blocks.  Any
+    other plan runs as Spark tasks (:func:`_spark_run`)."""
+    pdf = _driver_local_pdf(enc_dir, tasks, worker, out_schema, specs,
+                            read_cols)
+    if pdf is None:
+        return _spark_run(spark, tasks, worker, out_schema)
+    return spark.createDataFrame(pdf, out_schema)
+
+
+def _spark_run(spark: SparkSession, tasks: pd.DataFrame, worker,
+               out_schema: str):
+    """``worker`` as one ``mapInPandas`` task per query task on the
+    :func:`_spark_tasks` relation.  Each Python worker process tunes
+    malloc first (:func:`rlv.util.tune_malloc`); only there: applied to
+    the driver by an in-process run, the same settings slowed a wide
+    scan's collect to Arrow by ~0.2 s on a 4-core host."""
+    def run(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from rlv.util import tune_malloc
+
+        tune_malloc()
+        yield from worker(pdf_iter)
+
+    return _spark_tasks(spark, tasks).mapInPandas(run, out_schema)
+
+
 def _typed_field_type(schema: dict, c: str) -> str:
     """Spark type of a column as the operators return it: string columns as
     string, int columns at their recorded source width, timestamps/dates/
@@ -1800,8 +1873,6 @@ def _make_scan_worker(schema: dict, preds: list[dict],
     selective predicate; row masks AND together.  A single-literal member
     pred whose column is projected keeps the equality fast path: kept rows
     ARE the literal, no second decode, no dictionary gather."""
-    from rlv.util import tune_malloc
-
     str_cols = set(schema["str_cols"])
     symbols = (
         [bytes.fromhex(h) for h in symbols_hex]
@@ -1842,7 +1913,6 @@ def _make_scan_worker(schema: dict, preds: list[dict],
 
         from rlv import blocks as B
 
-        tune_malloc()
         meta_pred_cols = sorted(
             {p["col"] for p in int_preds}
             | {atom["col"] for node in or_nodes for leaf in node
@@ -2375,7 +2445,8 @@ def scan_table_files(
     ``(order_col, col)``, or just ``(order_col,)`` when the scanned column
     IS the sort key.
 
-    One task per live blocks file, zero shuffle.  The zone-map predicate
+    One task per live (blocks file, segment), zero shuffle; a tiny plan
+    runs on the driver instead (:func:`_run_tasks`).  The zone-map predicate
     runs as PARQUET FILTERS on a payload-free metadata read first, so
     pruned blocks are neither decoded NOR materialized from disk; only
     surviving block ordinals' payloads are fetched — and only for the
@@ -2390,15 +2461,12 @@ def scan_table_files(
     by design: dense codes are per-block ranks)."""
     schema = _require_int_col(enc_dir, col)
     out_names = _scan_out_names(schema, col, columns)
-    worker = _make_scan_worker(
-        schema,
+    return _run_scan_tasks(
+        spark, enc_dir, schema, out_names,
         [{"kind": "range", "col": col,
           "lo": _plane_literal(schema, col, lo, "lo"),
           "hi": _plane_literal(schema, col, hi, "hi")}],
-        out_names,
-        symbols_hex=_symbols_hex(enc_dir),
     )
-    return _run_scan_tasks(spark, enc_dir, schema, out_names, worker)
 
 
 def scan_table_files_eq(
@@ -2431,14 +2499,11 @@ def scan_table_files_eq(
         )
     out_names = _scan_out_names(schema, col, columns)
     v = value.encode("utf-8")
-    worker = _make_scan_worker(
-        schema,
+    return _run_scan_tasks(
+        spark, enc_dir, schema, out_names,
         [{"kind": "member", "col": col,
           "match": _literals_matcher((v,)), "eq_single": v}],
-        out_names,
-        symbols_hex=_symbols_hex(enc_dir),
     )
-    return _run_scan_tasks(spark, enc_dir, schema, out_names, worker)
 
 
 def scan_table_files_in(
@@ -2471,15 +2536,12 @@ def scan_table_files_in(
     if not uniq:
         raise ValueError("values must name at least one literal")
     out_names = _scan_out_names(schema, col, columns)
-    worker = _make_scan_worker(
-        schema,
+    return _run_scan_tasks(
+        spark, enc_dir, schema, out_names,
         [{"kind": "member", "col": col,
           "match": _literals_matcher(uniq),
           "eq_single": uniq[0] if len(uniq) == 1 else None}],
-        out_names,
-        symbols_hex=_symbols_hex(enc_dir),
     )
-    return _run_scan_tasks(spark, enc_dir, schema, out_names, worker)
 
 
 def _str_range_matcher(lo_b: bytes, hi_b: bytes):
@@ -2590,17 +2652,14 @@ def scan_table_files_str_range(
     sidecar."""
     schema = _require_str_col(enc_dir, col, "ranges")
     out_names = _scan_out_names(schema, col, columns)
-    worker = _make_scan_worker(
-        schema,
+    return _run_scan_tasks(
+        spark, enc_dir, schema, out_names,
         [{"kind": "member", "col": col,
           "match": _str_range_matcher(
               lo.encode("utf-8"), hi.encode("utf-8")
           ),
           "eq_single": None}],
-        out_names,
-        symbols_hex=_symbols_hex(enc_dir),
     )
-    return _run_scan_tasks(spark, enc_dir, schema, out_names, worker)
 
 
 def scan_table_files_prefix(
@@ -2619,15 +2678,12 @@ def scan_table_files_prefix(
     SQL's ``LIKE '%'`` — every non-NULL row."""
     schema = _require_str_col(enc_dir, col, "prefixes")
     out_names = _scan_out_names(schema, col, columns)
-    worker = _make_scan_worker(
-        schema,
+    return _run_scan_tasks(
+        spark, enc_dir, schema, out_names,
         [{"kind": "member", "col": col,
           "match": _str_prefix_matcher(prefix.encode("utf-8")),
           "eq_single": None}],
-        out_names,
-        symbols_hex=_symbols_hex(enc_dir),
     )
-    return _run_scan_tasks(spark, enc_dir, schema, out_names, worker)
 
 
 def _invert_matcher(match):
@@ -2894,7 +2950,8 @@ def scan_table_files_where(
     keeps SQL NULL semantics (NULL never matches, except ``isnull``),
     and all projection paths (int widths, string gathers, NULL
     preservation) are shared with the single-predicate scans.  One task
-    per live blocks file, zero shuffle."""
+    per live (blocks file, segment), zero shuffle; a tiny plan runs on
+    the driver instead (:func:`_run_tasks`)."""
     schema = _load_table_schema(enc_dir)
     if schema is None:
         raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
@@ -2904,10 +2961,7 @@ def scan_table_files_where(
         out_names = list(dict.fromkeys([schema["order_col"], *pred_cols]))
     else:
         out_names = _scan_out_names(schema, pred_cols[0], columns)
-    worker = _make_scan_worker(
-        schema, specs, out_names, symbols_hex=_symbols_hex(enc_dir),
-    )
-    return _run_scan_tasks(spark, enc_dir, schema, out_names, worker)
+    return _run_scan_tasks(spark, enc_dir, schema, out_names, specs)
 
 
 def semijoin_scan_table_files(
@@ -3008,7 +3062,14 @@ def join_table_files(
       ``runtime_filter_max_keys`` of them — the DPP shape, shrinking the
       fact scan before the join instead of after it.  More keys than the
       cap: the filter is skipped (never an error — the join itself is
-      the right plan then).
+      the right plan then).  The distinct pass is skipped outright when
+      the source side's ``rows_surviving`` exceeds ``50 *
+      runtime_filter_max_keys``.  That guard bounds ROWS, not key NDV: a
+      heavy side with few distinct keys loses a filter it could have
+      used.  Results are unaffected either way.
+    * **Driver-local sides** — each side's scan runs in this process when
+      its plan is tiny (:func:`_run_tasks`); ``plan`` records it as
+      ``driver_local_a`` / ``driver_local_b``.
 
     ``on`` is one column name or a list present on BOTH sides with equal
     restored Spark types; non-key projected columns must not collide
@@ -3141,6 +3202,10 @@ def join_table_files(
         dfs[id(s)] = scan_table_files_where(
             spark, s["enc"], s["preds"], columns=s["columns"]
         )
+    for name, s in zip("ab", sides):
+        plan[f"driver_local_{name}"] = "MapInPandas" not in (
+            dfs[id(s)]._jdf.queryExecution().logical().toString()
+        )
     small_df, big_df = dfs[id(small)], dfs[id(big)]
     if plan["broadcast"]:
         small_df = F.broadcast(small_df)
@@ -3228,7 +3293,7 @@ def ctas_table_files(
         if _dec_alias_parts(src_types.get(c, "int64"))
     } or None
     idx_out = [
-        c for c in int_out if c in schema.get("index_cols", ())
+        c for c in out_names if c in schema.get("index_cols", ())
     ] or None
     if cluster_by is not None:
         # the clustered variant re-sorts anyway, so the scan output is
@@ -3332,25 +3397,20 @@ def _scan_out_names(schema: dict, col: str,
 
 
 def _run_scan_tasks(spark: SparkSession, enc_dir: str, schema: dict,
-                    out_names: list[str], worker):
-    """One task per live (blocks file, segment) on the shuffle-free
-    :func:`_spark_tasks` relation, zero shuffle and no Python stage ahead
-    of the scan worker; ints come back cast to their recorded source
-    widths (shared tail of both scans)."""
-    tasks = _query_tasks(enc_dir)
+                    out_names: list[str], specs: list[dict]):
+    """The pruned scan of ``specs`` projected to ``out_names``, dispatched
+    by :func:`_run_tasks`; ints come back cast to their recorded source
+    widths (shared tail of every scan)."""
     str_cols = set(schema["str_cols"])
     scan_schema = ", ".join(
         f"`{c}` {'string' if c in str_cols else 'bigint'}"
         for c in out_names
     )
-    if tasks.empty:
-        # all splits dead (e.g. freshly-initialized dataset): empty result,
-        # same shape — repartition(0) would throw
-        out = spark.createDataFrame([], scan_schema)
-    else:
-        out = _spark_tasks(spark, tasks).mapInPandas(worker, scan_schema)
-    from pyspark.sql import functions as F
-
+    worker = _make_scan_worker(
+        schema, specs, out_names, symbols_hex=_symbols_hex(enc_dir),
+    )
+    out = _run_tasks(spark, enc_dir, _query_tasks(enc_dir), worker,
+                     scan_schema, specs, out_names)
     return out.select(
         *[_typed_out_expr(schema, c) for c in out_names]
     )
@@ -3814,8 +3874,6 @@ def _make_agg_worker(value_cols: list[str], preds: list[dict],
     there, AND the masks, and pick the value rows.  One pass classifies
     and masks for ALL value columns: k aggregate sets cost one predicate
     evaluation, not k.  Emits one labeled row per value column."""
-    from rlv.util import tune_malloc
-
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     pred_cols = _spec_cols(preds)
     all_cols = list(dict.fromkeys([*pred_cols, *value_cols]))
@@ -3824,7 +3882,6 @@ def _make_agg_worker(value_cols: list[str], preds: list[dict],
 
         from rlv import blocks as B
 
-        tune_malloc()
         symbols = (
             [bytes.fromhex(h) for h in symbols_hex]
             if symbols_hex is not None
@@ -3996,9 +4053,10 @@ def agg_table_files(
     O(selectivity) — the same shape a warehouse gets from page-stats
     pushdown, served by our metadata.
 
-    One task per blocks file emits a partial; a K-row (K = files) final
-    combine produces the row — the only data ever shuffled.  ``sum_val`` is
-    decimal(38,0): per-block sums are exact Python ints
+    One task per (blocks file, segment) emits a partial (in-process on
+    the driver for a tiny plan, :func:`_run_tasks`); a K-row (K = tasks)
+    final combine produces the row — the only data ever shuffled.
+    ``sum_val`` is decimal(38,0): per-block sums are exact Python ints
     (:func:`rlv.blocks.exact_sum_i64`), and 38 digits absorbs any
     real-world table (10^38 > rows * max|int64|), where a bigint
     accumulator could wrap.  SQL NULL semantics throughout: NULL predicate
@@ -4068,21 +4126,16 @@ def agg_table_files_where(
             _typed_out_expr(schema, value_cols[0], src="max_val"),
         ]
 
-    if tasks.empty:
-        base = spark.createDataFrame(
-            pd.DataFrame({"val_col": value_cols})
-        ).select(
-            "val_col",
-            F.lit(0).cast("bigint").alias("n_rows"),
-            F.lit(0).cast("bigint").alias("n_vals"),
-            F.lit(None).cast("decimal(38,0)").alias("_sum"),
-            F.lit(None).cast("bigint").alias("min_val"),
-            F.lit(None).cast("bigint").alias("max_val"),
-        ).select("val_col", "n_rows", "n_vals", *_typed_agg_cols())
-        return base if multi else base.drop("val_col")
-    partials = _spark_tasks(spark, tasks).mapInPandas(
-        worker, "val_col string, " + AGG_PARTIAL_SCHEMA
-    )
+    partial_schema = "val_col string, " + AGG_PARTIAL_SCHEMA
+    if tasks.empty:  # no task emits a partial: fold the identity row
+        partials = spark.createDataFrame(
+            _agg_frame(value_cols, 0,
+                       {vc: [0, 0, None, None] for vc in value_cols}),
+            partial_schema,
+        )
+    else:
+        partials = _run_tasks(spark, enc_dir, tasks, worker,
+                              partial_schema, specs, value_cols)
     combined = partials.groupBy("val_col").agg(
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_vals").alias("n_vals"),
@@ -4156,8 +4209,6 @@ def _make_count_worker(preds: list[dict],
     metadata alone (their recorded ``n_values``); only PARTIAL blocks
     decode — and only their non-full PREDICATE columns, never a value
     column.  One bigint per task."""
-    from rlv.util import tune_malloc
-
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     all_cols = _spec_cols(preds)
 
@@ -4166,7 +4217,6 @@ def _make_count_worker(preds: list[dict],
     ) -> Iterator[pd.DataFrame]:
         from rlv import blocks as B
 
-        tune_malloc()
         symbols = (
             [bytes.fromhex(h) for h in symbols_hex]
             if symbols_hex is not None
@@ -4231,7 +4281,8 @@ def count_table_files_where(spark: SparkSession, enc_dir: str, preds):
     With NO predicates (``preds`` None/empty), ``SELECT count(*)`` is
     served from the MANIFEST alone — live splits' recorded row counts,
     zero Spark jobs, zero file IO (the statistics-served count a
-    warehouse gives you)."""
+    warehouse gives you).  A tiny predicate plan (:func:`_run_tasks`)
+    counts on the driver and folds there too: zero Spark jobs as well."""
     schema = _load_table_schema(enc_dir)
     if schema is None:
         raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
@@ -4247,12 +4298,14 @@ def count_table_files_where(spark: SparkSession, enc_dir: str, preds):
     tasks = _query_tasks(enc_dir)
     from pyspark.sql import functions as F
 
-    if tasks.empty:
-        parts = spark.createDataFrame([], "n_rows bigint")
-    else:
-        parts = _spark_tasks(spark, tasks).mapInPandas(
-            worker, "n_rows bigint"
+    # a tiny plan folds on the driver: a local one-row frame, 0 Spark jobs
+    local = _driver_local_pdf(enc_dir, tasks, worker, "n_rows bigint",
+                              specs, _spec_cols(specs))
+    if local is not None:
+        return _one_row_frame(
+            spark, {"n_rows": int(local["n_rows"].sum())}, "n_rows bigint"
         )
+    parts = _spark_run(spark, tasks, worker, "n_rows bigint")
     return parts.agg(
         F.coalesce(F.sum("n_rows"), F.lit(0)).cast("bigint")
         .alias("n_rows")
@@ -4266,8 +4319,6 @@ def _make_minmax_worker(value_col: str, preds: list[dict],
     value payload); only PARTIAL blocks decode the value column (plus
     their non-full predicate columns) and fold the masked values.  One
     nullable (min_val, max_val) row per task."""
-    from rlv.util import tune_malloc
-
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     all_cols = list(dict.fromkeys([*_spec_cols(preds), value_col]))
 
@@ -4276,7 +4327,6 @@ def _make_minmax_worker(value_col: str, preds: list[dict],
     ) -> Iterator[pd.DataFrame]:
         from rlv import blocks as B
 
-        tune_malloc()
         symbols = (
             [bytes.fromhex(h) for h in symbols_hex]
             if symbols_hex is not None
@@ -4370,15 +4420,10 @@ def minmax_table_files_where(spark: SparkSession, enc_dir: str,
     worker = _make_minmax_worker(
         value_col, specs, symbols_hex=_symbols_hex(enc_dir)
     )
-    tasks = _query_tasks(enc_dir)
     from pyspark.sql import functions as F
 
-    if tasks.empty:
-        parts = spark.createDataFrame([], "min_val bigint, max_val bigint")
-    else:
-        parts = _spark_tasks(spark, tasks).mapInPandas(
-            worker, "min_val bigint, max_val bigint"
-        )
+    parts = _run_tasks(spark, enc_dir, _query_tasks(enc_dir), worker,
+                       "min_val bigint, max_val bigint", specs, [value_col])
     folded = parts.agg(
         F.min("min_val").cast("bigint").alias("min_val"),
         F.max("max_val").cast("bigint").alias("max_val"),
@@ -4451,8 +4496,6 @@ def _make_group_agg_worker(value_col: str, group_col: str,
     string group (one sidecar decode per block maps codes to names), raw
     values for an int group, NULL group keys pooled SQL-style.  Emits one
     partial row per (file, group)."""
-    from rlv.util import tune_malloc
-
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     pred_cols = _spec_cols(preds)
     all_cols = list(dict.fromkeys([group_col, value_col, *pred_cols]))
@@ -4478,7 +4521,6 @@ def _make_group_agg_worker(value_col: str, group_col: str,
 
         from rlv import blocks as B
 
-        tune_malloc()
         symbols = (
             [bytes.fromhex(h) for h in symbols_hex]
             if symbols_hex is not None
@@ -4684,8 +4726,6 @@ def _make_multi_group_agg_worker(value_col: str, group_cols: list[str],
     never exceed (block distinct) × (radix), so int64 cannot overflow at
     any ``rows_per_block``.  Aggregation reuses :func:`_group_seg_agg`
     with a tuple-naming lookup; one partial row per (file, key tuple)."""
-    from rlv.util import tune_malloc
-
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     pred_cols = _spec_cols(preds)
     all_cols = list(dict.fromkeys([*group_cols, value_col, *pred_cols]))
@@ -4716,7 +4756,6 @@ def _make_multi_group_agg_worker(value_col: str, group_cols: list[str],
 
         from rlv import blocks as B
 
-        tune_malloc()
         symbols = (
             [bytes.fromhex(h) for h in symbols_hex]
             if symbols_hex is not None
@@ -4952,11 +4991,12 @@ def agg_table_files_by(
     blocks are never read, full-match blocks skip the predicate decode, only
     boundary blocks decode it.
 
-    Scale shape: one task per blocks file computes per-group partials with
-    ``argsort`` + ``reduceat`` (per-group Python is O(groups), never rows);
-    the only shuffle carries <= groups x files partial rows into a tiny
-    final combine — map-side partial aggregation over the compressed
-    format.  SQL semantics throughout: NULL group keys pool into one NULL
+    Scale shape: one task per (blocks file, segment) — or one in-process
+    run for a tiny plan (:func:`_run_tasks`) — computes per-group
+    partials with ``argsort`` + ``reduceat`` (per-group Python is
+    O(groups), never rows); the only shuffle carries <= groups x files
+    partial rows into a tiny final combine — map-side partial
+    aggregation over the compressed format.  SQL semantics throughout: NULL group keys pool into one NULL
     group, NULL predicate rows never match, ``n_vals``/``sum``/``min``/
     ``max`` skip NULL values (``sum_val`` is NULL for a group with no valid
     values, exact decimal(38,0) otherwise).
@@ -5021,15 +5061,14 @@ def agg_table_files_by(
             f"`{g}` {'string' if g in str_groups else 'bigint'}"
             for g in group_cols
         )
-        out_schema = g_schema + ", " + AGG_PARTIAL_SCHEMA
-        if tasks.empty:
-            return spark.createDataFrame([], out_schema)
-        partials = _spark_tasks(spark, tasks).mapInPandas(
+        partials = _run_tasks(
+            spark, enc_dir, tasks,
             _make_multi_group_agg_worker(
                 value_col, group_cols, str_groups, specs,
                 _symbols_hex(enc_dir),
             ),
-            out_schema,
+            g_schema + ", " + AGG_PARTIAL_SCHEMA, specs,
+            [value_col, *group_cols],
         )
         for g in group_cols:  # SQL key merge: -0.0 == 0.0, NaNs pool
             partials = partials.withColumn(
@@ -5049,18 +5088,13 @@ def agg_table_files_by(
         )
 
     g_type = "string" if group_is_str else "bigint"
-    out_schema = (
-        f"{group_col} {g_type}, n_rows bigint, n_vals bigint, "
-        "sum_val decimal(38,0), min_val bigint, max_val bigint"
-    )
-    if tasks.empty:
-        return spark.createDataFrame([], out_schema)
-    partials = _spark_tasks(spark, tasks).mapInPandas(
+    partials = _run_tasks(
+        spark, enc_dir, tasks,
         _make_group_agg_worker(
             value_col, group_col, group_is_str, specs,
             _symbols_hex(enc_dir),
         ),
-        f"g {g_type}, " + AGG_PARTIAL_SCHEMA,
+        f"g {g_type}, " + AGG_PARTIAL_SCHEMA, specs, [value_col, group_col],
     )
     partials = partials.withColumn(
         "g", _group_key_norm_expr(schema, group_col, src="g")
@@ -5084,8 +5118,6 @@ def _make_distinct_worker(col: str, symbols_hex: tuple[str, ...] | None):
     dictionary sidecars (each a block's sorted-distinct VALID values), union
     them, and append one NULL row iff any block's metadata records
     ``n_nulls > 0`` — no payload column is ever read."""
-    from rlv.util import tune_malloc
-
     def run_distinct(
         pdf_iter: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
@@ -5093,7 +5125,6 @@ def _make_distinct_worker(col: str, symbols_hex: tuple[str, ...] | None):
 
         from rlv import blocks as B
 
-        tune_malloc()
         symbols = (
             [bytes.fromhex(h) for h in symbols_hex]
             if symbols_hex is not None
@@ -5137,8 +5168,6 @@ def _make_idx_distinct_worker(col: str,
     exact distinct set unions the (small) sidecars — ZERO payload bytes,
     the same format-beats-raw shape string DISTINCT gets — with the NULL
     row from block metadata."""
-    from rlv.util import tune_malloc
-
     def run_distinct(
         pdf_iter: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
@@ -5146,7 +5175,6 @@ def _make_idx_distinct_worker(col: str,
 
         from rlv import blocks as B
 
-        tune_malloc()
         symbols = (
             [bytes.fromhex(h) for h in symbols_hex]
             if symbols_hex is not None
@@ -5197,8 +5225,6 @@ def _make_int_distinct_worker(col: str):
     block's :func:`rlv.blocks.distinct_block_values` (RLE uniques its run
     values without expanding rows; DICT reads only its dictionary plane) and
     append one NULL row iff any block records ``n_nulls > 0``."""
-    from rlv.util import tune_malloc
-
     def run_distinct(
         pdf_iter: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
@@ -5206,7 +5232,6 @@ def _make_int_distinct_worker(col: str):
 
         from rlv import blocks as B
 
-        tune_malloc()
         for pdf in pdf_iter:
             for _, row in pdf.iterrows():
                 seg = _task_seg(row)
@@ -5248,8 +5273,6 @@ def _make_distinct_where_worker(col: str, is_str: bool, preds: list[dict],
     dictionary (string) / codec-level distinct (int) plus the NULL row when
     they hold NULLs; PARTIAL blocks decode only the non-full predicates,
     mask, and contribute the matched rows' values."""
-    from rlv.util import tune_malloc
-
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     pred_cols = _spec_cols(preds)
     all_cols = list(dict.fromkeys([col, *pred_cols]))
@@ -5261,7 +5284,6 @@ def _make_distinct_where_worker(col: str, is_str: bool, preds: list[dict],
 
         from rlv import blocks as B
 
-        tune_malloc()
         symbols = (
             [bytes.fromhex(h) for h in symbols_hex]
             if symbols_hex is not None
@@ -5413,7 +5435,8 @@ def distinct_table_files(spark: SparkSession, enc_dir: str, col: str,
     O(runs + dictionary entries), not O(rows) — the payload is read but
     never row-expanded.
 
-    Scale shape (both types): one task per blocks file emits its local
+    Scale shape (both types): one task per (blocks file, segment) — or
+    one in-process run for a tiny plan (:func:`_run_tasks`) — emits its local
     distinct set; the only shuffle is Spark's ``distinct()`` over per-file
     distinct values (bounded by NDV x files, never rows).
 
@@ -5432,10 +5455,10 @@ def distinct_table_files(spark: SparkSession, enc_dir: str, col: str,
             f"(int_cols={schema['int_cols']} str_cols={schema['str_cols']})"
         )
     is_str = col in schema["str_cols"]
+    specs = _norm_preds(schema, list(preds)) if preds else []
     if preds:
         worker = _make_distinct_where_worker(
-            col, is_str, _norm_preds(schema, list(preds)),
-            symbols_hex=_symbols_hex(enc_dir),
+            col, is_str, specs, symbols_hex=_symbols_hex(enc_dir),
         )
     elif is_str:
         worker = _make_distinct_worker(col, _symbols_hex(enc_dir))
@@ -5444,18 +5467,12 @@ def distinct_table_files(spark: SparkSession, enc_dir: str, col: str,
         worker = _make_idx_distinct_worker(col, _symbols_hex(enc_dir))
     else:
         worker = _make_int_distinct_worker(col)
-    tasks = _query_tasks(enc_dir)
-    out_schema = f"`{col}` {'string' if col in schema['str_cols'] else 'bigint'}"
-    if tasks.empty:
-        out = spark.createDataFrame([], out_schema)
-    else:
-        out = _spark_tasks(spark, tasks).mapInPandas(
-            worker, out_schema
-        ).withColumn(
-            col, _group_key_norm_expr(schema, col)
-        ).distinct()  # SQL DISTINCT merges -0.0/0.0 and all NaNs
-    from pyspark.sql import functions as F
-
+    out = _run_tasks(
+        spark, enc_dir, _query_tasks(enc_dir), worker,
+        f"`{col}` {'string' if is_str else 'bigint'}", specs, [col],
+    ).withColumn(
+        col, _group_key_norm_expr(schema, col)
+    ).distinct()  # SQL DISTINCT merges -0.0/0.0 and all NaNs
     return out.select(_typed_out_expr(schema, col))
 
 
@@ -5724,8 +5741,6 @@ def _make_stats_worker(schema: dict, symbols_hex: tuple[str, ...] | None):
     sidecars — and of each INDEXED int column from its membership keys,
     which gives those columns an exact metadata-only NDV too.  No payload
     column is ever read."""
-    from rlv.util import tune_malloc
-
     int_cols = set(schema["int_cols"])
     str_cols = list(schema["str_cols"])
     idx_cols = [c for c in schema.get("index_cols", ()) if c in int_cols]
@@ -5735,7 +5750,6 @@ def _make_stats_worker(schema: dict, symbols_hex: tuple[str, ...] | None):
 
         from rlv import blocks as B
 
-        tune_malloc()
         symbols = (
             [bytes.fromhex(h) for h in symbols_hex]
             if symbols_hex is not None
@@ -5821,8 +5835,9 @@ def stats_table_files(spark: SparkSession, enc_dir: str):
     all-NULL string column reports ``ndv = 0`` with NULL min/max, SQL
     aggregate semantics.
 
-    Scale shape: one task per blocks file emits per-column count partials
-    plus its file-local string distincts; the only shuffle carries
+    Scale shape: one task per (blocks file, segment) — or one in-process
+    run for a tiny table (:func:`_run_tasks`) — emits per-column count
+    partials plus its file-local string distincts; the only shuffle carries
     O(columns + NDV x files) partial rows, never data rows — the ANALYZE a
     warehouse runs as a full scan, here served by the format's own
     metadata."""
@@ -5831,18 +5846,11 @@ def stats_table_files(spark: SparkSession, enc_dir: str):
     schema = _load_table_schema(enc_dir)
     if schema is None:
         raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
-    tasks = _query_tasks(enc_dir)
     str_cols = list(schema["str_cols"])
-    out_schema = (
-        "col_name string, logical_type string, n_rows bigint, "
-        "n_nulls bigint, min_int bigint, max_int bigint, ndv bigint, "
-        "min_str string, max_str string"
-    )
-    if tasks.empty:
-        return spark.createDataFrame([], out_schema)
-    part = _spark_tasks(spark, tasks).mapInPandas(
+    part = _run_tasks(
+        spark, enc_dir, _query_tasks(enc_dir),
         _make_stats_worker(schema, _symbols_hex(enc_dir)),
-        STATS_PARTIAL_SCHEMA,
+        STATS_PARTIAL_SCHEMA, [], [*schema["int_cols"], *str_cols],
     )
     counts = (
         part.where(F.col("n_rows").isNotNull())
@@ -5979,8 +5987,6 @@ def _make_topk_strs_worker(col: str, k: int, ascending: bool,
     (their matching row count may be zero) — when full blocks yield
     fewer than k distinct values the driver scans unbounded (correctness
     over pruning), mirroring :func:`_topk_survivors`."""
-    from rlv.util import tune_malloc
-
     preds = preds or []
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     pred_cols = _spec_cols(preds)
@@ -5989,7 +5995,6 @@ def _make_topk_strs_worker(col: str, k: int, ascending: bool,
     def run_topk(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from rlv import blocks as B
 
-        tune_malloc()
         symbols = (
             [bytes.fromhex(h) for h in symbols_hex]
             if symbols_hex is not None
@@ -6055,20 +6060,13 @@ def _topk_table_files_str(
 
     specs = _norm_preds(schema, list(preds)) if preds else []
     out_names = _scan_out_names(schema, col, columns)
-    tasks = _query_tasks(enc_dir)
-    str_cols = set(schema["str_cols"])
-    empty_schema = ", ".join(
-        f"`{c}` {'string' if c in str_cols else _typed_field_type(schema, c)}"
-        for c in out_names
-    )
-    if tasks.empty:
-        return spark.createDataFrame([], empty_schema)
-    cand = _spark_tasks(spark, tasks).mapInPandas(
+    cand = _run_tasks(
+        spark, enc_dir, _query_tasks(enc_dir),
         _make_topk_strs_worker(
             col, int(k), ascending, preds=specs,
             symbols_hex=_symbols_hex(enc_dir),
         ),
-        "val string",
+        "val string", specs, [col],
     )
     cands = sorted(
         {r["val"] for r in cand.collect() if r["val"] is not None}
@@ -6097,11 +6095,7 @@ def _topk_table_files_str(
     else:
         # under a conjunction the scan must still drop NULLs of col
         bound_specs.extend(_norm_preds(schema, [("notnull", col)]))
-    worker = _make_scan_worker(
-        schema, bound_specs, scan_names,
-        symbols_hex=_symbols_hex(enc_dir),
-    )
-    scan = _run_scan_tasks(spark, enc_dir, schema, scan_names, worker)
+    scan = _run_scan_tasks(spark, enc_dir, schema, scan_names, bound_specs)
     sort_cols = [F.col(col).asc() if ascending else F.col(col).desc()]
     order_col = schema["order_col"]
     if order_col in out_names and order_col != col:
@@ -6119,8 +6113,6 @@ def _make_topk_vals_worker(col: str, k: int, ascending: bool,
     bound comes from FULL-matching blocks' exact counts
     (:func:`_topk_survivors` with ``is_full``); surviving partial blocks
     decode their non-full predicates and mask before contributing."""
-    from rlv.util import tune_malloc
-
     preds = preds or []
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     pred_cols = _spec_cols(preds)
@@ -6129,7 +6121,6 @@ def _make_topk_vals_worker(col: str, k: int, ascending: bool,
     def run_topk(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from rlv import blocks as B
 
-        tune_malloc()
         symbols = (
             [bytes.fromhex(h) for h in symbols_hex]
             if symbols_hex is not None
@@ -6247,7 +6238,8 @@ def topk_table_files(
     ties at the boundary are arbitrary, as in SQL.
 
     Two pruned passes, no full sort anywhere: (1) a threshold job — one task
-    per blocks file computes the file's k extreme values, decoding only
+    per (blocks file, segment), in-process on the driver for a tiny plan
+    (:func:`_run_tasks`), computes the file's k extreme values, decoding only
     blocks its zone-map plan keeps (:func:`_topk_survivors`: walk blocks by
     max_val until cumulative valid count reaches k; blocks beyond that bound
     hold only beaten values) — and the global k-th extreme T folds from the
@@ -6278,18 +6270,16 @@ def topk_table_files(
     schema = _require_int_col(enc_dir, col)
     specs = _norm_preds(schema, list(preds)) if preds else []
     out_names = _scan_out_names(schema, col, columns)
-    tasks = _query_tasks(enc_dir)
     empty_schema = ", ".join(
         f"`{c}` {_typed_field_type(schema, c)}" for c in out_names
     )
-    if tasks.empty:
-        return spark.createDataFrame([], empty_schema)
-    cand = _spark_tasks(spark, tasks).mapInPandas(
+    cand = _run_tasks(
+        spark, enc_dir, _query_tasks(enc_dir),
         _make_topk_vals_worker(
             col, int(k), ascending, preds=specs,
             symbols_hex=_symbols_hex(enc_dir),
         ),
-        "val bigint",
+        "val bigint", specs, [col],
     )
     rows = (
         cand.orderBy(F.col("val").asc() if ascending else F.col("val").desc())

@@ -4050,11 +4050,78 @@ def test_explain_and_metadata_count_launch_no_spark_job(spark, orders_dir,
     assert agg["blocks_total"] == scan["blocks_total"]
 
 
-def test_count_pushdown_matches_python(spark, tmp_path):
+@pytest.fixture(params=["spark", "local"])
+def dispatch(request, monkeypatch):
+    """Pin the query dispatch path: a cap of 0 sends every plan with a
+    surviving row through the Spark workers, an unreachable cap runs every
+    plan on the driver.  Test tables are small, so without this almost
+    every test covers only the driver path."""
+    monkeypatch.setattr(
+        table_files, "_DRIVER_LOCAL_MAX_CELLS",
+        0 if request.param == "spark" else 1 << 62,
+    )
+    return request.param
+
+
+def test_tiny_plans_run_on_the_driver(spark, tmp_path, monkeypatch):
+    """A plan whose surviving cells fit the cap runs in-process: a tiny
+    predicate COUNT(*) launches no Spark job and a tiny scan is a local
+    relation with no MapInPandas stage; a scan over the cap still runs
+    its mapInPandas workers.  Both paths return the same rows."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "src")
+    os.makedirs(d)
+    n = 140_000  # 2 columns x 140k rows is past the 1 << 18 cell cap
+    pq.write_table(
+        pa.table({
+            "k": pa.array(range(n), pa.int64()),
+            "v": pa.array([(i * 37) % 1000 for i in range(n)], pa.int64()),
+        }),
+        f"{d}/p.parquet", row_group_size=16384,
+    )
+    out = str(tmp_path / "enc")
+    table_files.encode_table_files(
+        spark, [f"{d}/p.parquet"], out, order_col="k",
+        int_cols=["k", "v"], rows_per_block=4096, num_tasks=4,
+    )
+    tiny = [("between", "k", 5000, 5999), ("between", "v", 0, 499)]
+    res = {}
+
+    def count():
+        res["n"] = table_files.count_table_files_where(
+            spark, out, tiny).collect()[0]["n_rows"]
+
+    assert _spark_jobs(spark, count, "rlv-tiny-count") == 0
+    assert res["n"] == sum(
+        1 for i in range(5000, 6000) if (i * 37) % 1000 <= 499)
+
+    def plan_of(preds):
+        df = table_files.scan_table_files_where(
+            spark, out, preds, columns=["k", "v"])
+        return df, df._jdf.queryExecution().executedPlan().toString()
+
+    small, plan = plan_of(tiny)
+    assert "LocalTableScan" in plan and "MapInPandas" not in plan, plan
+    wide, plan = plan_of([("between", "k", 0, n)])
+    assert "MapInPandas" in plan, plan
+    assert wide.count() == n
+    got = sorted(tuple(r) for r in small.collect())
+    assert len(got) == res["n"]
+    monkeypatch.setattr(table_files, "_DRIVER_LOCAL_MAX_CELLS", 0)
+    spark_df, plan = plan_of(tiny)
+    assert "MapInPandas" in plan, plan
+    assert sorted(tuple(r) for r in spark_df.collect()) == got
+
+
+def test_count_pushdown_matches_python(spark, tmp_path, dispatch):
     """COUNT(*) pushdown: full blocks count from metadata only, partial
     blocks decode only predicate columns; matches a Python reference on
     range, membership, validity, negation, and OR predicates — before
-    and after compaction."""
+    and after compaction, on both dispatch paths."""
     import os
 
     import pyarrow as pa
@@ -4547,13 +4614,78 @@ def test_string_index_cols_point_lookup_parity(spark, tmp_path):
         )
 
 
-def test_random_clause_sweep_matches_sql(spark, tmp_path):
+def test_encode_refuses_missing_columns_on_the_driver(spark, tmp_path):
+    """A declared int or string column the input lacks fails on the
+    driver with a ValueError naming it, not as a worker KeyError."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "src")
+    os.makedirs(d)
+    pq.write_table(
+        pa.table({"k": pa.array(range(10), pa.int64()),
+                  "s": pa.array(["a"] * 10, pa.string())}),
+        f"{d}/p.parquet",
+    )
+    for int_cols, str_cols, bad in (
+        (["k", "v_typo"], ["s"], "v_typo"),
+        (["k"], ["s", "s_typo"], "s_typo"),
+    ):
+        with pytest.raises(ValueError, match=bad):
+            table_files.encode_table_files(
+                spark, [f"{d}/p.parquet"], str(tmp_path / f"enc_{bad}"),
+                order_col="k", int_cols=int_cols, str_cols=str_cols,
+                index_cols=[bad],
+            )
+
+
+def test_ctas_keeps_string_index_cols(spark, tmp_path):
+    """CTAS carries every projected index column into the derived
+    dataset's schema, string ones included."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "src")
+    os.makedirs(d)
+    n = 4000
+    pq.write_table(
+        pa.table({
+            "k": pa.array(range(n), pa.int64()),
+            "fk": pa.array([(i * 7) % 301 for i in range(n)], pa.int64()),
+            "sk": pa.array([f"key{i % 97:03d}" for i in range(n)],
+                           pa.string()),
+        }),
+        f"{d}/p.parquet",
+    )
+    src = str(tmp_path / "enc")
+    table_files.encode_table_files(
+        spark, [f"{d}/p.parquet"], src, order_col="k",
+        int_cols=["k", "fk"], str_cols=["sk"], rows_per_block=512,
+        num_tasks=2, index_cols=["fk", "sk"],
+    )
+    dst = str(tmp_path / "dst")
+    table_files.ctas_table_files(
+        spark, src, dst, [("between", "k", 100, 2999)],
+        columns=["k", "fk", "sk"],
+    )
+    assert table_files._load_table_schema(dst)["index_cols"] == ["fk", "sk"]
+    [r] = table_files.count_table_files_where(
+        spark, dst, [("eq", "sk", "key005")]).collect()
+    assert r["n_rows"] == sum(
+        1 for i in range(100, 3000) if i % 97 == 5)
+
+
+def test_random_clause_sweep_matches_sql(spark, tmp_path, dispatch):
     """Seeded adversarial sweep over the WHOLE predicate algebra: 40
     random one-alternation clauses (every leaf kind incl. negations,
     validity, the LIKE family, OR and OR-of-AND nodes, degenerate
     literals like inverted ranges and absent values) compared against
     DuckDB on COUNT(*) — the last-line-of-defense property test behind
-    the curated per-kind cases."""
+    the curated per-kind cases — on both dispatch paths."""
     import os
 
     import duckdb

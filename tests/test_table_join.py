@@ -86,6 +86,9 @@ def test_join_matches_sql_and_pushes_runtime_filter(spark, joined):
     assert plan["broadcast"] is True
     assert plan["runtime_filter_keys"] is not None
     assert 0 < plan["runtime_filter_keys"] <= 401  # custkeys 0..400
+    # both sides are far under the driver-local cell cap
+    assert plan["driver_local_a"] is True
+    assert plan["driver_local_b"] is True
     # the runtime filter must SHRINK the fact side's decode bill
     [unfiltered] = TF.explain_scan_table_files(
         spark, joined["fact_enc"],
@@ -112,6 +115,24 @@ def test_join_without_runtime_filter_is_identical(spark, joined):
         runtime_filter_max_keys=3, return_plan=True,
     )
     assert plan["runtime_filter_keys"] is None
+    got = sorted(
+        (r["cust"], r["o_orderkey"], r["cents"], r["segment"])
+        for r in df.collect()
+    )
+    assert got == [tuple(r) for r in _oracle(joined)]
+
+
+def test_join_on_spark_workers_is_identical(spark, joined, monkeypatch):
+    """With the driver-local cap at 0 both side scans run as Spark
+    mapInPandas jobs, the plan says so, and the result is unchanged."""
+    monkeypatch.setattr(TF, "_DRIVER_LOCAL_MAX_CELLS", 0)
+    df, plan = TF.join_table_files(
+        spark, joined["fact_enc"], joined["dim_enc"], on="cust",
+        columns_a=["o_orderkey", "cents"], columns_b=["segment"],
+        return_plan=True,
+    )
+    assert plan["driver_local_a"] is False
+    assert plan["driver_local_b"] is False
     got = sorted(
         (r["cust"], r["o_orderkey"], r["cents"], r["segment"])
         for r in df.collect()
