@@ -935,6 +935,15 @@ def _write_grouped(tmp: str, tbl, compression: str | None = "zstd") -> None:
             w.write_table(run)
 
 
+def _sidecar_path(blocks_path: str) -> str:
+    """The dictionary sidecar file of one blocks file."""
+    return os.path.join(
+        os.path.dirname(os.path.dirname(blocks_path)),
+        "strings",
+        os.path.basename(blocks_path),
+    )
+
+
 def _read_dict_sidecar(
     blocks_path: str, default_seq: str,
     col: str | list[str] | None = None,
@@ -956,11 +965,7 @@ def _read_dict_sidecar(
     prunes the read exactly)."""
     import pyarrow.parquet as pq
 
-    spath = os.path.join(
-        os.path.dirname(os.path.dirname(blocks_path)),
-        "strings",
-        os.path.basename(blocks_path),
-    )
+    spath = _sidecar_path(blocks_path)
     filters = []
     if col is not None:
         cols = [col] if isinstance(col, str) else list(col)
@@ -1057,7 +1062,10 @@ def _split_segments(btbl, default_seq: str):
     if "split_seq" not in btbl.column_names:
         yield str(default_seq), btbl
         return
-    seqs = sorted(set(btbl.column("split_seq").to_pylist()))
+    seqs = sorted(pc.unique(btbl.column("split_seq")).to_pylist())
+    if len(seqs) == 1:
+        yield str(seqs[0]), btbl
+        return
     for sid in seqs:
         yield str(sid), btbl.filter(
             pc.equal(btbl.column("split_seq"), sid)
@@ -1427,9 +1435,12 @@ _SPARK_TYPE_OF_ALIAS = {
 
 
 def _live_block_files(enc_dir: str) -> list[str]:
-    """Sorted live blocks files from the manifest — the task list of every
-    per-file operator (scan/agg/top-k/distinct/stats/decode); raises when
-    the dataset has no manifest yet."""
+    """Sorted live blocks files from the manifest — the file list of the
+    export (decode) and of the driver-side metadata estimates
+    (:func:`zonemap_stats`, :func:`strdict_stats`,
+    :func:`_restored_bytes`); query operators run per (file, segment)
+    task from :func:`_query_tasks`.  Raises when the dataset has no
+    manifest yet."""
     live = engine_files.live_splits(enc_dir)
     if live is None:
         raise FileNotFoundError(f"no manifest at {enc_dir}")
@@ -1510,62 +1521,76 @@ def _spark_tasks(spark: SparkSession, tasks: pd.DataFrame):
 _DRIVER_LOCAL_MAX_CELLS = 1 << 18
 
 
-def _driver_local_pdf(enc_dir: str, tasks: pd.DataFrame, worker,
-                      out_schema: str, specs: list[dict],
-                      read_cols: list[str]) -> pd.DataFrame | None:
-    """``worker``'s output over ``tasks``, run in this process, or None
-    when the plan is not tiny.  The decision walks the tasks through the
-    scan EXPLAIN classification (:func:`_explain_scan_task`, the same
-    :func:`_classify_file` the workers run) and stops as soon as the
-    summed ``rows_surviving x len(read_cols)`` passes
-    ``_DRIVER_LOCAL_MAX_CELLS``, so a large plan pays only the metadata
-    reads of its first tasks.  Columns come back in ``out_schema`` order
-    (``mapInPandas`` matches them by name)."""
+def _driver_local_pdf(enc_dir: str, tasks: pd.DataFrame, reducer,
+                      specs: list[dict],
+                      out_schema: str) -> pd.DataFrame | None:
+    """The block pipeline's output over ``tasks``, run in this process,
+    or None when the plan is not tiny.  The decision classifies the tasks
+    one by one (:func:`_classify_file`, the pipeline's own first step)
+    and stops as soon as the summed ``rows_surviving x
+    len(reducer.cols)`` passes ``_DRIVER_LOCAL_MAX_CELLS``, so a large
+    plan pays only the metadata reads of its first tasks; a tiny plan
+    runs on from those same classifications.  Columns come back in
+    ``out_schema`` order (``mapInPandas`` matches them by name)."""
     from pyspark.sql.types import StructType
 
     symbols = engine_files._load_symbols(enc_dir)
+    plans = []
     cells = 0
-    for path, seg in zip(tasks["file"], tasks["segment"]):
-        cells += len(read_cols) * _explain_scan_task(
-            path, seg, specs, read_cols, symbols)["rows_surviving"]
+    for path, seg in _task_rows(tasks):
+        plan = _classify_file(path, seg, specs, reducer.cols, symbols)
+        plans.append(plan)
+        cells += len(reducer.cols) * plan.rows_surviving
         if cells > _DRIVER_LOCAL_MAX_CELLS:
             return None
     names = StructType.fromDDL(out_schema).names
-    parts = list(worker(iter([tasks])))
-    if not parts:
+    if not plans:
         return pd.DataFrame({c: [] for c in names})
-    return pd.concat(parts, ignore_index=True)[names]
+    return pd.concat([_task_frame(p, reducer) for p in plans],
+                     ignore_index=True)[names]
 
 
 def _run_tasks(spark: SparkSession, enc_dir: str, tasks: pd.DataFrame,
-               worker, out_schema: str, specs: list[dict],
-               read_cols: list[str]):
-    """Run a query operator's ``worker`` over its :func:`_query_tasks`
-    frame, as a DataFrame of ``out_schema``.  A tiny plan (see
-    :func:`_driver_local_pdf`; an empty task list is one) runs the worker
-    in this process and returns a local relation: no Spark job until the
-    caller's own operators, and never a Python-worker stage, whose fixed
-    cost (~0.4 s on a 4-core host) dwarfs decoding a few blocks.  Any
-    other plan runs as Spark tasks (:func:`_spark_run`)."""
-    pdf = _driver_local_pdf(enc_dir, tasks, worker, out_schema, specs,
-                            read_cols)
+               reducer, specs: list[dict], out_schema: str):
+    """Run a query operator, the block pipeline with its ``reducer``,
+    over its :func:`_query_tasks` frame, as a DataFrame of
+    ``out_schema``.  A tiny plan (see :func:`_driver_local_pdf`; an empty
+    task list is one) runs in this process and returns a local relation:
+    no Spark job until the caller's own operators, and never a
+    Python-worker stage, whose fixed cost (~0.4 s on a 4-core host)
+    dwarfs decoding a few blocks.  Any other plan runs as Spark tasks
+    (:func:`_spark_run`)."""
+    pdf = _driver_local_pdf(enc_dir, tasks, reducer, specs, out_schema)
     if pdf is None:
-        return _spark_run(spark, tasks, worker, out_schema)
+        return _spark_run(spark, enc_dir, tasks, reducer, specs, out_schema)
     return spark.createDataFrame(pdf, out_schema)
 
 
-def _spark_run(spark: SparkSession, tasks: pd.DataFrame, worker,
-               out_schema: str):
-    """``worker`` as one ``mapInPandas`` task per query task on the
-    :func:`_spark_tasks` relation.  Each Python worker process tunes
-    malloc first (:func:`rlv.util.tune_malloc`); only there: applied to
-    the driver by an in-process run, the same settings slowed a wide
-    scan's collect to Arrow by ~0.2 s on a 4-core host."""
+def _spark_run(spark: SparkSession, enc_dir: str, tasks: pd.DataFrame,
+               reducer, specs: list[dict], out_schema: str):
+    """The block pipeline as one ``mapInPandas`` task per query task on
+    the :func:`_spark_tasks` relation — the one Spark call site of every
+    query operator.  Each Python worker process tunes malloc first
+    (:func:`rlv.util.tune_malloc`); only there: applied to the driver by
+    an in-process run, the same settings slowed a wide scan's collect to
+    Arrow by ~0.2 s on a 4-core host."""
+    symbols_hex = _symbols_hex(enc_dir)
+
     def run(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from rlv.util import tune_malloc
 
         tune_malloc()
-        yield from worker(pdf_iter)
+        symbols = (
+            [bytes.fromhex(h) for h in symbols_hex]
+            if symbols_hex is not None
+            else None
+        )
+        for pdf in pdf_iter:
+            for path, seg in _task_rows(pdf):
+                yield _task_frame(
+                    _classify_file(path, seg, specs, reducer.cols, symbols),
+                    reducer,
+                )
 
     return _spark_tasks(spark, tasks).mapInPandas(run, out_schema)
 
@@ -1857,582 +1882,6 @@ def _literals_matcher(values: tuple[bytes, ...]):
     return match
 
 
-def _make_scan_worker(schema: dict, preds: list[dict],
-                      out_names: list[str],
-                      symbols_hex: tuple[str, ...] | None = None):
-    """Scan worker over one blocks file for a CONJUNCTION of predicates.
-    Each pred is a normalized spec (see :func:`_norm_preds`): an int
-    zone-map range (``{"kind": "range", "col", "lo", "hi"}`` — blocks whose
-    [min_val, max_val] misses [lo, hi] prune via parquet filters on the
-    payload-free metadata read) or a string dictionary membership
-    (``{"kind": "member", "col", "match", "eq_single"}`` — ``match`` maps a
-    block's decoded dictionary to its matching codes; a block prunes when
-    its sidecar contains NO matching entry; eq / IN / BETWEEN / prefix are
-    all such matchers).  The per-file surviving block set is the
-    INTERSECTION across predicates, so payload IO is bounded by the most
-    selective predicate; row masks AND together.  A single-literal member
-    pred whose column is projected keeps the equality fast path: kept rows
-    ARE the literal, no second decode, no dictionary gather."""
-    str_cols = set(schema["str_cols"])
-    symbols = (
-        [bytes.fromhex(h) for h in symbols_hex]
-        if symbols_hex is not None
-        else None
-    )
-    int_preds, mem_preds, or_nodes = _spec_parts(preds)
-    mem_cols = [p["col"] for p in mem_preds]
-    # first member pred per column: its phase-1 dictionaries serve the
-    # projection gather for that column (any pred's would do — kept rows
-    # satisfy ALL preds)
-    mem_by_col = {
-        p["col"]: pi
-        for pi, p in reversed(list(enumerate(mem_preds)))
-        if p["col"] in str_cols
-    }
-    # equality fast path: exactly one member pred on the column AND it is
-    # single-literal -> every kept row IS the literal
-    eq_single_by_col = {
-        p["col"]: p["eq_single"]
-        for p in mem_preds
-        if p.get("eq_single") is not None and mem_cols.count(p["col"]) == 1
-    }
-    pred_cols = _spec_cols(preds)
-
-    def _empty_frame() -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                c: (pd.Series([], dtype=object) if c in str_cols
-                    else pd.Series(np.empty(0, np.int64)))
-                for c in out_names
-            }
-        )
-
-    def run_scan(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from rlv import blocks as B
-
-        meta_pred_cols = sorted(
-            {p["col"] for p in int_preds}
-            | {atom["col"] for node in or_nodes for leaf in node
-               for atom in _leaf_atoms(leaf)
-               if atom["kind"] in ("range", "valid")}
-        )
-        all_mem_cols = sorted(
-            set(mem_cols)
-            | {atom["col"] for node in or_nodes for leaf in node
-               for atom in _leaf_atoms(leaf)
-               if atom["kind"] == "member"}
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                # phase 1 — METADATA only (no payload column): ONE
-                # payload-free read covers every metadata-predicate column
-                # (top-level + OR leaves) and classification runs in
-                # Python — exact, incl. IN-list literal membership (a
-                # parquet [min, max] envelope filter would keep blocks no
-                # literal falls inside); ONE sidecar read covers every
-                # membership column, each dictionary decoded once however
-                # many preds reference it.  The file's surviving ordinals
-                # are the INTERSECTION across preds; pruned blocks never
-                # materialize payload.
-                # metadata covers the membership columns too: their
-                # (n_values, n_nulls) let a member pred whose whole
-                # dictionary matches a no-NULL block classify FULL, which
-                # the payload planner below exploits
-                meta_read_cols = sorted(
-                    set(meta_pred_cols) | set(all_mem_cols)
-                )
-                col_info: dict[str, dict[tuple[str, int], tuple]] = {
-                    c: {} for c in meta_read_cols
-                }
-                if meta_read_cols:
-                    filters: list = [("col_name", "in", meta_read_cols)]
-                    if seg is not None:
-                        filters.append(("split_seq", "=", seg))
-                    meta = pq.read_table(
-                        path,
-                        columns=["split_seq", "col_name", "block_idx",
-                                 "n_values", "n_nulls", "n_runs",
-                                 "min_val", "max_val"],
-                        filters=filters,
-                    ).combine_chunks()
-                    for sid, mseg in _split_segments(meta, file_sid):
-                        for name, bi, nv, nn, nr, mn, mx in zip(
-                            mseg.column("col_name").to_pylist(),
-                            mseg.column("block_idx").to_numpy(),
-                            mseg.column("n_values").to_numpy(),
-                            mseg.column("n_nulls").to_numpy(),
-                            mseg.column("n_runs").to_numpy(),
-                            mseg.column("min_val").to_numpy(),
-                            mseg.column("max_val").to_numpy(),
-                        ):
-                            col_info[name][(sid, int(bi))] = (
-                                int(nv), int(nn), int(nr), int(mn),
-                                int(mx),
-                            )
-
-                def _int_phase1(p, col_info=col_info) -> set[int]:
-                    return {
-                        bi for _, bi
-                        in _int_leaf_class_map(p, col_info[p["col"]])
-                    }
-
-                # sidecar read is LAZY: when the int-predicate
-                # intersection already pruned the whole file (the common
-                # case on a zone-map-clustered range), no dictionary byte
-                # is ever read
-                side_state: dict = {}
-                dict_cache: dict[tuple[str, str, int], object] = {}
-
-                def _mem_phase1(p, path=path, file_sid=file_sid, seg=seg,
-                                side_state=side_state,
-                                dict_cache=dict_cache):
-                    if "side" not in side_state:
-                        side_state["side"] = _read_dict_sidecar(
-                            path, file_sid, col=all_mem_cols, seg=seg,
-                        )
-                    codes: dict[tuple[str, int], np.ndarray] = {}
-                    dicts: dict[tuple[str, int], object] = {}
-                    for (sid, name, bi), blob in side_state["side"].items():
-                        if name != p["col"]:
-                            continue
-                        uniq = dict_cache.get((sid, name, bi))
-                        if uniq is None:
-                            uniq = B.decode_strings_arrow(blob, symbols)
-                            dict_cache[(sid, name, bi)] = uniq
-                        hits = p["match"](uniq)
-                        if hits.size:
-                            codes[(sid, bi)] = hits
-                            dicts[(sid, bi)] = uniq
-                    return codes, dicts
-
-                surviving: set[int] | None = None
-                for p in int_preds:
-                    s = _int_phase1(p)
-                    surviving = s if surviving is None else (surviving & s)
-                    if not surviving:
-                        break
-                mem_codes: list[dict[tuple[str, int], np.ndarray]] = []
-                mem_dicts: list[dict[tuple[str, int], object]] = []
-                if surviving is None or surviving:
-                    for p in mem_preds:
-                        codes, dicts = _mem_phase1(p)
-                        mem_codes.append(codes)
-                        mem_dicts.append(dicts)
-                        s = {bi for _, bi in codes}
-                        surviving = (
-                            s if surviving is None else (surviving & s)
-                        )
-                        if not surviving:
-                            break
-                # OR nodes: each node's survivors are the UNION of its
-                # leaf survivors; the file still INTERSECTS across nodes
-                or_leaf: list[list] = []
-                if surviving is None or surviving:
-                    for node in or_nodes:
-                        node_surv: set[int] = set()
-                        ldata: list = []
-                        for leaf in node:
-                            if leaf["kind"] == "andgroup":
-                                # group survivors = INTERSECTION over its
-                                # conjuncts (the branch is an AND)
-                                g_surv: set[int] | None = None
-                                adata: list = []
-                                for atom in leaf["specs"]:
-                                    if atom["kind"] in ("range", "valid"):
-                                        s = _int_phase1(atom)
-                                        adata.append(None)
-                                    else:
-                                        codes, dicts = _mem_phase1(atom)
-                                        adata.append((codes, dicts))
-                                        s = {bi for _, bi in codes}
-                                    g_surv = (
-                                        s if g_surv is None
-                                        else (g_surv & s)
-                                    )
-                                node_surv |= g_surv or set()
-                                ldata.append(adata)
-                            elif leaf["kind"] in ("range", "valid"):
-                                node_surv |= _int_phase1(leaf)
-                                ldata.append(None)
-                            else:
-                                codes, dicts = _mem_phase1(leaf)
-                                ldata.append((codes, dicts))
-                                node_surv |= {bi for _, bi in codes}
-                        or_leaf.append(ldata)
-                        surviving = (
-                            node_surv if surviving is None
-                            else (surviving & node_surv)
-                        )
-                        if not surviving:
-                            break
-                if not surviving:
-                    yield _empty_frame()
-                    continue
-                surviving_idx = sorted(surviving)
-                # SEGMENT-FULL predicates: a predicate that full-matches
-                # EVERY surviving block contributes an all-true mask, so
-                # it never decodes — and if nothing else references its
-                # column, the column's payload is never even READ (on a
-                # zone-map-clustered range the interior tasks read ONLY
-                # the projected columns; the predicate column's whole
-                # row group skips).
-                def _keys_of(c):
-                    return [k for k in col_info[c] if k[1] in surviving]
-
-                int_full = []
-                for p in int_preds:
-                    clmap = _int_leaf_class_map(p, col_info[p["col"]])
-                    keys_c = _keys_of(p["col"])
-                    int_full.append(
-                        bool(keys_c)
-                        and all(clmap.get(k) == "full" for k in keys_c)
-                    )
-                mem_full_flags = []
-                for pi, p in enumerate(mem_preds):
-                    keys_c = _keys_of(p["col"])
-                    mem_full_flags.append(
-                        bool(keys_c)
-                        and all(
-                            k in mem_codes[pi]
-                            and mem_codes[pi][k].size
-                            == len(mem_dicts[pi][k])
-                            and col_info[p["col"]][k][1] == 0
-                            for k in keys_c
-                        )
-                    )
-                needed_mask_cols = {
-                    p["col"]
-                    for i, p in enumerate(int_preds)
-                    if not int_full[i]
-                } | {
-                    p["col"]
-                    for pi, p in enumerate(mem_preds)
-                    if not mem_full_flags[pi] and not p.get("mask_free")
-                } | {
-                    atom["col"] for node in or_nodes for leaf in node
-                    for atom in _leaf_atoms(leaf)
-                }
-                # phase 2 — payloads for SURVIVING block ordinals only (the
-                # in-filter over-reads a block_idx that survives in one
-                # segment but not another; segments prune exactly below),
-                # and only for columns a mask or the projection needs
-                read_names = list(dict.fromkeys(
-                    [*[c for c in pred_cols if c in needed_mask_cols],
-                     *out_names]
-                ))
-                filters2: list = [
-                    ("col_name", "in", read_names),
-                    ("block_idx", "in", surviving_idx),
-                ]
-                if seg is not None:
-                    filters2.append(("split_seq", "=", seg))
-                btbl = pq.read_table(
-                    path,
-                    columns=["split_seq", "col_name", "block_idx",
-                             "n_values", "n_nulls", "n_runs", "min_val",
-                             "max_val", "block"],
-                    filters=filters2,
-                ).combine_chunks()
-                # dictionaries only for the PROJECTED string columns'
-                # surviving ordinals (a member pred's column needs no
-                # second read: eq kept rows ARE the literal, the rest
-                # gather from phase 1's cached dictionaries)
-                proj_strs = sorted(
-                    c for c in str_cols.intersection(out_names)
-                    if c not in mem_by_col
-                )
-                side = (
-                    _read_dict_sidecar(
-                        path, file_sid, col=proj_strs,
-                        block_idx=surviving_idx, seg=seg,
-                    )
-                    if proj_strs
-                    else {}
-                )
-                outs: dict[str, list] = {c: [] for c in out_names}
-                for seq, sseg in _split_segments(btbl, file_sid):
-                    per: dict[str, dict[int, tuple]] = {
-                        c: {} for c in read_names
-                    }
-                    for name, bi, nv, nn, nr, mn, mx, blob in zip(
-                        sseg.column("col_name").to_pylist(),
-                        sseg.column("block_idx").to_numpy(),
-                        sseg.column("n_values").to_numpy(),
-                        sseg.column("n_nulls").to_numpy(),
-                        sseg.column("n_runs").to_numpy(),
-                        sseg.column("min_val").to_numpy(),
-                        sseg.column("max_val").to_numpy(),
-                        sseg.column("block").to_pylist(),
-                    ):
-                        per[name][int(bi)] = (
-                            int(nv), int(nr), int(mn), int(mx), blob,
-                            int(nn),
-                        )
-                    # segment-exact survivors: re-run every NON-FULL
-                    # pred's block test against THIS segment's metadata
-                    # and intersect (a segment-full pred survives all its
-                    # keys by construction; its column may not be read)
-                    surv: set[int] | None = None
-                    for i, p in enumerate(int_preds):
-                        if int_full[i]:
-                            continue
-                        s = {
-                            bi
-                            for bi, (nv, nr, mn, mx, _, nn)
-                            in per[p["col"]].items()
-                            if _int_pred_class(p, nv, nn, nr, mn, mx)
-                            is not None
-                        }
-                        surv = s if surv is None else (surv & s)
-                    for pi, p in enumerate(mem_preds):
-                        if mem_full_flags[pi] or p.get("mask_free"):
-                            continue
-                        s = {
-                            bi for bi in per[p["col"]]
-                            if (seq, bi) in mem_codes[pi]
-                        }
-                        surv = s if surv is None else (surv & s)
-                    def _atom_seg_surv(atom, ld, per=per, seq=seq):
-                        if atom["kind"] in ("range", "valid"):
-                            return {
-                                bi
-                                for bi, (nv, nr, mn, mx, _, nn)
-                                in per[atom["col"]].items()
-                                if _int_pred_class(
-                                    atom, nv, nn, nr, mn, mx
-                                ) is not None
-                            }
-                        codes, _ = ld
-                        return {
-                            bi for bi in per[atom["col"]]
-                            if (seq, bi) in codes
-                        }
-
-                    for node, ldata in zip(or_nodes, or_leaf):
-                        s = set()
-                        for leaf, ld in zip(node, ldata):
-                            if leaf["kind"] == "andgroup":
-                                gs: set[int] | None = None
-                                for atom, ad in zip(leaf["specs"], ld):
-                                    asrv = _atom_seg_surv(atom, ad)
-                                    gs = asrv if gs is None \
-                                        else (gs & asrv)
-                                s |= gs or set()
-                            else:
-                                s |= _atom_seg_surv(leaf, ld)
-                        surv = s if surv is None else (surv & s)
-                    if surv is None:
-                        # every pred segment-full: all fetched ordinals of
-                        # this segment survive
-                        surv = set(per[read_names[0]])
-                    survivors = sorted(surv)
-                    if not survivors:
-                        continue
-                    anchor = read_names[0]
-                    decoded: dict[str, tuple] = {}
-
-                    def _decode_col(c, per=per, survivors=survivors,
-                                    decoded=decoded, anchor=anchor):
-                        if c in decoded:
-                            return decoded[c]
-                        for bi in survivors:
-                            if per[c][bi][0] != per[anchor][bi][0]:
-                                raise ValueError(
-                                    f"column {c!r} and {anchor!r} disagree "
-                                    f"on rows in block {bi} — corrupt "
-                                    "dataset"
-                                )
-                        trip = B.decode_blocks_batch_nullable(
-                            [per[c][bi][4] for bi in survivors],
-                            np.int64,
-                            expected=[per[c][bi][0] for bi in survivors],
-                        )
-                        if decoded:
-                            ref = next(iter(decoded.values()))[1]
-                            if not np.array_equal(trip[1], ref):
-                                raise ValueError(
-                                    f"column {c!r} and {anchor!r} blocks "
-                                    "disagree on row counts — corrupt "
-                                    "dataset"
-                                )
-                        decoded[c] = trip
-                        return trip
-
-                    # row mask = AND over the NON-FULL preds (a
-                    # segment-full pred matches every row — no decode)
-                    m = None
-                    for i, p in enumerate(int_preds):
-                        if int_full[i]:
-                            continue
-                        vals, _, vvalid = _decode_col(p["col"])
-                        pm = _int_pred_rowmask(p, vals, vvalid)
-                        m = pm if m is None else (m & pm)
-                    for pi, p in enumerate(mem_preds):
-                        if mem_full_flags[pi] or p.get("mask_free"):
-                            continue
-                        vals, voffs, vvalid = _decode_col(p["col"])
-                        # per-block code SETS; a block whose whole
-                        # dictionary matches skips the isin (every valid
-                        # row matches)
-                        pm = vvalid.copy()
-                        for j, bi in enumerate(survivors):
-                            codes = mem_codes[pi][(seq, bi)]
-                            if codes.size == len(mem_dicts[pi][(seq, bi)]):
-                                continue
-                            sl = slice(int(voffs[j]), int(voffs[j + 1]))
-                            pm[sl] &= np.isin(vals[sl], codes)
-                        m = pm if m is None else (m & pm)
-                    def _atom_rowmask(atom, ld, seq=seq,
-                                      survivors=survivors):
-                        vals, voffs, vvalid = _decode_col(atom["col"])
-                        if atom["kind"] in ("range", "valid"):
-                            return _int_pred_rowmask(atom, vals, vvalid)
-                        codes, dicts = ld
-                        pm = np.zeros(vvalid.size, bool)
-                        for j, bi in enumerate(survivors):
-                            cs = codes.get((seq, bi))
-                            if cs is None:
-                                continue
-                            sl = slice(int(voffs[j]), int(voffs[j + 1]))
-                            if cs.size == len(dicts[(seq, bi)]):
-                                pm[sl] = vvalid[sl]
-                            else:
-                                pm[sl] = vvalid[sl] & np.isin(
-                                    vals[sl], cs
-                                )
-                        return pm
-
-                    for node, ldata in zip(or_nodes, or_leaf):
-                        # node mask = UNION of leaf masks (a leaf with no
-                        # survivors at a block contributes nothing there);
-                        # an andgroup leaf's mask = AND over its conjuncts
-                        nm = None
-                        for leaf, ld in zip(node, ldata):
-                            if leaf["kind"] == "andgroup":
-                                pm = None
-                                for atom, ad in zip(leaf["specs"], ld):
-                                    am = _atom_rowmask(atom, ad)
-                                    pm = am if pm is None else (pm & am)
-                            else:
-                                pm = _atom_rowmask(leaf, ld)
-                            nm = pm if nm is None else (nm | pm)
-                        m = nm if m is None else (m & nm)
-                    if m is None:
-                        # every pred segment-full: keep all rows
-                        m = np.ones(
-                            sum(per[anchor][bi][0] for bi in survivors),
-                            dtype=bool,
-                        )
-                    for c in out_names:
-                        if c in eq_single_by_col:
-                            # eq predicate column: every kept row IS the
-                            # literal — no second decode, no dict gather
-                            outs[c].append(
-                                pa.array(
-                                    [eq_single_by_col[c]] * int(m.sum()),
-                                    pa.binary(),
-                                )
-                            )
-                            continue
-                        if c in mem_by_col:
-                            # member predicate column: gather kept rows
-                            # from phase 1's cached dictionaries through
-                            # the already-decoded code stream — no second
-                            # sidecar read, no second payload decode
-                            pi = mem_by_col[c]
-                            vals, voffs, _ = _decode_col(c)
-                            parts = []
-                            for j, bi in enumerate(survivors):
-                                sl = slice(int(voffs[j]),
-                                           int(voffs[j + 1]))
-                                codes = vals[sl][m[sl]]
-                                parts.append(
-                                    mem_dicts[pi][(seq, bi)].take(
-                                        pa.array(codes)
-                                    )
-                                )
-                            outs[c].append(
-                                pa.concat_arrays(
-                                    [p.combine_chunks()
-                                     if hasattr(p, "chunks") else p
-                                     for p in parts]
-                                )
-                            )
-                            continue
-                        if c in str_cols:
-                            # codes (validity-wrapped) + per-block dict
-                            # gather; a NULL code gathers a NULL value
-                            parts = []
-                            for bi in survivors:
-                                if per[c][bi][0] != per[anchor][bi][0]:
-                                    raise ValueError(
-                                        f"column {c!r} and {anchor!r} "
-                                        f"disagree on rows in block {bi} "
-                                        "— corrupt dataset"
-                                    )
-                                codes, _, cv = (
-                                    B.decode_blocks_batch_nullable(
-                                        [per[c][bi][4]], np.int64,
-                                        expected=[per[c][bi][0]],
-                                    )
-                                )
-                                uniq = B.decode_strings_arrow(
-                                    side[(seq, c, bi)], symbols
-                                )
-                                idx = (
-                                    pa.array(codes)
-                                    if cv.all()
-                                    else pa.array(codes, pa.int64(),
-                                                  mask=~cv)
-                                )
-                                parts.append(uniq.take(idx))
-                            arr = pa.concat_arrays(
-                                [p.combine_chunks() if hasattr(p, "chunks")
-                                 else p for p in parts]
-                            )
-                            if len(arr) != m.size:
-                                raise ValueError(
-                                    f"column {c!r} and {anchor!r} blocks "
-                                    "disagree on row counts"
-                                )
-                            outs[c].append(arr.filter(pa.array(m)))
-                        else:
-                            cv_vals, _, cv_valid = _decode_col(c)
-                            outs[c].append((cv_vals[m], ~cv_valid[m]))
-                if not outs[out_names[0]]:
-                    yield _empty_frame()
-                    continue
-                yield pd.DataFrame(
-                    {
-                        c: (
-                            pa.concat_arrays(outs[c])
-                            .cast(pa.string())
-                            .to_pandas()
-                            if c in str_cols
-                            else pd.Series(
-                                pd.arrays.IntegerArray(
-                                    np.concatenate(
-                                        [v for v, _ in outs[c]]
-                                    ),
-                                    np.concatenate(
-                                        [mk for _, mk in outs[c]]
-                                    ),
-                                )
-                            )
-                        )
-                        for c in out_names
-                    }
-                )
-
-    return run_scan
-
-
 def scan_table_files(
     spark: SparkSession, enc_dir: str, col: str, lo: int, hi: int,
     columns: list[str] | None = None,
@@ -2488,22 +1937,7 @@ def scan_table_files_eq(
     filtering a warehouse gets from parquet, served by our sidecar (and the
     reason string columns need no value zone maps: ranks are per-block,
     membership is the pruning statistic; see :func:`strdict_stats`)."""
-    schema = _load_table_schema(enc_dir)
-    if schema is None:
-        raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
-    if col not in schema["str_cols"]:
-        raise ValueError(
-            f"{col!r} is not a string column of this dataset "
-            f"(str_cols={schema['str_cols']}); for int equality use "
-            "scan_table_files(col, v, v)"
-        )
-    out_names = _scan_out_names(schema, col, columns)
-    v = value.encode("utf-8")
-    return _run_scan_tasks(
-        spark, enc_dir, schema, out_names,
-        [{"kind": "member", "col": col,
-          "match": _literals_matcher((v,)), "eq_single": v}],
-    )
+    return _scan_one(spark, enc_dir, ("eq", col, value), columns)
 
 
 def scan_table_files_in(
@@ -2523,25 +1957,7 @@ def scan_table_files_in(
     literal list touches O(blocks containing any literal) payload bytes.
     Duplicates in ``values`` collapse; an empty list is refused (SQL's
     ``IN ()`` is a syntax error)."""
-    schema = _load_table_schema(enc_dir)
-    if schema is None:
-        raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
-    if col not in schema["str_cols"]:
-        raise ValueError(
-            f"{col!r} is not a string column of this dataset "
-            f"(str_cols={schema['str_cols']}); for int membership compose "
-            "scan_table_files range predicates"
-        )
-    uniq = tuple(sorted({v.encode("utf-8") for v in values}))
-    if not uniq:
-        raise ValueError("values must name at least one literal")
-    out_names = _scan_out_names(schema, col, columns)
-    return _run_scan_tasks(
-        spark, enc_dir, schema, out_names,
-        [{"kind": "member", "col": col,
-          "match": _literals_matcher(uniq),
-          "eq_single": uniq[0] if len(uniq) == 1 else None}],
-    )
+    return _scan_one(spark, enc_dir, ("in", col, list(values)), columns)
 
 
 def _str_range_matcher(lo_b: bytes, hi_b: bytes):
@@ -2619,19 +2035,6 @@ def _str_suffix_matcher(suffix: bytes):
     return match
 
 
-def _require_str_col(enc_dir: str, col: str, what: str) -> dict:
-    schema = _load_table_schema(enc_dir)
-    if schema is None:
-        raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
-    if col not in schema["str_cols"]:
-        raise ValueError(
-            f"{col!r} is not a string column of this dataset "
-            f"(str_cols={schema['str_cols']}); for int {what} use "
-            "scan_table_files range predicates"
-        )
-    return schema
-
-
 def scan_table_files_str_range(
     spark: SparkSession, enc_dir: str, col: str, lo: str, hi: str,
     columns: list[str] | None = None,
@@ -2650,16 +2053,7 @@ def scan_table_files_str_range(
     ``lo > hi`` is the SQL empty range.  Payload bytes read are O(blocks
     containing an in-range value) — string zone-map pruning served by the
     sidecar."""
-    schema = _require_str_col(enc_dir, col, "ranges")
-    out_names = _scan_out_names(schema, col, columns)
-    return _run_scan_tasks(
-        spark, enc_dir, schema, out_names,
-        [{"kind": "member", "col": col,
-          "match": _str_range_matcher(
-              lo.encode("utf-8"), hi.encode("utf-8")
-          ),
-          "eq_single": None}],
-    )
+    return _scan_one(spark, enc_dir, ("str_between", col, lo, hi), columns)
 
 
 def scan_table_files_prefix(
@@ -2676,14 +2070,7 @@ def scan_table_files_prefix(
     entries), blocks with no prefixed entry prune without touching their
     payload, and survivors match per-block rank sets.  The empty prefix is
     SQL's ``LIKE '%'`` — every non-NULL row."""
-    schema = _require_str_col(enc_dir, col, "prefixes")
-    out_names = _scan_out_names(schema, col, columns)
-    return _run_scan_tasks(
-        spark, enc_dir, schema, out_names,
-        [{"kind": "member", "col": col,
-          "match": _str_prefix_matcher(prefix.encode("utf-8")),
-          "eq_single": None}],
-    )
+    return _scan_one(spark, enc_dir, ("prefix", col, prefix), columns)
 
 
 def _invert_matcher(match):
@@ -2701,7 +2088,7 @@ def _invert_matcher(match):
 
 
 def _norm_preds(schema: dict, preds, _top: bool = True) -> list[dict]:
-    """Normalize user predicate tuples to worker specs.  Accepted forms:
+    """Normalize user predicate tuples to pipeline specs.  Accepted forms:
     ``("between", int_col, lo, hi)`` / ``("not_between", int_col, lo, hi)``,
     ``("int_in", int_col, [values...])`` (zone maps prune blocks no literal
     falls inside; constant blocks whose value is a literal full-match),
@@ -2956,12 +2343,8 @@ def scan_table_files_where(
     if schema is None:
         raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
     specs = _norm_preds(schema, list(preds))
-    pred_cols = _spec_cols(specs)
-    if columns is None:
-        out_names = list(dict.fromkeys([schema["order_col"], *pred_cols]))
-    else:
-        out_names = _scan_out_names(schema, pred_cols[0], columns)
-    return _run_scan_tasks(spark, enc_dir, schema, out_names, specs)
+    return _run_scan_tasks(spark, enc_dir, schema,
+                           _where_out_names(schema, specs, columns), specs)
 
 
 def semijoin_scan_table_files(
@@ -3027,6 +2410,33 @@ def semijoin_scan_table_files(
     )
 
 
+def _restored_bytes(enc_dir: str, schema: dict, cols: list[str],
+                    rows: int) -> int:
+    """Estimated size of ``rows`` restored rows of ``cols``: 8 B per
+    int-plane column and, per string column, its mean dictionary entry
+    length (``raw_bytes / ndv`` summed over the column's sidecar rows —
+    a metadata read, no dictionary decoded)."""
+    import pyarrow.parquet as pq
+
+    strs = [c for c in cols if c in set(schema["str_cols"])]
+    width = 8.0 * (len(cols) - len(strs))
+    raw = dict.fromkeys(strs, 0)
+    ndv = dict.fromkeys(strs, 0)
+    for path in _live_block_files(enc_dir) if strs else []:
+        spath = _sidecar_path(path)
+        if not os.path.exists(spath):
+            continue
+        t = pq.read_table(spath, columns=["col_name", "ndv", "raw_bytes"],
+                          filters=[("col_name", "in", strs)])
+        for name, n, r in zip(t.column("col_name").to_pylist(),
+                              t.column("ndv").to_pylist(),
+                              t.column("raw_bytes").to_pylist()):
+            ndv[name] += n
+            raw[name] += r
+    width += sum(raw[c] / ndv[c] for c in strs if ndv[c])
+    return int(rows * width)
+
+
 def join_table_files(
     spark: SparkSession, enc_a: str, enc_b: str, on,
     preds_a=None, preds_b=None,
@@ -3050,8 +2460,11 @@ def join_table_files(
 
     * **Broadcast** — each side's exact decode bill comes from the
       EXPLAIN classification (:func:`explain_scan_table_files`'s bill, a
-      payload-free metadata pass run on the driver, no Spark job); when
-      the smaller side's bill is ``<= broadcast_bytes`` it broadcasts,
+      payload-free metadata pass run on the driver, no Spark job), and
+      its restored size is estimated from the same plan
+      (:func:`_restored_bytes`: surviving rows x per-column width); the
+      smaller side broadcasts when BOTH are ``<= broadcast_bytes`` — a
+      heavily compressed side can be tiny encoded and huge restored —
       otherwise Spark's shuffle join runs (AQE may still re-plan at
       runtime).
     * **Runtime filter** — on a single-column join whose key is a plain
@@ -3145,6 +2558,9 @@ def join_table_files(
         bill = _scan_bill(s["enc"], s["preds"], s["columns"])
         s["payload_bytes"] = bill.get("payload_bytes", 0)
         s["rows_surviving"] = bill.get("rows_surviving", 0)
+        s["restored_bytes"] = _restored_bytes(
+            s["enc"], s["schema"], s["columns"], s["rows_surviving"]
+        )
     small, big = sorted(sides, key=lambda s: s["payload_bytes"])
     if how == "left":
         # only side B may broadcast (Spark cannot broadcast the
@@ -3154,7 +2570,10 @@ def join_table_files(
     plan = {
         "payload_bytes_a": sides[0]["payload_bytes"],
         "payload_bytes_b": sides[1]["payload_bytes"],
-        "broadcast": small["payload_bytes"] <= broadcast_bytes,
+        "restored_bytes_a": sides[0]["restored_bytes"],
+        "restored_bytes_b": sides[1]["restored_bytes"],
+        "broadcast": max(small["payload_bytes"], small["restored_bytes"])
+        <= broadcast_bytes,
         "runtime_filter_keys": None,
     }
 
@@ -3261,12 +2680,9 @@ def ctas_table_files(
             "fresh dst_dir (each run stages its own scan output; resuming "
             "against another run's stage would mix lineages)"
         )
-    specs = _norm_preds(schema, list(preds))
-    pred_cols = _spec_cols(specs)
-    if columns is None:
-        out_names = list(dict.fromkeys([schema["order_col"], *pred_cols]))
-    else:
-        out_names = _scan_out_names(schema, pred_cols[0], columns)
+    out_names = _where_out_names(
+        schema, _norm_preds(schema, list(preds)), columns
+    )
     order_col = schema["order_col"]
     if cluster_by is None:
         if order_col not in out_names:
@@ -3396,6 +2812,29 @@ def _scan_out_names(schema: dict, col: str,
     return out_names
 
 
+def _where_out_names(schema: dict, specs: list[dict],
+                     columns: list[str] | None) -> list[str]:
+    """Projection of a conjunctive scan: ``columns`` validated, or by
+    default the order column plus each predicate column, in order."""
+    pred_cols = _spec_cols(specs)
+    if columns is None:
+        return list(dict.fromkeys([schema["order_col"], *pred_cols]))
+    return _scan_out_names(schema, pred_cols[0], columns)
+
+
+def _scan_one(spark: SparkSession, enc_dir: str, pred: tuple,
+              columns: list[str] | None):
+    """A single-predicate scan: ``pred`` normalized like any
+    :func:`scan_table_files_where` leaf, projected to ``columns``
+    (default ``(order_col, col)``)."""
+    schema = _load_table_schema(enc_dir)
+    if schema is None:
+        raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
+    specs = _norm_preds(schema, [pred])
+    return _run_scan_tasks(spark, enc_dir, schema,
+                           _scan_out_names(schema, pred[1], columns), specs)
+
+
 def _run_scan_tasks(spark: SparkSession, enc_dir: str, schema: dict,
                     out_names: list[str], specs: list[dict]):
     """The pruned scan of ``specs`` projected to ``out_names``, dispatched
@@ -3406,11 +2845,9 @@ def _run_scan_tasks(spark: SparkSession, enc_dir: str, schema: dict,
         f"`{c}` {'string' if c in str_cols else 'bigint'}"
         for c in out_names
     )
-    worker = _make_scan_worker(
-        schema, specs, out_names, symbols_hex=_symbols_hex(enc_dir),
-    )
-    out = _run_tasks(spark, enc_dir, _query_tasks(enc_dir), worker,
-                     scan_schema, specs, out_names)
+    out = _run_tasks(spark, enc_dir, _query_tasks(enc_dir),
+                     _ScanReducer(schema, specs, out_names), specs,
+                     scan_schema)
     return out.select(
         *[_typed_out_expr(schema, c) for c in out_names]
     )
@@ -3476,7 +2913,7 @@ def _int_pred_rowmask(p: dict, pv: np.ndarray,
 
 
 def _spec_parts(preds: list[dict]):
-    """Partition normalized specs into the three worker families:
+    """Partition normalized specs into the three predicate families:
     metadata predicates (int ranges + validity), dictionary memberships,
     and OR nodes (each a list of leaf specs)."""
     int_preds = [p for p in preds if p["kind"] in ("range", "valid")]
@@ -3502,141 +2939,309 @@ def _spec_cols(specs: list[dict]) -> list[str]:
     return list(dict.fromkeys(cols))
 
 
-def _int_leaf_class_map(p: dict, col_info: dict) -> dict:
-    """Class map of one metadata predicate over a file's blocks
-    (absent = pruned)."""
-    cl: dict = {}
-    for key, (nv, nn, nr, mn, mx) in col_info.items():
-        kind = _int_pred_class(p, nv, nn, nr, mn, mx)
-        if kind is not None:
-            cl[key] = kind
-    return cl
+# ---------------------------------------------------------------------------
+# The block pipeline.  Every pushdown operator runs the same four steps per
+# query task (:func:`_task_frame`): classify (:func:`_classify_file`:
+# metadata, zone maps and dictionary sidecars, no payload) -> need (the
+# operator reducer's (column, block) payload pairs plus the predicate
+# columns its partial blocks mask on) -> fetch (:func:`_fetch_payloads`,
+# one filtered read) -> decode/mask (:class:`_Blocks`) -> ``reducer.fold``.
+# EXPLAIN runs the same steps up to the need, with no fetch
+# (:func:`_explain_task`), so its bill is what the run reads.
+# ---------------------------------------------------------------------------
 
 
-def _mem_leaf_classify(path: str, file_sid: str, info: dict, p: dict,
-                       symbols, seg: str | None = None):
-    """Class map + matching code sets + whole-dictionary keys of one
-    membership predicate (reads the column's dictionary sidecar)."""
-    from rlv import blocks as B
+class _Dicts:
+    """One task's dictionary sidecar, read on demand: :meth:`load` reads
+    the (column, block) pairs not read yet in one filtered read, and each
+    dictionary decodes once, on first :meth:`get`."""
 
-    side = _read_dict_sidecar(path, file_sid, col=p["col"], seg=seg)
-    cl: dict = {}
-    codes: dict = {}
-    whole: set = set()
-    for (seq, _, bi), blob in side.items():
-        key = (seq, int(bi))
-        if key not in info[p["col"]]:
-            continue
-        uniq = B.decode_strings_arrow(blob, symbols)
-        hits = p["match"](uniq)
-        if not hits.size:
-            continue  # pruned: no dictionary entry matches
-        codes[key] = hits
-        nn = info[p["col"]][key][1]
-        if hits.size == len(uniq):
-            whole.add(key)
-            cl[key] = "full" if nn == 0 else "partial"
-        else:
-            cl[key] = "partial"
-    return cl, codes, whole
+    def __init__(self, path: str, file_sid: str, seg: str | None,
+                 symbols):
+        self.path, self.file_sid, self.seg = path, file_sid, seg
+        self.symbols = symbols
+        self.blobs: dict[tuple[str, str, int], bytes] = {}
+        self.arrays: dict[tuple[str, str, int], object] = {}
+        self.loaded: dict[str, set[int]] = {}
+
+    def load(self, want: dict[str, set[int]]) -> None:
+        miss = {c: set(bis) - self.loaded.get(c, set())
+                for c, bis in want.items()}
+        miss = {c: bis for c, bis in miss.items() if bis}
+        if not miss:
+            return
+        self.blobs.update(_read_dict_sidecar(
+            self.path, self.file_sid, col=sorted(miss),
+            block_idx=sorted(set().union(*miss.values())), seg=self.seg,
+        ))
+        for c, bis in miss.items():
+            self.loaded.setdefault(c, set()).update(bis)
+
+    def get(self, seq: str, col: str, bi: int):
+        """Decoded dictionary of one loaded block, or None when the
+        sidecar has no row for it (an indexed int column's all-NULL
+        block)."""
+        k = (seq, col, bi)
+        arr = self.arrays.get(k)
+        if arr is None and k in self.blobs:
+            from rlv import blocks as B
+
+            arr = self.arrays[k] = B.decode_strings_arrow(
+                self.blobs[k], self.symbols
+            )
+        return arr
 
 
-def _pred_classify(path: str, file_sid: str, info: dict,
-                   int_preds: list[dict], mem_preds: list[dict], symbols,
-                   or_nodes: list[list[dict]] = (),
-                   seg: str | None = None):
-    """Phase-1 per-predicate block classification from metadata alone
-    (+ dictionary sidecars for member preds): returns
-    ``(pred_cls, mem_codes, mem_full, or_data)`` — ``pred_cls`` lists the
-    int preds' class maps, then the member preds', then one COMBINED map
-    per OR node, each mapping (segment, block) -> 'full'|'partial'
+class _Plan:
+    """One query task's classification (:func:`_classify_file`).
+
+    ``info[col][key]`` is ``(n_values, n_nulls, n_runs, min_val,
+    max_val)``, ``ebytes`` / ``sums`` the recorded ``enc_bytes`` /
+    ``sum_val`` per (column, key) (``sum_val`` None on files that predate
+    it) — every block of a predicate column, only the surviving blocks
+    of the operator's other columns; ``keys`` are all of the task's
+    blocks, ``nv[key]`` their rows; ``cls`` maps every surviving key
+    to ``'full'`` or ``'partial'`` and the ``pred_cls`` / ``mem_codes`` /
+    ``mem_full`` / ``or_data`` lists are what the row masks need (see
+    :func:`_pred_classify`).  ``side`` holds the task's decoded
+    dictionaries.  Keys are ``(split_seq, block_idx)``."""
+
+    def __init__(self, path: str, seg: str | None, specs: list[dict],
+                 symbols):
+        self.path, self.seg = path, seg
+        self.file_sid = os.path.splitext(os.path.basename(path))[0]
+        self.int_preds, self.mem_preds, self.or_nodes = _spec_parts(specs)
+        self.side = _Dicts(path, self.file_sid, seg, symbols)
+
+    @property
+    def rows_surviving(self) -> int:
+        return sum(self.nv[k] for k in self.cls)
+
+
+def _task_rows(tasks: pd.DataFrame):
+    """``(file, segment)`` of each row of a :func:`_query_tasks` frame;
+    segment None scopes the task to the whole file, a split id to that
+    absorbed split of a compacted file."""
+    for _, row in tasks.iterrows():
+        yield row["file"], _task_seg(row)
+
+
+def _classify_file(path: str, seg: str | None, specs: list[dict],
+                   cols: list[str], symbols) -> _Plan:
+    """Classify step of the block pipeline: a payload-free metadata read
+    of the predicate columns, predicate classification
+    (:func:`_pred_classify`), then — only when a block survives — one
+    more metadata read of the operator's other columns ``cols`` at the
+    surviving blocks (a pruned task never reads them; with no predicates
+    ``cols`` are read once and every block is full).  Every read runs the
+    inventory cross-checks: each column covers the same blocks with the
+    same row counts, so a lost column fails loudly instead of silently
+    undercounting.  ``seg`` scopes a segment task of a compacted file to
+    its own split (the ``split_seq`` filter prunes to that segment's row
+    groups)."""
+    import pyarrow.parquet as pq
+
+    plan = _Plan(path, seg, specs, symbols)
+    plan.has_sums = "sum_val" in pq.read_schema(path).names
+    plan.info, plan.ebytes, plan.sums = {}, {}, {}
+    first = _spec_cols(specs) or list(cols)
+    _read_meta(plan, first)
+    ref = plan.info[first[0]]
+    plan.keys = set(ref)
+    plan.nv = {k: ref[k][0] for k in plan.keys}
+    _check_inventory(plan, first, plan.keys)
+    _pred_classify(plan)
+    rest = [c for c in cols if c not in plan.info]
+    if rest:
+        _read_meta(plan, rest, set(plan.cls))
+        _check_inventory(plan, rest, set(plan.cls), ref_col=first[0])
+    return plan
+
+
+def _read_meta(plan: _Plan, cols: list[str], keys: set | None = None):
+    """Block metadata of ``cols`` into ``plan``'s ``info`` / ``ebytes`` /
+    ``sums`` maps, for every block or only ``keys`` (no read when
+    ``keys`` is empty)."""
+    import pyarrow.parquet as pq
+
+    for c in cols:
+        plan.info[c], plan.ebytes[c], plan.sums[c] = {}, {}, {}
+    if keys is not None and not keys:
+        return
+    meta_cols = ["split_seq", "col_name", "block_idx", "n_values",
+                 "n_nulls", "n_runs", "min_val", "max_val", "enc_bytes"]
+    if plan.has_sums:
+        meta_cols.append("sum_val")
+    filters: list = [("col_name", "in", cols)]
+    if keys is not None:
+        filters.append(("block_idx", "in", sorted({bi for _, bi in keys})))
+    if plan.seg is not None:
+        filters.append(("split_seq", "=", plan.seg))
+    meta = pq.read_table(
+        plan.path, columns=meta_cols, filters=filters,
+    ).combine_chunks()
+    for sid, segment in _split_segments(meta, plan.file_sid):
+        for name, bi, nv, nn, nr, mn, mx, eb, sm in zip(
+            segment.column("col_name").to_pylist(),
+            *(segment.column(c).to_numpy().tolist()
+              for c in meta_cols[2:9]),
+            segment.column("sum_val").to_pylist() if plan.has_sums
+            else [None] * len(segment),
+        ):
+            key = (sid, bi)
+            if keys is not None and key not in keys:
+                continue  # another segment's block of a whole-file task
+            plan.info[name][key] = (nv, nn, nr, mn, mx)
+            plan.ebytes[name][key] = eb
+            plan.sums[name][key] = None if sm is None else int(sm)
+
+
+def _check_inventory(plan: _Plan, cols: list[str], keys: set,
+                     ref_col: str | None = None) -> None:
+    """Every column of ``cols`` covers exactly ``keys`` with the rows
+    ``plan.nv`` records (read from ``ref_col``, default ``cols[0]``)."""
+    ref_col = ref_col or cols[0]
+    for c in cols:
+        if set(plan.info[c]) != keys:
+            raise ValueError(
+                f"columns {ref_col!r} and {c!r} cover different "
+                "blocks — corrupt dataset"
+            )
+        for key in keys:
+            if plan.info[c][key][0] != plan.nv[key]:
+                raise ValueError(
+                    f"column {c!r} and {ref_col!r} disagree on rows "
+                    f"in block {key[1]} — corrupt dataset"
+                )
+
+
+def _pred_classify(plan: _Plan) -> None:
+    """Per-predicate block classification into ``plan``: ``pred_cls``
+    lists the int preds' class maps, then the member preds', then one
+    COMBINED map per OR node, each mapping key -> 'full'|'partial'
     (absent = pruned); ``mem_codes[i]`` holds member pred i's per-block
-    matching code sets; ``mem_full[i]`` the keys whose WHOLE dictionary
-    matches (only NULL rows can fail there).  An OR node classifies as the
-    leaf UNION: pruned only when every leaf prunes, full when ANY leaf
-    full-matches; ``or_data[j] = (leaf_cls, leaf_mem)`` keeps the per-leaf
-    maps (and, for member leaves, their ``(codes, whole)``) for
-    masking."""
-    pred_cls: list[dict] = []
-    for p in int_preds:
-        pred_cls.append(_int_leaf_class_map(p, info[p["col"]]))
-    mem_codes: list[dict] = []
-    mem_full: list[set] = []
-    for p in mem_preds:
-        cl, codes, whole = _mem_leaf_classify(
-            path, file_sid, info, p, symbols, seg=seg
-        )
-        pred_cls.append(cl)
-        mem_codes.append(codes)
-        mem_full.append(whole)
-    def _one_leaf(leaf):
-        if leaf["kind"] in ("range", "valid"):
-            return _int_leaf_class_map(leaf, info[leaf["col"]]), None
-        cl, codes, whole = _mem_leaf_classify(
-            path, file_sid, info, leaf, symbols, seg=seg
-        )
+    matching code sets and ``mem_full[i]`` the keys whose WHOLE
+    dictionary matches (only NULL rows can fail there).  An OR node
+    classifies as the leaf UNION: pruned only when every leaf prunes,
+    full when ANY leaf full-matches; ``or_data[j] = (leaf_cls,
+    leaf_mem)`` keeps the per-leaf maps (and, for member leaves, their
+    ``(codes, whole)``) for masking; an ``andgroup`` leaf is pruned when
+    ANY conjunct prunes and full when ALL full-match.  ``cls`` is the
+    combined class: pruned if ANY predicate prunes, full if ALL
+    full-match; no predicates = every key full.
+
+    Predicates classify in that order over the keys still alive, so the
+    dictionary sidecar is read only when the int predicates leave a
+    survivor — once, for every membership column (top level and OR
+    leaves) — and each dictionary decodes once per task however many
+    predicates use it."""
+    alive = {k: "full" for k in plan.keys}
+    mem_cols = sorted(
+        {p["col"] for p in plan.mem_preds}
+        | {a["col"] for node in plan.or_nodes for leaf in node
+           for a in _leaf_atoms(leaf) if a["kind"] == "member"}
+    )
+
+    def meet(cl: dict) -> None:
+        for k in list(alive):
+            kind = cl.get(k)
+            if kind is None:
+                del alive[k]
+            elif kind == "partial":
+                alive[k] = "partial"
+
+    def leaf(atom: dict):
+        col_info = plan.info[atom["col"]]
+        cl: dict = {}
+        if atom["kind"] in ("range", "valid"):
+            for k in alive:
+                kind = _int_pred_class(atom, *col_info[k])
+                if kind is not None:
+                    cl[k] = kind
+            return cl, None
+        if alive:
+            bis = {bi for _, bi in alive}
+            plan.side.load({c: bis for c in mem_cols})
+        codes: dict = {}
+        whole: set = set()
+        for k in alive:
+            uniq = plan.side.get(k[0], atom["col"], k[1])
+            if uniq is None:
+                continue
+            hits = atom["match"](uniq)
+            if not hits.size:
+                continue  # pruned: no dictionary entry matches
+            codes[k] = hits
+            if hits.size == len(uniq):
+                whole.add(k)
+                cl[k] = "full" if col_info[k][1] == 0 else "partial"
+            else:
+                cl[k] = "partial"
         return cl, (codes, whole)
 
-    or_data: list[tuple] = []
-    for node in or_nodes:
+    plan.pred_cls, plan.mem_codes, plan.mem_full, plan.or_data = \
+        [], [], [], []
+    for p in plan.int_preds:
+        cl, _ = leaf(p)
+        plan.pred_cls.append(cl)
+        meet(cl)
+    for p in plan.mem_preds:
+        cl, (codes, whole) = leaf(p)
+        plan.pred_cls.append(cl)
+        plan.mem_codes.append(codes)
+        plan.mem_full.append(whole)
+        meet(cl)
+    for node in plan.or_nodes:
         leaf_cls: list[dict] = []
         leaf_mem: list = []
-        for leaf in node:
-            if leaf["kind"] == "andgroup":
-                # the group's class at a key = AND over its conjuncts:
-                # pruned when ANY conjunct prunes, full when ALL do
-                atom_cls: list[dict] = []
-                atom_mem: list = []
-                for atom in leaf["specs"]:
-                    acl, amem = _one_leaf(atom)
-                    atom_cls.append(acl)
-                    atom_mem.append(amem)
-                gcl: dict = {}
-                for key in atom_cls[0]:
-                    kinds = [cl.get(key) for cl in atom_cls]
-                    if any(k is None for k in kinds):
-                        continue
-                    gcl[key] = (
-                        "full" if all(k == "full" for k in kinds)
-                        else "partial"
-                    )
-                leaf_cls.append(gcl)
-                leaf_mem.append(("and", atom_cls, atom_mem))
-            else:
-                cl, mem = _one_leaf(leaf)
+        for lf in node:
+            if lf["kind"] != "andgroup":
+                cl, mem = leaf(lf)
                 leaf_cls.append(cl)
                 leaf_mem.append(mem)
+                continue
+            atom_cls, atom_mem = [], []
+            for atom in lf["specs"]:
+                acl, amem = leaf(atom)
+                atom_cls.append(acl)
+                atom_mem.append(amem)
+            gcl: dict = {}
+            for k in atom_cls[0]:
+                kinds = [cl.get(k) for cl in atom_cls]
+                if None not in kinds:
+                    gcl[k] = ("full" if all(x == "full" for x in kinds)
+                              else "partial")
+            leaf_cls.append(gcl)
+            leaf_mem.append(("and", atom_cls, atom_mem))
         ncl: dict = {}
         for cl in leaf_cls:
-            for key, kind in cl.items():
+            for k, kind in cl.items():
                 if kind == "full":
-                    ncl[key] = "full"
+                    ncl[k] = "full"
                 else:
-                    ncl.setdefault(key, "partial")
-        pred_cls.append(ncl)
-        or_data.append((leaf_cls, leaf_mem))
-    return pred_cls, mem_codes, mem_full, or_data
+                    ncl.setdefault(k, "partial")
+        plan.pred_cls.append(ncl)
+        plan.or_data.append((leaf_cls, leaf_mem))
+        meet(ncl)
+    plan.cls = alive
 
 
-def _pred_need_cols(key, pred_cls: list[dict],
-                    int_preds: list[dict], mem_preds: list[dict],
-                    or_nodes: list[list[dict]] = (),
-                    or_data: list[tuple] = ()) -> set[str]:
+def _pred_need_cols(plan: _Plan, key) -> set[str]:
     """Columns whose payload one PARTIAL block must decode to mask: every
     non-full top-level predicate's column, plus — for each non-full OR
     node — the columns of its partial leaves (pruned leaves contribute
     nothing, and a full leaf would have made the node full)."""
     cols: set[str] = set()
-    for cl, p in zip(pred_cls, [*int_preds, *mem_preds]):
+    for cl, p in zip(plan.pred_cls, [*plan.int_preds, *plan.mem_preds]):
         if p.get("mask_free"):
             continue  # classification-only (indexed-int membership)
         if cl.get(key) != "full":
             cols.add(p["col"])
-    base = len(int_preds) + len(mem_preds)
-    for ni, node in enumerate(or_nodes):
-        if pred_cls[base + ni].get(key) == "full":
+    base = len(plan.int_preds) + len(plan.mem_preds)
+    for ni, node in enumerate(plan.or_nodes):
+        if plan.pred_cls[base + ni].get(key) == "full":
             continue
-        leaf_cls, leaf_mem = or_data[ni]
+        leaf_cls, leaf_mem = plan.or_data[ni]
         for li, leaf in enumerate(node):
             if leaf_cls[li].get(key) != "partial":
                 continue
@@ -3652,48 +3257,45 @@ def _pred_need_cols(key, pred_cls: list[dict],
     return cols
 
 
-def _pred_mask(key, nv: int, pred_cls: list[dict],
-               int_preds: list[dict], mem_preds: list[dict],
-               mem_codes: list[dict], mem_full: list[set], dec,
-               or_nodes: list[list[dict]] = (),
-               or_data: list[tuple] = ()):
-    """AND row mask for one PARTIAL block: decode (via ``dec(col)``) only
-    the predicates not full-matching there; a member pred whose whole
-    dictionary matches drops NULL rows only (no set test).  An OR node
-    contributes the UNION of its leaf masks (a leaf pruned at this block
-    contributes nothing; a full leaf cannot occur in a partial node)."""
-    mask = np.ones(nv, bool)
-    for cl, p in zip(pred_cls[:len(int_preds)], int_preds):
+def _pred_mask(plan: _Plan, key, dec) -> np.ndarray:
+    """AND row mask for one PARTIAL block: decode (``dec(col)`` ->
+    ``(values, validity)``) only the predicates not full-matching there;
+    a member pred whose whole dictionary matches drops NULL rows only (no
+    set test).  An OR node contributes the UNION of its leaf masks (a
+    leaf pruned at this block contributes nothing; a full leaf cannot
+    occur in a partial node)."""
+    n_int = len(plan.int_preds)
+    mask = np.ones(plan.nv[key], bool)
+    for cl, p in zip(plan.pred_cls[:n_int], plan.int_preds):
         if cl.get(key) == "full":
             continue
-        pv, _, pvalid = dec(p["col"])
+        pv, pvalid = dec(p["col"])
         mask &= _int_pred_rowmask(p, pv, pvalid)
-    for mi, (cl, p) in enumerate(
-        zip(pred_cls[len(int_preds):], mem_preds)
-    ):
+    for mi, (cl, p) in enumerate(zip(plan.pred_cls[n_int:],
+                                     plan.mem_preds)):
         if cl.get(key) == "full" or p.get("mask_free"):
             continue
-        pv, _, pvalid = dec(p["col"])
-        if key in mem_full[mi]:
+        pv, pvalid = dec(p["col"])
+        if key in plan.mem_full[mi]:
             mask &= pvalid
         else:
-            mask &= pvalid & np.isin(pv, mem_codes[mi][key])
-    base = len(int_preds) + len(mem_preds)
-    for ni, node in enumerate(or_nodes):
-        if pred_cls[base + ni].get(key) == "full":
+            mask &= pvalid & np.isin(pv, plan.mem_codes[mi][key])
+
+    def atom_mask(atom, mem):
+        pv, pvalid = dec(atom["col"])
+        if atom["kind"] in ("range", "valid"):
+            return _int_pred_rowmask(atom, pv, pvalid)
+        codes, whole = mem
+        if key in whole:
+            return pvalid.copy()
+        return pvalid & np.isin(pv, codes[key])
+
+    base = n_int + len(plan.mem_preds)
+    for ni, node in enumerate(plan.or_nodes):
+        if plan.pred_cls[base + ni].get(key) == "full":
             continue
-        leaf_cls, leaf_mem = or_data[ni]
-
-        def _atom_mask(atom, mem):
-            pv, _, pvalid = dec(atom["col"])
-            if atom["kind"] in ("range", "valid"):
-                return _int_pred_rowmask(atom, pv, pvalid)
-            codes, whole = mem
-            if key in whole:
-                return pvalid.copy()
-            return pvalid & np.isin(pv, codes[key])
-
-        nm = np.zeros(nv, bool)
+        leaf_cls, leaf_mem = plan.or_data[ni]
+        nm = np.zeros(plan.nv[key], bool)
         for li, leaf in enumerate(node):
             if leaf_cls[li].get(key) is None:
                 continue
@@ -3701,16 +3303,313 @@ def _pred_mask(key, nv: int, pred_cls: list[dict],
                 # group mask = AND over conjuncts; a conjunct full at
                 # this block matches every row (no decode)
                 _, atom_cls, atom_mem = leaf_mem[li]
-                gm = np.ones(nv, bool)
+                gm = np.ones(plan.nv[key], bool)
                 for ai, atom in enumerate(leaf["specs"]):
-                    if atom_cls[ai].get(key) == "full":
-                        continue
-                    gm &= _atom_mask(atom, atom_mem[ai])
+                    if atom_cls[ai].get(key) != "full":
+                        gm &= atom_mask(atom, atom_mem[ai])
                 nm |= gm
             else:
-                nm |= _atom_mask(leaf, leaf_mem[li])
+                nm |= atom_mask(leaf, leaf_mem[li])
         mask &= nm
     return mask
+
+
+def _fetch_payloads(path: str, file_sid: str, seg: str | None,
+                    need: dict[str, set[int]]
+                    ) -> dict[tuple[str, str, int], bytes]:
+    """Fetch step of the block pipeline: ONE filtered payload read
+    covering every needed column, returning ``{(split_seq, col,
+    block_idx): blob}`` for exactly the needed (column, block_idx) pairs.
+    Row groups hold one (split_seq, col_name) run each, so the
+    ``col_name`` filter decompresses only the needed columns' pages; a
+    segment-scoped task pushes the ``split_seq`` filter so the read
+    prunes to its own row groups."""
+    import pyarrow.parquet as pq
+
+    cols = sorted(c for c, idxs in need.items() if idxs)
+    if not cols:
+        return {}
+    filters: list = [
+        ("col_name", "in", cols),
+        ("block_idx", "in", sorted(set().union(*(need[c] for c in cols)))),
+    ]
+    if seg is not None:
+        filters.append(("split_seq", "=", seg))
+    t = pq.read_table(
+        path,
+        columns=["split_seq", "col_name", "block_idx", "block"],
+        filters=filters,
+    ).combine_chunks()
+    blobs: dict[tuple[str, str, int], bytes] = {}
+    for sid, segment in _split_segments(t, file_sid):
+        for name, bi, blob in zip(
+            segment.column("col_name").to_pylist(),
+            segment.column("block_idx").to_numpy(),
+            segment.column("block").to_pylist(),
+        ):
+            if int(bi) in need[name]:
+                blobs[(sid, name, int(bi))] = blob
+    return blobs
+
+
+class _Blocks:
+    """Decode/mask step of the block pipeline for one task: the fetched
+    payloads, where each column is decoded on first use by ONE
+    ``decode_blocks_batch_nullable`` call per segment over exactly the
+    keys ``need`` lists for it, and the row mask of each block."""
+
+    def __init__(self, plan: _Plan, blobs: dict, need: dict):
+        self.plan, self.blobs, self.need = plan, blobs, need
+        self.batches: dict[tuple[str, str], tuple] = {}
+
+    def blob(self, col: str, key) -> bytes:
+        blob = self.blobs.get((key[0], col, key[1]))
+        if blob is None:
+            raise ValueError(
+                f"column {col!r} is missing block {key[1]} of segment "
+                f"{key[0]} — corrupt dataset"
+            )
+        return blob
+
+    def _batch(self, col: str, seq: str) -> tuple:
+        got = self.batches.get((col, seq))
+        if got is None:
+            from rlv import blocks as B
+
+            keys = sorted(k for k in self.need[col] if k[0] == seq)
+            vals, offs, valid = B.decode_blocks_batch_nullable(
+                [self.blob(col, k) for k in keys], np.int64,
+                expected=[self.plan.info[col][k][0] for k in keys],
+            )
+            got = self.batches[(col, seq)] = (
+                vals, valid, offs, {k: i for i, k in enumerate(keys)}
+            )
+        return got
+
+    def seg(self, col: str, seq: str):
+        """``(values, validity)`` of ``col`` over every block of segment
+        ``seq`` it is needed at, in block order."""
+        vals, valid, _, _ = self._batch(col, seq)
+        return vals, valid
+
+    def dec(self, col: str, key):
+        """``(values, validity)`` of ``col`` in one block."""
+        vals, valid, offs, pos = self._batch(col, key[0])
+        i = pos[key]
+        sl = slice(int(offs[i]), int(offs[i + 1]))
+        return vals[sl], valid[sl]
+
+    def mask(self, key) -> np.ndarray:
+        """Row mask of one surviving block (all rows when it is full)."""
+        if self.plan.cls[key] == "full":
+            return np.ones(self.plan.nv[key], bool)
+        return _pred_mask(self.plan, key, lambda c: self.dec(c, key))
+
+    def seg_mask(self, keys: list, offs: np.ndarray) -> np.ndarray:
+        """Row mask over consecutive blocks ``keys`` of one segment."""
+        m = np.ones(int(offs[-1]), bool)
+        for i, k in enumerate(keys):
+            if self.plan.cls[k] == "partial":
+                m[int(offs[i]):int(offs[i + 1])] = self.mask(k)
+        return m
+
+
+def _segments(keys: list) -> list[tuple[str, list]]:
+    """Sorted keys grouped by segment, in order."""
+    out: list[tuple[str, list]] = []
+    for k in keys:
+        if not out or out[-1][0] != k[0]:
+            out.append((k[0], []))
+        out[-1][1].append(k)
+    return out
+
+
+def _block_offsets(plan: _Plan, keys: list) -> np.ndarray:
+    """Row offsets of consecutive blocks ``keys`` (length len(keys)+1)."""
+    offs = np.zeros(len(keys) + 1, np.int64)
+    np.cumsum([plan.nv[k] for k in keys], out=offs[1:])
+    return offs
+
+
+class _Reducer:
+    """One pushdown operator's part of the block pipeline.  ``cols`` are
+    the columns it reads beside the predicates (and the width of the
+    tiny-plan rule); :meth:`keys` picks the surviving blocks it folds;
+    :meth:`need` names the payload (column -> keys) it decodes and the
+    payload it reads raw (whole blocks, e.g. an RLE run-list sum);
+    :meth:`side` the dictionaries (column -> block_idx) it reads;
+    :meth:`fold` turns one task into its output frame."""
+
+    cols: list[str]
+
+    def keys(self, plan: _Plan) -> list:
+        return sorted(plan.cls)
+
+    def need(self, plan: _Plan, keys: list):
+        return {}, {}
+
+    def side(self, plan: _Plan, keys: list) -> dict:
+        return {}
+
+
+def _need(plan: _Plan, reducer, keys: list):
+    """Need step: ``(decode, fetch)`` column -> keys maps — the
+    reducer's decode pairs plus every predicate column the partial
+    blocks among ``keys`` mask on, and those with the reducer's raw pairs
+    added: everything the fetch step reads."""
+    dec, raw = reducer.need(plan, keys)
+    for key in keys:
+        if plan.cls[key] == "partial":
+            for c in _pred_need_cols(plan, key):
+                dec.setdefault(c, set()).add(key)
+    fetch = {c: set(ks) for c, ks in dec.items()}
+    for c, ks in raw.items():
+        fetch.setdefault(c, set()).update(ks)
+    return dec, fetch
+
+
+def _task_frame(plan: _Plan, reducer) -> pd.DataFrame:
+    """Run one classified task through the rest of the block pipeline:
+    need -> fetch -> decode/mask -> ``reducer.fold``."""
+    keys = reducer.keys(plan)
+    blk = None
+    if keys:
+        dec, fetch = _need(plan, reducer, keys)
+        want = {c: {bi for _, bi in ks} for c, ks in fetch.items()}
+        blk = _Blocks(
+            plan, _fetch_payloads(plan.path, plan.file_sid, plan.seg, want),
+            dec,
+        )
+        plan.side.load(reducer.side(plan, keys))
+    return reducer.fold(plan, keys, blk)
+
+
+def _explain_task(plan: _Plan, reducer) -> dict:
+    """EXPLAIN bill of one classified task: the pipeline up to its need
+    step, no fetch.  ``payload_bytes`` sums the recorded ``enc_bytes`` of
+    exactly the (column, block) pairs :func:`_task_frame` would fetch;
+    ``blocks_meta_served`` counts full blocks it reads no payload for."""
+    keys = reducer.keys(plan)
+    fetch = _need(plan, reducer, keys)[1] if keys else {}
+    pairs = {(c, k) for c, ks in fetch.items() for k in ks}
+    read = {k for _, k in pairs}
+    n_full = sum(1 for kind in plan.cls.values() if kind == "full")
+    rows_total = sum(plan.nv.values())
+    rows_surv = plan.rows_surviving
+    return {
+        "blocks_total": len(plan.keys),
+        "blocks_pruned": len(plan.keys) - len(plan.cls),
+        "blocks_full": n_full,
+        "blocks_partial": len(plan.cls) - n_full,
+        "blocks_meta_served": sum(
+            1 for k, kind in plan.cls.items()
+            if kind == "full" and k not in read
+        ),
+        "rows_total": rows_total,
+        "rows_pruned": rows_total - rows_surv,
+        "rows_surviving": rows_surv,
+        "payload_bytes": sum(plan.ebytes[c][k] for c, k in pairs),
+    }
+
+
+class _ScanReducer(_Reducer):
+    """Scan reducer: the projected columns of every kept row, in
+    (segment, block_idx) order within a task.  Each projected column is
+    fetched at every surviving block and decoded once per segment; int
+    columns filter by the segment's row mask, string columns gather the
+    kept rows' codes through the block dictionaries (a NULL code gathers
+    a NULL value).  A member predicate's column gathers from the
+    dictionaries classification already decoded; a single-literal
+    equality column whose predicate is the only member predicate on it
+    needs no payload at all — every kept row IS the literal."""
+
+    def __init__(self, schema: dict, specs: list[dict],
+                 out_names: list[str]):
+        _, mem_preds, _ = _spec_parts(specs)
+        mem_cols = [p["col"] for p in mem_preds]
+        self.cols = list(out_names)
+        self.str_cols = set(schema["str_cols"])
+        self.eq = {
+            p["col"]: p["eq_single"]
+            for p in mem_preds
+            if p.get("eq_single") is not None
+            and mem_cols.count(p["col"]) == 1
+        }
+
+    def need(self, plan, keys):
+        return {c: set(keys) for c in self.cols if c not in self.eq}, {}
+
+    def side(self, plan, keys) -> dict:
+        bis = {bi for _, bi in keys}
+        return {c: bis for c in self.cols
+                if c in self.str_cols and c not in self.eq}
+
+    def fold(self, plan, keys, blk) -> pd.DataFrame:
+        import pyarrow as pa
+
+        outs: dict[str, list] = {c: [] for c in self.cols}
+        for seq, skeys in _segments(keys):
+            offs = _block_offsets(plan, skeys)
+            m = blk.seg_mask(skeys, offs)
+            n = int(m.sum())
+            if not n:
+                continue
+            for c in self.cols:
+                if c in self.eq:
+                    outs[c].append(pa.array([self.eq[c]] * n, pa.binary()))
+                    continue
+                vals, valid = blk.seg(c, seq)
+                if c in self.str_cols:
+                    outs[c].append(
+                        _gather_strings(plan, c, skeys, offs, vals, valid, m)
+                    )
+                elif n == m.size:
+                    outs[c].append((vals, ~valid))
+                else:
+                    outs[c].append((vals[m], ~valid[m]))
+        if not outs[self.cols[0]]:
+            return pd.DataFrame({
+                c: (pd.Series([], dtype=object) if c in self.str_cols
+                    else pd.Series(np.empty(0, np.int64)))
+                for c in self.cols
+            })
+        return pd.DataFrame({
+            c: (
+                pa.concat_arrays(outs[c]).cast(pa.string()).to_pandas()
+                if c in self.str_cols
+                else pd.Series(pd.arrays.IntegerArray(
+                    np.concatenate([v for v, _ in outs[c]]),
+                    np.concatenate([mk for _, mk in outs[c]]),
+                ))
+            )
+            for c in self.cols
+        })
+
+
+def _gather_strings(plan, col: str, keys: list, offs: np.ndarray,
+                    codes: np.ndarray, valid: np.ndarray, m: np.ndarray):
+    """Kept rows (``m``) of one segment's decoded string column as one
+    Arrow binary array: per block, the kept codes index the block's
+    dictionary; a NULL code gathers a NULL value."""
+    import pyarrow as pa
+
+    parts = []
+    for i, key in enumerate(keys):
+        sl = slice(int(offs[i]), int(offs[i + 1]))
+        keep = m[sl]
+        if not keep.any():
+            continue
+        kc, kv = codes[sl][keep], valid[sl][keep]
+        uniq = plan.side.get(key[0], col, key[1])
+        if uniq is None:
+            raise ValueError(
+                f"column {col!r} is missing the dictionary for block "
+                f"{key[1]} of segment {key[0]} — corrupt dataset"
+            )
+        idx = (pa.array(kc) if kv.all()
+               else pa.array(kc, pa.int64(), mask=~kv))
+        parts.append(uniq.take(idx))
+    return pa.concat_arrays(parts)
 
 
 def _task_seg(row) -> str | None:
@@ -3723,291 +3622,74 @@ def _task_seg(row) -> str | None:
     return str(seg)
 
 
-def _classify_file(path: str, file_sid: str, seg: str | None,
-                   all_cols: list[str], int_preds: list[dict],
-                   mem_preds: list[dict], or_nodes: list[list[dict]],
-                   symbols, with_enc_bytes: bool = False):
-    """Shared phase 1 of every per-file pushdown worker (agg / group /
-    distinct / top-k / explain): ONE payload-free metadata read over the
-    involved columns, the per-(segment, block) info map, the inventory
-    cross-checks (every column covers the same keys with the same row
-    counts — a lost column fails loudly instead of silently
-    undercounting), predicate classification, and the combined class per
-    key: pruned if ANY predicate prunes, full if ALL full-match, else
-    partial; no predicates = every key full.
+class _AggReducer(_Reducer):
+    """Aggregate reducer for a CONJUNCTION of predicates: one labeled
+    ``(n_rows, n_vals, sum_val, min_val, max_val)`` row per value column.
+    Full blocks aggregate from their stats row (``n_nulls``, ``sum_val``,
+    zone map) with no payload read — or, on files that predate
+    ``sum_val``, from the raw value block via :func:`rlv.blocks.agg_block`
+    (an RLE block sums its run list without expanding); partial blocks
+    decode the value columns and pick the masked rows.  One pass
+    classifies and masks for ALL value columns: k aggregate sets cost one
+    predicate evaluation, not k."""
 
-    ``seg`` scopes a segment task of a compacted file to its own split
-    (the ``split_seq`` filter prunes to that segment's row groups).
-    Returns ``(info, keys, cls, pred_cls, mem_codes, mem_full, or_data,
-    ebytes, sums)`` — ``ebytes`` is the per-column ``{key: enc_bytes}``
-    map when ``with_enc_bytes`` else None; ``sums`` is the per-column
-    ``{key: exact valid-value sum}`` map (values None when the file
-    predates the ``sum_val`` stat — callers fall back to payload)."""
-    import pyarrow.parquet as pq
+    def __init__(self, value_cols: list[str]):
+        self.cols = list(value_cols)
 
-    meta_cols = ["split_seq", "col_name", "block_idx", "n_values",
-                 "n_nulls", "n_runs", "min_val", "max_val"]
-    has_sums = "sum_val" in pq.read_schema(path).names
-    if has_sums:
-        meta_cols.append("sum_val")
-    if with_enc_bytes:
-        meta_cols.append("enc_bytes")
-    filters: list = [("col_name", "in", all_cols)]
-    if seg is not None:
-        filters.append(("split_seq", "=", seg))
-    meta = pq.read_table(
-        path, columns=meta_cols, filters=filters,
-    ).combine_chunks()
-    info: dict[str, dict[tuple[str, int], tuple]] = {
-        c: {} for c in all_cols
-    }
-    ebytes: dict[str, dict[tuple[str, int], int]] | None = (
-        {c: {} for c in all_cols} if with_enc_bytes else None
-    )
-    sums: dict[str, dict[tuple[str, int], int | None]] = {
-        c: {} for c in all_cols
-    }
-    for sid, segment in _split_segments(meta, file_sid):
-        cols = [
-            segment.column("col_name").to_pylist(),
-            segment.column("block_idx").to_numpy(),
-            segment.column("n_values").to_numpy(),
-            segment.column("n_nulls").to_numpy(),
-            segment.column("n_runs").to_numpy(),
-            segment.column("min_val").to_numpy(),
-            segment.column("max_val").to_numpy(),
-        ]
-        cols.append(
-            segment.column("sum_val").to_pylist()
-            if has_sums
-            else [None] * len(segment)
-        )
-        if with_enc_bytes:
-            cols.append(segment.column("enc_bytes").to_numpy())
-        for name, bi, nv, nn, nr, mn, mx, sm, *rest in zip(*cols):
-            key = (sid, int(bi))
-            info[name][key] = (
-                int(nv), int(nn), int(nr), int(mn), int(mx)
-            )
-            sums[name][key] = int(sm) if sm is not None else None
-            if with_enc_bytes:
-                ebytes[name][key] = int(rest[0])
-    keys = set(info[all_cols[0]])
-    for c in all_cols[1:]:
-        if set(info[c]) != keys:
-            raise ValueError(
-                f"columns {all_cols[0]!r} and {c!r} cover different "
-                "blocks — corrupt dataset"
-            )
-    for key in keys:
-        rows0 = info[all_cols[0]][key][0]
-        for c in all_cols[1:]:
-            if info[c][key][0] != rows0:
-                raise ValueError(
-                    f"column {c!r} and {all_cols[0]!r} disagree on rows "
-                    f"in block {key[1]} — corrupt dataset"
-                )
-    if int_preds or mem_preds or or_nodes:
-        pred_cls, mem_codes, mem_full, or_data = _pred_classify(
-            path, file_sid, info, int_preds, mem_preds, symbols,
-            or_nodes, seg=seg,
-        )
-        cls: dict[tuple[str, int], str] = {}
+    def need(self, plan, keys):
+        dec = {vc: set() for vc in self.cols}
+        raw = {vc: set() for vc in self.cols}
         for key in keys:
-            kinds = [cl.get(key) for cl in pred_cls]
-            if any(k is None for k in kinds):
-                continue
-            cls[key] = (
-                "full" if all(k == "full" for k in kinds) else "partial"
-            )
-    else:
-        pred_cls, mem_codes, mem_full, or_data = [], [], [], []
-        cls = {k: "full" for k in keys}
-    return (info, keys, cls, pred_cls, mem_codes, mem_full, or_data,
-            ebytes, sums)
+            for vc in self.cols:
+                if plan.cls[key] == "partial":
+                    dec[vc].add(key)
+                elif plan.sums[vc].get(key) is None:
+                    raw[vc].add(key)
+        return dec, raw
 
-
-def _fetch_payloads(path: str, file_sid: str, seg: str | None,
-                    need: dict[str, set[int]]
-                    ) -> dict[tuple[str, str, int], bytes]:
-    """Shared phase 2 of the pushdown workers: one filtered payload read
-    per needed column, returning ``{(split_seq, col, block_idx): blob}``.
-    The ``block_idx`` in-filter over-reads only ordinals needed in another
-    segment of a compacted file (callers look up exact keys); a
-    segment-scoped task pushes the ``split_seq`` filter so the read prunes
-    to its own row groups instead."""
-    import pyarrow.parquet as pq
-
-    blobs: dict[tuple[str, str, int], bytes] = {}
-    for c in sorted(need):
-        idxs = need[c]
-        if not idxs:
-            continue
-        filters: list = [("col_name", "=", c),
-                         ("block_idx", "in", sorted(idxs))]
-        if seg is not None:
-            filters.append(("split_seq", "=", seg))
-        t = pq.read_table(
-            path,
-            columns=["split_seq", "block_idx", "block"],
-            filters=filters,
-        ).combine_chunks()
-        for sid, segment in _split_segments(t, file_sid):
-            for bi, blob in zip(
-                segment.column("block_idx").to_numpy(),
-                segment.column("block").to_pylist(),
-            ):
-                blobs[(sid, c, int(bi))] = blob
-    return blobs
-
-
-def _make_agg_worker(value_cols: list[str], preds: list[dict],
-                     symbols_hex: tuple[str, ...] | None = None):
-    """Aggregate worker over one blocks file for a CONJUNCTION of
-    predicates (the specs :func:`_norm_preds` emits — int zone-map ranges
-    and string dictionary memberships).  Every predicate classifies each
-    block pruned / full-match / partial from metadata (+ sidecars) alone;
-    the combined class is pruned if ANY pred prunes, full if ALL preds
-    full-match, else partial.  Full blocks aggregate the value columns
-    without decoding any predicate (RLE blocks sum run lists without
-    expanding); partial blocks decode ONLY the predicates not full-matching
-    there, AND the masks, and pick the value rows.  One pass classifies
-    and masks for ALL value columns: k aggregate sets cost one predicate
-    evaluation, not k.  Emits one labeled row per value column."""
-    int_preds, mem_preds, or_nodes = _spec_parts(preds)
-    pred_cols = _spec_cols(preds)
-    all_cols = list(dict.fromkeys([*pred_cols, *value_cols]))
-
-    def run_agg(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-
+    def fold(self, plan, keys, blk) -> pd.DataFrame:
         from rlv import blocks as B
 
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                # phase 1 — METADATA for every involved column in one
-                # payload-free read; member preds additionally decode their
-                # (small) dictionary sidecars.  `full` blocks match every
-                # row without decoding the predicate; `partial` blocks
-                # decode; the rest are pruned and never read again.
-                info, keys, cls, pred_cls, mem_codes, mem_full, \
-                    or_data, _, sums = _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols,
-                    )
-                if not cls:
-                    yield _agg_frame(
-                        value_cols, 0,
-                        {vc: [0, 0, None, None] for vc in value_cols},
-                    )
-                    continue
-                # columns needing payload: at partial keys, each pred col
-                # where that pred is not full there plus every value
-                # column; at full keys the block stats (n_nulls, sum_val,
-                # zone map) ARE the aggregate — no value payload is read
-                # (pre-sum_val files fall back to the payload there)
-                need: dict[str, set[int]] = {
-                    vc: set() for vc in value_cols
-                }
-                for key, kind in cls.items():
-                    if kind != "partial":
-                        for vc in value_cols:
-                            if sums[vc].get(key) is None:
-                                need[vc].add(key[1])
+        n_rows = 0
+        stats: dict[str, list] = {vc: [0, 0, None, None] for vc in self.cols}
+
+        def add(st, n, s, mn, mx):
+            st[0] += n
+            st[1] += s
+            if mn is not None:
+                st[2] = mn if st[2] is None else min(st[2], mn)
+                st[3] = mx if st[3] is None else max(st[3], mx)
+
+        for key in keys:
+            nv = plan.nv[key]
+            if plan.cls[key] == "full":
+                n_rows += nv
+                for vc in self.cols:
+                    ms = plan.sums[vc].get(key)
+                    if ms is not None:
+                        # metadata-only: the block stats carry the exact
+                        # valid count, sum, and zone map
+                        vnv, vnn, vnr, vmn, vmx = plan.info[vc][key]
+                        add(stats[vc], vnv - vnn, ms,
+                            *((vmn, vmx) if vnr > 0 else (None, None)))
                         continue
-                    for vc in value_cols:
-                        need[vc].add(key[1])
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes, or_data):
-                        need.setdefault(c, set()).add(key[1])
-                # phase 2 — payloads for needed (column, ordinal) pairs
-                # only (per-key lookups below are exact)
-                blobs = _fetch_payloads(path, file_sid, seg, need)
-                n_rows = 0
-                stats: dict[str, list] = {
-                    vc: [0, 0, None, None] for vc in value_cols
-                }
-                for key in sorted(cls):
-                    seq, bi = key
-                    nv = info[value_cols[0]][key][0]
-                    for vc in value_cols:
-                        if bi in need[vc] and (seq, vc, bi) not in blobs:
-                            raise ValueError(
-                                f"column {vc!r} is missing block "
-                                f"{bi} of segment {seq} — corrupt dataset"
-                            )
-                    if cls[key] == "full":
-                        n_rows += nv
-                        for vc in value_cols:
-                            ms = sums[vc].get(key)
-                            if ms is not None:
-                                # metadata-only: the block stats carry the
-                                # exact valid count, sum, and zone map
-                                vnv, vnn, vnr, vmn, vmx = info[vc][key]
-                                st = stats[vc]
-                                st[0] += vnv - vnn
-                                st[1] += ms
-                                if vnr > 0:
-                                    st[2] = vmn if st[2] is None \
-                                        else min(st[2], vmn)
-                                    st[3] = vmx if st[3] is None \
-                                        else max(st[3], vmx)
-                                continue
-                            bn, bnv, bs, bmn, bmx = B.agg_block(
-                                blobs[(seq, vc, bi)]
-                            )
-                            if bn != nv:
-                                raise ValueError(
-                                    f"block {bi} declares {nv} rows but "
-                                    f"decodes {bn} — corrupt dataset"
-                                )
-                            st = stats[vc]
-                            st[0] += bnv
-                            st[1] += bs
-                            if bmn is not None:
-                                st[2] = bmn if st[2] is None \
-                                    else min(st[2], bmn)
-                                st[3] = bmx if st[3] is None \
-                                    else max(st[3], bmx)
-                    else:
-                        decoded: dict[str, tuple] = {}
-
-                        def _dec(c, seq=seq, bi=bi, nv=nv, decoded=decoded):
-                            if c not in decoded:
-                                decoded[c] = B.decode_blocks_batch_nullable(
-                                    [blobs[(seq, c, bi)]], np.int64,
-                                    expected=[nv],
-                                )
-                            return decoded[c]
-
-                        mask = _pred_mask(
-                            key, nv, pred_cls, int_preds, mem_preds,
-                            mem_codes, mem_full, _dec, or_nodes, or_data,
+                    bn, bnv, bs, bmn, bmx = B.agg_block(blk.blob(vc, key))
+                    if bn != nv:
+                        raise ValueError(
+                            f"block {key[1]} declares {nv} rows but "
+                            f"decodes {bn} — corrupt dataset"
                         )
-                        n_rows += int(mask.sum())
-                        for vc in value_cols:
-                            vv, _, vvalid = _dec(vc)
-                            picked = vv[mask & vvalid]
-                            if picked.size == 0:
-                                continue
-                            st = stats[vc]
-                            st[0] += picked.size
-                            st[1] += B.exact_sum_i64(picked)
-                            bmn, bmx = int(picked.min()), int(picked.max())
-                            st[2] = bmn if st[2] is None \
-                                else min(st[2], bmn)
-                            st[3] = bmx if st[3] is None \
-                                else max(st[3], bmx)
-                yield _agg_frame(value_cols, n_rows, stats)
-
-    return run_agg
+                    add(stats[vc], bnv, bs, bmn, bmx)
+                continue
+            mask = blk.mask(key)
+            n_rows += int(mask.sum())
+            for vc in self.cols:
+                vv, vvalid = blk.dec(vc, key)
+                picked = vv[mask & vvalid]
+                if picked.size:
+                    add(stats[vc], picked.size, B.exact_sum_i64(picked),
+                        int(picked.min()), int(picked.max()))
+        return _agg_frame(self.cols, n_rows, stats)
 
 
 def _agg_frame(value_cols: list[str], n_rows: int,
@@ -4103,9 +3785,6 @@ def agg_table_files_where(
         _require_summable(schema, vc)
     dec = _uniform_dec_parts(schema, value_cols)
     specs = _norm_preds(schema, list(preds))
-    worker = _make_agg_worker(
-        value_cols, specs, symbols_hex=_symbols_hex(enc_dir)
-    )
     tasks = _query_tasks(enc_dir)
     from pyspark.sql import functions as F
 
@@ -4134,8 +3813,8 @@ def agg_table_files_where(
             partial_schema,
         )
     else:
-        partials = _run_tasks(spark, enc_dir, tasks, worker,
-                              partial_schema, specs, value_cols)
+        partials = _run_tasks(spark, enc_dir, tasks,
+                              _AggReducer(value_cols), specs, partial_schema)
     combined = partials.groupBy("val_col").agg(
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_vals").alias("n_vals"),
@@ -4203,69 +3882,22 @@ def _uniform_dec_parts(schema: dict, value_cols: list[str]):
     return next(iter(decs))
 
 
-def _make_count_worker(preds: list[dict],
-                       symbols_hex: tuple[str, ...] | None = None):
-    """COUNT(*) worker over one blocks file: FULL blocks count from
-    metadata alone (their recorded ``n_values``); only PARTIAL blocks
-    decode — and only their non-full PREDICATE columns, never a value
-    column.  One bigint per task."""
-    int_preds, mem_preds, or_nodes = _spec_parts(preds)
-    all_cols = _spec_cols(preds)
+class _CountReducer(_Reducer):
+    """COUNT(*) reducer: FULL blocks count from metadata alone (their
+    recorded ``n_values``); only PARTIAL blocks decode — and only their
+    non-full PREDICATE columns, never a value column.  One bigint per
+    task."""
 
-    def run_count(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        from rlv import blocks as B
+    def __init__(self, specs: list[dict]):
+        self.cols = _spec_cols(specs)
 
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
+    def fold(self, plan, keys, blk) -> pd.DataFrame:
+        n = sum(
+            plan.nv[key] if plan.cls[key] == "full"
+            else int(blk.mask(key).sum())
+            for key in keys
         )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, pred_cls, mem_codes, mem_full, \
-                    or_data, _, _ = _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols,
-                    )
-                need: dict[str, set[int]] = {}
-                for key, kind in cls.items():
-                    if kind != "partial":
-                        continue
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes,
-                                             or_data):
-                        need.setdefault(c, set()).add(key[1])
-                blobs = _fetch_payloads(path, file_sid, seg, need)
-                n = 0
-                for key in sorted(cls):
-                    nv = info[all_cols[0]][key][0]
-                    if cls[key] == "full":
-                        n += nv
-                        continue
-                    seq, bi = key
-                    decoded: dict[str, tuple] = {}
-
-                    def _dec(c, seq=seq, bi=bi, nv=nv, decoded=decoded):
-                        if c not in decoded:
-                            decoded[c] = B.decode_blocks_batch_nullable(
-                                [blobs[(seq, c, bi)]], np.int64,
-                                expected=[nv],
-                            )
-                        return decoded[c]
-
-                    mask = _pred_mask(
-                        key, nv, pred_cls, int_preds, mem_preds,
-                        mem_codes, mem_full, _dec, or_nodes, or_data,
-                    )
-                    n += int(mask.sum())
-                yield pd.DataFrame({"n_rows": [n]})
-
-    return run_count
+        return pd.DataFrame({"n_rows": [n]})
 
 
 def count_table_files_where(spark: SparkSession, enc_dir: str, preds):
@@ -4294,102 +3926,58 @@ def count_table_files_where(spark: SparkSession, enc_dir: str, preds):
         )
         return _one_row_frame(spark, {"n_rows": total}, "n_rows bigint")
     specs = _norm_preds(schema, list(preds))
-    worker = _make_count_worker(specs, symbols_hex=_symbols_hex(enc_dir))
+    reducer = _CountReducer(specs)
     tasks = _query_tasks(enc_dir)
     from pyspark.sql import functions as F
 
     # a tiny plan folds on the driver: a local one-row frame, 0 Spark jobs
-    local = _driver_local_pdf(enc_dir, tasks, worker, "n_rows bigint",
-                              specs, _spec_cols(specs))
+    local = _driver_local_pdf(enc_dir, tasks, reducer, specs,
+                              "n_rows bigint")
     if local is not None:
         return _one_row_frame(
             spark, {"n_rows": int(local["n_rows"].sum())}, "n_rows bigint"
         )
-    parts = _spark_run(spark, tasks, worker, "n_rows bigint")
+    parts = _spark_run(spark, enc_dir, tasks, reducer, specs,
+                       "n_rows bigint")
     return parts.agg(
         F.coalesce(F.sum("n_rows"), F.lit(0)).cast("bigint")
         .alias("n_rows")
     )
 
 
-def _make_minmax_worker(value_col: str, preds: list[dict],
-                        symbols_hex: tuple[str, ...] | None = None):
-    """MIN/MAX worker over one blocks file: FULL blocks contribute their
-    recorded zone map (min_val/max_val over valid values — METADATA, no
-    value payload); only PARTIAL blocks decode the value column (plus
-    their non-full predicate columns) and fold the masked values.  One
-    nullable (min_val, max_val) row per task."""
-    int_preds, mem_preds, or_nodes = _spec_parts(preds)
-    all_cols = list(dict.fromkeys([*_spec_cols(preds), value_col]))
+class _MinMaxReducer(_Reducer):
+    """MIN/MAX reducer: FULL blocks contribute their recorded zone map
+    (min_val/max_val over valid values — METADATA, no value payload);
+    only PARTIAL blocks decode the value column and fold the masked
+    values.  One nullable (min_val, max_val) row per task."""
 
-    def run_minmax(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        from rlv import blocks as B
+    def __init__(self, value_col: str):
+        self.cols = [value_col]
 
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, pred_cls, mem_codes, mem_full, \
-                    or_data, _, _ = _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols,
-                    )
-                need: dict[str, set[int]] = {}
-                for key, kind in cls.items():
-                    if kind != "partial":
-                        continue
-                    need.setdefault(value_col, set()).add(key[1])
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes,
-                                             or_data):
-                        need.setdefault(c, set()).add(key[1])
-                blobs = _fetch_payloads(path, file_sid, seg, need)
-                mn = mx = None
-                for key in sorted(cls):
-                    nv, nn, nr, bmn, bmx = info[value_col][key]
-                    if cls[key] == "full":
-                        if nr == 0:
-                            continue  # all-NULL value block
-                        mn = bmn if mn is None else min(mn, bmn)
-                        mx = bmx if mx is None else max(mx, bmx)
-                        continue
-                    seq, bi = key
-                    decoded: dict[str, tuple] = {}
+    def need(self, plan, keys):
+        return {self.cols[0]: {k for k in keys
+                               if plan.cls[k] == "partial"}}, {}
 
-                    def _dec(c, seq=seq, bi=bi, nv=nv, decoded=decoded):
-                        if c not in decoded:
-                            decoded[c] = B.decode_blocks_batch_nullable(
-                                [blobs[(seq, c, bi)]], np.int64,
-                                expected=[nv],
-                            )
-                        return decoded[c]
-
-                    mask = _pred_mask(
-                        key, nv, pred_cls, int_preds, mem_preds,
-                        mem_codes, mem_full, _dec, or_nodes, or_data,
-                    )
-                    vv, _, vvalid = _dec(value_col)
-                    picked = vv[mask & vvalid]
-                    if picked.size:
-                        pmn, pmx = int(picked.min()), int(picked.max())
-                        mn = pmn if mn is None else min(mn, pmn)
-                        mx = pmx if mx is None else max(mx, pmx)
-                yield pd.DataFrame(
-                    {
-                        "min_val": pd.array([mn], dtype="Int64"),
-                        "max_val": pd.array([mx], dtype="Int64"),
-                    }
-                )
-
-    return run_minmax
+    def fold(self, plan, keys, blk) -> pd.DataFrame:
+        vc = self.cols[0]
+        mn = mx = None
+        for key in keys:
+            if plan.cls[key] == "full":
+                _, _, nr, bmn, bmx = plan.info[vc][key]
+                if nr == 0:
+                    continue  # all-NULL value block
+            else:
+                vv, vvalid = blk.dec(vc, key)
+                picked = vv[blk.mask(key) & vvalid]
+                if not picked.size:
+                    continue
+                bmn, bmx = int(picked.min()), int(picked.max())
+            mn = bmn if mn is None else min(mn, bmn)
+            mx = bmx if mx is None else max(mx, bmx)
+        return pd.DataFrame({
+            "min_val": pd.array([mn], dtype="Int64"),
+            "max_val": pd.array([mx], dtype="Int64"),
+        })
 
 
 def minmax_table_files_where(spark: SparkSession, enc_dir: str,
@@ -4417,13 +4005,11 @@ def minmax_table_files_where(spark: SparkSession, enc_dir: str,
         )
     schema = _require_int_col(enc_dir, value_col)
     specs = _norm_preds(schema, list(preds))
-    worker = _make_minmax_worker(
-        value_col, specs, symbols_hex=_symbols_hex(enc_dir)
-    )
     from pyspark.sql import functions as F
 
-    parts = _run_tasks(spark, enc_dir, _query_tasks(enc_dir), worker,
-                       "min_val bigint, max_val bigint", specs, [value_col])
+    parts = _run_tasks(spark, enc_dir, _query_tasks(enc_dir),
+                       _MinMaxReducer(value_col), specs,
+                       "min_val bigint, max_val bigint")
     folded = parts.agg(
         F.min("min_val").cast("bigint").alias("min_val"),
         F.max("max_val").cast("bigint").alias("max_val"),
@@ -4483,493 +4069,146 @@ def _group_seg_agg(keys: np.ndarray, vals: np.ndarray,
             cur[4] = mx if cur[4] is None else max(cur[4], mx)
 
 
-def _make_group_agg_worker(value_col: str, group_col: str,
-                           group_is_str: bool,
-                           preds: list[dict],
-                           symbols_hex: tuple[str, ...] | None):
-    """Grouped-aggregate worker over one blocks file for a CONJUNCTION of
-    predicates: phase 1 classifies blocks per predicate exactly like
-    :func:`_make_agg_worker` (shared :func:`_pred_classify`; no predicates
-    = everything full-matches), phase 2 fetches group + value payloads for
-    survivors (predicate payloads only for the ordinals where that
-    predicate is not full) and aggregates per group key — dict CODES for a
-    string group (one sidecar decode per block maps codes to names), raw
-    values for an int group, NULL group keys pooled SQL-style.  Emits one
-    partial row per (file, group)."""
-    int_preds, mem_preds, or_nodes = _spec_parts(preds)
-    pred_cols = _spec_cols(preds)
-    all_cols = list(dict.fromkeys([group_col, value_col, *pred_cols]))
+class _GroupReducer(_Reducer):
+    """GROUP BY reducer over one or more key columns (any mix of int and
+    string).  Per block, each group column maps to a dense local id
+    (dictionary code + 1 for strings, unique-rank + 1 for ints, 0 = NULL
+    — so NULLs participate in key TUPLES, SQL semantics; one key column
+    gives SQL's single pooled NULL group), then the columns combine one at
+    a time in mixed radix with a ``np.unique`` re-densification after
+    each step — composite values never exceed (block distinct) x (radix),
+    so int64 cannot overflow at any ``rows_per_block``.  Aggregation runs
+    :func:`_group_seg_agg` over the composite; one partial row per (task,
+    key tuple), string keys as raw bytes.
 
-    def _empty() -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "g": pd.Series(
-                    [], dtype=object if group_is_str else "Int64"
-                ),
-                "n_rows": pd.Series([], dtype="int64"),
-                "n_vals": pd.Series([], dtype="int64"),
-                "sum_val": pd.Series([], dtype=object),
-                "min_val": pd.Series([], dtype="Int64"),
-                "max_val": pd.Series([], dtype="Int64"),
-            }
-        )
+    Single-group shortcut: a full block where EVERY group column's zone
+    map is a point (no NULL keys) or the column is all-NULL belongs to
+    one key tuple, so its value stats row (count, n_nulls, sum_val, zone
+    map) IS its partial and no payload is read — on group-clustered data
+    (:func:`cluster_encode_table_files`) GROUP BY is metadata-only away
+    from cluster boundaries."""
 
-    def run_group_agg(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
+    def __init__(self, value_col: str, group_cols: list[str],
+                 str_groups: set[str]):
+        self.value_col = value_col
+        self.group_cols = list(group_cols)
+        self.str_groups = set(str_groups)
+        self.cols = list(dict.fromkeys([value_col, *group_cols]))
+
+    def _single(self, plan, keys) -> set:
+        single = set()
+        for key in keys:
+            if plan.cls[key] != "full" \
+                    or plan.sums[self.value_col].get(key) is None:
+                continue  # pre-sum_val generations decode
+            if all(
+                (nn == 0 and mn == mx) or nn == nv
+                for nv, nn, _, mn, mx in (
+                    plan.info[g][key] for g in self.group_cols
+                )
+            ):
+                single.add(key)
+        return single
+
+    def need(self, plan, keys):
+        rest = set(keys) - self._single(plan, keys)
+        return {c: set(rest) for c in self.cols}, {}
+
+    def side(self, plan, keys) -> dict:
+        bis = {bi for _, bi in keys}
+        return {g: bis for g in self.str_groups}
+
+    def _names(self, plan, g: str, key) -> list:
+        """Group values of one string key column's block dictionary."""
+        uniq = plan.side.get(key[0], g, key[1])
+        if uniq is None:
+            raise ValueError(
+                f"column {g!r} is missing the dictionary for block "
+                f"{key[1]} of segment {key[0]} — corrupt dataset"
+            )
+        return uniq.to_pylist()
+
+    def fold(self, plan, keys, blk) -> pd.DataFrame:
         from decimal import Decimal
 
-        from rlv import blocks as B
-
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
+        single = self._single(plan, keys)
+        acc: dict[tuple, list] = {}
+        for key in keys:
+            if key in single:
+                parts = []
+                for g in self.group_cols:
+                    gnv, gnn, _, _, gmx = plan.info[g][key]
+                    if gnn == gnv:
+                        parts.append(None)
+                    elif g in self.str_groups:
+                        # a point zone map means one distinct valid value:
+                        # the block dictionary holds exactly it
+                        parts.append(self._names(plan, g, key)[gmx])
+                    else:
+                        parts.append(gmx)
+                vnv, vnn, _, vmn, vmx = plan.info[self.value_col][key]
+                cur = acc.setdefault(tuple(parts), [0, 0, 0, None, None])
+                cur[0] += vnv
+                if vnv - vnn:
+                    cur[1] += vnv - vnn
+                    cur[2] += plan.sums[self.value_col][key]
+                    cur[3] = vmn if cur[3] is None else min(cur[3], vmn)
+                    cur[4] = vmx if cur[4] is None else max(cur[4], vmx)
+                continue
+            mask = blk.mask(key)
+            if not mask.any():
+                continue
+            # per-column dense local ids (0 = NULL) + name slots
+            comp: np.ndarray | None = None
+            lookup: list[tuple] = []
+            for g in self.group_cols:
+                gv, gvalid = blk.dec(g, key)
+                if g in self.str_groups:
+                    names_g = [None, *(
+                        self._names(plan, g, key) if gvalid.any() else []
+                    )]
+                    ids = np.where(gvalid, gv + 1, 0)
+                else:
+                    uniq = np.unique(gv[gvalid])
+                    names_g = [None, *(int(u) for u in uniq)]
+                    ids = np.where(
+                        gvalid, np.searchsorted(uniq, gv) + 1, 0
+                    )
+                radix = len(names_g)
+                if comp is None:
+                    dense, inv = np.unique(ids, return_inverse=True)
+                    lookup = [(names_g[int(d)],) for d in dense]
+                else:
+                    dense, inv = np.unique(
+                        comp * radix + ids, return_inverse=True
+                    )
+                    lookup = [
+                        lookup[int(d // radix)] + (names_g[int(d % radix)],)
+                        for d in dense
+                    ]
+                comp = inv.astype(np.int64)
+            vv, vvalid = blk.dec(self.value_col, key)
+            _group_seg_agg(comp[mask], vv[mask], vvalid[mask], acc,
+                           lookup.__getitem__)
+        groups = sorted(
+            acc, key=lambda t: tuple((v is not None, v) for v in t)
         )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                # phase 1 — one payload-free metadata read, inventory
-                # cross-checks, combined pruned/full/partial class
-                info, keys, cls, pred_cls, mem_codes, mem_full, \
-                    or_data, _, sums = _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols,
-                    )
-                if not cls:
-                    yield _empty()
-                    continue
-
-                # single-group shortcut: a full-matching block whose group
-                # zone map is a point (min == max, no NULL keys) — or whose
-                # keys are ALL NULL — belongs to exactly one group, so its
-                # value stats row (count, n_nulls, sum_val, zone map) IS
-                # its partial: neither payload decodes.  On group-clustered
-                # data (cluster_encode_table_files) that makes GROUP BY
-                # metadata-only away from cluster boundaries.
-                single: dict[tuple[str, int], int | None] = {}
-                for key, kind in cls.items():
-                    if kind != "full":
-                        continue
-                    if sums[value_col].get(key) is None:
-                        continue  # pre-sum_val generation
-                    gnv, gnn, gnr, gmn, gmx = info[group_col][key]
-                    if gnn == 0 and gmn == gmx:
-                        single[key] = gmx  # one non-NULL key
-                    elif gnn == gnv:
-                        single[key] = None  # SQL's pooled NULL group
-
-                # phase 2 — group/value payloads for the non-shortcut
-                # survivors only; predicate payloads only at the ordinals
-                # where some partial block needs that predicate decoded
-                need: dict[str, set[int]] = {group_col: set(),
-                                             value_col: set()}
-                for key, kind in cls.items():
-                    if key in single:
-                        continue
-                    need[group_col].add(key[1])
-                    need[value_col].add(key[1])
-                    if kind != "partial":
-                        continue
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes, or_data):
-                        need.setdefault(c, set()).add(key[1])
-                blobs = _fetch_payloads(path, file_sid, seg, need)
-                side = (
-                    _read_dict_sidecar(path, file_sid, col=group_col,
-                                       seg=seg)
-                    if group_is_str
-                    else None
-                )
-                acc: dict[object, list] = {}
-                for key in sorted(cls):
-                    nv_rows = info[group_col][key][0]
-                    if key in single:
-                        code = single[key]
-                        if code is None:
-                            g = None
-                        elif group_is_str:
-                            blob = None if side is None else side.get(
-                                (key[0], group_col, key[1])
-                            )
-                            if blob is None:
-                                raise ValueError(
-                                    f"column {group_col!r} is missing the "
-                                    f"dictionary for block {key[1]} of "
-                                    f"segment {key[0]} — corrupt dataset"
-                                )
-                            # a point zone map means one distinct valid
-                            # value: the block dictionary holds exactly it
-                            g = B.decode_strings_arrow(
-                                blob, symbols
-                            ).to_pylist()[code]
-                        else:
-                            g = code
-                        vnv, vnn, _, vmn, vmx = info[value_col][key]
-                        cur = acc.get(g)
-                        if cur is None:
-                            cur = acc[g] = [0, 0, 0, None, None]
-                        cur[0] += vnv
-                        nvalid = vnv - vnn
-                        if nvalid:
-                            cur[1] += nvalid
-                            cur[2] += sums[value_col][key]
-                            cur[3] = vmn if cur[3] is None \
-                                else min(cur[3], vmn)
-                            cur[4] = vmx if cur[4] is None \
-                                else max(cur[4], vmx)
-                        continue
-                    decoded: dict[str, tuple] = {}
-
-                    def _dec(c, key=key, nv=nv_rows, decoded=decoded):
-                        if c in decoded:
-                            return decoded[c]
-                        if (key[0], c, key[1]) not in blobs:
-                            raise ValueError(
-                                f"column {c!r} is missing block {key[1]} "
-                                f"of segment {key[0]} — corrupt dataset"
-                            )
-                        decoded[c] = B.decode_blocks_batch_nullable(
-                            [blobs[(key[0], c, key[1])]], np.int64,
-                            expected=[nv],
-                        )
-                        return decoded[c]
-
-                    if cls[key] == "full":
-                        mask = np.ones(nv_rows, dtype=bool)
-                    else:
-                        mask = _pred_mask(
-                            key, nv_rows, pred_cls, int_preds, mem_preds,
-                            mem_codes, mem_full, _dec, or_nodes, or_data,
-                        )
-                        if not mask.any():
-                            continue
-                    gv, _, gvalid = _dec(group_col)
-                    vv, _, vvalid = _dec(value_col)
-                    if group_is_str:
-                        blob = None if side is None else side.get(
-                            (key[0], group_col, key[1])
-                        )
-                        if blob is None and bool((mask & gvalid).any()):
-                            raise ValueError(
-                                f"column {group_col!r} is missing the "
-                                f"dictionary for block {key[1]} of segment "
-                                f"{key[0]} — corrupt dataset"
-                            )
-                        names = (
-                            []
-                            if blob is None
-                            else B.decode_strings_arrow(
-                                blob, symbols
-                            ).to_pylist()
-                        )
-                        name_of = names.__getitem__
-                    else:
-                        name_of = lambda k: k  # noqa: E731
-                    sel = mask & gvalid
-                    _group_seg_agg(
-                        gv[sel], vv[sel], vvalid[sel], acc, name_of
-                    )
-                    nsel = mask & ~gvalid  # SQL: NULL keys form one group
-                    if nsel.any():
-                        _group_seg_agg(
-                            np.zeros(int(nsel.sum()), np.int64),
-                            vv[nsel], vvalid[nsel], acc,
-                            lambda _k: None,
-                        )
-                if not acc:
-                    yield _empty()
-                    continue
-                groups = sorted(
-                    acc, key=lambda g: (g is not None, g)
-                )
-                yield pd.DataFrame(
-                    {
-                        "g": pd.Series(
-                            groups,
-                            dtype=object if group_is_str else "Int64",
-                        ),
-                        "n_rows": pd.Series(
-                            [acc[g][0] for g in groups], dtype="int64"
-                        ),
-                        "n_vals": pd.Series(
-                            [acc[g][1] for g in groups], dtype="int64"
-                        ),
-                        "sum_val": pd.Series(
-                            [Decimal(acc[g][2]) for g in groups],
-                            dtype=object,
-                        ),
-                        "min_val": pd.Series(
-                            [acc[g][3] for g in groups], dtype="Int64"
-                        ),
-                        "max_val": pd.Series(
-                            [acc[g][4] for g in groups], dtype="Int64"
-                        ),
-                    }
-                )
-
-    return run_group_agg
-
-
-def _make_multi_group_agg_worker(value_col: str, group_cols: list[str],
-                                 str_groups: set[str],
-                                 preds: list[dict],
-                                 symbols_hex: tuple[str, ...] | None):
-    """Multi-key grouped-aggregate worker: the composite-key counterpart
-    of :func:`_make_group_agg_worker`.  Per block, each group column maps
-    to a dense local id (dictionary code + 1 for strings, unique-rank + 1
-    for ints, 0 = NULL — so NULLs participate in key TUPLES, SQL multi-key
-    semantics), then the columns combine one at a time in mixed radix with
-    a ``np.unique`` re-densification after each step — composite values
-    never exceed (block distinct) × (radix), so int64 cannot overflow at
-    any ``rows_per_block``.  Aggregation reuses :func:`_group_seg_agg`
-    with a tuple-naming lookup; one partial row per (file, key tuple)."""
-    int_preds, mem_preds, or_nodes = _spec_parts(preds)
-    pred_cols = _spec_cols(preds)
-    all_cols = list(dict.fromkeys([*group_cols, value_col, *pred_cols]))
-    side_cols = sorted(str_groups)
-
-    def _empty() -> pd.DataFrame:
         cols = {
             g: pd.Series(
-                [], dtype=object if g in str_groups else "Int64"
+                [t[i] for t in groups],
+                dtype=object if g in self.str_groups else "Int64",
             )
-            for g in group_cols
+            for i, g in enumerate(self.group_cols)
         }
-        cols.update(
-            {
-                "n_rows": pd.Series([], dtype="int64"),
-                "n_vals": pd.Series([], dtype="int64"),
-                "sum_val": pd.Series([], dtype=object),
-                "min_val": pd.Series([], dtype="Int64"),
-                "max_val": pd.Series([], dtype="Int64"),
-            }
-        )
+        cols.update({
+            "n_rows": pd.Series([acc[t][0] for t in groups], dtype="int64"),
+            "n_vals": pd.Series([acc[t][1] for t in groups], dtype="int64"),
+            "sum_val": pd.Series([Decimal(acc[t][2]) for t in groups],
+                                 dtype=object),
+            "min_val": pd.Series([acc[t][3] for t in groups], dtype="Int64"),
+            "max_val": pd.Series([acc[t][4] for t in groups], dtype="Int64"),
+        })
         return pd.DataFrame(cols)
-
-    def run_multi_group(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        from decimal import Decimal
-
-        from rlv import blocks as B
-
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, pred_cls, mem_codes, mem_full, \
-                    or_data, _, sums = _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols,
-                    )
-                if not cls:
-                    yield _empty()
-                    continue
-
-                # single-group shortcut (the single-key worker's, lifted
-                # to tuples): a full block where EVERY group column's zone
-                # map is a point (or is all-NULL) belongs to one group
-                # tuple — its value stats row is its partial, no payload
-                single: dict[tuple[str, int], bool] = {}
-                for key, kind in cls.items():
-                    if kind != "full":
-                        continue
-                    if sums[value_col].get(key) is None:
-                        continue
-                    ok = True
-                    for g in group_cols:
-                        gnv, gnn, gnr, gmn, gmx = info[g][key]
-                        if not (gnn == 0 and gmn == gmx) \
-                                and gnn != gnv:
-                            ok = False
-                            break
-                    if ok:
-                        single[key] = True
-
-                need: dict[str, set[int]] = {
-                    c: set()
-                    for c in dict.fromkeys([*group_cols, value_col])
-                }
-                for key, kind in cls.items():
-                    if key in single:
-                        continue
-                    for c in dict.fromkeys([*group_cols, value_col]):
-                        need[c].add(key[1])
-                    if kind != "partial":
-                        continue
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes, or_data):
-                        need.setdefault(c, set()).add(key[1])
-                blobs = _fetch_payloads(path, file_sid, seg, need)
-                side = (
-                    _read_dict_sidecar(path, file_sid, col=side_cols,
-                                       seg=seg)
-                    if side_cols
-                    else {}
-                )
-                acc: dict[tuple, list] = {}
-                for key in sorted(cls):
-                    nv_rows = info[group_cols[0]][key][0]
-                    if key in single:
-                        parts = []
-                        for g in group_cols:
-                            gnv, gnn, _, _, gmx = info[g][key]
-                            if gnn == gnv:
-                                parts.append(None)
-                            elif g in str_groups:
-                                blob = side.get((key[0], g, key[1]))
-                                if blob is None:
-                                    raise ValueError(
-                                        f"column {g!r} is missing the "
-                                        f"dictionary for block {key[1]} "
-                                        f"of segment {key[0]} — corrupt "
-                                        "dataset"
-                                    )
-                                parts.append(
-                                    B.decode_strings_arrow(
-                                        blob, symbols
-                                    ).to_pylist()[gmx]
-                                )
-                            else:
-                                parts.append(gmx)
-                        gt = tuple(parts)
-                        vnv, vnn, _, vmn, vmx = info[value_col][key]
-                        cur = acc.get(gt)
-                        if cur is None:
-                            cur = acc[gt] = [0, 0, 0, None, None]
-                        cur[0] += vnv
-                        nvalid = vnv - vnn
-                        if nvalid:
-                            cur[1] += nvalid
-                            cur[2] += sums[value_col][key]
-                            cur[3] = vmn if cur[3] is None \
-                                else min(cur[3], vmn)
-                            cur[4] = vmx if cur[4] is None \
-                                else max(cur[4], vmx)
-                        continue
-                    decoded: dict[str, tuple] = {}
-
-                    def _dec(c, key=key, nv=nv_rows, decoded=decoded):
-                        if c in decoded:
-                            return decoded[c]
-                        if (key[0], c, key[1]) not in blobs:
-                            raise ValueError(
-                                f"column {c!r} is missing block {key[1]} "
-                                f"of segment {key[0]} — corrupt dataset"
-                            )
-                        decoded[c] = B.decode_blocks_batch_nullable(
-                            [blobs[(key[0], c, key[1])]], np.int64,
-                            expected=[nv],
-                        )
-                        return decoded[c]
-
-                    if cls[key] == "full":
-                        mask = np.ones(nv_rows, dtype=bool)
-                    else:
-                        mask = _pred_mask(
-                            key, nv_rows, pred_cls, int_preds, mem_preds,
-                            mem_codes, mem_full, _dec, or_nodes, or_data,
-                        )
-                        if not mask.any():
-                            continue
-                    # per-column dense local ids (0 = NULL) + name slots
-                    comp: np.ndarray | None = None
-                    lookup: list[tuple] = []
-                    for g in group_cols:
-                        gv, _, gvalid = _dec(g)
-                        if g in str_groups:
-                            blob = side.get((key[0], g, key[1]))
-                            if blob is None and bool(gvalid.any()):
-                                raise ValueError(
-                                    f"column {g!r} is missing the "
-                                    f"dictionary for block {key[1]} of "
-                                    f"segment {key[0]} — corrupt dataset"
-                                )
-                            gnames = (
-                                []
-                                if blob is None
-                                else B.decode_strings_arrow(
-                                    blob, symbols
-                                ).to_pylist()
-                            )
-                            names_g = [None, *gnames]
-                            ids = np.where(gvalid, gv + 1, 0)
-                        else:
-                            uniq = np.unique(gv[gvalid])
-                            names_g = [None, *(int(u) for u in uniq)]
-                            ids = np.where(
-                                gvalid, np.searchsorted(uniq, gv) + 1, 0
-                            )
-                        radix = len(names_g)
-                        if comp is None:
-                            dense, inv = np.unique(
-                                ids, return_inverse=True
-                            )
-                            lookup = [(names_g[int(d)],) for d in dense]
-                            comp = inv.astype(np.int64)
-                        else:
-                            dense, inv = np.unique(
-                                comp * radix + ids, return_inverse=True
-                            )
-                            lookup = [
-                                lookup[int(d // radix)]
-                                + (names_g[int(d % radix)],)
-                                for d in dense
-                            ]
-                            comp = inv.astype(np.int64)
-                    vv, _, vvalid = _dec(value_col)
-                    _group_seg_agg(
-                        comp[mask], vv[mask], vvalid[mask], acc,
-                        lookup.__getitem__,
-                    )
-                if not acc:
-                    yield _empty()
-                    continue
-                groups = sorted(
-                    acc,
-                    key=lambda t: tuple(
-                        (v is not None, v) for v in t
-                    ),
-                )
-                cols = {
-                    g: pd.Series(
-                        [t[i] for t in groups],
-                        dtype=object if g in str_groups else "Int64",
-                    )
-                    for i, g in enumerate(group_cols)
-                }
-                cols.update(
-                    {
-                        "n_rows": pd.Series(
-                            [acc[t][0] for t in groups], dtype="int64"
-                        ),
-                        "n_vals": pd.Series(
-                            [acc[t][1] for t in groups], dtype="int64"
-                        ),
-                        "sum_val": pd.Series(
-                            [Decimal(acc[t][2]) for t in groups],
-                            dtype=object,
-                        ),
-                        "min_val": pd.Series(
-                            [acc[t][3] for t in groups], dtype="Int64"
-                        ),
-                        "max_val": pd.Series(
-                            [acc[t][4] for t in groups], dtype="Int64"
-                        ),
-                    }
-                )
-                yield pd.DataFrame(cols)
-
-    return run_multi_group
 
 
 def agg_table_files_by(
@@ -5017,26 +4256,19 @@ def agg_table_files_by(
     ≤ (distinct key tuples) × files partial rows."""
     schema = _require_int_col(enc_dir, value_col)
     _require_summable(schema, value_col)
-    if isinstance(group_col, (list, tuple)):
-        group_cols = list(group_col)
-        if len(group_cols) != len(set(group_cols)):
-            raise ValueError(f"duplicate group column in {group_cols}")
-        if not group_cols:
-            raise ValueError("group_col list must name at least one "
-                             "column")
-        if len(group_cols) == 1:
-            group_col = group_cols[0]
-            group_cols = None
-    else:
-        group_cols = None
-    for g in group_cols if group_cols is not None else [group_col]:
+    group_cols = (list(group_col) if isinstance(group_col, (list, tuple))
+                  else [group_col])
+    if len(group_cols) != len(set(group_cols)):
+        raise ValueError(f"duplicate group column in {group_cols}")
+    if not group_cols:
+        raise ValueError("group_col list must name at least one column")
+    for g in group_cols:
         if g not in schema["str_cols"] and g not in schema["int_cols"]:
             raise ValueError(
                 f"unknown group column {g!r}; dataset has "
                 f"int_cols={schema['int_cols']} "
                 f"str_cols={schema['str_cols']}"
             )
-    group_is_str = group_cols is None and group_col in schema["str_cols"]
     if pred_col is not None:
         if preds is not None:
             raise ValueError("pass either pred_col/lo/hi or preds, not both")
@@ -5050,371 +4282,121 @@ def agg_table_files_by(
         raise ValueError("lo/hi require pred_col")
     else:
         specs = _norm_preds(schema, list(preds)) if preds else []
-    tasks = _query_tasks(enc_dir)
     from pyspark.sql import functions as F
 
-    if group_cols is not None:
-        # multi-key GROUP BY: composite dense keys per block, tuple
-        # accumulator, final combine on every key column
-        str_groups = {g for g in group_cols if g in schema["str_cols"]}
-        g_schema = ", ".join(
-            f"`{g}` {'string' if g in str_groups else 'bigint'}"
-            for g in group_cols
-        )
-        partials = _run_tasks(
-            spark, enc_dir, tasks,
-            _make_multi_group_agg_worker(
-                value_col, group_cols, str_groups, specs,
-                _symbols_hex(enc_dir),
-            ),
-            g_schema + ", " + AGG_PARTIAL_SCHEMA, specs,
-            [value_col, *group_cols],
-        )
-        for g in group_cols:  # SQL key merge: -0.0 == 0.0, NaNs pool
-            partials = partials.withColumn(
-                g, _group_key_norm_expr(schema, g)
-            )
-        return partials.groupBy(*group_cols).agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("n_vals").alias("n_vals"),
-            F.sum("sum_val").alias("_sum"),
-            F.min("min_val").alias("min_val"),
-            F.max("max_val").alias("max_val"),
-        ).select(
-            *[_typed_out_expr(schema, g) for g in group_cols],
-            F.col("n_rows").cast("bigint").alias("n_rows"),
-            F.col("n_vals").cast("bigint").alias("n_vals"),
-            *_group_agg_out_cols(schema, value_col),
-        )
-
-    g_type = "string" if group_is_str else "bigint"
-    partials = _run_tasks(
-        spark, enc_dir, tasks,
-        _make_group_agg_worker(
-            value_col, group_col, group_is_str, specs,
-            _symbols_hex(enc_dir),
-        ),
-        f"g {g_type}, " + AGG_PARTIAL_SCHEMA, specs, [value_col, group_col],
+    str_groups = {g for g in group_cols if g in schema["str_cols"]}
+    g_schema = ", ".join(
+        f"`{g}` {'string' if g in str_groups else 'bigint'}"
+        for g in group_cols
     )
-    partials = partials.withColumn(
-        "g", _group_key_norm_expr(schema, group_col, src="g")
-    )  # SQL key merge: -0.0 == 0.0, NaNs pool into one group
-    return partials.groupBy("g").agg(
+    partials = _run_tasks(
+        spark, enc_dir, _query_tasks(enc_dir),
+        _GroupReducer(value_col, group_cols, str_groups), specs,
+        g_schema + ", " + AGG_PARTIAL_SCHEMA,
+    )
+    for g in group_cols:  # SQL key merge: -0.0 == 0.0, NaNs pool
+        partials = partials.withColumn(g, _group_key_norm_expr(schema, g))
+    return partials.groupBy(*group_cols).agg(
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_vals").alias("n_vals"),
         F.sum("sum_val").alias("_sum"),
         F.min("min_val").alias("min_val"),
         F.max("max_val").alias("max_val"),
     ).select(
-        _typed_out_expr(schema, group_col, src="g").alias(group_col),
+        *[_typed_out_expr(schema, g) for g in group_cols],
         F.col("n_rows").cast("bigint").alias("n_rows"),
         F.col("n_vals").cast("bigint").alias("n_vals"),
         *_group_agg_out_cols(schema, value_col),
     )
 
 
-def _make_distinct_worker(col: str, symbols_hex: tuple[str, ...] | None):
-    """Distinct-values worker over one blocks file: decode the column's
-    dictionary sidecars (each a block's sorted-distinct VALID values), union
-    them, and append one NULL row iff any block's metadata records
-    ``n_nulls > 0`` — no payload column is ever read."""
-    def run_distinct(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
+class _DistinctReducer(_Reducer):
+    """DISTINCT reducer: FULL blocks contribute their whole dictionary
+    (string; for an INDEXED int column its membership keys) or their
+    codec-level distinct (other int columns,
+    :func:`rlv.blocks.distinct_block_values`), plus the NULL row when
+    their metadata records NULLs; PARTIAL blocks decode only the non-full
+    predicates, mask, and contribute the matched rows' values.  With no
+    predicates every block is full, so string and indexed-int DISTINCT
+    read no payload at all."""
 
-        from rlv import blocks as B
+    def __init__(self, col: str, is_str: bool, is_idx: bool):
+        self.cols = [col]
+        self.is_str, self.is_idx = is_str, is_idx
 
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                vals: set[bytes] = set()
-                for blob in _read_dict_sidecar(
-                    path, file_sid, col=col, seg=seg
-                ).values():
-                    vals.update(
-                        B.decode_strings_arrow(blob, symbols).to_pylist()
-                    )
-                nfilters: list = [("col_name", "=", col),
-                                  ("n_nulls", ">", 0)]
-                if seg is not None:
-                    nfilters.append(("split_seq", "=", seg))
-                nmeta = pq.read_table(
-                    path,
-                    columns=["block_idx"],
-                    filters=nfilters,
-                )
-                out: list[str | None] = [
-                    v.decode("utf-8") for v in sorted(vals)
-                ]
-                if len(nmeta) > 0:
-                    out.append(None)  # SQL DISTINCT keeps one NULL row
-                yield pd.DataFrame({col: pd.Series(out, dtype=object)})
+    def need(self, plan, keys):
+        col = self.cols[0]
+        part = {k for k in keys if plan.cls[k] == "partial"}
+        raw = set() if self.is_str or self.is_idx else set(keys) - part
+        return {col: part}, {col: raw}
 
-    return run_distinct
+    def side(self, plan, keys) -> dict:
+        if self.is_str:
+            return {self.cols[0]: {bi for _, bi in keys}}
+        if self.is_idx:
+            return {self.cols[0]: {k[1] for k in keys
+                                   if plan.cls[k] == "full"}}
+        return {}
 
-
-def _make_idx_distinct_worker(col: str,
-                              symbols_hex: tuple[str, ...] | None):
-    """Distinct-values worker for an INDEXED int column: the membership
-    sidecar IS each block's sorted-distinct valid plane values, so the
-    exact distinct set unions the (small) sidecars — ZERO payload bytes,
-    the same format-beats-raw shape string DISTINCT gets — with the NULL
-    row from block metadata."""
-    def run_distinct(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        from rlv import blocks as B
-
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                keys: set[bytes] = set()
-                for blob in _read_dict_sidecar(
-                    path, file_sid, col=col, seg=seg
-                ).values():
-                    keys.update(
-                        B.decode_strings_arrow(blob, symbols).to_pylist()
-                    )
-                if keys:
-                    vals = (
-                        np.frombuffer(b"".join(sorted(keys)), ">u8")
-                        .astype(np.uint64)
-                        .view(np.int64)
-                        ^ np.int64(-(2 ** 63))
-                    )
-                else:
-                    vals = np.empty(0, np.int64)
-                nfilters: list = [("col_name", "=", col),
-                                  ("n_nulls", ">", 0)]
-                if seg is not None:
-                    nfilters.append(("split_seq", "=", seg))
-                has_null = len(
-                    pq.read_table(path, columns=["block_idx"],
-                                  filters=nfilters)
-                ) > 0
-                mask = np.zeros(vals.size + (1 if has_null else 0), bool)
-                if has_null:
-                    vals = np.concatenate([vals, np.zeros(1, np.int64)])
-                    mask[-1] = True  # SQL DISTINCT keeps one NULL row
-                yield pd.DataFrame(
-                    {col: pd.arrays.IntegerArray(vals, mask)}
-                )
-
-    return run_distinct
-
-
-def _make_int_distinct_worker(col: str):
-    """Distinct-values worker over one blocks file, INT column: union each
-    block's :func:`rlv.blocks.distinct_block_values` (RLE uniques its run
-    values without expanding rows; DICT reads only its dictionary plane) and
-    append one NULL row iff any block records ``n_nulls > 0``."""
-    def run_distinct(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        from rlv import blocks as B
-
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                seg = _task_seg(row)
-                ifilters: list = [("col_name", "=", col)]
-                if seg is not None:
-                    ifilters.append(("split_seq", "=", seg))
-                btbl = pq.read_table(
-                    row["file"],
-                    columns=["n_nulls", "block"],
-                    filters=ifilters,
-                )
-                parts = [
-                    B.distinct_block_values(blob)
-                    for blob in btbl.column("block").to_pylist()
-                ]
-                vals = (
-                    np.unique(np.concatenate(parts))
-                    if parts
-                    else np.empty(0, np.int64)
-                )
-                has_null = bool(
-                    (btbl.column("n_nulls").to_numpy() > 0).any()
-                )
-                mask = np.zeros(vals.size + (1 if has_null else 0), bool)
-                if has_null:
-                    vals = np.concatenate([vals, np.zeros(1, np.int64)])
-                    mask[-1] = True  # SQL DISTINCT keeps one NULL row
-                yield pd.DataFrame(
-                    {col: pd.arrays.IntegerArray(vals, mask)}
-                )
-
-    return run_distinct
-
-
-def _make_distinct_where_worker(col: str, is_str: bool, preds: list[dict],
-                                symbols_hex: tuple[str, ...] | None = None):
-    """Distinct-values worker under a predicate CONJUNCTION: blocks any
-    predicate prunes contribute nothing; FULL blocks contribute their whole
-    dictionary (string) / codec-level distinct (int) plus the NULL row when
-    they hold NULLs; PARTIAL blocks decode only the non-full predicates,
-    mask, and contribute the matched rows' values."""
-    int_preds, mem_preds, or_nodes = _spec_parts(preds)
-    pred_cols = _spec_cols(preds)
-    all_cols = list(dict.fromkeys([col, *pred_cols]))
-
-    def run_distinct(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
+    def fold(self, plan, keys, blk) -> pd.DataFrame:
         import pyarrow as pa
 
         from rlv import blocks as B
 
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-
-        def _frame(svals: set, iparts: list, has_null: bool):
-            if is_str:
-                out: list = [v.decode("utf-8") for v in sorted(svals)]
-                if has_null:
-                    out.append(None)  # SQL DISTINCT keeps one NULL row
-                return pd.DataFrame({col: pd.Series(out, dtype=object)})
-            vals = (
-                np.unique(np.concatenate(iparts))
-                if iparts
-                else np.empty(0, np.int64)
-            )
-            mask = np.zeros(vals.size + (1 if has_null else 0), bool)
-            if has_null:
-                vals = np.concatenate([vals, np.zeros(1, np.int64)])
-                mask[-1] = True
-            return pd.DataFrame({col: pd.arrays.IntegerArray(vals, mask)})
-
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, pred_cls, mem_codes, mem_full, \
-                    or_data, _, _ = _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols,
-                    )
-                if not cls:
-                    yield _frame(set(), [], False)
+        col = self.cols[0]
+        svals: set[bytes] = set()
+        iparts: list[np.ndarray] = []
+        has_null = False
+        for key in keys:
+            nv, nn = plan.info[col][key][:2]
+            if plan.cls[key] == "full":
+                has_null = has_null or nn > 0
+                if not (self.is_str or self.is_idx):
+                    iparts.append(B.distinct_block_values(blk.blob(col, key)))
                     continue
-                # payload need: int distinct reads the column everywhere it
-                # survives (codec-level distinct), string distinct only at
-                # partial blocks (full blocks ride the sidecar); predicate
-                # columns only where that predicate is not full
-                need: dict[str, set[int]] = {}
-                if not is_str:
-                    need[col] = {bi for _, bi in cls}
-                else:
-                    part = {
-                        bi for (_, bi), kk in cls.items() if kk == "partial"
-                    }
-                    if part:
-                        need[col] = part
-                for key, kind in cls.items():
-                    if kind != "partial":
-                        continue
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes, or_data):
-                        need.setdefault(c, set()).add(key[1])
-                blobs = _fetch_payloads(path, file_sid, seg, need)
-                side = (
-                    _read_dict_sidecar(
-                        path, file_sid, col=col,
-                        block_idx=sorted({bi for _, bi in cls}),
-                        seg=seg,
-                    )
-                    if is_str
-                    else {}
+                uniq = plan.side.get(key[0], col, key[1])
+                if uniq is None:
+                    if nv - nn > 0:
+                        raise ValueError(
+                            f"column {col!r} is missing the dictionary for "
+                            f"block {key[1]} of segment {key[0]} — corrupt "
+                            "dataset"
+                        )
+                    continue  # all-NULL block: NULL row only
+                svals.update(uniq.to_pylist())
+                continue
+            mask = blk.mask(key)
+            if not mask.any():
+                continue
+            cv, cvalid = blk.dec(col, key)
+            has_null = has_null or bool((mask & ~cvalid).any())
+            sel = mask & cvalid
+            if not sel.any():
+                continue
+            if self.is_str:
+                uniq = plan.side.get(key[0], col, key[1])
+                svals.update(
+                    uniq.take(pa.array(np.unique(cv[sel]))).to_pylist()
                 )
-                svals: set[bytes] = set()
-                iparts: list[np.ndarray] = []
-                has_null = False
-                for key in sorted(cls):
-                    seq, bi = key
-                    nv, nn = info[col][key][0], info[col][key][1]
-                    if cls[key] == "full":
-                        if nn > 0:
-                            has_null = True
-                        if is_str:
-                            blob = side.get((seq, col, bi))
-                            if blob is None:
-                                if nv - nn > 0:
-                                    raise ValueError(
-                                        f"column {col!r} is missing the "
-                                        f"dictionary for block {bi} of "
-                                        f"segment {seq} — corrupt dataset"
-                                    )
-                                continue  # all-NULL block: NULL row only
-                            svals.update(
-                                B.decode_strings_arrow(
-                                    blob, symbols
-                                ).to_pylist()
-                            )
-                        else:
-                            iparts.append(
-                                B.distinct_block_values(
-                                    blobs[(seq, col, bi)]
-                                )
-                            )
-                        continue
-                    decoded: dict[str, tuple] = {}
-
-                    def _dec(c, seq=seq, bi=bi, nv=nv, decoded=decoded):
-                        if c not in decoded:
-                            decoded[c] = B.decode_blocks_batch_nullable(
-                                [blobs[(seq, c, bi)]], np.int64,
-                                expected=[nv],
-                            )
-                        return decoded[c]
-
-                    mask = _pred_mask(
-                        key, nv, pred_cls, int_preds, mem_preds,
-                        mem_codes, mem_full, _dec, or_nodes, or_data,
-                    )
-                    if not mask.any():
-                        continue
-                    cv, _, cvalid = _dec(col)
-                    if bool((mask & ~cvalid).any()):
-                        has_null = True
-                    sel = mask & cvalid
-                    if not sel.any():
-                        continue
-                    if is_str:
-                        codes = np.unique(cv[sel])
-                        uniq = B.decode_strings_arrow(
-                            side[(seq, col, bi)], symbols
-                        )
-                        svals.update(
-                            uniq.take(pa.array(codes)).to_pylist()
-                        )
-                    else:
-                        iparts.append(np.unique(cv[sel]))
-                yield _frame(svals, iparts, has_null)
-
-    return run_distinct
+            else:
+                iparts.append(np.unique(cv[sel]))
+        if self.is_str:
+            out: list = [v.decode("utf-8") for v in sorted(svals)]
+            if has_null:
+                out.append(None)  # SQL DISTINCT keeps one NULL row
+            return pd.DataFrame({col: pd.Series(out, dtype=object)})
+        if svals:  # index keys: sign-flipped big-endian plane values
+            iparts.append(
+                np.frombuffer(b"".join(sorted(svals)), ">u8")
+                .astype(np.uint64).view(np.int64) ^ np.int64(-(2 ** 63))
+            )
+        vals = (np.unique(np.concatenate(iparts)) if iparts
+                else np.empty(0, np.int64))
+        mask = np.zeros(vals.size + has_null, bool)
+        if has_null:
+            vals = np.concatenate([vals, np.zeros(1, np.int64)])
+            mask[-1] = True  # SQL DISTINCT keeps one NULL row
+        return pd.DataFrame({col: pd.arrays.IntegerArray(vals, mask)})
 
 
 def distinct_table_files(spark: SparkSession, enc_dir: str, col: str,
@@ -5428,7 +4410,8 @@ def distinct_table_files(spark: SparkSession, enc_dir: str, col: str,
     metadata's ``n_nulls`` — the strongest format-beats-raw query: IO is
     O(distinct values), independent of row count.
 
-    Int columns push DISTINCT into the codecs instead
+    Indexed int columns (``index_cols``) read their membership sidecars
+    the same way.  Other int columns push DISTINCT into the codecs instead
     (:func:`rlv.blocks.distinct_block_values`): an RLE block uniques its run
     values without expanding a single row and a DICT block reads only its
     dictionary plane, so on low-NDV / run-heavy columns the work is
@@ -5456,20 +4439,12 @@ def distinct_table_files(spark: SparkSession, enc_dir: str, col: str,
         )
     is_str = col in schema["str_cols"]
     specs = _norm_preds(schema, list(preds)) if preds else []
-    if preds:
-        worker = _make_distinct_where_worker(
-            col, is_str, specs, symbols_hex=_symbols_hex(enc_dir),
-        )
-    elif is_str:
-        worker = _make_distinct_worker(col, _symbols_hex(enc_dir))
-    elif col in schema.get("index_cols", ()):
-        # membership-indexed int column: the sidecar IS the distinct set
-        worker = _make_idx_distinct_worker(col, _symbols_hex(enc_dir))
-    else:
-        worker = _make_int_distinct_worker(col)
+    # a membership-indexed int column's sidecar IS its distinct set
+    is_idx = not is_str and col in schema.get("index_cols", ())
     out = _run_tasks(
-        spark, enc_dir, _query_tasks(enc_dir), worker,
-        f"`{col}` {'string' if is_str else 'bigint'}", specs, [col],
+        spark, enc_dir, _query_tasks(enc_dir),
+        _DistinctReducer(col, is_str, is_idx), specs,
+        f"`{col}` {'string' if is_str else 'bigint'}",
     ).withColumn(
         col, _group_key_norm_expr(schema, col)
     ).distinct()  # SQL DISTINCT merges -0.0/0.0 and all NaNs
@@ -5489,125 +4464,18 @@ AGG_EXPLAIN_SCHEMA = (
 )
 
 
-def _explain_scan_task(path: str, seg: str | None, preds: list[dict],
-                       read_cols: list[str], symbols) -> dict:
-    """Scan EXPLAIN bill of one task: run the EXACT phase-1
-    classification the scan would run (shared :func:`_classify_file` —
-    metadata + dictionary sidecars, zero payload bytes) and report what
-    phase 2 WOULD read: per-class block/row counts and the exact sum of
-    surviving blocks' ``enc_bytes`` across the columns the scan fetches
-    (predicate + projected)."""
-    int_preds, mem_preds, or_nodes = _spec_parts(preds)
-    all_cols = list(dict.fromkeys([*_spec_cols(preds), *read_cols]))
-    file_sid = os.path.splitext(os.path.basename(path))[0]
-    info, keys, cls, pred_cls, _, _, _, ebytes, _ = _classify_file(
-        path, file_sid, seg, all_cols, int_preds, mem_preds, or_nodes,
-        symbols, with_enc_bytes=True,
-    )
-    # mirror the scan's payload planner: a pred that full-matches EVERY
-    # surviving key never reads its column (unless projected or
-    # referenced by an OR leaf)
-    surv_keys = set(cls)
-    needed = set(read_cols) | {
-        atom["col"] for node in or_nodes for leaf in node
-        for atom in _leaf_atoms(leaf)
-    }
-    for i, p in enumerate([*int_preds, *mem_preds]):
-        if p.get("mask_free"):
-            continue  # classification-only: never read
-        if not all(
-            pred_cls[i].get(k) == "full" for k in surv_keys
-        ) or not surv_keys:
-            needed.add(p["col"])
-    billed = [c for c in all_cols if c in needed]
-    n_full = n_part = rows_surv = rows_total = payload = 0
-    for key in keys:
-        nv = info[all_cols[0]][key][0]
-        rows_total += nv
-        kind = cls.get(key)
-        if kind is None:
-            continue
-        if kind == "full":
-            n_full += 1
-        else:
-            n_part += 1
-        rows_surv += nv
-        payload += sum(ebytes[c].get(key, 0) for c in billed)
-    return {
-        "blocks_total": len(keys),
-        "blocks_pruned": len(keys) - n_full - n_part,
-        "blocks_full": n_full,
-        "blocks_partial": n_part,
-        "rows_total": rows_total,
-        "rows_pruned": rows_total - rows_surv,
-        "rows_surviving": rows_surv,
-        "payload_bytes": payload,
-    }
-
-
-def _explain_agg_task(path: str, seg: str | None, value_cols: list[str],
-                      preds: list[dict], symbols) -> dict:
-    """Aggregate EXPLAIN bill of one task: the exact phase-1
-    classification :func:`_make_agg_worker` runs, reporting what its
-    phase 2 WOULD read — full blocks with a recorded ``sum_val`` are
-    served from the stats row (zero payload), so the bill is value
-    payload at partial keys (plus full keys of pre-``sum_val`` files) and
-    predicate payload at partial keys where that predicate is not
-    full."""
-    int_preds, mem_preds, or_nodes = _spec_parts(preds)
-    all_cols = list(dict.fromkeys([*_spec_cols(preds), *value_cols]))
-    file_sid = os.path.splitext(os.path.basename(path))[0]
-    info, keys, cls, pred_cls, _, _, or_data, ebytes, sums = \
-        _classify_file(
-            path, file_sid, seg, all_cols, int_preds, mem_preds, or_nodes,
-            symbols, with_enc_bytes=True,
-        )
-    n_full = n_part = n_meta = rows_total = payload = 0
-    for key in keys:
-        rows_total += info[all_cols[0]][key][0]
-        kind = cls.get(key)
-        if kind is None:
-            continue
-        if kind == "full":
-            n_full += 1
-            served = True
-            for vc in value_cols:
-                if sums[vc].get(key) is None:
-                    payload += ebytes[vc].get(key, 0)
-                    served = False
-            if served:
-                n_meta += 1
-            continue
-        n_part += 1
-        for vc in value_cols:
-            payload += ebytes[vc].get(key, 0)
-        for c in _pred_need_cols(key, pred_cls, int_preds, mem_preds,
-                                 or_nodes, or_data):
-            if c not in value_cols:
-                payload += ebytes[c].get(key, 0)
-    return {
-        "blocks_total": len(keys),
-        "blocks_pruned": len(keys) - n_full - n_part,
-        "blocks_full": n_full,
-        "blocks_partial": n_part,
-        "blocks_meta_served": n_meta,
-        "rows_total": rows_total,
-        "payload_bytes": payload,
-    }
-
-
-def _explain_bill(enc_dir: str, bill_of_task) -> dict:
-    """Sum ``bill_of_task(path, segment, symbols)`` over the dataset's
-    query tasks ON THE DRIVER: the pass reads only metadata columns and
-    sidecars (a few KB per file), so it runs in-process, not as a Spark
-    job.  ``files`` counts LIVE FILES (planner-known), not tasks: a
-    compacted bin fans out to several segment tasks but is still one
-    file."""
+def _explain_bill(enc_dir: str, specs: list[dict], reducer) -> dict:
+    """Sum :func:`_explain_task` over the dataset's query tasks ON THE
+    DRIVER: the pass reads only metadata columns and sidecars (a few KB
+    per file), so it runs in-process, not as a Spark job.  ``files``
+    counts LIVE FILES (planner-known), not tasks: a compacted bin fans
+    out to several segment tasks but is still one file."""
     tasks = _query_tasks(enc_dir)
     symbols = engine_files._load_symbols(enc_dir)
     bill = {"files": int(tasks["file"].nunique())}
-    for path, seg in zip(tasks["file"], tasks["segment"]):
-        for k, v in bill_of_task(path, seg, symbols).items():
+    for path, seg in _task_rows(tasks):
+        plan = _classify_file(path, seg, specs, reducer.cols, symbols)
+        for k, v in _explain_task(plan, reducer).items():
             bill[k] = bill.get(k, 0) + int(v)
     return bill
 
@@ -5635,9 +4503,9 @@ def explain_agg_table_files(
     rest (value blocks at predicate boundaries, plus full blocks of
     pre-``sum_val`` files).  A full-range aggregate on a ``sum_val``
     dataset reports ``payload_bytes = 0`` — the number that makes
-    "SUM over 100 TB reads only stats rows" checkable.  The
-    classification runs on the driver (:func:`_explain_bill`), the same
-    code the aggregate's workers run, so no Spark job is launched."""
+    "SUM over 100 TB reads only stats rows" checkable.  The bill is the
+    aggregate's own block pipeline run on the driver up to its need step
+    (:func:`_explain_bill`), so no Spark job is launched."""
     value_cols = (
         list(value_col) if isinstance(value_col, (list, tuple))
         else [value_col]
@@ -5646,11 +4514,7 @@ def explain_agg_table_files(
         schema = _require_int_col(enc_dir, vc)
         _require_summable(schema, vc)
     specs = _norm_preds(schema, list(preds))
-    bill = _explain_bill(
-        enc_dir,
-        lambda path, seg, symbols: _explain_agg_task(
-            path, seg, value_cols, specs, symbols),
-    )
+    bill = _explain_bill(enc_dir, specs, _AggReducer(value_cols))
     return _one_row_frame(spark, bill, AGG_EXPLAIN_SCHEMA)
 
 
@@ -5661,16 +4525,9 @@ def _scan_bill(enc_dir: str, preds, columns: list[str] | None) -> dict:
     if schema is None:
         raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
     specs = _norm_preds(schema, list(preds))
-    pred_cols = _spec_cols(specs)
-    if columns is None:
-        out_names = list(dict.fromkeys([schema["order_col"], *pred_cols]))
-    else:
-        out_names = _scan_out_names(schema, pred_cols[0], columns)
-    return _explain_bill(
-        enc_dir,
-        lambda path, seg, symbols: _explain_scan_task(
-            path, seg, specs, out_names, symbols),
-    )
+    out_names = _where_out_names(schema, specs, columns)
+    return _explain_bill(enc_dir, specs,
+                         _ScanReducer(schema, specs, out_names))
 
 
 def explain_scan_table_files(
@@ -5682,13 +4539,13 @@ def explain_scan_table_files(
     plan), exactly what :func:`scan_table_files_where` with the same
     arguments would do — per-class block and row counts (pruned blocks
     are never fetched; full blocks skip predicate masking; partial blocks
-    decode and mask) and the EXACT payload bytes phase 2 DECODES: the
-    surviving blocks' recorded ``enc_bytes`` over predicate + projected
-    columns, exact by wire invariant, classified with the same exact
-    per-block tests the scan's phase 1 runs (shared ``_classify_file``
-    machinery — IN-list literal membership included).  The
-    operator-facing answer to "how much will this query read?" before
-    committing a 100 TB scan.  The classification runs on the driver over
+    decode and mask) and the EXACT payload bytes the scan fetches: the
+    recorded ``enc_bytes`` of every projected column at each surviving
+    block plus each predicate column at the partial blocks that mask on
+    it — exact by wire invariant, because the bill is the scan's own
+    block pipeline (:func:`_task_frame`) run up to its need step, no
+    fetch.  The operator-facing answer to "how much will this query
+    read?" before committing a 100 TB scan.  It runs on the driver over
     the scan's own task list (:func:`_explain_bill`): zero Spark jobs.
 
     Honest granularity caveat: this is the decode bill, byte-exact; the
@@ -5730,95 +4587,69 @@ STATS_PARTIAL_SCHEMA = (
 )
 
 
-def _make_stats_worker(schema: dict, symbols_hex: tuple[str, ...] | None):
-    """ANALYZE worker over one blocks file: per-column partials from
-    METADATA alone.  Emits two row kinds on the shared partial schema —
-    'meta' rows (``sval`` NULL) with the file's per-column row/NULL counts
-    and the int zone-map min/max over blocks that hold at least one valid
-    value (``n_runs > 0``; an all-NULL block's zone map is meaningless by
-    construction), and 'dval' rows (counts NULL) carrying the file-local
-    distinct valid values of each string column from its dictionary
-    sidecars — and of each INDEXED int column from its membership keys,
-    which gives those columns an exact metadata-only NDV too.  No payload
-    column is ever read."""
-    int_cols = set(schema["int_cols"])
-    str_cols = list(schema["str_cols"])
-    idx_cols = [c for c in schema.get("index_cols", ()) if c in int_cols]
+class _StatsReducer(_Reducer):
+    """ANALYZE reducer: per-column partials from METADATA alone.  Emits
+    two row kinds on the shared partial schema — 'meta' rows (``sval``
+    NULL) with the task's per-column row/NULL counts and the int zone-map
+    min/max over blocks that hold at least one valid value (``n_runs >
+    0``; an all-NULL block's zone map is meaningless by construction),
+    and 'dval' rows (counts NULL) carrying the task-local distinct valid
+    values of each string column from its dictionary sidecars — and of
+    each INDEXED int column from its membership keys, which gives those
+    columns an exact metadata-only NDV too.  No payload column is ever
+    read."""
 
-    def run_stats(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
+    def __init__(self, schema: dict):
+        self.int_cols = set(schema["int_cols"])
+        self.str_cols = list(schema["str_cols"])
+        self.dict_cols = [*self.str_cols, *(
+            c for c in schema.get("index_cols", ()) if c in self.int_cols
+        )]
+        self.cols = [*schema["int_cols"], *self.str_cols]
 
-        from rlv import blocks as B
+    def side(self, plan, keys) -> dict:
+        bis = {bi for _, bi in keys}
+        return {c: bis for c in self.dict_cols}
 
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                meta = pq.read_table(
-                    path,
-                    columns=["col_name", "n_values", "n_nulls", "n_runs",
-                             "min_val", "max_val"],
-                    filters=(
-                        [("split_seq", "=", seg)] if seg is not None
-                        else None
-                    ),
-                ).to_pandas()
-                out: dict[str, list] = {
-                    k: [] for k in ("col_name", "n_rows", "n_nulls",
-                                    "min_int", "max_int", "sval")
-                }
-                for cname, g in meta.groupby("col_name", sort=True):
-                    valid = g[g["n_runs"] > 0]
-                    has_zm = cname in int_cols and len(valid) > 0
-                    out["col_name"].append(cname)
-                    out["n_rows"].append(int(g["n_values"].sum()))
-                    out["n_nulls"].append(int(g["n_nulls"].sum()))
-                    out["min_int"].append(
-                        int(valid["min_val"].min()) if has_zm else None
-                    )
-                    out["max_int"].append(
-                        int(valid["max_val"].max()) if has_zm else None
-                    )
-                    out["sval"].append(None)
-                for c in [*str_cols, *idx_cols]:
-                    vals: set[bytes] = set()
-                    for blob in _read_dict_sidecar(
-                        path, file_sid, col=c, seg=seg
-                    ).values():
-                        vals.update(
-                            B.decode_strings_arrow(blob, symbols).to_pylist()
-                        )
-                    for v in sorted(vals):
-                        out["col_name"].append(c)
-                        out["n_rows"].append(None)
-                        out["n_nulls"].append(None)
-                        out["min_int"].append(None)
-                        out["max_int"].append(None)
-                        # index keys are 8-byte binary (not UTF-8): their
-                        # hex feeds the distinct COUNT only — min_str/
-                        # max_str stay NULL for int columns downstream
-                        out["sval"].append(
-                            v.decode("utf-8") if c in str_cols
-                            else v.hex()
-                        )
-                yield pd.DataFrame(
-                    {
-                        "col_name": pd.Series(out["col_name"], dtype=object),
-                        "n_rows": pd.array(out["n_rows"], dtype="Int64"),
-                        "n_nulls": pd.array(out["n_nulls"], dtype="Int64"),
-                        "min_int": pd.array(out["min_int"], dtype="Int64"),
-                        "max_int": pd.array(out["max_int"], dtype="Int64"),
-                        "sval": pd.Series(out["sval"], dtype=object),
-                    }
-                )
+    def fold(self, plan, keys, blk) -> pd.DataFrame:
+        out: dict[str, list] = {
+            k: [] for k in ("col_name", "n_rows", "n_nulls", "min_int",
+                            "max_int", "sval")
+        }
 
-    return run_stats
+        def row(c, n_rows, n_nulls, mn, mx, sval):
+            for k, v in zip(out, (c, n_rows, n_nulls, mn, mx, sval)):
+                out[k].append(v)
+
+        for c in sorted(self.cols):
+            blocks = list(plan.info[c].values())
+            if not blocks:
+                continue
+            valid = [b for b in blocks if b[2] > 0]
+            zm = c in self.int_cols and bool(valid)
+            row(c, sum(b[0] for b in blocks), sum(b[1] for b in blocks),
+                min(b[3] for b in valid) if zm else None,
+                max(b[4] for b in valid) if zm else None, None)
+        for c in self.dict_cols:
+            vals: set[bytes] = set()
+            for key in keys:
+                uniq = plan.side.get(key[0], c, key[1])
+                if uniq is not None:
+                    vals.update(uniq.to_pylist())
+            for v in sorted(vals):
+                # index keys are 8-byte binary (not UTF-8): their hex
+                # feeds the distinct COUNT only — min_str/max_str stay
+                # NULL for int columns downstream
+                row(c, None, None, None, None,
+                    v.decode("utf-8") if c in self.str_cols else v.hex())
+        return pd.DataFrame({
+            "col_name": pd.Series(out["col_name"], dtype=object),
+            "n_rows": pd.array(out["n_rows"], dtype="Int64"),
+            "n_nulls": pd.array(out["n_nulls"], dtype="Int64"),
+            "min_int": pd.array(out["min_int"], dtype="Int64"),
+            "max_int": pd.array(out["max_int"], dtype="Int64"),
+            "sval": pd.Series(out["sval"], dtype=object),
+        })
 
 
 def stats_table_files(spark: SparkSession, enc_dir: str):
@@ -5847,11 +4678,8 @@ def stats_table_files(spark: SparkSession, enc_dir: str):
     if schema is None:
         raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
     str_cols = list(schema["str_cols"])
-    part = _run_tasks(
-        spark, enc_dir, _query_tasks(enc_dir),
-        _make_stats_worker(schema, _symbols_hex(enc_dir)),
-        STATS_PARTIAL_SCHEMA, [], [*schema["int_cols"], *str_cols],
-    )
+    part = _run_tasks(spark, enc_dir, _query_tasks(enc_dir),
+                      _StatsReducer(schema), [], STATS_PARTIAL_SCHEMA)
     counts = (
         part.where(F.col("n_rows").isNotNull())
         .groupBy("col_name")
@@ -5973,77 +4801,52 @@ def _str_bound_matcher(bound: bytes, ascending: bool):
     return match
 
 
-def _make_topk_strs_worker(col: str, k: int, ascending: bool,
-                           preds: list[dict] | None = None,
-                           symbols_hex: tuple[str, ...] | None = None):
-    """Threshold worker for STRING top-k over one blocks file: the k
-    extreme DISTINCT values of ``col`` drawn from the dictionary sidecars
-    of blocks the predicate conjunction FULL-matches — no payload byte,
-    no code-stream decode.  Each sidecar entry appears in at least one
-    valid row of its block, and every row of a full block matches the
-    conjunction, so the k-th smallest (resp. largest) distinct value
-    across files bounds the k-th extreme ROW value: at least k matching
-    rows are at-or-inside it.  Partial blocks contribute nothing here
-    (their matching row count may be zero) — when full blocks yield
-    fewer than k distinct values the driver scans unbounded (correctness
-    over pruning), mirroring :func:`_topk_survivors`."""
-    preds = preds or []
-    int_preds, mem_preds, or_nodes = _spec_parts(preds)
-    pred_cols = _spec_cols(preds)
-    all_cols = list(dict.fromkeys([col, *pred_cols]))
+class _TopkStrReducer(_Reducer):
+    """Threshold reducer for STRING top-k: the k extreme DISTINCT values
+    of ``col`` drawn from the dictionary sidecars of blocks the predicate
+    conjunction FULL-matches — no payload byte, no code-stream decode.
+    Each sidecar entry appears in at least one valid row of its block,
+    and every row of a full block matches the conjunction, so the k-th
+    smallest (resp. largest) distinct value across tasks bounds the k-th
+    extreme ROW value: at least k matching rows are at-or-inside it.
+    Partial blocks contribute nothing here (their matching row count may
+    be zero) — when full blocks yield fewer than k distinct values the
+    driver scans unbounded (correctness over pruning), mirroring
+    :func:`_topk_survivors`."""
 
-    def run_topk(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rlv import blocks as B
+    def __init__(self, col: str, k: int, ascending: bool):
+        self.cols = [col]
+        self.k, self.ascending = k, ascending
 
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, *_ = _classify_file(
-                    path, file_sid, seg, all_cols, int_preds,
-                    mem_preds, or_nodes, symbols,
-                )
-                full_keys = {kk for kk, kind in cls.items()
-                             if kind == "full"}
-                if not full_keys:
-                    yield pd.DataFrame(
-                        {"val": pd.Series([], dtype=object)})
-                    continue
-                side = _read_dict_sidecar(
-                    path, file_sid, col=col,
-                    block_idx=sorted({bi for _, bi in full_keys}),
-                    seg=seg,
-                )
-                vals: set[bytes] = set()
-                for (sq, _, bi), blob in side.items():
-                    if (sq, int(bi)) not in full_keys:
-                        continue
-                    uniq = B.decode_strings_arrow(blob, symbols)
-                    # each dictionary is SORTED-distinct, so only its k
-                    # extreme entries can reach the task's top-k; the
-                    # periodic re-prune keeps the set O(k), not O(NDV)
-                    ent = uniq.to_pylist()
-                    vals.update(ent[:k] if ascending else ent[-k:])
-                    if len(vals) > 4 * k:
-                        vals = set(
-                            sorted(vals)[:k] if ascending
-                            else sorted(vals)[-k:]
-                        )
-                ext = sorted(vals)[:k] if ascending \
-                    else sorted(vals)[-k:]
-                yield pd.DataFrame({
-                    "val": pd.Series(
-                        [v.decode("utf-8") for v in ext], dtype=object
-                    )
-                })
+    def keys(self, plan) -> list:
+        return sorted(k for k, kind in plan.cls.items() if kind == "full")
 
-    return run_topk
+    def side(self, plan, keys) -> dict:
+        return {self.cols[0]: {bi for _, bi in keys}}
+
+    def _extreme(self, vals) -> list:
+        return (sorted(vals)[:self.k] if self.ascending
+                else sorted(vals)[-self.k:])
+
+    def fold(self, plan, keys, blk) -> pd.DataFrame:
+        k = self.k
+        vals: set[bytes] = set()
+        for key in keys:
+            uniq = plan.side.get(key[0], self.cols[0], key[1])
+            if uniq is None:
+                continue
+            # each dictionary is SORTED-distinct, so only its k extreme
+            # entries can reach the task's top-k; the periodic re-prune
+            # keeps the set O(k), not O(NDV)
+            vals.update(
+                (uniq.slice(0, k) if self.ascending
+                 else uniq.slice(max(0, len(uniq) - k))).to_pylist()
+            )
+            if len(vals) > 4 * k:
+                vals = set(self._extreme(vals))
+        return pd.DataFrame({"val": pd.Series(
+            [v.decode("utf-8") for v in self._extreme(vals)], dtype=object
+        )})
 
 
 def _topk_table_files_str(
@@ -6062,11 +4865,7 @@ def _topk_table_files_str(
     out_names = _scan_out_names(schema, col, columns)
     cand = _run_tasks(
         spark, enc_dir, _query_tasks(enc_dir),
-        _make_topk_strs_worker(
-            col, int(k), ascending, preds=specs,
-            symbols_hex=_symbols_hex(enc_dir),
-        ),
-        "val string", specs, [col],
+        _TopkStrReducer(col, int(k), ascending), specs, "val string",
     )
     cands = sorted(
         {r["val"] for r in cand.collect() if r["val"] is not None}
@@ -6103,121 +4902,52 @@ def _topk_table_files_str(
     return scan.orderBy(*sort_cols).limit(k).select(*out_names)
 
 
-def _make_topk_vals_worker(col: str, k: int, ascending: bool,
-                           preds: list[dict] | None = None,
-                           symbols_hex: tuple[str, ...] | None = None):
-    """Threshold worker over one blocks file: the file's k extreme VALID
-    values of ``col`` among rows matching the predicate conjunction
-    (``preds`` empty/None = all rows), decoding only blocks the zone-map
-    plan keeps.  Blocks any predicate prunes never contribute; the top-k
-    bound comes from FULL-matching blocks' exact counts
+class _TopkReducer(_Reducer):
+    """Threshold reducer: a task's k extreme VALID values of ``col`` among
+    rows matching the predicate conjunction, decoding only blocks the
+    zone-map plan keeps.  Blocks any predicate prunes never contribute;
+    the top-k bound comes from FULL-matching blocks' exact counts
     (:func:`_topk_survivors` with ``is_full``); surviving partial blocks
     decode their non-full predicates and mask before contributing."""
-    preds = preds or []
-    int_preds, mem_preds, or_nodes = _spec_parts(preds)
-    pred_cols = _spec_cols(preds)
-    all_cols = list(dict.fromkeys([col, *pred_cols]))
 
-    def run_topk(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rlv import blocks as B
+    def __init__(self, col: str, k: int, ascending: bool):
+        self.cols = [col]
+        self.k, self.ascending = k, ascending
 
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
+    def keys(self, plan) -> list:
+        ordered = sorted(plan.cls)
+        if not ordered:
+            return []
+        stats = np.array(
+            [plan.info[self.cols[0]][kk] for kk in ordered], np.int64
+        ).reshape(len(ordered), 5)
+        keep = _topk_survivors(
+            stats[:, 0] - stats[:, 1],  # valid values of col
+            stats[:, 2], stats[:, 3], stats[:, 4], self.k, self.ascending,
+            is_full=np.array(
+                [plan.cls[kk] == "full" for kk in ordered], bool
+            ),
         )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, pred_cls, mem_codes, mem_full, \
-                    or_data, _, _ = _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols,
-                    )
-                if not cls:
-                    yield pd.DataFrame({"val": np.empty(0, np.int64)})
-                    continue
-                # zone-map plan over pred-surviving blocks: full blocks'
-                # exact counts set the bound, the bound prunes everything
-                ordered = sorted(cls)
-                stats = np.array(
-                    [info[col][kk] for kk in ordered], np.int64
-                ).reshape(len(ordered), 5)
-                keep = _topk_survivors(
-                    stats[:, 0] - stats[:, 1],  # valid values of col
-                    stats[:, 2], stats[:, 3], stats[:, 4],
-                    k, ascending,
-                    is_full=np.array(
-                        [cls[kk] == "full" for kk in ordered], bool
-                    ),
-                )
-                surv = [kk for kk, kp in zip(ordered, keep) if kp]
-                if not surv:
-                    yield pd.DataFrame({"val": np.empty(0, np.int64)})
-                    continue
-                # payload fetch: col blocks for survivors; pred blocks only
-                # for surviving partial keys where that pred is not full
-                need: dict[str, set[int]] = {
-                    col: {bi for _, bi in surv}
-                }
-                for key in surv:
-                    if cls[key] != "partial":
-                        continue
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes, or_data):
-                        need.setdefault(c, set()).add(key[1])
-                blobs = _fetch_payloads(path, file_sid, seg, need)
-                for key in surv:
-                    if (key[0], col, key[1]) not in blobs:
-                        raise ValueError(
-                            f"column {col!r} is missing block {key[1]} of "
-                            f"segment {key[0]} — corrupt dataset"
-                        )
-                parts: list[np.ndarray] = []
-                # FULL survivors (the common no-predicate case) decode as
-                # ONE batch call — per-block dispatch overhead amortizes
-                full_keys = [kk for kk in surv if cls[kk] == "full"]
-                if full_keys:
-                    fvals, foffs, fvalid = B.decode_blocks_batch_nullable(
-                        [blobs[(sq, col, bi)] for sq, bi in full_keys],
-                        np.int64,
-                        expected=[info[col][kk][0] for kk in full_keys],
-                    )
-                    parts.append(fvals[fvalid])
-                for key in surv:
-                    if cls[key] != "partial":
-                        continue
-                    seq, bi = key
-                    nv = info[col][key][0]
-                    decoded: dict[str, tuple] = {}
+        return [kk for kk, kp in zip(ordered, keep) if kp]
 
-                    def _dec(c, seq=seq, bi=bi, nv=nv, decoded=decoded):
-                        if c not in decoded:
-                            decoded[c] = B.decode_blocks_batch_nullable(
-                                [blobs[(seq, c, bi)]], np.int64,
-                                expected=[nv],
-                            )
-                        return decoded[c]
+    def need(self, plan, keys):
+        return {self.cols[0]: set(keys)}, {}
 
-                    vals, _, valid = _dec(col)
-                    mask = _pred_mask(
-                        key, nv, pred_cls, int_preds, mem_preds,
-                        mem_codes, mem_full, _dec, or_nodes, or_data,
-                    )
-                    parts.append(vals[mask & valid])
-                vv = np.concatenate(parts) if parts else np.empty(
-                    0, np.int64
-                )
-                if vv.size > k:
-                    vv = (
-                        np.partition(vv, k - 1)[:k] if ascending
-                        else np.partition(vv, vv.size - k)[vv.size - k:]
-                    )
-                yield pd.DataFrame({"val": vv.astype(np.int64)})
-
-    return run_topk
+    def fold(self, plan, keys, blk) -> pd.DataFrame:
+        k = self.k
+        parts: list[np.ndarray] = []
+        for seq, skeys in _segments(keys):
+            vals, valid = blk.seg(self.cols[0], seq)
+            parts.append(
+                vals[valid & blk.seg_mask(skeys, _block_offsets(plan, skeys))]
+            )
+        vv = np.concatenate(parts) if parts else np.empty(0, np.int64)
+        if vv.size > k:
+            vv = (
+                np.partition(vv, k - 1)[:k] if self.ascending
+                else np.partition(vv, vv.size - k)[vv.size - k:]
+            )
+        return pd.DataFrame({"val": vv.astype(np.int64)})
 
 
 def topk_table_files(
@@ -6275,11 +5005,7 @@ def topk_table_files(
     )
     cand = _run_tasks(
         spark, enc_dir, _query_tasks(enc_dir),
-        _make_topk_vals_worker(
-            col, int(k), ascending, preds=specs,
-            symbols_hex=_symbols_hex(enc_dir),
-        ),
-        "val bigint", specs, [col],
+        _TopkReducer(col, int(k), ascending), specs, "val bigint",
     )
     rows = (
         cand.orderBy(F.col("val").asc() if ascending else F.col("val").desc())

@@ -654,13 +654,11 @@ def test_agg_full_blocks_are_metadata_only(spark, tmp_path, monkeypatch):
         return real_fetch(path, file_sid, seg, need)
 
     monkeypatch.setattr(table_files, "_fetch_payloads", spy_fetch)
-    worker = table_files._make_agg_worker(
-        ["val_n", "dead_n"], table_files._norm_preds(
-            table_files._load_table_schema(out),
-            [("between", "k", lo, hi)],
-        ),
+    reducer = table_files._AggReducer(["val_n", "dead_n"])
+    specs = table_files._norm_preds(
+        table_files._load_table_schema(out), [("between", "k", lo, hi)],
     )
-    [res] = list(worker(iter([table_files._query_tasks(out)])))
+    [res] = _pipeline_frames(out, reducer, specs)
     got = {r.val_col: r for _, r in res.iterrows()}
     want = [val[i] for i in range(lo, hi + 1) if val[i] is not None]
     assert got["val_n"]["n_rows"] == hi - lo + 1
@@ -679,7 +677,7 @@ def test_agg_full_blocks_are_metadata_only(spark, tmp_path, monkeypatch):
     old = pq.read_table(bpath)
     pq.write_table(old.drop_columns(["sum_val"]), bpath)
     fetched.clear()
-    [res2] = list(worker(iter([table_files._query_tasks(out)])))
+    [res2] = _pipeline_frames(out, reducer, specs)
     got2 = {r.val_col: r for _, r in res2.iterrows()}
     assert int(got2["val_n"]["sum_val"]) == sum(want)
     assert got2["val_n"]["n_vals"] == len(want)
@@ -755,6 +753,21 @@ def test_explain_agg_bills_zero_payload_when_metadata_serves(spark,
     ).collect()
     assert ex3["blocks_full"] == 4 and ex3["blocks_meta_served"] == 4
     assert ex3["blocks_partial"] == 0 and ex3["payload_bytes"] == 0
+
+
+def _pipeline_frames(enc_dir, reducer, specs=()):
+    """The block pipeline's output frame of each query task, run
+    in-process (no Spark)."""
+    symbols = engine_files._load_symbols(enc_dir)
+    return [
+        table_files._task_frame(
+            table_files._classify_file(path, seg, list(specs),
+                                       reducer.cols, symbols),
+            reducer,
+        )
+        for path, seg in table_files._task_rows(
+            table_files._query_tasks(enc_dir))
+    ]
 
 
 def _typed_fixture(tmp_path):
@@ -1560,12 +1573,11 @@ def test_group_agg_clustered_blocks_metadata_only(spark, tmp_path,
             for k, c in acc.items()
         }
 
-    tasks = table_files._query_tasks(out)
     # int group key
-    w = table_files._make_group_agg_worker("val_n", "g_n", False, [], None)
-    [res] = list(w(iter([tasks])))
+    [res] = _pipeline_frames(
+        out, table_files._GroupReducer("val_n", ["g_n"], set()))
     got = {
-        (None if pd.isna(r["g"]) else int(r["g"]),):
+        (None if pd.isna(r["g_n"]) else int(r["g_n"]),):
             (int(r["n_rows"]), int(r["n_vals"]), int(r["sum_val"]))
         for _, r in res.iterrows()
     }
@@ -1575,20 +1587,18 @@ def test_group_agg_clustered_blocks_metadata_only(spark, tmp_path,
     }
     assert got == want
     # string group key
-    w2 = table_files._make_group_agg_worker("val_n", "s", True, [], None)
-    [res2] = list(w2(iter([tasks])))
+    [res2] = _pipeline_frames(
+        out, table_files._GroupReducer("val_n", ["s"], {"s"}))
     got2 = {
-        (r["g"],): (int(r["n_rows"]), int(r["n_vals"]), int(r["sum_val"]))
+        (r["s"],): (int(r["n_rows"]), int(r["n_vals"]), int(r["sum_val"]))
         for _, r in res2.iterrows()
     }
-    # at the worker level string groups are raw bytes (Spark's Arrow
+    # in the pipeline's frames string groups are raw bytes (Spark's Arrow
     # bridge turns them into str in the final relation)
     assert got2 == {(k[0].encode(),): v for k, v in expect(["s"]).items()}
     # composite key
-    w3 = table_files._make_multi_group_agg_worker(
-        "val_n", ["g_n", "s"], {"s"}, [], None
-    )
-    [res3] = list(w3(iter([tasks])))
+    [res3] = _pipeline_frames(
+        out, table_files._GroupReducer("val_n", ["g_n", "s"], {"s"}))
     got3 = {
         (None if pd.isna(r["g_n"]) else int(r["g_n"]), r["s"]):
             (int(r["n_rows"]), int(r["n_vals"]), int(r["sum_val"]))
@@ -1714,7 +1724,7 @@ def test_scan_carries_corpus_fsst_symbols(spark, tmp_path):
     ]
 
 
-def test_group_agg_pushdown_matches_sql(spark, tmp_path):
+def test_group_agg_pushdown_matches_sql(spark, tmp_path, monkeypatch):
     """Grouped aggregate pushdown: string-dict and int group keys, NULL
     group pooling, NULL value skipping, optional zone-map predicate, and
     the near-overflow exact-sum fallback — all checked against DuckDB's
@@ -1775,38 +1785,39 @@ def test_group_agg_pushdown_matches_sql(spark, tmp_path):
         )
         assert got == want and len(want) > 0
 
-    # string group, no predicate (includes the NULL group + big sums)
-    check(
-        table_files.agg_table_files_by(spark, out, "v", "grp_s"),
-        f"SELECT grp_s, count(*), count(v), sum(v), min(v), max(v) "
-        f"FROM read_parquet('{raw}') GROUP BY grp_s",
-    )
-    # int group with a range predicate (pruned/full/partial blocks)
-    check(
-        table_files.agg_table_files_by(
-            spark, out, "v", "grp_i", pred_col="k", lo=1000, hi=4000
-        ),
-        f"SELECT grp_i, count(*), count(v), sum(v), min(v), max(v) "
-        f"FROM read_parquet('{raw}') WHERE k BETWEEN 1000 AND 4000 "
-        "GROUP BY grp_i",
-    )
-    # string group where the predicate prunes everything -> zero groups
-    assert table_files.agg_table_files_by(
-        spark, out, "v", "grp_s", pred_col="k", lo=10**9, hi=2 * 10**9
-    ).count() == 0
-    # group by the value column itself
-    check(
-        table_files.agg_table_files_by(spark, out, "grp_i", "grp_i"),
-        f"SELECT grp_i, count(*), count(grp_i), sum(grp_i), min(grp_i), "
-        f"max(grp_i) FROM read_parquet('{raw}') GROUP BY grp_i",
-    )
-    with pytest.raises(ValueError, match="unknown group column"):
-        table_files.agg_table_files_by(spark, out, "v", "nope")
-    with pytest.raises(ValueError, match="requires lo and hi"):
-        table_files.agg_table_files_by(spark, out, "v", "grp_s",
-                                       pred_col="k")
-    with pytest.raises(ValueError, match="require pred_col"):
-        table_files.agg_table_files_by(spark, out, "v", "grp_s", lo=1)
+    for _ in _dispatch_paths(monkeypatch):
+        # string group, no predicate (includes the NULL group + big sums)
+        check(
+            table_files.agg_table_files_by(spark, out, "v", "grp_s"),
+            f"SELECT grp_s, count(*), count(v), sum(v), min(v), max(v) "
+            f"FROM read_parquet('{raw}') GROUP BY grp_s",
+        )
+        # int group with a range predicate (pruned/full/partial blocks)
+        check(
+            table_files.agg_table_files_by(
+                spark, out, "v", "grp_i", pred_col="k", lo=1000, hi=4000
+            ),
+            f"SELECT grp_i, count(*), count(v), sum(v), min(v), max(v) "
+            f"FROM read_parquet('{raw}') WHERE k BETWEEN 1000 AND 4000 "
+            "GROUP BY grp_i",
+        )
+        # string group where the predicate prunes everything -> zero groups
+        assert table_files.agg_table_files_by(
+            spark, out, "v", "grp_s", pred_col="k", lo=10**9, hi=2 * 10**9
+        ).count() == 0
+        # group by the value column itself
+        check(
+            table_files.agg_table_files_by(spark, out, "grp_i", "grp_i"),
+            f"SELECT grp_i, count(*), count(grp_i), sum(grp_i), min(grp_i), "
+            f"max(grp_i) FROM read_parquet('{raw}') GROUP BY grp_i",
+        )
+        with pytest.raises(ValueError, match="unknown group column"):
+            table_files.agg_table_files_by(spark, out, "v", "nope")
+        with pytest.raises(ValueError, match="requires lo and hi"):
+            table_files.agg_table_files_by(spark, out, "v", "grp_s",
+                                           pred_col="k")
+        with pytest.raises(ValueError, match="require pred_col"):
+            table_files.agg_table_files_by(spark, out, "v", "grp_s", lo=1)
 
 
 def test_group_agg_pushdown_survives_compaction(spark, tmp_path):
@@ -1941,7 +1952,7 @@ def test_distinct_from_dictionaries_only(spark, tmp_path):
         table_files.distinct_table_files(spark, out, "nope")
 
 
-def test_int_distinct_pushdown(spark, tmp_path):
+def test_int_distinct_pushdown(spark, tmp_path, monkeypatch):
     """SELECT DISTINCT on an int column pushes into the codecs
     (distinct_block_values): exact vs DuckDB incl. the NULL row, stable
     across compaction, and returned at the recorded source width."""
@@ -1990,11 +2001,13 @@ def test_int_distinct_pushdown(spark, tmp_path):
         )
         assert got == want and None in want
 
-    check()
+    for _ in _dispatch_paths(monkeypatch):
+        check()
     res = engine_files.compact_blocks(spark, out, target_bytes=1 << 30)
     assert res["bins_written"] >= 1
     assert len(glob.glob(f"{out}/blocks/*.parquet")) < 2
-    check()
+    for _ in _dispatch_paths(monkeypatch):
+        check()
     # the unique order column distincts to itself
     ks = table_files.distinct_table_files(spark, out, "k")
     assert ks.count() == n
@@ -2708,7 +2721,7 @@ def test_ctas_table_files(spark, tmp_path):
             preds=[("eq", "tag_n", "w03")], columns=["tag_n", "v_n"])
 
 
-def test_distinct_with_predicates_matches_sql(spark, tmp_path):
+def test_distinct_with_predicates_matches_sql(spark, tmp_path, monkeypatch):
     """SELECT DISTINCT col WHERE <conjunction> must equal plain SQL on
     BOTH column types — full blocks keep the metadata-only shape, partial
     blocks decode and mask, the NULL row appears iff a matching row has a
@@ -2778,10 +2791,12 @@ def test_distinct_with_predicates_matches_sql(spark, tmp_path):
             spark, out, "tag_n", preds=[("eq", "tag_n", "nosuch")]
         ).count() == 0
 
-    check()
+    for _ in _dispatch_paths(monkeypatch):
+        check()
     res = engine_files.compact_blocks(spark, out, target_bytes=1 << 30)
     assert res["bins_written"] >= 1
-    check()
+    for _ in _dispatch_paths(monkeypatch):
+        check()
 
 
 def test_semijoin_scan_pushdown(spark, tmp_path):
@@ -2940,7 +2955,7 @@ def test_cluster_encode_improves_pruning(spark, tmp_path):
             int_cols=["k", "v_n"])
 
 
-def test_topk_with_predicates_matches_sql(spark, tmp_path):
+def test_topk_with_predicates_matches_sql(spark, tmp_path, monkeypatch):
     """TOP-K under a predicate conjunction must equal SQL WHERE ... ORDER
     BY LIMIT in both directions (order-col tie-break makes the row set
     deterministic), including when the filter leaves fewer than k rows;
@@ -2979,36 +2994,37 @@ def test_topk_with_predicates_matches_sql(spark, tmp_path):
     )
     preds = [("in", "tag_n", ["w03", "w07", "w11"]),
              ("between", "k", 200, 4800)]
-    for asc in (True, False):
+    for _ in _dispatch_paths(monkeypatch):
+        for asc in (True, False):
+            got = [
+                (r["k"], r["v_n"], r["tag_n"]) for r in
+                table_files.topk_table_files(
+                    spark, out, "v_n", 20, ascending=asc,
+                    columns=["k", "v_n", "tag_n"], preds=preds,
+                ).collect()
+            ]
+            direction = "" if asc else "DESC"
+            want = duckdb.sql(
+                f"SELECT k, v_n, tag_n FROM read_parquet('{src}') "
+                "WHERE tag_n IN ('w03', 'w07', 'w11') "
+                "AND k BETWEEN 200 AND 4800 AND v_n IS NOT NULL "
+                f"ORDER BY v_n {direction}, k LIMIT 20"
+            ).fetchall()
+            assert sorted(got) == sorted(want) and len(want) == 20
+        # filter leaves fewer than k rows: all of them come back
+        tiny = [("eq", "tag_n", "w03"), ("between", "v_n", 0, 3)]
         got = [
-            (r["k"], r["v_n"], r["tag_n"]) for r in
+            (r["k"], r["v_n"]) for r in
             table_files.topk_table_files(
-                spark, out, "v_n", 20, ascending=asc,
-                columns=["k", "v_n", "tag_n"], preds=preds,
+                spark, out, "v_n", 1000, ascending=True,
+                columns=["k", "v_n"], preds=tiny,
             ).collect()
         ]
-        direction = "" if asc else "DESC"
         want = duckdb.sql(
-            f"SELECT k, v_n, tag_n FROM read_parquet('{src}') "
-            "WHERE tag_n IN ('w03', 'w07', 'w11') "
-            "AND k BETWEEN 200 AND 4800 AND v_n IS NOT NULL "
-            f"ORDER BY v_n {direction}, k LIMIT 20"
+            f"SELECT k, v_n FROM read_parquet('{src}') "
+            "WHERE tag_n = 'w03' AND v_n BETWEEN 0 AND 3"
         ).fetchall()
-        assert sorted(got) == sorted(want) and len(want) == 20
-    # filter leaves fewer than k rows: all of them come back
-    tiny = [("eq", "tag_n", "w03"), ("between", "v_n", 0, 3)]
-    got = [
-        (r["k"], r["v_n"]) for r in
-        table_files.topk_table_files(
-            spark, out, "v_n", 1000, ascending=True,
-            columns=["k", "v_n"], preds=tiny,
-        ).collect()
-    ]
-    want = duckdb.sql(
-        f"SELECT k, v_n FROM read_parquet('{src}') "
-        "WHERE tag_n = 'w03' AND v_n BETWEEN 0 AND 3"
-    ).fetchall()
-    assert sorted(got) == sorted(want) and 0 < len(want) < 1000
+        assert sorted(got) == sorted(want) and 0 < len(want) < 1000
 
 
 def test_int_in_pred_classification_and_scan(spark, tmp_path):
@@ -3520,7 +3536,7 @@ def test_ndv_pushdown_matches_sql(spark, tmp_path):
         assert (r["ndv"], r["null_seen"]) == (w[0], w[1]), (col, where)
 
 
-def test_multi_key_group_by_matches_sql(spark, tmp_path):
+def test_multi_key_group_by_matches_sql(spark, tmp_path, monkeypatch):
     """Multi-key GROUP BY pushdown: composite dense keys per block must
     equal plain SQL GROUP BY a, b [, c] on any int/string mix, with NULLs
     participating in key tuples, under predicates (incl. OR), across
@@ -3608,10 +3624,12 @@ def test_multi_key_group_by_matches_sql(spark, tmp_path):
             )
             assert got == want and len(got) > 0, (cols, where)
 
-    check()
+    for _ in _dispatch_paths(monkeypatch):
+        check()
     res = engine_files.compact_blocks(spark, out, target_bytes=1 << 30)
     assert res["bins_written"] >= 1
-    check()
+    for _ in _dispatch_paths(monkeypatch):
+        check()
 
     # single-element list -> single-key path, same columns
     df = table_files.agg_table_files_by(spark, out, "k", ["tag_n"])
@@ -4050,17 +4068,27 @@ def test_explain_and_metadata_count_launch_no_spark_job(spark, orders_dir,
     assert agg["blocks_total"] == scan["blocks_total"]
 
 
-@pytest.fixture(params=["spark", "local"])
+# Driver-local cap per query dispatch path: 0 sends every plan with a
+# surviving row through the Spark workers, an unreachable cap runs every
+# plan on the driver.  Test tables are small, so a test that pins neither
+# covers only the driver path.
+_DISPATCH_CAPS = {"spark": 0, "local": 1 << 62}
+
+
+@pytest.fixture(params=list(_DISPATCH_CAPS))
 def dispatch(request, monkeypatch):
-    """Pin the query dispatch path: a cap of 0 sends every plan with a
-    surviving row through the Spark workers, an unreachable cap runs every
-    plan on the driver.  Test tables are small, so without this almost
-    every test covers only the driver path."""
-    monkeypatch.setattr(
-        table_files, "_DRIVER_LOCAL_MAX_CELLS",
-        0 if request.param == "spark" else 1 << 62,
-    )
+    """Pin the query dispatch path for the whole test."""
+    monkeypatch.setattr(table_files, "_DRIVER_LOCAL_MAX_CELLS",
+                        _DISPATCH_CAPS[request.param])
     return request.param
+
+
+def _dispatch_paths(monkeypatch):
+    """Run a loop body once per query dispatch path (Spark workers, then
+    the driver) over one encoded dataset."""
+    for path, cap in _DISPATCH_CAPS.items():
+        monkeypatch.setattr(table_files, "_DRIVER_LOCAL_MAX_CELLS", cap)
+        yield path
 
 
 def test_tiny_plans_run_on_the_driver(spark, tmp_path, monkeypatch):
@@ -4185,7 +4213,7 @@ def test_count_pushdown_matches_python(spark, tmp_path, dispatch):
     assert rt["n_rows"] == n
 
 
-def test_minmax_pushdown_matches_python(spark, tmp_path):
+def test_minmax_pushdown_matches_python(spark, tmp_path, monkeypatch):
     """MIN/MAX pushdown: full blocks fold their zone maps from metadata
     (no value payload), partial blocks decode and mask; SQL NULL
     semantics incl. the no-matching-valid-row NULL row — stable across
@@ -4236,10 +4264,12 @@ def test_minmax_pushdown_matches_python(spark, tmp_path):
             spark, out, "val_n", [("between", "band_n", 10**8, 10**9)]
         ).collect()
         assert (r3["min_val"], r3["max_val"]) == (None, None)
-    check()
+    for _ in _dispatch_paths(monkeypatch):
+        check()
     res = engine_files.compact_blocks(spark, out, target_bytes=1 << 30)
     assert res["bins_written"] == 1
-    check()
+    for _ in _dispatch_paths(monkeypatch):
+        check()
 
 
 def test_or_of_and_pushdown_matches_sql(spark, tmp_path):
@@ -4476,7 +4506,7 @@ def test_contains_suffix_pushdown_matches_sql(spark, tmp_path):
         1 for t in tags if t is not None and "grp05" in t)
 
 
-def test_string_topk_matches_sql_order_by_limit(spark, tmp_path):
+def test_string_topk_matches_sql_order_by_limit(spark, tmp_path, monkeypatch):
     """String ORDER BY pushdown: top-k on a dictionary column draws its
     per-file candidates from the sorted-distinct sidecars alone (no
     payload in the threshold pass), bounds the final scan with a
@@ -4542,10 +4572,12 @@ def test_string_topk_matches_sql_order_by_limit(spark, tmp_path):
         # row SET is tie-arbitrary without the order column, so compare
         # against the deterministic tie-break oracle only on size
         assert len(got2) > 0
-    check()
+    for _ in _dispatch_paths(monkeypatch):
+        check()
     res = engine_files.compact_blocks(spark, out, target_bytes=1 << 30)
     assert res["bins_written"] >= 1
-    check()
+    for _ in _dispatch_paths(monkeypatch):
+        check()
 
 
 def test_string_index_cols_point_lookup_parity(spark, tmp_path):
@@ -4684,8 +4716,13 @@ def test_random_clause_sweep_matches_sql(spark, tmp_path, dispatch):
     random one-alternation clauses (every leaf kind incl. negations,
     validity, the LIKE family, OR and OR-of-AND nodes, degenerate
     literals like inverted ranges and absent values) compared against
-    DuckDB on COUNT(*) — the last-line-of-defense property test behind
-    the curated per-kind cases — on both dispatch paths."""
+    DuckDB on COUNT(*) and on the scan's rows — the last-line-of-defense
+    property test behind the curated per-kind cases — on both dispatch
+    paths.  Each clause's EXPLAIN must equal its execution: the scan
+    bill's ``payload_bytes`` is the ``enc_bytes`` sum of the (column,
+    block) pairs the scan fetches, its block classes are the ones the
+    scan's pipeline assigned, and a tiny plan classifies each task
+    once."""
     import os
 
     import duckdb
@@ -4778,6 +4815,43 @@ def test_random_clause_sweep_matches_sql(spark, tmp_path, dispatch):
             return ("or", branches), "(" + " OR ".join(sqls) + ")"
         return leaf()
 
+    enc_bytes = {}
+    for path in glob.glob(f"{out}/blocks/*.parquet"):
+        t = pq.read_table(path, columns=["col_name", "block_idx",
+                                         "enc_bytes"])
+        for c, bi, eb in zip(t.column("col_name").to_pylist(),
+                             t.column("block_idx").to_pylist(),
+                             t.column("enc_bytes").to_pylist()):
+            enc_bytes[(path, c, bi)] = eb
+    n_tasks = len(table_files._query_tasks(out))
+    real_fetch = table_files._fetch_payloads
+    real_classify = table_files._classify_file
+
+    def traced_scan(preds):
+        """The scan run in-process: the (file, column, block) pairs it
+        fetched and the class of every block its tasks kept."""
+        fetched, classes, calls = set(), [], []
+
+        def spy_fetch(path, file_sid, seg, need):
+            fetched.update((path, c, bi) for c, bis in need.items()
+                           for bi in bis)
+            return real_fetch(path, file_sid, seg, need)
+
+        def spy_classify(*args, **kwargs):
+            plan = real_classify(*args, **kwargs)
+            calls.append(plan.path)
+            classes.extend(plan.cls.values())
+            return plan
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(table_files, "_DRIVER_LOCAL_MAX_CELLS", 1 << 62)
+            mp.setattr(table_files, "_fetch_payloads", spy_fetch)
+            mp.setattr(table_files, "_classify_file", spy_classify)
+            table_files.scan_table_files_where(
+                spark, out, preds, columns=["k"]).collect()
+        assert len(calls) == n_tasks  # one classification per task
+        return fetched, classes
+
     duck = duckdb.connect()
     for trial in range(40):
         preds, sqls = [], []
@@ -4792,3 +4866,17 @@ def test_random_clause_sweep_matches_sql(spark, tmp_path, dispatch):
             f"SELECT count(*) FROM read_parquet('{src}') WHERE {where}"
         ).fetchone()[0]
         assert got == want, (trial, preds, where, got, want)
+        rows = sorted(r["k"] for r in table_files.scan_table_files_where(
+            spark, out, preds, columns=["k"]).collect())
+        want_rows = [r[0] for r in duck.sql(
+            f"SELECT k FROM read_parquet('{src}') WHERE {where} ORDER BY k"
+        ).fetchall()]
+        assert rows == want_rows, (trial, preds, where)
+        fetched, classes = traced_scan(preds)
+        [ex] = table_files.explain_scan_table_files(
+            spark, out, preds, columns=["k"]).collect()
+        assert ex["payload_bytes"] == sum(
+            enc_bytes[f] for f in fetched), (trial, preds, where)
+        assert (ex["blocks_full"], ex["blocks_partial"]) == (
+            classes.count("full"), classes.count("partial")
+        ), (trial, preds, where)

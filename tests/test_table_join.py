@@ -308,3 +308,50 @@ def test_join_guards(spark, joined, tmp_path):
     )
     with pytest.raises(ValueError, match="restores to"):
         TF.join_table_files(spark, joined["fact_enc"], fenc, on="cust")
+
+
+def test_join_broadcast_is_gated_on_restored_bytes(spark, tmp_path):
+    """A heavily compressed side — a sequential key plus a constant
+    40-byte string, ~15 KB encoded — restores to ~2.9 MB: under a 32 KB
+    ``broadcast_bytes`` its encoded bill fits but its
+    restored size does not, so it must not broadcast, and the join still
+    equals DuckDB.  Under the default cap both fit and it broadcasts."""
+    n_a, n_b = 20_000, 60_000
+    a_src = str(tmp_path / "a.parquet")
+    b_src = str(tmp_path / "b.parquet")
+    pq.write_table(pa.table({
+        "k": pa.array(range(n_a), pa.int64()),
+        "key": pa.array([(i * 7919) % n_b for i in range(n_a)],
+                        pa.int64()),
+        "v": pa.array([(i * 31) % 997 for i in range(n_a)], pa.int64()),
+    }), a_src)
+    pq.write_table(pa.table({
+        "key": pa.array(range(n_b), pa.int64()),
+        "pad": pa.array(["p" * 40] * n_b, pa.string()),
+    }), b_src, row_group_size=16384)
+    a_enc, b_enc = str(tmp_path / "a_enc"), str(tmp_path / "b_enc")
+    TF.encode_table_files(spark, [a_src], a_enc, order_col="k",
+                          int_cols=["k", "key", "v"], num_tasks=1)
+    TF.encode_table_files(spark, [b_src], b_enc, order_col="key",
+                          int_cols=["key"], str_cols=["pad"],
+                          rows_per_block=4096, num_tasks=2)
+    cap = 32 << 10
+    df, plan = TF.join_table_files(
+        spark, a_enc, b_enc, on="key", columns_a=["v"],
+        columns_b=["pad"], broadcast_bytes=cap, return_plan=True,
+    )
+    assert plan["payload_bytes_b"] < plan["payload_bytes_a"]
+    assert plan["payload_bytes_b"] <= cap
+    assert plan["restored_bytes_b"] == n_b * (8 + 40) > 50 * cap
+    assert plan["broadcast"] is False
+    got = sorted((r["key"], r["v"], r["pad"]) for r in df.collect())
+    want = duckdb.sql(
+        f"SELECT a.key, a.v, b.pad FROM read_parquet('{a_src}') a "
+        f"JOIN read_parquet('{b_src}') b ON a.key = b.key ORDER BY 1, 2"
+    ).fetchall()
+    assert got == [tuple(r) for r in want] and len(want) == n_a
+    _, plan = TF.join_table_files(
+        spark, a_enc, b_enc, on="key", columns_a=["v"],
+        columns_b=["pad"], return_plan=True,
+    )
+    assert plan["broadcast"] is True
