@@ -47,6 +47,7 @@ whole table reconstructs bit-identically (:func:`decode_table_files`).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -178,39 +179,42 @@ def _keys_to_float(k: np.ndarray, alias: str) -> np.ndarray:
     return _f64_keys_involution(k).astype(np.int64).view(np.float64)
 
 
-# float total-order key landmarks (keys of +inf / -inf / canonical NaN):
-# anything above the +inf key or below the -inf key is a NaN payload.
-_FLOAT_KEY_LANDMARKS = {
-    "f64": (9218868437227405312, -9218868437227405313,
-            9221120237041090560),
-    "f32": (2139095040, -2139095041, 2143289344),
-}
-
-
-def _group_key_norm_expr(schema: dict, col: str, src: str | None = None):
-    """Plane-key normalization for GROUP BY / DISTINCT on a float column:
-    SQL grouping merges ``-0.0`` with ``0.0`` and all NaN payloads into
-    one group, but their total-order keys differ (``-0.0`` is key ``-1``,
-    ``+0.0`` key ``0``; each NaN bit pattern its own key) — so merge
-    ``-1 -> 0`` and canonicalize every NaN-range key before the key-space
-    ``groupBy``/``distinct``, mirroring ``_plane_in_keys``' signed-zero
-    widening on the predicate side.  Identity for non-float columns;
-    NULL keys stay NULL."""
-    from pyspark.sql import functions as F
-
-    name = src if src is not None else col
-    c = F.col(name)
-    alias = (schema.get("int_col_types") or {}).get(col, "int64")
+def _neg_nan_floor(alias: str | None) -> int | None:
+    """Plane key of ``-inf`` on a float column (every key below it is a
+    sign-bit NaN), None on the other planes."""
     kind = _plane_kind(alias)
-    if kind not in _FLOAT_KEY_LANDMARKS:
-        return c
-    inf_k, ninf_k, nan_k = _FLOAT_KEY_LANDMARKS[kind]
-    return (
-        F.when(c == F.lit(-1), F.lit(0).cast("bigint"))
-        .when((c > F.lit(inf_k)) | (c < F.lit(ninf_k)),
-              F.lit(nan_k).cast("bigint"))
-        .otherwise(c)
-    )
+    if kind not in ("f32", "f64"):
+        return None
+    return int(_float_to_keys(
+        np.array([-np.inf], np.float32 if kind == "f32" else np.float64)
+    )[0])
+
+
+def _sql_order_keys(keys: np.ndarray, alias: str | None) -> np.ndarray:
+    """Plane keys re-ranked in SQL order, the order Spark and DuckDB sort
+    the restored values in: on a float column ``-0.0`` ties ``0.0`` and
+    every NaN, of either sign, ties above ``+inf`` (the total-order key
+    ranks a sign-bit NaN below ``-inf``); the identity on the other
+    planes."""
+    if _neg_nan_floor(alias) is None:
+        return keys
+    v = _keys_to_float(keys, alias)
+    return np.where(np.isnan(v), np.iinfo(np.int64).max,
+                    np.where(v == 0, 0, keys))
+
+
+def _sql_order_zone(mn: np.ndarray, mx: np.ndarray, alias: str | None):
+    """Block zone maps (plane-key min/max) bounding the blocks' values in
+    SQL order (:func:`_sql_order_keys`).  A float block whose min key is
+    below the ``-inf`` key may hold a sign-bit NaN, so it spans
+    ``[-inf, NaN]``: no top-k bound prunes it."""
+    floor = _neg_nan_floor(alias)
+    if floor is None:
+        return mn, mx
+    neg_nan = mn < floor
+    return (np.where(neg_nan, floor, _sql_order_keys(mn, alias)),
+            np.where(neg_nan, np.iinfo(np.int64).max,
+                     _sql_order_keys(mx, alias)))
 
 
 def _plane_cast(col, alias: str | None):
@@ -1498,7 +1502,7 @@ def _spark_tasks(spark: SparkSession, tasks: pd.DataFrame):
     slice per id, each task column picked out of an array literal by id,
     so the relation runs in the JVM alone: no Python-worker stage to
     deserialize a driver list and no shuffle to spread it, ahead of the
-    operator's own ``mapInPandas`` worker."""
+    operator's own ``mapInArrow`` worker."""
     from pyspark.sql import functions as F
 
     n = len(tasks)
@@ -1514,6 +1518,84 @@ def _spark_tasks(spark: SparkSession, tasks: pd.DataFrame):
     )
 
 
+@functools.lru_cache(maxsize=256)
+def _arrow_schema(ddl: str):
+    """``(StructType, pyarrow.Schema)`` of an operator's output DDL: the
+    one schema definition both dispatch paths type their batches with
+    (Spark's Arrow mapping — int widths, ``date32``, UTC microsecond
+    timestamps, ``decimal128``).  Cached: parsing a DDL is a JVM round
+    trip (~3 ms), a real share of a tiny plan's wall; callers never
+    mutate the result."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(ddl)
+    return struct, to_arrow_schema(struct)
+
+
+def _typed_batch(cols: dict, schema, aliases: dict):
+    """One reducer output as an Arrow batch of ``schema``.  A plane
+    column (``aliases`` maps its field to the recorded source alias) is
+    restored through :func:`_restore_plane`, the encode map's one
+    inverse; every column is then cast to its field type.  Values not
+    yet Arrow (Python lists) are built at the plane's int64 or at the
+    field type."""
+    import pyarrow as pa
+
+    arrays = []
+    for f in schema:
+        v = cols[f.name]
+        if f.name in aliases:
+            if not isinstance(v, pa.Array):
+                v = pa.array(v, pa.int64())
+            v = _restore_plane(v, aliases[f.name])
+        elif not isinstance(v, pa.Array):
+            v = pa.array(v, f.type)
+        arrays.append(v.cast(f.type))
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+def _plane_array(vals: np.ndarray, valid: np.ndarray):
+    """Decoded plane values as an int64 Arrow array, NULL where not
+    ``valid``."""
+    import pyarrow as pa
+
+    return pa.array(vals, pa.int64(),
+                    mask=None if valid.all() else ~valid)
+
+
+def _local_relation(spark: SparkSession, ddl: str, batches: list):
+    """Typed Arrow batches of ``ddl`` as a local relation: no Spark job
+    until the caller's own operators, and no Python-worker stage.  Empty
+    batches are dropped first: Spark 4.1 loses the rows that follow an
+    empty batch inside an Arrow table's stream."""
+    import pyarrow as pa
+
+    struct, schema = _arrow_schema(ddl)
+    return spark.createDataFrame(
+        pa.Table.from_batches([b for b in batches if b.num_rows], schema),
+        struct,
+    )
+
+
+def _task_frame(plan: _Plan, reducer, schema):
+    """Run one classified task through the rest of the block pipeline:
+    need -> fetch -> decode/mask -> ``reducer.fold``, as one typed Arrow
+    batch of ``schema``."""
+    keys = reducer.keys(plan)
+    blk = None
+    if keys:
+        dec, fetch = _need(plan, reducer, keys)
+        want = {c: {bi for _, bi in ks} for c, ks in fetch.items()}
+        blk = _Blocks(
+            plan, _fetch_payloads(plan.path, plan.file_sid, plan.seg, want),
+            dec,
+        )
+        plan.side.load(reducer.side(plan, keys))
+    return _typed_batch(reducer.fold(plan, keys, blk), schema,
+                        reducer.aliases)
+
+
 # Cap on a plan's surviving cells (rows of surviving blocks x columns the
 # operator reads) for running it on the driver, see :func:`_run_tasks`.
 # On a 4-core host a 3-column scan runs faster in-process than as a Spark
@@ -1521,19 +1603,15 @@ def _spark_tasks(spark: SparkSession, tasks: pd.DataFrame):
 _DRIVER_LOCAL_MAX_CELLS = 1 << 18
 
 
-def _driver_local_pdf(enc_dir: str, tasks: pd.DataFrame, reducer,
-                      specs: list[dict],
-                      out_schema: str) -> pd.DataFrame | None:
-    """The block pipeline's output over ``tasks``, run in this process,
-    or None when the plan is not tiny.  The decision classifies the tasks
-    one by one (:func:`_classify_file`, the pipeline's own first step)
-    and stops as soon as the summed ``rows_surviving x
+def _driver_local_batches(enc_dir: str, tasks: pd.DataFrame, reducer,
+                          specs: list[dict], schema) -> list | None:
+    """The block pipeline's typed batches over ``tasks``, run in this
+    process, or None when the plan is not tiny.  The decision classifies
+    the tasks one by one (:func:`_classify_file`, the pipeline's own
+    first step) and stops as soon as the summed ``rows_surviving x
     len(reducer.cols)`` passes ``_DRIVER_LOCAL_MAX_CELLS``, so a large
     plan pays only the metadata reads of its first tasks; a tiny plan
-    runs on from those same classifications.  Columns come back in
-    ``out_schema`` order (``mapInPandas`` matches them by name)."""
-    from pyspark.sql.types import StructType
-
+    runs on from those same classifications."""
     symbols = engine_files._load_symbols(enc_dir)
     plans = []
     cells = 0
@@ -1543,40 +1621,41 @@ def _driver_local_pdf(enc_dir: str, tasks: pd.DataFrame, reducer,
         cells += len(reducer.cols) * plan.rows_surviving
         if cells > _DRIVER_LOCAL_MAX_CELLS:
             return None
-    names = StructType.fromDDL(out_schema).names
-    if not plans:
-        return pd.DataFrame({c: [] for c in names})
-    return pd.concat([_task_frame(p, reducer) for p in plans],
-                     ignore_index=True)[names]
+    return [_task_frame(p, reducer, schema) for p in plans]
 
 
 def _run_tasks(spark: SparkSession, enc_dir: str, tasks: pd.DataFrame,
-               reducer, specs: list[dict], out_schema: str):
+               reducer, specs: list[dict]):
     """Run a query operator, the block pipeline with its ``reducer``,
-    over its :func:`_query_tasks` frame, as a DataFrame of
-    ``out_schema``.  A tiny plan (see :func:`_driver_local_pdf`; an empty
-    task list is one) runs in this process and returns a local relation:
-    no Spark job until the caller's own operators, and never a
+    over its :func:`_query_tasks` frame, as a DataFrame of the reducer's
+    typed output (``reducer.ddl``).  A tiny plan (see
+    :func:`_driver_local_batches`; an empty task list is one) runs in
+    this process and returns a local relation built from the same Arrow
+    batches: no Spark job until the caller's own operators, and never a
     Python-worker stage, whose fixed cost (~0.4 s on a 4-core host)
     dwarfs decoding a few blocks.  Any other plan runs as Spark tasks
     (:func:`_spark_run`)."""
-    pdf = _driver_local_pdf(enc_dir, tasks, reducer, specs, out_schema)
-    if pdf is None:
-        return _spark_run(spark, enc_dir, tasks, reducer, specs, out_schema)
-    return spark.createDataFrame(pdf, out_schema)
+    batches = _driver_local_batches(enc_dir, tasks, reducer, specs,
+                                    _arrow_schema(reducer.ddl)[1])
+    if batches is None:
+        return _spark_run(spark, enc_dir, tasks, reducer, specs)
+    return _local_relation(spark, reducer.ddl, batches)
 
 
 def _spark_run(spark: SparkSession, enc_dir: str, tasks: pd.DataFrame,
-               reducer, specs: list[dict], out_schema: str):
-    """The block pipeline as one ``mapInPandas`` task per query task on
+               reducer, specs: list[dict]):
+    """The block pipeline as one ``mapInArrow`` task per query task on
     the :func:`_spark_tasks` relation — the one Spark call site of every
-    query operator.  Each Python worker process tunes malloc first
-    (:func:`rlv.util.tune_malloc`); only there: applied to the driver by
-    an in-process run, the same settings slowed a wide scan's collect to
-    Arrow by ~0.2 s on a 4-core host."""
+    query operator, and its only Python-worker stage: each task yields
+    the reducer's typed Arrow batch, restored in the worker, so no
+    Python node follows it.  Each Python worker process tunes malloc
+    first (:func:`rlv.util.tune_malloc`); only there: applied to the
+    driver by an in-process run, the same settings slowed a wide scan's
+    collect to Arrow by ~0.2 s on a 4-core host."""
     symbols_hex = _symbols_hex(enc_dir)
+    struct, schema = _arrow_schema(reducer.ddl)
 
-    def run(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         from rlv.util import tune_malloc
 
         tune_malloc()
@@ -1585,14 +1664,15 @@ def _spark_run(spark: SparkSession, enc_dir: str, tasks: pd.DataFrame,
             if symbols_hex is not None
             else None
         )
-        for pdf in pdf_iter:
-            for path, seg in _task_rows(pdf):
+        for b in batches:
+            for path, seg in zip(b.column("file").to_pylist(),
+                                 b.column("segment").to_pylist()):
                 yield _task_frame(
                     _classify_file(path, seg, specs, reducer.cols, symbols),
-                    reducer,
+                    reducer, schema,
                 )
 
-    return _spark_tasks(spark, tasks).mapInPandas(run, out_schema)
+    return _spark_tasks(spark, tasks).mapInArrow(run, struct)
 
 
 def _typed_field_type(schema: dict, c: str) -> str:
@@ -1603,8 +1683,7 @@ def _typed_field_type(schema: dict, c: str) -> str:
     decode/export, which restores ns exactly)."""
     if c in set(schema["str_cols"]):
         return "string"
-    types = schema.get("int_col_types") or {}
-    alias = types.get(c, "int64")
+    alias = _col_alias(schema, c)
     kind = _plane_kind(alias)
     if kind == "int":
         return _SPARK_TYPE_OF_ALIAS.get(alias, "bigint")
@@ -1625,81 +1704,21 @@ def _typed_field_type(schema: dict, c: str) -> str:
     return "float" if alias == "float" else "double"
 
 
-def _typed_out_expr(schema: dict, c: str, src: str | None = None):
-    """Spark Column restoring one worker-emitted plane column (bigint keys
-    / string) to the recorded source type — the relation-side counterpart
-    of :func:`_restore_plane` (epoch ints via the timestamp/date builtins,
-    float total-order keys via an Arrow-vectorized inverse).  ``c`` names
-    the dataset column whose type governs; ``src`` the relation column to
-    read (default ``c``), which is also the output alias."""
-    from pyspark.sql import functions as F
-
-    name = src if src is not None else c
-    col = F.col(name)
-    if c in set(schema["str_cols"]):
-        return col.cast("string").alias(name)
-    types = schema.get("int_col_types") or {}
-    alias = types.get(c, "int64")
-    kind = _plane_kind(alias)
-    out_type = _typed_field_type(schema, c)  # raises for ns timestamps
-    if kind == "int":
-        return col.cast(out_type).alias(name)
-    if kind == "epoch":
-        ts = _ts_alias_parts(alias)
-        if ts:
-            conv = {"s": F.timestamp_seconds, "ms": F.timestamp_millis,
-                    "us": F.timestamp_micros}[ts[0]]
-            return conv(col).alias(name)
-        if alias == "date32[day]":
-            return F.date_from_unix_date(col.cast("int")).alias(name)
-        # date64[ms]: timezone-free restore — timestamp_millis(...).cast
-        # ("date") would interpret the instant in the SESSION zone and
-        # shift dates by up to a day.  Epoch-ms are midnight-aligned;
-        # floor keeps pre-epoch dates safe (exact: |ms| << 2^53).
-        return F.date_from_unix_date(
-            F.floor(col / F.lit(86400000)).cast("int")
-        ).alias(name)
-    if kind == "dec":
-        scale, _ = _dec_alias_parts(alias)
-        # double division by a power of ten: correctly rounded, the same
-        # composed path the encode-side representability check verified
-        return (
-            col.cast("double") / F.lit(float(10 ** scale))
-        ).cast(out_type).alias(name)
-    hi = F.shiftright(col, 32)
-    lo = col.bitwiseAND(F.lit(0xFFFFFFFF))
-    unkeyed = _unkey_pandas_udf(alias)(hi, lo)
-    # NaN keys restore at the expression layer: the pandas->Arrow return
-    # hop converts NaN to NULL (from_pandas semantics), so the UDF cannot
-    # carry them.  Any NaN-range key restores as the canonical NaN (a
-    # DataFrame cannot observe NaN payload bits anyway); NULL keys make
-    # the condition NULL and fall through to the UDF's NULL.
-    inf_k, ninf_k, _ = _FLOAT_KEY_LANDMARKS[kind]
-    return F.when(
-        (col > F.lit(inf_k)) | (col < F.lit(ninf_k)),
-        F.lit(float("nan")).cast(out_type),
-    ).otherwise(unkeyed).alias(name)
+def _col_alias(schema: dict, c: str) -> str:
+    """Recorded source alias of an int-plane column."""
+    return (schema.get("int_col_types") or {}).get(c, "int64")
 
 
-def _unkey_pandas_udf(alias: str):
-    """Arrow-batched inverse of the float total-order key map (the one
-    Python-side hop typed outputs take; the batch transfer is Arrow, never
-    per-row).  The key arrives SPLIT into two 32-bit halves (arithmetic
-    hi, unsigned lo): a nullable int64 batch reaches pandas as float64,
-    which is lossy above 2^53 — each half is < 2^32 so it survives the
-    float64 hop exactly, and the recombined key is bit-identical."""
-    from pyspark.sql.functions import pandas_udf
+def _typed_ddl(schema: dict, cols: list[str]) -> str:
+    """Output DDL of dataset columns ``cols`` at their restored types."""
+    return ", ".join(f"`{c}` {_typed_field_type(schema, c)}" for c in cols)
 
-    @pandas_udf("float" if alias == "float" else "double")
-    def unkey(hi: pd.Series, lo: pd.Series) -> pd.Series:
-        na = hi.isna().to_numpy()
-        h = hi.fillna(0).to_numpy(dtype=np.int64)
-        l = lo.fillna(0).to_numpy(dtype=np.int64)
-        k = np.bitwise_or(np.left_shift(h, 32), l)
-        out = pd.Series(_keys_to_float(k, alias))
-        return out.mask(na) if na.any() else out
 
-    return unkey
+def _plane_aliases(schema: dict, cols: list[str]) -> dict:
+    """``{col: alias}`` of the int-plane columns among ``cols`` — the
+    fields :func:`_typed_batch` restores."""
+    strs = set(schema["str_cols"])
+    return {c: _col_alias(schema, c) for c in cols if c not in strs}
 
 
 def _plane_literal(schema: dict, col: str, v, side: str = "lo") -> int:
@@ -2122,7 +2141,7 @@ def _norm_preds(schema: dict, preds, _top: bool = True) -> list[dict]:
     the disjunction."""
     specs: list[dict] = []
     known_arity = {
-        "between": 4, "not_between": 4, "raw_between": 4, "int_in": 3,
+        "between": 4, "not_between": 4, "int_in": 3,
         "eq": 3, "ne": 3, "in": 3, "not_in": 3, "str_between": 4,
         "prefix": 3, "not_prefix": 3, "isnull": 2, "notnull": 2,
         "contains": 3, "not_contains": 3, "suffix": 3, "not_suffix": 3,
@@ -2191,7 +2210,7 @@ def _norm_preds(schema: dict, preds, _top: bool = True) -> list[dict]:
             specs.append({"kind": "valid", "col": col,
                           "want_null": kind == "isnull"})
             continue
-        if kind in ("between", "not_between", "raw_between", "int_in"):
+        if kind in ("between", "not_between", "int_in"):
             if col not in schema["int_cols"]:
                 raise ValueError(
                     f"{col!r} is not an int column "
@@ -2215,12 +2234,6 @@ def _norm_preds(schema: dict, preds, _top: bool = True) -> list[dict]:
                         ),
                         "eq_single": None, "mask_free": True,
                     })
-            elif kind == "raw_between":
-                # internal (top-k threshold stacking): bounds are already
-                # plane keys — no literal conversion
-                specs.append({"kind": "range", "col": col,
-                              "lo": int(p[2]), "hi": int(p[3]),
-                              "neg": False})
             else:
                 if isinstance(p[2], (str, bytes)):
                     # list('123') would coerce to literals [1, 2, 3]
@@ -2394,14 +2407,7 @@ def semijoin_scan_table_files(
         )
     out_names = _scan_out_names(schema, col, columns)
     if not keys:
-        str_cols = set(schema["str_cols"])
-        empty = spark.createDataFrame([], ", ".join(
-            f"`{c}` {'string' if c in str_cols else 'bigint'}"
-            for c in out_names
-        ))
-        return empty.select(
-            *[_typed_out_expr(schema, c) for c in out_names]
-        )
+        return _local_relation(spark, _typed_ddl(schema, out_names), [])
     if col in schema["str_cols"]:
         return scan_table_files_in(spark, enc_dir, col, keys,
                                    columns=out_names)
@@ -2622,7 +2628,7 @@ def join_table_files(
             spark, s["enc"], s["preds"], columns=s["columns"]
         )
     for name, s in zip("ab", sides):
-        plan[f"driver_local_{name}"] = "MapInPandas" not in (
+        plan[f"driver_local_{name}"] = "MapInArrow" not in (
             dfs[id(s)]._jdf.queryExecution().logical().toString()
         )
     small_df, big_df = dfs[id(small)], dfs[id(big)]
@@ -2838,25 +2844,10 @@ def _scan_one(spark: SparkSession, enc_dir: str, pred: tuple,
 def _run_scan_tasks(spark: SparkSession, enc_dir: str, schema: dict,
                     out_names: list[str], specs: list[dict]):
     """The pruned scan of ``specs`` projected to ``out_names``, dispatched
-    by :func:`_run_tasks`; ints come back cast to their recorded source
-    widths (shared tail of every scan)."""
-    str_cols = set(schema["str_cols"])
-    scan_schema = ", ".join(
-        f"`{c}` {'string' if c in str_cols else 'bigint'}"
-        for c in out_names
-    )
-    out = _run_tasks(spark, enc_dir, _query_tasks(enc_dir),
-                     _ScanReducer(schema, specs, out_names), specs,
-                     scan_schema)
-    return out.select(
-        *[_typed_out_expr(schema, c) for c in out_names]
-    )
-
-
-AGG_PARTIAL_SCHEMA = (
-    "n_rows bigint, n_vals bigint, sum_val decimal(38,0), "
-    "min_val bigint, max_val bigint"
-)
+    by :func:`_run_tasks`; every column comes back at its restored type
+    (shared tail of every scan)."""
+    return _run_tasks(spark, enc_dir, _query_tasks(enc_dir),
+                      _ScanReducer(schema, specs, out_names), specs)
 
 
 def _int_pred_class(p: dict, nv: int, nn: int, nr: int, mn: int, mx: int):
@@ -3438,9 +3429,13 @@ class _Reducer:
     :meth:`need` names the payload (column -> keys) it decodes and the
     payload it reads raw (whole blocks, e.g. an RLE run-list sum);
     :meth:`side` the dictionaries (column -> block_idx) it reads;
-    :meth:`fold` turns one task into its output frame."""
+    :meth:`fold` turns one task into its output columns (``{field:
+    values}``), which :func:`_typed_batch` types as ``ddl`` says,
+    restoring the plane fields ``aliases`` names."""
 
     cols: list[str]
+    ddl: str
+    aliases: dict = {}
 
     def keys(self, plan: _Plan) -> list:
         return sorted(plan.cls)
@@ -3466,22 +3461,6 @@ def _need(plan: _Plan, reducer, keys: list):
     for c, ks in raw.items():
         fetch.setdefault(c, set()).update(ks)
     return dec, fetch
-
-
-def _task_frame(plan: _Plan, reducer) -> pd.DataFrame:
-    """Run one classified task through the rest of the block pipeline:
-    need -> fetch -> decode/mask -> ``reducer.fold``."""
-    keys = reducer.keys(plan)
-    blk = None
-    if keys:
-        dec, fetch = _need(plan, reducer, keys)
-        want = {c: {bi for _, bi in ks} for c, ks in fetch.items()}
-        blk = _Blocks(
-            plan, _fetch_payloads(plan.path, plan.file_sid, plan.seg, want),
-            dec,
-        )
-        plan.side.load(reducer.side(plan, keys))
-    return reducer.fold(plan, keys, blk)
 
 
 def _explain_task(plan: _Plan, reducer) -> dict:
@@ -3528,6 +3507,8 @@ class _ScanReducer(_Reducer):
         _, mem_preds, _ = _spec_parts(specs)
         mem_cols = [p["col"] for p in mem_preds]
         self.cols = list(out_names)
+        self.ddl = _typed_ddl(schema, self.cols)
+        self.aliases = _plane_aliases(schema, self.cols)
         self.str_cols = set(schema["str_cols"])
         self.eq = {
             p["col"]: p["eq_single"]
@@ -3544,13 +3525,19 @@ class _ScanReducer(_Reducer):
         return {c: bis for c in self.cols
                 if c in self.str_cols and c not in self.eq}
 
-    def fold(self, plan, keys, blk) -> pd.DataFrame:
+    def fold(self, plan, keys, blk) -> dict:
+        return self._gather(plan, keys, blk, blk.seg_mask if keys else None)
+
+    def _gather(self, plan, keys, blk, seg_mask) -> dict:
+        """The projected columns at the rows ``seg_mask(keys, offsets)``
+        keeps in each segment's run of ``keys``: plane columns as int64
+        Arrow arrays, string columns as binary ones."""
         import pyarrow as pa
 
         outs: dict[str, list] = {c: [] for c in self.cols}
         for seq, skeys in _segments(keys):
             offs = _block_offsets(plan, skeys)
-            m = blk.seg_mask(skeys, offs)
+            m = seg_mask(skeys, offs)
             n = int(m.sum())
             if not n:
                 continue
@@ -3564,26 +3551,14 @@ class _ScanReducer(_Reducer):
                         _gather_strings(plan, c, skeys, offs, vals, valid, m)
                     )
                 elif n == m.size:
-                    outs[c].append((vals, ~valid))
+                    outs[c].append(_plane_array(vals, valid))
                 else:
-                    outs[c].append((vals[m], ~valid[m]))
-        if not outs[self.cols[0]]:
-            return pd.DataFrame({
-                c: (pd.Series([], dtype=object) if c in self.str_cols
-                    else pd.Series(np.empty(0, np.int64)))
-                for c in self.cols
-            })
-        return pd.DataFrame({
-            c: (
-                pa.concat_arrays(outs[c]).cast(pa.string()).to_pandas()
-                if c in self.str_cols
-                else pd.Series(pd.arrays.IntegerArray(
-                    np.concatenate([v for v, _ in outs[c]]),
-                    np.concatenate([mk for _, mk in outs[c]]),
-                ))
-            )
-            for c in self.cols
-        })
+                    outs[c].append(_plane_array(vals[m], valid[m]))
+        return {
+            c: (pa.concat_arrays(parts) if parts else pa.array(
+                [], pa.binary() if c in self.str_cols else pa.int64()))
+            for c, parts in outs.items()
+        }
 
 
 def _gather_strings(plan, col: str, keys: list, offs: np.ndarray,
@@ -3631,10 +3606,17 @@ class _AggReducer(_Reducer):
     (an RLE block sums its run list without expanding); partial blocks
     decode the value columns and pick the masked rows.  One pass
     classifies and masks for ALL value columns: k aggregate sets cost one
-    predicate evaluation, not k."""
+    predicate evaluation, not k.  Decimal-declared value columns
+    (:func:`_uniform_dec_parts`) restore min/max to their source float
+    type in the worker; plain-int ones stay bigint."""
 
-    def __init__(self, value_cols: list[str]):
+    def __init__(self, schema: dict, value_cols: list[str]):
         self.cols = list(value_cols)
+        mm, self.aliases = _agg_minmax(schema, self.cols)
+        self.ddl = (
+            "val_col string, n_rows bigint, n_vals bigint, "
+            f"sum_val decimal(38,0), min_val {mm}, max_val {mm}"
+        )
 
     def need(self, plan, keys):
         dec = {vc: set() for vc in self.cols}
@@ -3647,7 +3629,7 @@ class _AggReducer(_Reducer):
                     raw[vc].add(key)
         return dec, raw
 
-    def fold(self, plan, keys, blk) -> pd.DataFrame:
+    def fold(self, plan, keys, blk) -> dict:
         from rlv import blocks as B
 
         n_rows = 0
@@ -3689,30 +3671,13 @@ class _AggReducer(_Reducer):
                 if picked.size:
                     add(stats[vc], picked.size, B.exact_sum_i64(picked),
                         int(picked.min()), int(picked.max()))
-        return _agg_frame(self.cols, n_rows, stats)
-
-
-def _agg_frame(value_cols: list[str], n_rows: int,
-               stats: dict[str, list]) -> pd.DataFrame:
-    from decimal import Decimal
-
-    return pd.DataFrame(
-        {
-            "val_col": pd.Series(list(value_cols), dtype=object),
-            "n_rows": pd.Series([n_rows] * len(value_cols),
-                                dtype="int64"),
-            "n_vals": pd.Series([stats[vc][0] for vc in value_cols],
-                                dtype="int64"),
-            "sum_val": pd.Series(
-                [Decimal(stats[vc][1]) for vc in value_cols],
-                dtype=object,
-            ),
-            "min_val": pd.Series([stats[vc][2] for vc in value_cols],
-                                 dtype="Int64"),
-            "max_val": pd.Series([stats[vc][3] for vc in value_cols],
-                                 dtype="Int64"),
+        return {
+            "val_col": self.cols,
+            "n_rows": [n_rows] * len(self.cols),
+            **{f: [stats[vc][i] for vc in self.cols]
+               for i, f in enumerate(("n_vals", "sum_val", "min_val",
+                                      "max_val"))},
         }
-    )
 
 
 def agg_table_files(
@@ -3783,38 +3748,18 @@ def agg_table_files_where(
     for vc in value_cols:
         schema = _require_int_col(enc_dir, vc)
         _require_summable(schema, vc)
-    dec = _uniform_dec_parts(schema, value_cols)
     specs = _norm_preds(schema, list(preds))
     tasks = _query_tasks(enc_dir)
+    reducer = _AggReducer(schema, value_cols)
     from pyspark.sql import functions as F
 
-    def _typed_agg_cols():
-        """sum/min/max in SQL units: scaled-int plane -> decimal(38,s)
-        sums and source-float min/max for decimal-declared columns."""
-        if dec is None:
-            return [
-                F.col("_sum").cast("decimal(38,0)").alias("sum_val"),
-                F.col("min_val").cast("bigint").alias("min_val"),
-                F.col("max_val").cast("bigint").alias("max_val"),
-            ]
-        scale, _src = dec
-        return [
-            (F.col("_sum") / F.lit(10 ** scale))
-            .cast(f"decimal(38,{scale})").alias("sum_val"),
-            _typed_out_expr(schema, value_cols[0], src="min_val"),
-            _typed_out_expr(schema, value_cols[0], src="max_val"),
-        ]
-
-    partial_schema = "val_col string, " + AGG_PARTIAL_SCHEMA
     if tasks.empty:  # no task emits a partial: fold the identity row
-        partials = spark.createDataFrame(
-            _agg_frame(value_cols, 0,
-                       {vc: [0, 0, None, None] for vc in value_cols}),
-            partial_schema,
-        )
+        partials = _local_relation(spark, reducer.ddl, [_typed_batch(
+            reducer.fold(None, [], None), _arrow_schema(reducer.ddl)[1],
+            reducer.aliases,
+        )])
     else:
-        partials = _run_tasks(spark, enc_dir, tasks,
-                              _AggReducer(value_cols), specs, partial_schema)
+        partials = _run_tasks(spark, enc_dir, tasks, reducer, specs)
     combined = partials.groupBy("val_col").agg(
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_vals").alias("n_vals"),
@@ -3831,33 +3776,36 @@ def agg_table_files_where(
         .alias("_sum"),
         "min_val",
         "max_val",
-    ).select("val_col", "n_rows", "n_vals", *_typed_agg_cols())
+    ).select(
+        "val_col", "n_rows", "n_vals",
+        _sum_out(schema, value_cols, F.col("_sum")), "min_val", "max_val",
+    )
     return combined if multi else combined.drop("val_col")
 
 
-def _group_agg_out_cols(schema: dict, value_col: str):
-    """sum/min/max output columns of the GROUP BY relations, in SQL
-    units: decimal(38,s) sums and source-float min/max when the value
-    column is decimal-declared, plain bigints otherwise (NULL sum for
-    empty groups either way)."""
+def _sum_out(schema: dict, value_cols: list[str], total):
+    """``sum_val`` in SQL units from an aggregate's exact plane sum
+    ``total``: decimal(38,0), or decimal(38,s) for decimal-declared
+    value columns (their plane holds the values scaled by 10^s).  Min
+    and max need nothing here: they arrive restored (:func:`_agg_minmax`)."""
     from pyspark.sql import functions as F
 
-    dec = _uniform_dec_parts(schema, [value_col])
-    base = F.when(F.col("n_vals") == 0, F.lit(None)) \
-        .otherwise(F.col("_sum"))
-    if dec is None:
-        return [
-            base.cast("decimal(38,0)").alias("sum_val"),
-            F.col("min_val").cast("bigint").alias("min_val"),
-            F.col("max_val").cast("bigint").alias("max_val"),
-        ]
-    scale, _src = dec
-    return [
-        (base.cast("decimal(38,0)") / F.lit(10 ** scale))
-        .cast(f"decimal(38,{scale})").alias("sum_val"),
-        _typed_out_expr(schema, value_col, src="min_val"),
-        _typed_out_expr(schema, value_col, src="max_val"),
-    ]
+    dec = _uniform_dec_parts(schema, value_cols)
+    total = total.cast("decimal(38,0)")
+    if dec is not None:
+        total = (total / F.lit(10 ** dec[0])).cast(f"decimal(38,{dec[0]})")
+    return total.alias("sum_val")
+
+
+def _agg_minmax(schema: dict, value_cols: list[str]) -> tuple[str, dict]:
+    """Type and restore aliases of an aggregate's ``min_val``/``max_val``
+    fields: decimal-declared value columns restore to their source float
+    type in the worker, plain-int ones stay bigint plane values."""
+    if _uniform_dec_parts(schema, value_cols) is None:
+        return "bigint", {}
+    alias = _col_alias(schema, value_cols[0])
+    return (_typed_field_type(schema, value_cols[0]),
+            {"min_val": alias, "max_val": alias})
 
 
 def _uniform_dec_parts(schema: dict, value_cols: list[str]):
@@ -3888,16 +3836,18 @@ class _CountReducer(_Reducer):
     non-full PREDICATE columns, never a value column.  One bigint per
     task."""
 
+    ddl = "n_rows bigint"
+
     def __init__(self, specs: list[dict]):
         self.cols = _spec_cols(specs)
 
-    def fold(self, plan, keys, blk) -> pd.DataFrame:
+    def fold(self, plan, keys, blk) -> dict:
         n = sum(
             plan.nv[key] if plan.cls[key] == "full"
             else int(blk.mask(key).sum())
             for key in keys
         )
-        return pd.DataFrame({"n_rows": [n]})
+        return {"n_rows": [n]}
 
 
 def count_table_files_where(spark: SparkSession, enc_dir: str, preds):
@@ -3931,14 +3881,13 @@ def count_table_files_where(spark: SparkSession, enc_dir: str, preds):
     from pyspark.sql import functions as F
 
     # a tiny plan folds on the driver: a local one-row frame, 0 Spark jobs
-    local = _driver_local_pdf(enc_dir, tasks, reducer, specs,
-                              "n_rows bigint")
+    local = _driver_local_batches(enc_dir, tasks, reducer, specs,
+                                  _arrow_schema(reducer.ddl)[1])
     if local is not None:
-        return _one_row_frame(
-            spark, {"n_rows": int(local["n_rows"].sum())}, "n_rows bigint"
-        )
-    parts = _spark_run(spark, enc_dir, tasks, reducer, specs,
-                       "n_rows bigint")
+        return _one_row_frame(spark, {"n_rows": sum(
+            b.column("n_rows")[0].as_py() for b in local
+        )}, reducer.ddl)
+    parts = _spark_run(spark, enc_dir, tasks, reducer, specs)
     return parts.agg(
         F.coalesce(F.sum("n_rows"), F.lit(0)).cast("bigint")
         .alias("n_rows")
@@ -3948,56 +3897,66 @@ def count_table_files_where(spark: SparkSession, enc_dir: str, preds):
 class _MinMaxReducer(_Reducer):
     """MIN/MAX reducer: FULL blocks contribute their recorded zone map
     (min_val/max_val over valid values — METADATA, no value payload);
-    only PARTIAL blocks decode the value column and fold the masked
-    values.  One nullable (min_val, max_val) row per task."""
+    PARTIAL blocks decode the value column and fold the masked values.
+    Values rank in SQL order (:func:`_sql_order_keys`); a full float
+    block that may hold a sign-bit NaN (:func:`_sql_order_zone`) decodes
+    too, since its zone map does not bound it in that order.  One
+    (min_val, max_val) row per task, restored to the column's type."""
 
-    def __init__(self, value_col: str):
+    def __init__(self, schema: dict, value_col: str):
         self.cols = [value_col]
+        self.alias = _col_alias(schema, value_col)
+        typ = _typed_field_type(schema, value_col)
+        self.ddl = f"min_val {typ}, max_val {typ}"
+        self.aliases = {"min_val": self.alias, "max_val": self.alias}
+        self.floor = _neg_nan_floor(self.alias)
+
+    def _decodes(self, plan, key) -> bool:
+        return plan.cls[key] == "partial" or (
+            self.floor is not None
+            and plan.info[self.cols[0]][key][3] < self.floor
+        )
 
     def need(self, plan, keys):
         return {self.cols[0]: {k for k in keys
-                               if plan.cls[k] == "partial"}}, {}
+                               if self._decodes(plan, k)}}, {}
 
-    def fold(self, plan, keys, blk) -> pd.DataFrame:
+    def fold(self, plan, keys, blk) -> dict:
         vc = self.cols[0]
-        mn = mx = None
+        cand = [np.empty(0, np.int64)]
         for key in keys:
-            if plan.cls[key] == "full":
-                _, _, nr, bmn, bmx = plan.info[vc][key]
-                if nr == 0:
-                    continue  # all-NULL value block
-            else:
+            if self._decodes(plan, key):
                 vv, vvalid = blk.dec(vc, key)
-                picked = vv[blk.mask(key) & vvalid]
-                if not picked.size:
-                    continue
-                bmn, bmx = int(picked.min()), int(picked.max())
-            mn = bmn if mn is None else min(mn, bmn)
-            mx = bmx if mx is None else max(mx, bmx)
-        return pd.DataFrame({
-            "min_val": pd.array([mn], dtype="Int64"),
-            "max_val": pd.array([mx], dtype="Int64"),
-        })
+                cand.append(vv[blk.mask(key) & vvalid])
+            elif plan.info[vc][key][2]:  # an all-NULL block has no zone map
+                cand.append(np.array(plan.info[vc][key][3:], np.int64))
+        v = np.concatenate(cand)
+        if not v.size:
+            return {"min_val": [None], "max_val": [None]}
+        r = _sql_order_keys(v, self.alias)
+        return {"min_val": [int(v[np.argmin(r)])],
+                "max_val": [int(v[np.argmax(r)])]}
 
 
 def minmax_table_files_where(spark: SparkSession, enc_dir: str,
                              value_col: str, preds):
     """``SELECT min(v), max(v) WHERE <conjunction>`` pushed into the
     encoded format: one row ``(min_val, max_val)`` with SQL NULL
-    semantics (NULL values skipped; no matching valid row → NULL row).
-    FULL-matching blocks contribute their recorded ZONE MAP — no value
-    payload read — so on a clustered predicate (or no predicate at all:
-    pass the order column's full range) the answer folds almost entirely
-    from metadata; only partial (boundary) blocks decode.
+    semantics (NULL values skipped; no matching valid row → NULL row)
+    and SQL float order (NaN above every number, ``-0.0`` equal to
+    ``0.0``).  FULL-matching blocks contribute their recorded ZONE MAP —
+    no value payload read — so on a clustered predicate (or no predicate
+    at all: pass the order column's full range) the answer folds almost
+    entirely from metadata; only partial (boundary) blocks decode.
 
     A STRING value column routes through the DISTINCT pipe instead: full
     blocks fold their dictionary sidecars (the per-block sorted-distinct
     valid values — the string zone map), partial blocks decode and mask;
     min/max are the binary-collation fold over the distinct set."""
+    from pyspark.sql import functions as F
+
     schema = _load_table_schema(enc_dir)
     if schema is not None and value_col in schema.get("str_cols", ()):
-        from pyspark.sql import functions as F
-
         dv = distinct_table_files(spark, enc_dir, value_col, preds=preds)
         return dv.agg(
             F.min(value_col).alias("min_val"),
@@ -4005,19 +3964,11 @@ def minmax_table_files_where(spark: SparkSession, enc_dir: str,
         )
     schema = _require_int_col(enc_dir, value_col)
     specs = _norm_preds(schema, list(preds))
-    from pyspark.sql import functions as F
-
     parts = _run_tasks(spark, enc_dir, _query_tasks(enc_dir),
-                       _MinMaxReducer(value_col), specs,
-                       "min_val bigint, max_val bigint")
-    folded = parts.agg(
-        F.min("min_val").cast("bigint").alias("min_val"),
-        F.max("max_val").cast("bigint").alias("max_val"),
-    )
-    # restore the value column's logical type (timestamp/date/float keys)
-    return folded.select(
-        _typed_out_expr(schema, value_col, src="min_val"),
-        _typed_out_expr(schema, value_col, src="max_val"),
+                       _MinMaxReducer(schema, value_col), specs)
+    return parts.agg(
+        F.min("min_val").alias("min_val"),
+        F.max("max_val").alias("max_val"),
     )
 
 
@@ -4088,12 +4039,19 @@ class _GroupReducer(_Reducer):
     (:func:`cluster_encode_table_files`) GROUP BY is metadata-only away
     from cluster boundaries."""
 
-    def __init__(self, value_col: str, group_cols: list[str],
-                 str_groups: set[str]):
+    def __init__(self, schema: dict, value_col: str, group_cols: list[str]):
         self.value_col = value_col
         self.group_cols = list(group_cols)
-        self.str_groups = set(str_groups)
+        self.str_groups = set(group_cols) & set(schema["str_cols"])
         self.cols = list(dict.fromkeys([value_col, *group_cols]))
+        mm, mm_aliases = _agg_minmax(schema, [value_col])
+        self.aliases = {**_plane_aliases(schema, self.group_cols),
+                        **mm_aliases}
+        self.ddl = (
+            f"{_typed_ddl(schema, self.group_cols)}, n_rows bigint, "
+            f"n_vals bigint, sum_val decimal(38,0), min_val {mm}, "
+            f"max_val {mm}"
+        )
 
     def _single(self, plan, keys) -> set:
         single = set()
@@ -4128,9 +4086,7 @@ class _GroupReducer(_Reducer):
             )
         return uniq.to_pylist()
 
-    def fold(self, plan, keys, blk) -> pd.DataFrame:
-        from decimal import Decimal
-
+    def fold(self, plan, keys, blk) -> dict:
         single = self._single(plan, keys)
         acc: dict[tuple, list] = {}
         for key in keys:
@@ -4193,22 +4149,12 @@ class _GroupReducer(_Reducer):
         groups = sorted(
             acc, key=lambda t: tuple((v is not None, v) for v in t)
         )
-        cols = {
-            g: pd.Series(
-                [t[i] for t in groups],
-                dtype=object if g in self.str_groups else "Int64",
-            )
-            for i, g in enumerate(self.group_cols)
-        }
-        cols.update({
-            "n_rows": pd.Series([acc[t][0] for t in groups], dtype="int64"),
-            "n_vals": pd.Series([acc[t][1] for t in groups], dtype="int64"),
-            "sum_val": pd.Series([Decimal(acc[t][2]) for t in groups],
-                                 dtype=object),
-            "min_val": pd.Series([acc[t][3] for t in groups], dtype="Int64"),
-            "max_val": pd.Series([acc[t][4] for t in groups], dtype="Int64"),
-        })
-        return pd.DataFrame(cols)
+        cols = {g: [t[i] for t in groups]
+                for i, g in enumerate(self.group_cols)}
+        for i, f in enumerate(("n_rows", "n_vals", "sum_val", "min_val",
+                               "max_val")):
+            cols[f] = [acc[t][i] for t in groups]
+        return cols
 
 
 def agg_table_files_by(
@@ -4284,18 +4230,12 @@ def agg_table_files_by(
         specs = _norm_preds(schema, list(preds)) if preds else []
     from pyspark.sql import functions as F
 
-    str_groups = {g for g in group_cols if g in schema["str_cols"]}
-    g_schema = ", ".join(
-        f"`{g}` {'string' if g in str_groups else 'bigint'}"
-        for g in group_cols
-    )
     partials = _run_tasks(
         spark, enc_dir, _query_tasks(enc_dir),
-        _GroupReducer(value_col, group_cols, str_groups), specs,
-        g_schema + ", " + AGG_PARTIAL_SCHEMA,
+        _GroupReducer(schema, value_col, group_cols), specs,
     )
-    for g in group_cols:  # SQL key merge: -0.0 == 0.0, NaNs pool
-        partials = partials.withColumn(g, _group_key_norm_expr(schema, g))
+    # the keys arrive restored, so Spark's own grouping merges -0.0 with
+    # 0.0 and pools every NaN, as SQL does
     return partials.groupBy(*group_cols).agg(
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_vals").alias("n_vals"),
@@ -4303,10 +4243,13 @@ def agg_table_files_by(
         F.min("min_val").alias("min_val"),
         F.max("max_val").alias("max_val"),
     ).select(
-        *[_typed_out_expr(schema, g) for g in group_cols],
+        *group_cols,
         F.col("n_rows").cast("bigint").alias("n_rows"),
         F.col("n_vals").cast("bigint").alias("n_vals"),
-        *_group_agg_out_cols(schema, value_col),
+        _sum_out(schema, [value_col],
+                 F.when(F.col("n_vals") == 0, F.lit(None))
+                 .otherwise(F.col("_sum"))),
+        "min_val", "max_val",
     )
 
 
@@ -4320,9 +4263,13 @@ class _DistinctReducer(_Reducer):
     predicates every block is full, so string and indexed-int DISTINCT
     read no payload at all."""
 
-    def __init__(self, col: str, is_str: bool, is_idx: bool):
+    def __init__(self, schema: dict, col: str):
         self.cols = [col]
-        self.is_str, self.is_idx = is_str, is_idx
+        self.is_str = col in schema["str_cols"]
+        # a membership-indexed int column's sidecar IS its distinct set
+        self.is_idx = not self.is_str and col in schema.get("index_cols", ())
+        self.ddl = _typed_ddl(schema, self.cols)
+        self.aliases = _plane_aliases(schema, self.cols)
 
     def need(self, plan, keys):
         col = self.cols[0]
@@ -4338,7 +4285,7 @@ class _DistinctReducer(_Reducer):
                                    if plan.cls[k] == "full"}}
         return {}
 
-    def fold(self, plan, keys, blk) -> pd.DataFrame:
+    def fold(self, plan, keys, blk) -> dict:
         import pyarrow as pa
 
         from rlv import blocks as B
@@ -4381,10 +4328,8 @@ class _DistinctReducer(_Reducer):
             else:
                 iparts.append(np.unique(cv[sel]))
         if self.is_str:
-            out: list = [v.decode("utf-8") for v in sorted(svals)]
-            if has_null:
-                out.append(None)  # SQL DISTINCT keeps one NULL row
-            return pd.DataFrame({col: pd.Series(out, dtype=object)})
+            # SQL DISTINCT keeps one NULL row
+            return {col: [*sorted(svals), *([None] if has_null else [])]}
         if svals:  # index keys: sign-flipped big-endian plane values
             iparts.append(
                 np.frombuffer(b"".join(sorted(svals)), ">u8")
@@ -4392,11 +4337,11 @@ class _DistinctReducer(_Reducer):
             )
         vals = (np.unique(np.concatenate(iparts)) if iparts
                 else np.empty(0, np.int64))
-        mask = np.zeros(vals.size + has_null, bool)
+        valid = np.ones(vals.size + has_null, bool)
         if has_null:
             vals = np.concatenate([vals, np.zeros(1, np.int64)])
-            mask[-1] = True  # SQL DISTINCT keeps one NULL row
-        return pd.DataFrame({col: pd.arrays.IntegerArray(vals, mask)})
+            valid[-1] = False  # SQL DISTINCT keeps one NULL row
+        return {col: _plane_array(vals, valid)}
 
 
 def distinct_table_files(spark: SparkSession, enc_dir: str, col: str,
@@ -4437,18 +4382,13 @@ def distinct_table_files(spark: SparkSession, enc_dir: str, col: str,
             f"{col!r} is not a column of this dataset "
             f"(int_cols={schema['int_cols']} str_cols={schema['str_cols']})"
         )
-    is_str = col in schema["str_cols"]
     specs = _norm_preds(schema, list(preds)) if preds else []
-    # a membership-indexed int column's sidecar IS its distinct set
-    is_idx = not is_str and col in schema.get("index_cols", ())
-    out = _run_tasks(
+    # the values arrive restored, so Spark's DISTINCT merges -0.0 with
+    # 0.0 and pools every NaN, as SQL does
+    return _run_tasks(
         spark, enc_dir, _query_tasks(enc_dir),
-        _DistinctReducer(col, is_str, is_idx), specs,
-        f"`{col}` {'string' if is_str else 'bigint'}",
-    ).withColumn(
-        col, _group_key_norm_expr(schema, col)
-    ).distinct()  # SQL DISTINCT merges -0.0/0.0 and all NaNs
-    return out.select(_typed_out_expr(schema, col))
+        _DistinctReducer(schema, col), specs,
+    ).distinct()
 
 
 EXPLAIN_SCHEMA = (
@@ -4482,14 +4422,12 @@ def _explain_bill(enc_dir: str, specs: list[dict], reducer) -> dict:
 
 def _one_row_frame(spark: SparkSession, values: dict, out_schema: str):
     """One-row DataFrame of ``values`` (0 where a field is missing),
-    built from pandas: a local relation, so collecting it launches no
+    built from Arrow: a local relation, so collecting it launches no
     Spark job (a Python-list frame runs a Python-worker job)."""
-    names = [f.split()[0] for f in out_schema.split(", ")]
-    return spark.createDataFrame(
-        pd.DataFrame({c: pd.Series([values.get(c, 0)], dtype="int64")
-                      for c in names}),
-        out_schema,
-    )
+    schema = _arrow_schema(out_schema)[1]
+    return _local_relation(spark, out_schema, [_typed_batch(
+        {f.name: [values.get(f.name, 0)] for f in schema}, schema, {},
+    )])
 
 
 def explain_agg_table_files(
@@ -4514,7 +4452,7 @@ def explain_agg_table_files(
         schema = _require_int_col(enc_dir, vc)
         _require_summable(schema, vc)
     specs = _norm_preds(schema, list(preds))
-    bill = _explain_bill(enc_dir, specs, _AggReducer(value_cols))
+    bill = _explain_bill(enc_dir, specs, _AggReducer(schema, value_cols))
     return _one_row_frame(spark, bill, AGG_EXPLAIN_SCHEMA)
 
 
@@ -4599,6 +4537,8 @@ class _StatsReducer(_Reducer):
     columns an exact metadata-only NDV too.  No payload column is ever
     read."""
 
+    ddl = STATS_PARTIAL_SCHEMA
+
     def __init__(self, schema: dict):
         self.int_cols = set(schema["int_cols"])
         self.str_cols = list(schema["str_cols"])
@@ -4611,7 +4551,7 @@ class _StatsReducer(_Reducer):
         bis = {bi for _, bi in keys}
         return {c: bis for c in self.dict_cols}
 
-    def fold(self, plan, keys, blk) -> pd.DataFrame:
+    def fold(self, plan, keys, blk) -> dict:
         out: dict[str, list] = {
             k: [] for k in ("col_name", "n_rows", "n_nulls", "min_int",
                             "max_int", "sval")
@@ -4641,15 +4581,8 @@ class _StatsReducer(_Reducer):
                 # feeds the distinct COUNT only — min_str/max_str stay
                 # NULL for int columns downstream
                 row(c, None, None, None, None,
-                    v.decode("utf-8") if c in self.str_cols else v.hex())
-        return pd.DataFrame({
-            "col_name": pd.Series(out["col_name"], dtype=object),
-            "n_rows": pd.array(out["n_rows"], dtype="Int64"),
-            "n_nulls": pd.array(out["n_nulls"], dtype="Int64"),
-            "min_int": pd.array(out["min_int"], dtype="Int64"),
-            "max_int": pd.array(out["max_int"], dtype="Int64"),
-            "sval": pd.Series(out["sval"], dtype=object),
-        })
+                    v if c in self.str_cols else v.hex())
+        return out
 
 
 def stats_table_files(spark: SparkSession, enc_dir: str):
@@ -4679,7 +4612,7 @@ def stats_table_files(spark: SparkSession, enc_dir: str):
         raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
     str_cols = list(schema["str_cols"])
     part = _run_tasks(spark, enc_dir, _query_tasks(enc_dir),
-                      _StatsReducer(schema), [], STATS_PARTIAL_SCHEMA)
+                      _StatsReducer(schema), [])
     counts = (
         part.where(F.col("n_rows").isNotNull())
         .groupBy("col_name")
@@ -4814,6 +4747,8 @@ class _TopkStrReducer(_Reducer):
     driver scans unbounded (correctness over pruning), mirroring
     :func:`_topk_survivors`."""
 
+    ddl = "val string"
+
     def __init__(self, col: str, k: int, ascending: bool):
         self.cols = [col]
         self.k, self.ascending = k, ascending
@@ -4828,7 +4763,7 @@ class _TopkStrReducer(_Reducer):
         return (sorted(vals)[:self.k] if self.ascending
                 else sorted(vals)[-self.k:])
 
-    def fold(self, plan, keys, blk) -> pd.DataFrame:
+    def fold(self, plan, keys, blk) -> dict:
         k = self.k
         vals: set[bytes] = set()
         for key in keys:
@@ -4844,9 +4779,7 @@ class _TopkStrReducer(_Reducer):
             )
             if len(vals) > 4 * k:
                 vals = set(self._extreme(vals))
-        return pd.DataFrame({"val": pd.Series(
-            [v.decode("utf-8") for v in self._extreme(vals)], dtype=object
-        )})
+        return {"val": self._extreme(vals)}
 
 
 def _topk_table_files_str(
@@ -4865,7 +4798,7 @@ def _topk_table_files_str(
     out_names = _scan_out_names(schema, col, columns)
     cand = _run_tasks(
         spark, enc_dir, _query_tasks(enc_dir),
-        _TopkStrReducer(col, int(k), ascending), specs, "val string",
+        _TopkStrReducer(col, int(k), ascending), specs,
     )
     cands = sorted(
         {r["val"] for r in cand.collect() if r["val"] is not None}
@@ -4902,28 +4835,51 @@ def _topk_table_files_str(
     return scan.orderBy(*sort_cols).limit(k).select(*out_names)
 
 
-class _TopkReducer(_Reducer):
-    """Threshold reducer: a task's k extreme VALID values of ``col`` among
-    rows matching the predicate conjunction, decoding only blocks the
-    zone-map plan keeps.  Blocks any predicate prunes never contribute;
-    the top-k bound comes from FULL-matching blocks' exact counts
-    (:func:`_topk_survivors` with ``is_full``); surviving partial blocks
-    decode their non-full predicates and mask before contributing."""
+def _topk_pick(r: np.ndarray, k: int, ascending: bool) -> np.ndarray:
+    """Sorted indices of the ``k`` best ranks ``r`` (smallest when
+    ``ascending``), ties at the k-th rank going to the lowest indices."""
+    if r.size <= k:
+        return np.arange(r.size)
+    if not ascending:
+        r = ~r  # order-reversing and overflow-free (~x == -1 - x)
+    t = np.partition(r, k - 1)[k - 1]
+    less = np.flatnonzero(r < t)
+    tie = np.flatnonzero(r == t)[:k - less.size]
+    return np.sort(np.concatenate([less, tie]))
 
-    def __init__(self, col: str, k: int, ascending: bool):
-        self.cols = [col]
-        self.k, self.ascending = k, ascending
+
+class _TopkReducer(_ScanReducer):
+    """One-pass top-k reducer: each segment's k best rows by ``col`` in
+    SQL order (:func:`_sql_order_keys`) among valid rows matching the
+    predicate conjunction, projected to ``out_names``.  Selection decodes
+    ``col`` only at the blocks the zone-map plan keeps
+    (:func:`_topk_survivors` over SQL-order zone maps, the bound from
+    FULL-matching blocks' exact counts) and masks partial blocks.  Ties
+    at the k-th value go to the earliest rows, and a segment's rows are
+    in order-column order (each split is sorted on it at encode), so the
+    selected set is ``ORDER BY col, order_col LIMIT k``'s within the
+    segment.  The gather then fetches and decodes the other projected
+    columns only at the blocks holding selected rows — at most k blocks
+    — through the scan's own projection."""
+
+    def __init__(self, schema: dict, col: str, k: int, ascending: bool,
+                 out_names: list[str]):
+        super().__init__(schema, [], out_names)
+        self.col, self.k, self.ascending = col, k, ascending
+        self.alias = _col_alias(schema, col)
 
     def keys(self, plan) -> list:
         ordered = sorted(plan.cls)
         if not ordered:
             return []
         stats = np.array(
-            [plan.info[self.cols[0]][kk] for kk in ordered], np.int64
+            [plan.info[self.col][kk] for kk in ordered], np.int64
         ).reshape(len(ordered), 5)
         keep = _topk_survivors(
             stats[:, 0] - stats[:, 1],  # valid values of col
-            stats[:, 2], stats[:, 3], stats[:, 4], self.k, self.ascending,
+            stats[:, 2],
+            *_sql_order_zone(stats[:, 3], stats[:, 4], self.alias),
+            self.k, self.ascending,
             is_full=np.array(
                 [plan.cls[kk] == "full" for kk in ordered], bool
             ),
@@ -4931,23 +4887,36 @@ class _TopkReducer(_Reducer):
         return [kk for kk, kp in zip(ordered, keep) if kp]
 
     def need(self, plan, keys):
-        return {self.cols[0]: set(keys)}, {}
+        return {self.col: set(keys)}, {}
 
-    def fold(self, plan, keys, blk) -> pd.DataFrame:
-        k = self.k
-        parts: list[np.ndarray] = []
+    def side(self, plan, keys) -> dict:
+        return {}
+
+    def fold(self, plan, keys, blk) -> dict:
+        sel: dict = {}  # block key -> selected rows
         for seq, skeys in _segments(keys):
-            vals, valid = blk.seg(self.cols[0], seq)
-            parts.append(
-                vals[valid & blk.seg_mask(skeys, _block_offsets(plan, skeys))]
-            )
-        vv = np.concatenate(parts) if parts else np.empty(0, np.int64)
-        if vv.size > k:
-            vv = (
-                np.partition(vv, k - 1)[:k] if self.ascending
-                else np.partition(vv, vv.size - k)[vv.size - k:]
-            )
-        return pd.DataFrame({"val": vv.astype(np.int64)})
+            offs = _block_offsets(plan, skeys)
+            vals, valid = blk.seg(self.col, seq)
+            pos = np.flatnonzero(valid & blk.seg_mask(skeys, offs))
+            pos = pos[_topk_pick(_sql_order_keys(vals[pos], self.alias),
+                                 self.k, self.ascending)]
+            at = np.searchsorted(offs, pos, side="right") - 1
+            for i in np.unique(at):
+                m = sel[skeys[i]] = np.zeros(plan.nv[skeys[i]], bool)
+                m[pos[at == i] - offs[i]] = True
+        gkeys = sorted(sel)
+        bis = {bi for _, bi in gkeys}
+        blobs = dict(blk.blobs) if blk is not None else {}
+        rest = [c for c in self.cols if c != self.col]
+        if gkeys and rest:
+            blobs.update(_fetch_payloads(plan.path, plan.file_sid, plan.seg,
+                                         {c: bis for c in rest}))
+            plan.side.load({c: bis for c in rest if c in self.str_cols})
+        gather = _Blocks(plan, blobs, {c: set(gkeys) for c in self.cols})
+        return self._gather(
+            plan, gkeys, gather,
+            lambda skeys, offs: np.concatenate([sel[k] for k in skeys]),
+        )
 
 
 def topk_table_files(
@@ -4957,33 +4926,31 @@ def topk_table_files(
 ):
     """TOP-K pushdown into the encoded format: the k rows with the smallest
     (``ascending``) or largest valid values of ``col`` (NULLs excluded,
-    SQL ``WHERE col IS NOT NULL ORDER BY col LIMIT k``), projected like
-    :func:`scan_table_files`.  ``col`` may be an int-plane column (zone-map
-    threshold pass below) or a dictionary STRING column
+    SQL ``WHERE col IS NOT NULL ORDER BY col LIMIT k``, floats in SQL
+    order: NaN above every number, ``-0.0`` equal to ``0.0``), projected
+    like :func:`scan_table_files`.  ``col`` may be an int-plane column
+    (one pass, below) or a dictionary STRING column
     (:func:`_topk_table_files_str`: candidates from the sorted-distinct
     sidecars alone, threshold as a one-sided string bound, final pass the
-    membership-pruned scan — binary collation, as everywhere).  When the dataset's order column is in
-    the projection it tie-breaks equal values ascending, making the selected
-    row SET deterministic (``ORDER BY col, order_col LIMIT k``); without it,
-    ties at the boundary are arbitrary, as in SQL.
+    membership-pruned scan — binary collation, as everywhere).  When the
+    dataset's order column is in the projection it tie-breaks equal
+    values ascending, making the selected row SET deterministic (``ORDER
+    BY col, order_col LIMIT k``); without it, ties at the boundary are
+    arbitrary, as in SQL.
 
-    Two pruned passes, no full sort anywhere: (1) a threshold job — one task
-    per (blocks file, segment), in-process on the driver for a tiny plan
-    (:func:`_run_tasks`), computes the file's k extreme values, decoding only
-    blocks its zone-map plan keeps (:func:`_topk_survivors`: walk blocks by
-    max_val until cumulative valid count reaches k; blocks beyond that bound
-    hold only beaten values) — and the global k-th extreme T folds from the
-    ≤ k·files collected candidates; (2) the existing pruned projection scan
-    with predicate ``col <= T`` (resp. ``>= T``), whose block skipping makes
-    the data read O(k-selectivity) on clustered columns, followed by
-    Spark's TakeOrdered over the surviving sliver.  The shuffle never
-    carries more than k·files candidate values plus the boundary rows.
+    One pass, no full sort anywhere: one task per (blocks file, segment)
+    — in-process on the driver for a tiny plan (:func:`_run_tasks`) —
+    emits its own k best rows, already projected (:class:`_TopkReducer`:
+    it decodes ``col`` only at the blocks its zone-map plan keeps,
+    :func:`_topk_survivors`, and the projection only at the at most k
+    blocks holding the chosen rows), and Spark's TakeOrdered picks the k
+    rows from at most k x tasks.
 
     ``preds`` restricts the ranking to rows matching a CONJUNCTION of the
     same five predicate kinds :func:`scan_table_files_where` takes (SQL
-    ``WHERE ... AND col IS NOT NULL ORDER BY col LIMIT k``): the threshold
-    pass bounds from FULL-matching blocks' exact counts and masks partial
-    blocks, and the final pass stacks ``col <= T`` onto the conjunction."""
+    ``WHERE ... AND col IS NOT NULL ORDER BY col LIMIT k``): the bound
+    comes from FULL-matching blocks' exact counts and partial blocks
+    mask."""
     from pyspark.sql import functions as F
 
     if k <= 0:
@@ -5000,37 +4967,15 @@ def topk_table_files(
     schema = _require_int_col(enc_dir, col)
     specs = _norm_preds(schema, list(preds)) if preds else []
     out_names = _scan_out_names(schema, col, columns)
-    empty_schema = ", ".join(
-        f"`{c}` {_typed_field_type(schema, c)}" for c in out_names
-    )
-    cand = _run_tasks(
-        spark, enc_dir, _query_tasks(enc_dir),
-        _TopkReducer(col, int(k), ascending), specs, "val bigint",
-    )
-    rows = (
-        cand.orderBy(F.col("val").asc() if ascending else F.col("val").desc())
-        .limit(k)
-        .collect()
-    )
-    if not rows:
-        return spark.createDataFrame([], empty_schema)
-    t = int(rows[-1]["val"])
-    lo, hi = (-(2**63), t) if ascending else (t, 2**63 - 1)
     # the sort column rides along even when the caller's projection omits
     # it (orderBy needs it resolved), then drops before returning
-    scan_names = (
-        out_names if col in out_names else [*out_names, col]
-    )
-    # the threshold is a PLANE KEY (the candidate pass runs in key space),
-    # so it stacks as the internal raw_between — identical to between on a
-    # plain-int column, literal-conversion-free on typed columns
-    scan = scan_table_files_where(
-        spark, enc_dir,
-        [*(list(preds) if preds else []), ("raw_between", col, lo, hi)],
-        columns=scan_names,
+    scan_names = out_names if col in out_names else [*out_names, col]
+    rows = _run_tasks(
+        spark, enc_dir, _query_tasks(enc_dir),
+        _TopkReducer(schema, col, int(k), ascending, scan_names), specs,
     )
     sort_cols = [F.col(col).asc() if ascending else F.col(col).desc()]
     order_col = schema["order_col"]
     if order_col in out_names and order_col != col:
         sort_cols.append(F.col(order_col).asc())
-    return scan.orderBy(*sort_cols).limit(k).select(*out_names)
+    return rows.orderBy(*sort_cols).limit(k).select(*out_names)

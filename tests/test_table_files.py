@@ -654,10 +654,9 @@ def test_agg_full_blocks_are_metadata_only(spark, tmp_path, monkeypatch):
         return real_fetch(path, file_sid, seg, need)
 
     monkeypatch.setattr(table_files, "_fetch_payloads", spy_fetch)
-    reducer = table_files._AggReducer(["val_n", "dead_n"])
-    specs = table_files._norm_preds(
-        table_files._load_table_schema(out), [("between", "k", lo, hi)],
-    )
+    schema = table_files._load_table_schema(out)
+    reducer = table_files._AggReducer(schema, ["val_n", "dead_n"])
+    specs = table_files._norm_preds(schema, [("between", "k", lo, hi)])
     [res] = _pipeline_frames(out, reducer, specs)
     got = {r.val_col: r for _, r in res.iterrows()}
     want = [val[i] for i in range(lo, hi + 1) if val[i] is not None]
@@ -756,15 +755,16 @@ def test_explain_agg_bills_zero_payload_when_metadata_serves(spark,
 
 
 def _pipeline_frames(enc_dir, reducer, specs=()):
-    """The block pipeline's output frame of each query task, run
-    in-process (no Spark)."""
+    """The block pipeline's typed output batch of each query task, run
+    in-process (no Spark), as pandas frames."""
     symbols = engine_files._load_symbols(enc_dir)
+    schema = table_files._arrow_schema(reducer.ddl)[1]
     return [
         table_files._task_frame(
             table_files._classify_file(path, seg, list(specs),
                                        reducer.cols, symbols),
-            reducer,
-        )
+            reducer, schema,
+        ).to_pandas()
         for path, seg in table_files._task_rows(
             table_files._query_tasks(enc_dir))
     ]
@@ -1573,9 +1573,10 @@ def test_group_agg_clustered_blocks_metadata_only(spark, tmp_path,
             for k, c in acc.items()
         }
 
+    schema = table_files._load_table_schema(out)
     # int group key
     [res] = _pipeline_frames(
-        out, table_files._GroupReducer("val_n", ["g_n"], set()))
+        out, table_files._GroupReducer(schema, "val_n", ["g_n"]))
     got = {
         (None if pd.isna(r["g_n"]) else int(r["g_n"]),):
             (int(r["n_rows"]), int(r["n_vals"]), int(r["sum_val"]))
@@ -1588,25 +1589,23 @@ def test_group_agg_clustered_blocks_metadata_only(spark, tmp_path,
     assert got == want
     # string group key
     [res2] = _pipeline_frames(
-        out, table_files._GroupReducer("val_n", ["s"], {"s"}))
+        out, table_files._GroupReducer(schema, "val_n", ["s"]))
     got2 = {
         (r["s"],): (int(r["n_rows"]), int(r["n_vals"]), int(r["sum_val"]))
         for _, r in res2.iterrows()
     }
-    # in the pipeline's frames string groups are raw bytes (Spark's Arrow
-    # bridge turns them into str in the final relation)
-    assert got2 == {(k[0].encode(),): v for k, v in expect(["s"]).items()}
+    # the pipeline's batches are typed: string groups arrive as str
+    assert got2 == expect(["s"])
     # composite key
     [res3] = _pipeline_frames(
-        out, table_files._GroupReducer("val_n", ["g_n", "s"], {"s"}))
+        out, table_files._GroupReducer(schema, "val_n", ["g_n", "s"]))
     got3 = {
         (None if pd.isna(r["g_n"]) else int(r["g_n"]), r["s"]):
             (int(r["n_rows"]), int(r["n_vals"]), int(r["sum_val"]))
         for _, r in res3.iterrows()
     }
     want3 = {
-        (None if k[0] is None or pd.isna(k[0]) else int(k[0]),
-         k[1].encode()): v
+        (None if k[0] is None or pd.isna(k[0]) else int(k[0]), k[1]): v
         for k, v in expect(["g", "s"]).items()
     }
     assert got3 == want3
@@ -2140,10 +2139,11 @@ def test_topk_survivors_plan_prunes_clustered_blocks():
     assert keep.sum() == nblocks - 1 and not keep[3]
 
 
-def test_topk_matches_sql_order_by_limit(spark, tmp_path):
+def test_topk_matches_sql_order_by_limit(spark, tmp_path, monkeypatch):
     """Top-k must equal SQL ORDER BY col, order_col LIMIT k (NULLs excluded)
     in both directions, on a tie-heavy nullable multi-file table, before and
-    after compaction; k past the row count returns every valid row."""
+    after compaction, on both dispatch paths; k past the row count returns
+    every valid row."""
     import os
 
     import duckdb
@@ -2188,12 +2188,14 @@ def test_topk_matches_sql_order_by_limit(spark, tmp_path):
         ).fetchall()
         assert got == want
 
-    for kk, asc in [(37, True), (37, False), (1, True), (100000, True)]:
-        check(kk, asc)
+    for _ in _dispatch_paths(monkeypatch):
+        for kk, asc in [(37, True), (37, False), (1, True), (100000, True)]:
+            check(kk, asc)
     res = engine_files.compact_blocks(spark, out, target_bytes=1 << 30)
     assert res["bins_written"] >= 1
-    check(37, True)
-    check(37, False)
+    for _ in _dispatch_paths(monkeypatch):
+        check(37, True)
+        check(37, False)
     with pytest.raises(ValueError, match="positive"):
         table_files.topk_table_files(spark, out, "v_n", 0)
 
@@ -3129,9 +3131,10 @@ def test_topk_survivors_int64_min_block_descending():
     assert list(keep) == [False, True, True]
 
 
-def test_topk_projection_without_sort_column(spark, tmp_path):
+def test_topk_projection_without_sort_column(spark, tmp_path, monkeypatch):
     """A projection omitting the sort column must still work (the sort
-    column rides along internally and drops from the result)."""
+    column rides along internally and drops from the result), on both
+    dispatch paths."""
     import os
 
     import duckdb
@@ -3153,17 +3156,18 @@ def test_topk_projection_without_sort_column(spark, tmp_path):
         order_col="k", int_cols=["k", "v"], str_cols=[],
         rows_per_block=256, num_tasks=1,
     )
-    got = table_files.topk_table_files(
-        spark, out, "v", 10, ascending=True, columns=["k"]
-    )
-    assert got.columns == ["k"]
     want = {
         r[0] for r in duckdb.sql(
             f"SELECT k FROM read_parquet('{d}/p.parquet') "
             "ORDER BY v, k LIMIT 10"
         ).fetchall()
     }
-    assert {r["k"] for r in got.collect()} == want
+    for path in _dispatch_paths(monkeypatch):
+        got = table_files.topk_table_files(
+            spark, out, "v", 10, ascending=True, columns=["k"]
+        )
+        assert got.columns == ["k"]
+        assert {r["k"] for r in got.collect()} == want, path
 
 
 def test_null_and_negated_predicates_match_sql(spark, tmp_path):
@@ -4094,8 +4098,8 @@ def _dispatch_paths(monkeypatch):
 def test_tiny_plans_run_on_the_driver(spark, tmp_path, monkeypatch):
     """A plan whose surviving cells fit the cap runs in-process: a tiny
     predicate COUNT(*) launches no Spark job and a tiny scan is a local
-    relation with no MapInPandas stage; a scan over the cap still runs
-    its mapInPandas workers.  Both paths return the same rows."""
+    relation with no MapInArrow stage; a scan over the cap still runs
+    its mapInArrow workers.  Both paths return the same rows."""
     import os
 
     import pyarrow as pa
@@ -4133,16 +4137,198 @@ def test_tiny_plans_run_on_the_driver(spark, tmp_path, monkeypatch):
         return df, df._jdf.queryExecution().executedPlan().toString()
 
     small, plan = plan_of(tiny)
-    assert "LocalTableScan" in plan and "MapInPandas" not in plan, plan
+    assert "LocalTableScan" in plan and "MapInArrow" not in plan, plan
     wide, plan = plan_of([("between", "k", 0, n)])
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert wide.count() == n
     got = sorted(tuple(r) for r in small.collect())
     assert len(got) == res["n"]
     monkeypatch.setattr(table_files, "_DRIVER_LOCAL_MAX_CELLS", 0)
     spark_df, plan = plan_of(tiny)
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert sorted(tuple(r) for r in spark_df.collect()) == got
+
+
+def _python_nodes(df) -> dict:
+    """Python-worker nodes in ``df``'s executed plan, by node name."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return {name: plan.count(name) for name in (
+        "MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")}
+
+
+def test_one_python_node_per_operator(spark, tmp_path, monkeypatch):
+    """Every pushdown operator crosses into Python once: over the
+    driver-local cap its executed plan holds exactly one MapInArrow and
+    no other Python node (no ArrowEvalPython restore, no MapInPandas);
+    a tiny plan holds none.  Both plans return the same rows.  The table
+    has int32, float64, float32, timestamp, date and string columns; the
+    join's small dimension side stays under the cap, so only its fact
+    side runs on the workers."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "src")
+    os.makedirs(d)
+    n = 3000
+    rng = np.random.default_rng(3)
+    pq.write_table(pa.table({
+        "k": pa.array(range(n), pa.int64()),
+        "i": pa.array(rng.integers(0, 50, n), pa.int32()),
+        "x": pa.array(rng.normal(size=n), pa.float64()),
+        "y": pa.array(rng.normal(size=n).astype(np.float32)),
+        "ts": pa.array(rng.integers(0, 10 ** 15, n), pa.timestamp("us")),
+        "d": pa.array(rng.integers(0, 20000, n).astype(np.int32),
+                      pa.date32()),
+        "s": pa.array([f"s{j % 7}" for j in range(n)]),
+    }), f"{d}/fact.parquet")
+    pq.write_table(pa.table({
+        "i": pa.array(range(50), pa.int32()),
+        "name": pa.array([f"n{j}" for j in range(50)]),
+    }), f"{d}/dim.parquet")
+    fact, dim = str(tmp_path / "fact"), str(tmp_path / "dim")
+    table_files.encode_table_files(
+        spark, [f"{d}/fact.parquet"], fact, order_col="k",
+        int_cols=["k", "i", "x", "y", "ts", "d"], str_cols=["s"],
+        rows_per_block=256, num_tasks=2,
+    )
+    table_files.encode_table_files(
+        spark, [f"{d}/dim.parquet"], dim, order_col="i", int_cols=["i"],
+        str_cols=["name"], num_tasks=1,
+    )
+    preds = [("between", "k", 0, n)]
+    ops = {
+        "scan": lambda: table_files.scan_table_files_where(
+            spark, fact, preds, columns=["k", "i", "x", "y", "ts", "d",
+                                         "s"]),
+        "agg": lambda: table_files.agg_table_files_where(
+            spark, fact, "i", preds),
+        "count": lambda: table_files.count_table_files_where(
+            spark, fact, preds),
+        "minmax": lambda: table_files.minmax_table_files_where(
+            spark, fact, "x", preds),
+        "group": lambda: table_files.agg_table_files_by(
+            spark, fact, "i", ["y", "s"], preds=preds),
+        "distinct": lambda: table_files.distinct_table_files(
+            spark, fact, "ts", preds=preds),
+        "topk": lambda: table_files.topk_table_files(
+            spark, fact, "x", 10, columns=["k", "x", "d", "s"]),
+        "join": lambda: table_files.join_table_files(
+            spark, fact, dim, on="i", preds_a=preds, columns_a=["x"],
+            columns_b=["name"]),
+    }
+    for name, op in ops.items():
+        # 1000 cells: every fact-side plan is over it, the 50-row
+        # dimension (100 cells) under it
+        monkeypatch.setattr(table_files, "_DRIVER_LOCAL_MAX_CELLS", 1000)
+        df = op()
+        assert _python_nodes(df) == {
+            "MapInArrow": 1, "MapInPandas": 0, "ArrowEvalPython": 0,
+            "BatchEvalPython": 0}, (name, _python_nodes(df))
+        rows = sorted(tuple(r) for r in df.collect())
+        monkeypatch.setattr(table_files, "_DRIVER_LOCAL_MAX_CELLS", 1 << 62)
+        tiny = op()
+        assert not any(_python_nodes(tiny).values()), name
+        assert sorted(tuple(r) for r in tiny.collect()) == rows, name
+
+
+def test_local_relation_keeps_rows_after_empty_batches(spark):
+    """A tiny plan's tasks emit one batch each, many of them empty; the
+    local relation must keep every row after an empty batch (Spark 4.1
+    loses the rows that follow one inside an Arrow table's stream)."""
+    import pyarrow as pa
+
+    schema = table_files._arrow_schema("a bigint")[1]
+
+    def batch(vals):
+        return pa.RecordBatch.from_arrays([pa.array(vals, pa.int64())],
+                                          schema=schema)
+
+    rel = table_files._local_relation(
+        spark, "a bigint", [batch([]), batch([1, 2]), batch([]), batch([3])])
+    assert sorted(r["a"] for r in rel.collect()) == [1, 2, 3]
+    assert table_files._local_relation(spark, "a bigint", []).count() == 0
+
+
+def test_topk_is_one_pass_with_bounded_gather(spark, tmp_path,
+                                              monkeypatch):
+    """Int-plane top-k is one pass: one task pipeline run
+    (:func:`_run_tasks`), no second scan, one Spark job over the cap.
+    Each task fetches the sort column at its zone-map survivors, then
+    the other projected columns at no more than k blocks.  Heavy ties
+    at the k-th value (5 distinct values, k=100) break on the order
+    column, equal to DuckDB's ORDER BY v, k LIMIT 100, on both paths."""
+    import os
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "src")
+    os.makedirs(d)
+    n = 6000
+    for p in range(2):
+        ks = np.arange(p * n // 2, (p + 1) * n // 2)
+        pq.write_table(pa.table({
+            "k": pa.array(ks, pa.int64()),
+            "v": pa.array((ks * 7919) % 1000, pa.int64()),
+            "g": pa.array(ks % 5, pa.int32()),
+            "s": pa.array([f"s{j % 11}" for j in ks]),
+        }), f"{d}/part{p}.parquet")
+    out = str(tmp_path / "enc")
+    table_files.encode_table_files(
+        spark, [f"{d}/part0.parquet", f"{d}/part1.parquet"], out,
+        order_col="k", int_cols=["k", "v", "g"], str_cols=["s"],
+        rows_per_block=64, num_tasks=2,
+    )
+    duck = duckdb.connect()
+    duck.sql(f"CREATE VIEW t AS SELECT * FROM read_parquet('{d}/*.parquet')")
+    for _ in _dispatch_paths(monkeypatch):
+        for asc in (True, False):
+            got = [tuple(r) for r in table_files.topk_table_files(
+                spark, out, "g", 100, ascending=asc, columns=["k", "g", "s"],
+            ).collect()]
+            want = duck.sql(
+                f"SELECT k, g, s FROM t ORDER BY g {'ASC' if asc else 'DESC'}"
+                ", k LIMIT 100").fetchall()
+            assert got == want, asc
+
+    fetches, runs = [], []
+    real_fetch, real_run = table_files._fetch_payloads, table_files._run_tasks
+
+    def spy_fetch(path, file_sid, seg, need):
+        fetches.append({c: set(v) for c, v in need.items() if v})
+        return real_fetch(path, file_sid, seg, need)
+
+    def spy_run(*args, **kwargs):
+        runs.append(type(args[3]).__name__)
+        return real_run(*args, **kwargs)
+
+    def no_scan(*args, **kwargs):
+        raise AssertionError("top-k ran a second scan")
+
+    k = 3
+    monkeypatch.setattr(table_files, "_DRIVER_LOCAL_MAX_CELLS", 1 << 62)
+    monkeypatch.setattr(table_files, "_fetch_payloads", spy_fetch)
+    monkeypatch.setattr(table_files, "_run_tasks", spy_run)
+    monkeypatch.setattr(table_files, "_run_scan_tasks", no_scan)
+    got = table_files.topk_table_files(
+        spark, out, "v", k, columns=["k", "v", "s"]).collect()
+    assert [(r["k"], r["v"]) for r in got] == duck.sql(
+        f"SELECT k, v FROM t ORDER BY v, k LIMIT {k}").fetchall()
+    assert runs == ["_TopkReducer"]
+    n_tasks = len(table_files._query_tasks(out))
+    sort_reads = [f for f in fetches if set(f) == {"v"}]
+    gathers = [f for f in fetches if set(f) == {"k", "s"}]
+    assert len(sort_reads) == len(gathers) == n_tasks, fetches
+    assert all(len(f["k"]) <= k and f["k"] == f["s"] for f in gathers)
+    monkeypatch.undo()
+
+    monkeypatch.setattr(table_files, "_DRIVER_LOCAL_MAX_CELLS", 0)
+    assert _spark_jobs(spark, lambda: table_files.topk_table_files(
+        spark, out, "v", k, columns=["k", "v"]).collect(),
+        "rlv-topk-one-pass") == 1
 
 
 def test_count_pushdown_matches_python(spark, tmp_path, dispatch):

@@ -124,7 +124,7 @@ def test_join_without_runtime_filter_is_identical(spark, joined):
 
 def test_join_on_spark_workers_is_identical(spark, joined, monkeypatch):
     """With the driver-local cap at 0 both side scans run as Spark
-    mapInPandas jobs, the plan says so, and the result is unchanged."""
+    mapInArrow jobs, the plan says so, and the result is unchanged."""
     monkeypatch.setattr(TF, "_DRIVER_LOCAL_MAX_CELLS", 0)
     df, plan = TF.join_table_files(
         spark, joined["fact_enc"], joined["dim_enc"], on="cust",
