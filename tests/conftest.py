@@ -11,20 +11,8 @@ settings.load_profile("rlv")
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from rlv.session import make_session
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("rlv-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.default.parallelism", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "4g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = make_session(4, app="rlv-tests", driver_mem="4g")
     yield spark
     spark.stop()

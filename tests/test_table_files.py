@@ -4107,7 +4107,7 @@ def test_tiny_plans_run_on_the_driver(spark, tmp_path, monkeypatch):
 
     d = str(tmp_path / "src")
     os.makedirs(d)
-    n = 140_000  # 2 columns x 140k rows is past the 1 << 18 cell cap
+    n = 140_000  # 2 columns x 140k rows is past the 1 << 17 cell cap
     pq.write_table(
         pa.table({
             "k": pa.array(range(n), pa.int64()),
