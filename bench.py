@@ -170,8 +170,8 @@ def main() -> None:
         extra["budget_ok"] = bool(s_big["bytes_out"] <= s_big["naive_rle_bytes"])
 
         # decode+verify pass over the written blocks: lineage-driven per-split
-        # compare (zero-shuffle; engine.verify_roundtrip is the join-based
-        # JVM alternative, ~10x slower at this SF)
+        # compare (zero-shuffle; a join of decoded blocks against the source
+        # on doc_id was ~10x slower at this SF)
         from rlv import engine_files
 
         t_best = None

@@ -3,17 +3,16 @@
 Cluster:
     spark-submit --py-files rlv.zip jobs/encode_job.py \
         --input s3://bucket/tokens --output s3://bucket/encoded \
-        [--mode files|jvm] [--tasks N] [--no-resume] [--verify]
+        [--tasks N] [--no-resume] [--verify]
 
 Sandbox (local[N] stands in for N executors):
     python jobs/encode_job.py --input /tmp/rlv_bench/tokens_r480000_s42 \
         --output /tmp/enc --cpus 32 --verify
 
 Build the zip for --py-files with:  python -m zipfile -c rlv.zip rlv
-Two data planes (same blocks byte-for-byte):
-  * ``files``  — python-native scan (rlv.engine_files): no shuffle, pyarrow IO;
-  * ``jvm``    — DataFrame pipeline (rlv.engine): group hashing, LPT
-                 repartition for skew, dynamic partition overwrite.
+The job runs the python-native scan (rlv.engine_files): Spark schedules
+row-group splits, each task reads with pyarrow and writes its blocks file;
+no shuffle.
 """
 
 from __future__ import annotations
@@ -37,8 +36,7 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True, help="token table parquet dir")
     ap.add_argument("--output", required=True, help="output dir (blocks + manifest)")
-    ap.add_argument("--mode", choices=["files", "jvm"], default="files")
-    ap.add_argument("--tasks", type=int, default=None, help="splits (files) / groups (jvm)")
+    ap.add_argument("--tasks", type=int, default=None, help="splits")
     ap.add_argument("--cpus", type=int, default=None,
                     help="local[N] when no cluster master is configured")
     ap.add_argument("--no-resume", action="store_true")
@@ -56,14 +54,8 @@ def main(argv=None) -> int:
                     help="comma-separated codec names to mask out of the "
                          "auto-selector (e.g. 'delta'); RLE is not maskable")
     args = ap.parse_args(argv)
-    if args.compact_target and args.mode != "files":
-        ap.error("--compact-target requires --mode files")
-    if (args.encode_strings or args.shared_fsst) and args.mode != "files":
-        ap.error("--encode-strings/--shared-fsst require --mode files")
     if args.shared_fsst and not args.encode_strings:
         ap.error("--shared-fsst requires --encode-strings")
-    if args.disable_codecs and args.mode != "files":
-        ap.error("--disable-codecs requires --mode files")
 
     from pyspark.sql import SparkSession
 
@@ -75,28 +67,19 @@ def main(argv=None) -> int:
         spark = SparkSession.builder.appName("rlv-encode").getOrCreate()
         spark.sparkContext.setLogLevel("WARN")
 
-    from rlv import engine, engine_files
+    from rlv import engine_files
 
-    resume = not args.no_resume
-    if args.mode == "files":
-        symbols = None
-        if args.shared_fsst:
-            stats = engine_files.sample_pass(spark, args.input)
-            symbols = [bytes.fromhex(h) for h in stats["fsst_symbols"]]
-        summary = engine_files.encode_files_dataset(
-            spark, args.input, args.output, num_tasks=args.tasks, resume=resume,
-            string_cols=("source",) if args.encode_strings else (),
-            fsst_symbols=symbols,
-            disable_codecs=tuple(
-                c for c in args.disable_codecs.split(",") if c
-            ),
-        )
-    else:
-        tok = spark.read.parquet(args.input)
-        summary = engine.encode_dataset(
-            spark, tok, args.output,
-            n_groups=args.tasks or 64, resume=resume,
-        )
+    symbols = None
+    if args.shared_fsst:
+        stats = engine_files.sample_pass(spark, args.input)
+        symbols = [bytes.fromhex(h) for h in stats["fsst_symbols"]]
+    summary = engine_files.encode_files_dataset(
+        spark, args.input, args.output, num_tasks=args.tasks,
+        resume=not args.no_resume,
+        string_cols=("source",) if args.encode_strings else (),
+        fsst_symbols=symbols,
+        disable_codecs=tuple(c for c in args.disable_codecs.split(",") if c),
+    )
 
     # verify BEFORE compaction: one task per original split keeps the
     # decode-compare fully parallel (a freshly-compacted dataset may hold
@@ -105,20 +88,14 @@ def main(argv=None) -> int:
     # data identically (and post-compaction verify still works — the merged
     # lineage replay — it just runs at merged-file granularity).
     if args.verify:
-        if args.mode == "files":
-            # zero-shuffle: replay each split's lineage and compare in-task
-            res = engine_files.verify_files_dataset(
-                spark, args.input, args.output, num_tasks=args.tasks
-            )
-            summary["verify_rows"] = res["docs"]
-        else:
-            tok = spark.read.parquet(args.input)
-            encoded = spark.read.parquet(f"{args.output}/blocks")
-            res = engine.verify_roundtrip(tok, encoded)
-            summary["verify_rows"] = res["rows"]
+        # zero-shuffle: replay each split's lineage and compare in-task
+        res = engine_files.verify_files_dataset(
+            spark, args.input, args.output, num_tasks=args.tasks
+        )
+        summary["verify_rows"] = res["docs"]
         summary["verify_mismatches"] = res["mismatches"]
 
-    if args.compact_target and args.mode == "files":
+    if args.compact_target:
         summary["compaction"] = engine_files.compact_blocks(
             spark, args.output, target_bytes=args.compact_target
         )

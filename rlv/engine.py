@@ -1,26 +1,18 @@
-"""Spark passes: plan -> encode -> write(+manifest) -> verify, all Arrow-vectorized.
+"""Token-plane kernels and the DataFrame passes built on them.
 
-Dataflow (SURVEY.md §7.1 step 4, north rule):
-
-1. **group assignment** (JVM): ``group_id = pmod(xxhash64(doc_id), n_groups)`` —
-   the unit of work, lineage, and resume.
-2. **stats/plan pass**: per-group token mass via partial-aggregated ``groupBy``
-   (n_groups rows reach the driver, never the data), then LPT bin-packing of
-   groups onto ``num_partitions`` buckets — explicit skew handling: a Zipf-heavy
-   group lands alone in a bucket instead of capsizing a hash partition.  The
-   mapping joins back as a broadcast.
-3. **encode pass**: ``mapInArrow`` — zero-copy ListArray access, one vectorized
-   stats sweep per batch (run boundaries / min / max / ndv over *runs*), codec
-   selection per doc from exact sizes, per-doc block serialization.  The
-   per-partition independence of RLE encode is licensed by the composition laws
-   (rl_encoding.v:994-1021, 1125-1129): arrays are per-row, so no seam state is
-   needed between partitions at all.
-4. **write**: blocks parquet partitioned by ``group_id`` with dynamic partition
-   overwrite (idempotent retries — blocks are byte-deterministic per the
-   uniqueness law v:1524-1538), then a manifest append per group
-   (:mod:`rlv.manifest`).
-5. **verify pass**: decode every block (``mapInArrow``) and compare
-   token-array equality JVM-side — the per-row invariant from input_hint.
+* **Batch kernels** — one vectorized stats sweep per Arrow batch
+  (:func:`_batch_doc_stats`: run boundaries / min / max / ndv over *runs*),
+  the exact per-codec size matrix (:func:`_codec_size_matrix`), selection per
+  doc as its argmin, and per-doc block serialization vectorized across docs
+  (:func:`_grouped_encode`).  :mod:`rlv.engine_files` writes every token-plane
+  dataset with these kernels; the per-doc independence of RLE encode is
+  licensed by the composition laws (rl_encoding.v:994-1021, 1125-1129):
+  arrays are per-row, so no seam state is needed between batches at all.
+* **DataFrame passes** (``mapInArrow``) — :func:`encode_pass`,
+  :func:`decode_pass`, :func:`runs_pass`, :func:`count_runs_pass`,
+  :func:`strings_pass` and :func:`encode_chunked_sequences` expose the same
+  kernels relationally, so a query can encode, decode or decompose a token
+  DataFrame and check the result against an independent SQL oracle.
 
 No row-at-a-time Python anywhere: Python touches data only through numpy views
 of Arrow buffers.
@@ -28,23 +20,19 @@ of Arrow buffers.
 
 from __future__ import annotations
 
-import json
-import time
 from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rlv import blocks as B
-from rlv import manifest as M
 from rlv.util import tune_malloc
 
 ENCODED_SCHEMA = (
-    "doc_id string, source string, group_id int, n_tok int, n_runs bigint, "
-    "codec_id int, block binary, enc_bytes bigint, naive_bytes bigint, "
-    "encode_ns bigint"
+    "doc_id string, source string, n_tok int, n_runs bigint, "
+    "codec_id int, block binary, enc_bytes bigint, naive_bytes bigint"
 )
 
 DECODED_SCHEMA = "doc_id string, decoded array<int>"
@@ -386,19 +374,14 @@ def _grouped_encode(a, o, n_per_doc, minv, maxv, maxc, chosen,
     return out
 
 
-def _make_encode_arrow_batches(disable_codecs: tuple[int, ...] = (),
-                               passthrough: tuple[str, ...] = ()):
+def _make_encode_arrow_batches(disable_codecs: tuple[int, ...] = ()):
     """Encode-batch closure with an optional candidate mask.
 
     ``disable_codecs`` removes codec ids from the selector's candidate set
     (their size-matrix column becomes +inf) — the bench's DELTA on/off A/B
     lever, also useful to pin a dataset to a codec subset.  RLE cannot be
     disabled: the naive-RLE budget invariant (chosen <= 16*runs) is proved
-    via RLE always being a candidate.
-
-    ``passthrough`` columns ride the batch untouched into the output (e.g.
-    the table plane's per-block validity arrays) — carrying them beats a
-    downstream self-join that would re-run the upstream aggregation."""
+    via RLE always being a candidate."""
     if B.RLE in disable_codecs:
         raise ValueError(
             "RLE cannot be disabled: the size budget invariant needs it "
@@ -418,7 +401,6 @@ def _make_encode_arrow_batches(disable_codecs: tuple[int, ...] = (),
     def _encode_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tune_malloc()
         for batch in it:
-            t0 = time.perf_counter_ns()
             tb = pa.table(batch)
             offs, vals = _list_offsets_values(tb.column("tokens"))
             a = vals[offs[0]:offs[-1]]
@@ -440,14 +422,10 @@ def _make_encode_arrow_batches(disable_codecs: tuple[int, ...] = (),
             enc_bytes = np.fromiter(
                 (len(b) for b in out_blocks), np.int64, n_docs
             )
-            elapsed = time.perf_counter_ns() - t0
-            total = max(int(n_per_doc.sum()), 1)
-            encode_ns = (n_per_doc * elapsed) // total
             yield pa.record_batch(
                 [
                     tb.column("doc_id").combine_chunks(),
                     tb.column("source").combine_chunks(),
-                    tb.column("group_id").combine_chunks(),
                     pa.array(n_per_doc.astype(np.int32), type=pa.int32()),
                     pa.array(runs_per_doc, type=pa.int64()),
                     pa.array(
@@ -457,13 +435,10 @@ def _make_encode_arrow_batches(disable_codecs: tuple[int, ...] = (),
                     pa.array(out_blocks, type=pa.binary()),
                     pa.array(enc_bytes, type=pa.int64()),
                     pa.array(16 * runs_per_doc, type=pa.int64()),
-                    pa.array(encode_ns.astype(np.int64), type=pa.int64()),
-                    *[tb.column(c).combine_chunks() for c in passthrough],
                 ],
                 names=[
-                    "doc_id", "source", "group_id", "n_tok", "n_runs",
+                    "doc_id", "source", "n_tok", "n_runs",
                     "codec_id", "block", "enc_bytes", "naive_bytes",
-                    "encode_ns", *passthrough,
                 ],
             )
 
@@ -731,90 +706,11 @@ def _decode_arrow_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
 # ---------------------------------------------------------------------------
 
 
-def with_group_id(df: DataFrame, n_groups: int) -> DataFrame:
-    """Stable work/lineage unit: hash-mod of doc_id (JVM xxhash64)."""
-    return df.withColumn(
-        "group_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_groups)).cast("int")
+def encode_pass(df: DataFrame) -> DataFrame:
+    """Token table -> encoded blocks + per-doc metrics."""
+    return df.select("doc_id", "tokens", "n_tok", "source").mapInArrow(
+        _encode_arrow_batches, ENCODED_SCHEMA
     )
-
-
-def plan_balanced(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Skew-aware placement: LPT bin-packing of per-group token mass.
-
-    The aggregate is partial+final (Catalyst), so only n_groups rows reach the
-    driver; the greedy longest-processing-time assignment bounds bucket load at
-    (4/3)·OPT, then a broadcast join attaches the bucket and a repartition on it
-    co-locates each group.  This is the engine's explicit answer to Zipf-skewed
-    ``n_tok`` (north rule): one monster group fills a bucket alone instead of
-    hiding inside a hash partition with ordinary groups.
-    """
-    loads = (
-        df.groupBy("group_id")
-        .agg(F.sum("n_tok").alias("load"))
-        .collect()
-    )
-    return _apply_plan(df, loads, num_partitions)
-
-
-def _partition_tokens(spark: SparkSession, num_partitions: int) -> list[int]:
-    """For each physical partition id p, an int token t with
-    ``pmod(murmur3_hash(t), num_partitions) == p``.
-
-    ``repartition(n, col)`` hash-partitions the column, so naively using the
-    LPT bucket index would let buckets collide into one physical partition and
-    undo the balancing.  One tiny JVM query inverts the hash by search.
-    """
-    token_for: dict[int, int] = {}
-    lo = 0
-    while len(token_for) < num_partitions:
-        hi = lo + 32 * num_partitions
-        rows = (
-            spark.range(lo, hi)
-            .select(
-                F.col("id").cast("int").alias("t"),
-                F.pmod(F.hash(F.col("id").cast("int")), F.lit(num_partitions)).alias("p"),
-            )
-            .collect()
-        )
-        for r in rows:
-            token_for.setdefault(int(r["p"]), int(r["t"]))
-        lo = hi
-    return [token_for[p] for p in range(num_partitions)]
-
-
-def _apply_plan(df: DataFrame, loads, num_partitions: int) -> DataFrame:
-    spark = df.sparkSession
-    part_token = _partition_tokens(spark, num_partitions)
-    order = sorted(loads, key=lambda r: (-int(r["load"] or 0), r["group_id"]))
-    bucket_load = [0] * num_partitions
-    assign: list[tuple[int, int]] = []
-    for row in order:
-        b = min(range(num_partitions), key=lambda i: bucket_load[i])
-        bucket_load[b] += int(row["load"] or 0)
-        assign.append((int(row["group_id"]), part_token[b]))
-    mapping = spark.createDataFrame(assign, schema="group_id int, bucket int")
-    return (
-        df.join(F.broadcast(mapping), "group_id", "left")
-        .repartition(num_partitions, "bucket")
-        .drop("bucket")
-    )
-
-
-def encode_pass(df: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
-    """Token table (+group_id) -> encoded blocks + per-doc metrics.
-
-    ``passthrough`` names extra input columns to carry into the output
-    unchanged (their DDL is taken from ``df``'s schema)."""
-    cols = ["doc_id", "tokens", "n_tok", "source", "group_id", *passthrough]
-    schema = ENCODED_SCHEMA + "".join(
-        f", {c} {df.schema[c].dataType.simpleString()}" for c in passthrough
-    )
-    fn = (
-        _encode_arrow_batches
-        if not passthrough
-        else _make_encode_arrow_batches(passthrough=tuple(passthrough))
-    )
-    return df.select(*cols).mapInArrow(fn, schema)
 
 
 def decode_pass(encoded: DataFrame, check_sizes: bool = True) -> DataFrame:
@@ -828,71 +724,3 @@ def decode_pass(encoded: DataFrame, check_sizes: bool = True) -> DataFrame:
         ["n_tok"] if check_sizes and "n_tok" in encoded.columns else []
     )
     return encoded.select(*cols).mapInArrow(_decode_arrow_batches, DECODED_SCHEMA)
-
-
-def verify_roundtrip(token_df: DataFrame, encoded: DataFrame) -> dict:
-    """The per-row invariant: every decoded array bit-identical to its source.
-
-    Join + JVM-side array equality; returns counts (0 mismatches required).
-    """
-    decoded = decode_pass(encoded)
-    joined = token_df.select("doc_id", "tokens").join(decoded, "doc_id", "full")
-    agg = joined.select(
-        F.count("*").alias("n"),
-        F.sum(
-            F.when(
-                F.col("tokens").isNull()
-                | F.col("decoded").isNull()
-                | (F.col("tokens") != F.col("decoded")),
-                1,
-            ).otherwise(0)
-        ).alias("mismatches"),
-    ).collect()[0]
-    return {"rows": int(agg["n"]), "mismatches": int(agg["mismatches"] or 0)}
-
-
-def encode_dataset(
-    spark: SparkSession,
-    token_df: DataFrame,
-    out_dir: str,
-    n_groups: int = 64,
-    num_partitions: int | None = None,
-    resume: bool = True,
-) -> dict:
-    """Full resumable encode job: plan -> encode -> write blocks -> manifest.
-
-    Returns a summary dict (groups encoded / skipped, bytes, throughput).
-    Restart-safe: groups already 'done' in the manifest are anti-joined away;
-    re-encoding a group overwrites exactly its partition directory (dynamic
-    partition overwrite) with byte-identical blocks.
-    """
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    blocks_path = f"{out_dir}/blocks"
-    df = with_group_id(token_df, n_groups)
-    done: set[int] = set()
-    if resume:
-        done = M.done_groups(spark, out_dir)
-        if done:
-            done_df = spark.createDataFrame(
-                [(g,) for g in sorted(done)], schema="group_id int"
-            )
-            df = df.join(F.broadcast(done_df), "group_id", "left_anti")
-    loads = df.groupBy("group_id").agg(F.sum("n_tok").alias("load")).collect()
-    if not loads:
-        return {"groups_encoded": 0, "groups_skipped": len(done), "tokens": 0}
-    planned = _apply_plan(df, loads, num_partitions)
-    encoded = encode_pass(planned)
-    t0 = time.perf_counter()
-    (
-        encoded.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("group_id")
-        .parquet(blocks_path)
-    )
-    wall = time.perf_counter() - t0
-    new_groups = [int(r["group_id"]) for r in loads]
-    summary = M.update_manifest(
-        spark, out_dir, new_groups, wall_sec=wall, skipped=len(done)
-    )
-    return summary

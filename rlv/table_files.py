@@ -1,8 +1,7 @@
 """Per-column table encode on the python-native files plane.
 
-:mod:`rlv.table` runs the per-column engine through the JVM (dense-rank
-windows + ``collect_list``); this module lifts the same semantics onto the
-zero-shuffle pyarrow plane (:mod:`rlv.engine_files`): the driver plans
+This module runs the per-column engine on the zero-shuffle pyarrow plane
+(:mod:`rlv.engine_files`), the table plane's one writer: the driver plans
 row-group splits, each Spark task reads its rows with pyarrow, sorts them by
 ``order_col``, cuts every column into ``rows_per_block``-row blocks, and runs
 the exact-size auto-selector per (column, block) — the north rule's
@@ -21,8 +20,9 @@ Wire layout under ``out_dir``:
   full-matching aggregate blocks without a payload read.  String columns contribute their
   per-block dense-code stream (codes = rank of the value among the block's
   sorted distinct VALID values) through the INT codecs — parquet's
-  dictionary-page / data-page split, same as
-  :func:`rlv.table.encode_table_columns`.  A block containing NULLs wraps
+  dictionary-page / data-page split.  Every int block is exactly what the
+  scalar selector (``rlv.selector.choose_codec`` + ``rlv.blocks
+  .encode_with``) picks for its valid values.  A block containing NULLs wraps
   its chosen block in the NULLW validity bitmap (``rlv.blocks
   .wrap_nullable``); blocks without NULLs are byte-identical to the
   unwrapped format.  ``split_seq`` is the originating split id — constant

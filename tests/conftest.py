@@ -16,3 +16,14 @@ def spark():
     spark = make_session(4, app="rlv-tests", driver_mem="4g")
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def tok_dir(spark, tmp_path_factory):
+    """A 400-doc synthetic token table (every FIXTURES family) in 4 files."""
+    from rlv import tokens
+
+    d = str(tmp_path_factory.mktemp("tok") / "tokens")
+    df = tokens.synth_tokens(spark, n_rows=400, seed=42)
+    df.repartition(4).write.mode("overwrite").parquet(d)
+    return d

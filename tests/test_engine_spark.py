@@ -1,113 +1,89 @@
-"""End-to-end Spark engine tests (SURVEY.md §5.2): encode the synthetic token
-table, decode every block, assert bit-identical tokens per doc_id, total
-compressed bytes <= naive-RLE budget, and resumability from the manifest."""
+"""Token-plane engine tests (SURVEY.md §5.2): every block the files plane
+writes equals the scalar selector's, a crashed encode resumes exactly the
+missing splits byte-identically, the decode pass guards sizes, and the
+DataFrame passes and batch kernels of rlv.engine match their references."""
 
 from __future__ import annotations
 
 import json
+import os
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from rlv import blocks as B
-from rlv import engine, manifest, tokens
+from rlv import engine, engine_files, tokens
 
 
 @pytest.fixture(scope="module")
-def token_df(spark):
-    df = tokens.synth_tokens(spark, n_rows=400, seed=42)
-    df.persist()
-    df.count()
-    return df
+def enc_dir(spark, tok_dir, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("enc") / "enc")
+    engine_files.encode_files_dataset(spark, tok_dir, out, num_tasks=4)
+    return out
 
 
-def test_encode_verify_roundtrip(spark, token_df, tmp_path):
-    out = str(tmp_path / "enc")
-    summary = engine.encode_dataset(spark, token_df, out, n_groups=16)
-    assert summary["groups_encoded"] == 16
-    assert summary["tokens"] == token_df.agg(F.sum("n_tok")).collect()[0][0]
-    # the north-rule size constraint, per-group and in total
-    assert summary["bytes_out"] <= summary["naive_rle_bytes"]
-
-    encoded = spark.read.parquet(f"{out}/blocks")
-    assert encoded.count() == token_df.count()
-    res = engine.verify_roundtrip(token_df, encoded)
-    assert res["rows"] == token_df.count()
-    assert res["mismatches"] == 0
-
-
-def test_per_group_budget_and_manifest(spark, token_df, tmp_path):
-    out = str(tmp_path / "enc")
-    engine.encode_dataset(spark, token_df, out, n_groups=8)
-    mf = manifest.read_manifest(spark, out)
-    rows = mf.collect()
-    assert len(rows) == 8
-    for r in rows:
-        assert r["status"] == "done"
-        assert r["bytes_out"] <= r["naive_rle_bytes"]
-        assert r["attempt"] == 1
-        hist = json.loads(r["codec_hist"])
-        assert sum(hist.values()) == r["n_docs"]
-        assert r["tokens_per_cpu_sec"] > 0
-
-
-def test_resume_skips_done_groups(spark, token_df, tmp_path):
-    out = str(tmp_path / "enc")
-    first = engine.encode_dataset(spark, token_df, out, n_groups=8)
-    assert first["groups_encoded"] == 8
-    second = engine.encode_dataset(spark, token_df, out, n_groups=8)
-    assert second["groups_encoded"] == 0
-    assert second["groups_skipped"] == 8
-    # blocks still verify after the no-op resume
-    encoded = spark.read.parquet(f"{out}/blocks")
-    assert engine.verify_roundtrip(token_df, encoded)["mismatches"] == 0
-
-
-def test_partial_manifest_resume(spark, token_df, tmp_path):
-    """Simulate a crash: manifest knows only half the groups -> resume encodes
-    exactly the missing half, and re-encoded blocks are byte-identical
-    (determinism law, rl_encoding.v:1524-1538)."""
-    out = str(tmp_path / "enc")
-    engine.encode_dataset(spark, token_df, out, n_groups=8)
-    full = {
-        r["doc_id"]: bytes(r["block"])
-        for r in spark.read.parquet(f"{out}/blocks").select("doc_id", "block").collect()
+def _blocks_by_doc(out: str) -> dict[str, tuple[int, bytes]]:
+    tbl = pq.read_table(f"{out}/blocks", columns=["doc_id", "codec_id", "block"])
+    return {
+        d: (c, b)
+        for d, c, b in zip(*(tbl.column(k).to_pylist() for k in tbl.column_names))
     }
-    mf = manifest.read_manifest(spark, out)
-    kept = mf.filter(F.col("group_id") < 4)
-    kept_rows = kept.collect()
-    spark.createDataFrame(kept_rows, schema=manifest.MANIFEST_SCHEMA).coalesce(
-        1
-    ).write.mode("overwrite").parquet(manifest.manifest_path(out))
-    second = engine.encode_dataset(spark, token_df, out, n_groups=8)
-    assert second["groups_encoded"] == 4
-    assert second["groups_skipped"] == 4
-    redone = {
-        r["doc_id"]: bytes(r["block"])
-        for r in spark.read.parquet(f"{out}/blocks").select("doc_id", "block").collect()
-    }
-    assert redone == full
 
 
-def test_encoded_blocks_match_local_kernels(spark, token_df, tmp_path):
-    """The distributed encode agrees byte-for-byte with the local selector —
-    i.e. Spark adds distribution, never changes semantics."""
+def test_encoded_blocks_match_local_kernels(tok_dir, enc_dir):
+    """Every doc's (codec_id, block) in the files-plane dataset equals the
+    scalar reference selector's on its tokens — the batch kernels and Spark
+    add distribution, never change semantics."""
     from rlv.selector import encode_auto
 
-    out = str(tmp_path / "enc")
-    engine.encode_dataset(spark, token_df, out, n_groups=4)
-    got = {
-        r["doc_id"]: (r["codec_id"], bytes(r["block"]))
-        for r in spark.read.parquet(f"{out}/blocks")
-        .select("doc_id", "codec_id", "block")
-        .collect()
-    }
-    for r in token_df.collect():
-        a = np.asarray(r["tokens"], dtype=np.int32)
+    got = _blocks_by_doc(enc_dir)
+    src = pq.read_table(tok_dir, columns=["doc_id", "tokens"])
+    docs = src.column("doc_id").to_pylist()
+    assert sorted(got) == sorted(docs)
+    for doc_id, toks in zip(docs, src.column("tokens").to_pylist()):
+        a = np.asarray(toks, dtype=np.int32)
         codec, block = encode_auto(a)
-        exp_codec = 0 if a.size == 0 else codec
-        assert got[r["doc_id"]] == (exp_codec, block if a.size else b""), r["doc_id"]
+        want = (codec, block) if a.size else (0, b"")
+        assert got[doc_id] == want, doc_id
+
+
+def test_partial_manifest_resume(spark, tok_dir, tmp_path):
+    """Simulate a crash after half the splits committed: the manifest keeps
+    half of its rows and the other half's blocks files are gone.  Resume
+    re-encodes exactly the missing splits, leaves the kept files untouched,
+    and the re-encoded blocks are byte-identical (determinism law,
+    rl_encoding.v:1524-1538)."""
+    out = str(tmp_path / "enc")
+    engine_files.encode_files_dataset(spark, tok_dir, out, num_tasks=6)
+    full = _blocks_by_doc(out)
+    pdf = engine_files._read_manifest_pdf(out).sort_values("split_id")
+    assert len(pdf) >= 2
+    for r in pdf.to_dict("records"):
+        assert r["status"] == "done" and r["attempt"] == 1
+        assert r["bytes_out"] <= r["naive_rle_bytes"]
+        assert sum(json.loads(r["codec_hist"]).values()) == r["n_docs"]
+        assert r["tokens_per_cpu_sec"] > 0
+    half = len(pdf) // 2
+    kept, lost = pdf.iloc[:half], pdf.iloc[half:]
+    engine_files._write_manifest_pdf(out, kept)
+    for sid in lost["split_id"]:
+        os.remove(f"{out}/blocks/{sid}.parquet")
+    kept_mtimes = {
+        sid: os.stat(f"{out}/blocks/{sid}.parquet").st_mtime_ns
+        for sid in kept["split_id"]
+    }
+    second = engine_files.encode_files_dataset(spark, tok_dir, out, num_tasks=6)
+    assert second["splits_encoded"] == len(lost)
+    assert second["splits_skipped"] == len(kept)
+    assert {
+        sid: os.stat(f"{out}/blocks/{sid}.parquet").st_mtime_ns
+        for sid in kept["split_id"]
+    } == kept_mtimes
+    after = engine_files._read_manifest_pdf(out)
+    assert sorted(after["split_id"]) == sorted(pdf["split_id"])
+    assert (after["attempt"] == 1).all()
+    assert _blocks_by_doc(out) == full
 
 
 def test_tokens_from_documents(spark):
@@ -117,25 +93,6 @@ def test_tokens_from_documents(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     text = docs.filter(F.col("doc_id") == row["doc_id"]).first()["text"]
     assert [ord(c) for c in text] == list(row["tokens"])
-
-
-def test_plan_balanced_spreads_skew(spark):
-    """Zipf-skewed n_tok: LPT keeps the max bucket near the mean (north rule)."""
-    df = tokens.synth_tokens(spark, 300, seed=7, families=("zipf_skew",))
-    df = engine.with_group_id(df, 64)
-    planned = engine.plan_balanced(df, 4)
-    sizes = (
-        planned.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .agg(F.sum("n_tok").alias("toks"))
-        .collect()
-    )
-    loads = [int(r["toks"]) for r in sizes]
-    total = sum(loads)
-    # no bucket holds more than 60% of the mass unless one group dominates
-    per_group = df.groupBy("group_id").agg(F.sum("n_tok").alias("l")).collect()
-    biggest_group = max(int(r["l"]) for r in per_group)
-    assert max(loads) <= max(int(0.6 * total), biggest_group)
 
 
 def test_encode_chunked_sequences_equals_batch(spark):
@@ -173,12 +130,10 @@ def test_encode_chunked_sequences_equals_batch(spark):
             assert bytes(r["block"]) == b""
 
 
-def test_decode_size_guard_catches_corruption(spark, token_df, tmp_path):
+def test_decode_size_guard_catches_corruption(spark, enc_dir):
     """safe_decode_with_limit semantics (rl_encoding.v:5034-5069) in the read
     path: a block whose decoded size disagrees with n_tok fails loudly."""
-    out = str(tmp_path / "enc")
-    engine.encode_dataset(spark, token_df, out, n_groups=4)
-    encoded = spark.read.parquet(f"{out}/blocks")
+    encoded = spark.read.parquet(f"{enc_dir}/blocks")
     corrupted = encoded.withColumn(
         "n_tok", F.when(F.col("n_tok") > 0, F.col("n_tok") + 1).otherwise(0)
     )
@@ -226,7 +181,6 @@ def test_batch_stats_with_trailing_empty_docs():
             {
                 "doc_id": [str(i) for i in range(len(docs))],
                 "source": ["s"] * len(docs),
-                "group_id": pa.array(np.zeros(len(docs), np.int32)),
                 "tokens": pa.array(docs, pa.list_(pa.int32())),
                 "n_tok": pa.array([len(d) for d in docs], pa.int32()),
             }

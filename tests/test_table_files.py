@@ -88,45 +88,39 @@ def test_table_files_resume_and_schema_guard(spark, orders_dir, tmp_path):
         )
 
 
-def test_table_files_matches_jvm_table_plane(spark, orders_dir, tmp_path):
-    """Both per-column planes agree on the selector outcome for the INT
-    columns: same codec and exact block size for the same value sequence
-    (single chunk == single split, same block boundaries).  String columns
-    are excluded: the JVM plane dense-ranks per CHUNK, the files plane per
-    BLOCK — deliberately different dictionary granularity."""
-    from rlv import table as T
+def test_table_files_blocks_match_scalar_selector(spark, orders_dir, tmp_path):
+    """Every int block is the scalar selector's choice for its own values
+    (``selector.encode_auto`` of the decoded block returns the same codec
+    and bytes), no block holds more than ``rows_per_block`` rows, and a
+    second encode of the same input writes byte-identical blocks and
+    dictionary sidecars."""
+    import pyarrow.parquet as pq
 
-    out = str(tmp_path / "enc")
-    files = sorted(glob.glob(f"{orders_dir}/*.parquet"))
-    table_files.encode_table_files(
-        spark, files, out,
-        order_col="o_orderkey", int_cols=INT_COLS, str_cols=STR_COLS,
-        rows_per_block=4096, num_tasks=1,
-    )
-    fp = (
-        spark.read.parquet(f"{out}/blocks")
-        .filter(F.col("col_name").isin(INT_COLS))
-        .select("col_name", "block_idx", "n_values", "codec_id", "enc_bytes")
-    )
-    src = (
-        spark.read.parquet(orders_dir)
-        .withColumn("chunk", F.lit(0))
-    )
-    jvm = T.encode_table_columns(
-        src, chunk_col="chunk", order_col="o_orderkey",
-        int_cols=INT_COLS, str_cols=STR_COLS, rows_per_block=4096,
-    ).select(
-        "col_name",
-        F.col("block_idx"),
-        "n_values",
-        F.col("codec_id").alias("jvm_codec"),
-        F.col("enc_bytes").alias("jvm_bytes"),
-    )
-    joined = fp.join(jvm, ["col_name", "block_idx"]).collect()
-    assert joined, "planes produced disjoint blocks"
-    for r in joined:
-        assert r["codec_id"] == r["jvm_codec"], r
-        assert r["enc_bytes"] == r["jvm_bytes"], r
+    from rlv import blocks as B
+    from rlv import selector
+
+    def blocks_of(out, sub, col):
+        tbl = pq.read_table(f"{out}/{sub}")
+        keys = zip(*(tbl.column(k).to_pylist()
+                     for k in ("split_seq", "col_name", "block_idx")))
+        return dict(zip(keys, tbl.column(col).to_pylist()))
+
+    out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
+    _encode(spark, orders_dir, out_a)
+    _encode(spark, orders_dir, out_b)
+    assert blocks_of(out_a, "blocks", "block") == blocks_of(out_b, "blocks", "block")
+    assert (blocks_of(out_a, "strings", "dict_block")
+            == blocks_of(out_b, "strings", "dict_block"))
+    tbl = pq.read_table(f"{out_a}/blocks").to_pylist()
+    n_rows = pq.read_table(orders_dir).num_rows
+    for col in (*INT_COLS, *STR_COLS):
+        rows = [r for r in tbl if r["col_name"] == col]
+        assert sum(r["n_values"] for r in rows) == n_rows
+        assert max(r["n_values"] for r in rows) <= 2048
+    for r in tbl:
+        if r["col_name"] in INT_COLS:
+            vals = B.decode_block(r["block"], np.int64)
+            assert selector.encode_auto(vals) == (r["codec_id"], r["block"]), r
 
 
 def test_table_files_order_col_null_refused(spark, tmp_path):
