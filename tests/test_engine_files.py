@@ -53,6 +53,24 @@ def test_encode_files_resume(spark, tok_dir, tmp_path):
     assert second["splits_skipped"] == first["splits_encoded"]
 
 
+def test_file_blocks_match_jvm_blocks(spark, tok_dir, tmp_path):
+    """The files plane and the DataFrame pass (Spark reads the tokens and
+    feeds ``engine.encode_pass``) produce byte-identical blocks per doc."""
+    out_f = str(tmp_path / "f")
+    engine_files.encode_files_dataset(spark, tok_dir, out_f, num_tasks=4)
+    fb = {
+        r["doc_id"]: (r["codec_id"], bytes(r["block"]))
+        for r in spark.read.parquet(f"{out_f}/blocks")
+        .select("doc_id", "codec_id", "block").collect()
+    }
+    jb = {
+        r["doc_id"]: (r["codec_id"], bytes(r["block"]))
+        for r in engine.encode_pass(spark.read.parquet(tok_dir))
+        .select("doc_id", "codec_id", "block").collect()
+    }
+    assert fb and fb == jb
+
+
 def test_plan_splits_covers_all_row_groups(tok_dir):
     import pyarrow.parquet as pq
     import os
