@@ -81,8 +81,8 @@ def main(argv=None) -> int:
         disable_codecs=tuple(c for c in args.disable_codecs.split(",") if c),
     )
 
-    # verify BEFORE compaction: one task per original split keeps the
-    # decode-compare fully parallel (a freshly-compacted dataset may hold
+    # verify BEFORE compaction: one verify unit per original split keeps
+    # the decode-compare fully parallel (a freshly-compacted dataset may hold
     # only a handful of merged files); compaction never touches block bytes,
     # so verifying the pre-compaction files certifies the post-compaction
     # data identically (and post-compaction verify still works — the merged

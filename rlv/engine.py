@@ -646,7 +646,7 @@ def encode_chunked_sequences(df: DataFrame, cap: int = 2**30) -> DataFrame:
     """
     from rlv.kernels import rle
 
-    def per_doc(pdf) -> "pd.DataFrame":  # noqa: F821 (pandas via Arrow)
+    def per_doc(pdf):
         import pandas as pd
 
         tune_malloc()

@@ -530,3 +530,122 @@ def test_codec_mask_pinned_to_dataset(spark, tok_dir, tmp_path):
         spark, tok_dir, out, num_tasks=4, disable_codecs=("delta",)
     )
     assert again["splits_encoded"] == 0
+
+
+def _row_group_input(tok_dir, path, n_groups: int) -> str:
+    """``tok_dir``'s rows rewritten as ONE parquet file of ``n_groups``
+    row groups, so ``plan_splits`` can cut one split per row group."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(tok_dir)
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(tbl, os.path.join(path, "part-0.parquet"),
+                   row_group_size=-(-len(tbl) // n_groups))
+    assert pq.ParquetFile(
+        os.path.join(path, "part-0.parquet")
+    ).metadata.num_row_groups == n_groups
+    return str(path)
+
+
+def _stage_task_counts(spark, fn, group: str) -> list[int]:
+    """``numTasks`` of every stage of every Spark job ``fn()`` launches,
+    counted under a job group once the listener bus has drained."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "count the tasks of one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    return [
+        st.getStageInfo(s).numTasks
+        for j in st.getJobIdsForGroup(group)
+        for s in st.getJobInfo(j).stageIds
+    ]
+
+
+def _blocks_sha256(out_dir: str) -> str:
+    import hashlib
+    import os
+
+    import pyarrow.parquet as pq
+
+    h = hashlib.sha256()
+    bdir = f"{out_dir}/blocks"
+    for name in sorted(os.listdir(bdir)):
+        if name.endswith(".parquet"):
+            h.update(name.encode())
+            for blob in pq.read_table(
+                f"{bdir}/{name}", columns=["block"]
+            ).column("block").to_pylist():
+                h.update(blob)
+    return h.hexdigest()
+
+
+def test_files_jobs_run_one_task_per_slot(spark, tok_dir, tmp_path):
+    """Encode and verify of 4 × defaultParallelism splits each run exactly
+    defaultParallelism Spark tasks, while the dataset keeps one blocks
+    file and one manifest row per split and verifies clean."""
+    import glob
+
+    slots = spark.sparkContext.defaultParallelism
+    n_splits = 4 * slots
+    src = _row_group_input(tok_dir, tmp_path / "src", n_splits)
+    out = str(tmp_path / "enc")
+    res = {}
+    enc_tasks = _stage_task_counts(
+        spark,
+        lambda: res.setdefault("enc", engine_files.encode_files_dataset(
+            spark, src, out, num_tasks=n_splits)),
+        "rlv-test-slot-encode",
+    )
+    ver_tasks = _stage_task_counts(
+        spark,
+        lambda: res.setdefault("ver", engine_files.verify_files_dataset(
+            spark, src, out, num_tasks=n_splits)),
+        "rlv-test-slot-verify",
+    )
+    assert enc_tasks == [slots], enc_tasks
+    assert ver_tasks == [slots], ver_tasks
+    assert res["enc"]["splits_encoded"] == n_splits
+    assert len(glob.glob(f"{out}/blocks/*.parquet")) == n_splits
+    assert len(engine_files._read_manifest_pdf(out)) == n_splits
+    assert res["ver"]["splits"] == n_splits
+    assert res["ver"]["mismatches"] == 0
+
+
+def test_failed_slot_task_writes_no_manifest_and_resumes(spark, tok_dir,
+                                                         tmp_path):
+    """A split that cannot be read, in the middle of a slot's run of
+    splits, fails the whole job before any manifest row is written; with
+    the bad split removed, a resume encodes every split, and its blocks
+    are byte-identical to a clean encode's."""
+    import time
+
+    slots = spark.sparkContext.defaultParallelism
+    src = _row_group_input(tok_dir, tmp_path / "src", 4 * slots)
+    good = engine_files.plan_splits(src, 4 * slots)
+    bad = {"split_id": "0badbadbadbadbad",
+           "pieces": [[str(tmp_path / "missing.parquet"), 0]]}
+    # 4 * slots + 1 splits: the bad one is third in the first slot's run
+    splits = good[:2] + [bad] + good[2:]
+    out = str(tmp_path / "enc")
+    with pytest.raises(Exception):
+        engine_files.encode_splits(spark, splits, out)
+    assert engine_files._read_manifest_pdf(out) is None
+    # let the failed job's killed tasks drain before the resume reuses
+    # their output names
+    st = spark.sparkContext.statusTracker()
+    deadline = time.time() + 60
+    while st.getActiveStageIds() and time.time() < deadline:
+        time.sleep(0.2)
+
+    resumed = engine_files.encode_splits(spark, good, out)
+    assert resumed["splits_encoded"] == len(good)
+    assert resumed["splits_skipped"] == 0
+    clean = str(tmp_path / "clean")
+    engine_files.encode_splits(spark, good, clean)
+    assert _blocks_sha256(out) == _blocks_sha256(clean)

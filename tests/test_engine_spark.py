@@ -98,7 +98,12 @@ def test_tokens_from_documents(spark):
 def test_encode_chunked_sequences_equals_batch(spark):
     """stream_eq_batch (rl_encoding.v:4695-4715) distributed: sequences split
     into arbitrary row-chunks encode to the same blocks as whole arrays,
-    including seams where equal values straddle chunk boundaries."""
+    including seams where equal values straddle chunk boundaries.  Building
+    the grouped map must not warn: pyspark reads the eval type from the
+    function's type hints, and a half-annotated function warns on every
+    call."""
+    import warnings
+
     import numpy as np
     from rlv import blocks as B
     from rlv.kernels import rle
@@ -115,7 +120,12 @@ def test_encode_chunked_sequences_equals_batch(spark):
         for j, chunk in enumerate(np.split(a, cuts)):
             rows.append((f"d{i}", j, [int(x) for x in chunk]))
     df = spark.createDataFrame(rows, schema="doc_id string, chunk_idx int, tokens array<long>")
-    out = {r["doc_id"]: r for r in engine.encode_chunked_sequences(df).collect()}
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        encoded = engine.encode_chunked_sequences(df)
+    assert not [w for w in caught
+                if "Cannot infer the eval type" in str(w.message)], caught
+    out = {r["doc_id"]: r for r in encoded.collect()}
     assert set(out) == set(docs)
     for did, a in docs.items():
         r = out[did]

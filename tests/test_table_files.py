@@ -3997,10 +3997,13 @@ def _spark_jobs(spark, fn, group: str) -> int:
 
 def test_spark_tasks_relation_is_shuffle_free(spark, orders_dir,
                                               tmp_path):
-    """The query task relation has no Exchange, one partition per task,
-    task i alone in partition i, and carries each task's segment exactly
-    (null for a whole-file task) — checked on a mix of a compacted
-    dataset's segment tasks and a fresh dataset's whole-file tasks."""
+    """The task relation has no Exchange and carries each task's segment
+    exactly (null for a whole-file task) — checked on a mix of a
+    compacted dataset's segment tasks and a fresh dataset's whole-file
+    tasks.  At ``k = n`` (query dispatch) task i is alone in partition i;
+    at ``k < n`` (a files-plane job packed per slot) there are ``k``
+    partitions, every task appears exactly once, and the partitions
+    concatenated in partition order are the task order."""
     import pandas as pd
 
     merged = str(tmp_path / "merged")
@@ -4014,7 +4017,7 @@ def test_spark_tasks_relation_is_shuffle_free(spark, orders_dir,
     assert whole_tasks["segment"].isna().all()
     tasks = pd.concat([seg_tasks, whole_tasks], ignore_index=True)
 
-    rel = table_files._spark_tasks(spark, tasks)
+    rel = engine_files._spark_tasks(spark, tasks, len(tasks))
     plan = rel._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert rel.rdd.getNumPartitions() == len(tasks)
@@ -4025,6 +4028,21 @@ def test_spark_tasks_relation_is_shuffle_free(spark, orders_dir,
     by_pid = {r["pid"]: (r["file"], r["segment"]) for r in rows}
     for i, (f, s) in enumerate(zip(tasks["file"], tasks["segment"])):
         assert by_pid[i] == (f, s), i
+
+    want = list(zip(tasks["file"], tasks["segment"]))
+    for k in sorted({1, 2, len(tasks) - 1}):
+        rel = engine_files._spark_tasks(spark, tasks, k)
+        plan = rel._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, (k, plan)
+        assert rel.rdd.getNumPartitions() == k
+        rows = rel.select(
+            F.spark_partition_id().alias("pid"), "file", "segment"
+        ).collect()
+        # a stable sort by partition id: rows keep their order within one
+        rows = sorted(rows, key=lambda r: r["pid"])
+        assert [(r["file"], r["segment"]) for r in rows] == want, k
+        sizes = [sum(r["pid"] == p for r in rows) for p in range(k)]
+        assert max(sizes) - min(sizes) <= 1, (k, sizes)
 
 
 def test_explain_and_metadata_count_launch_no_spark_job(spark, orders_dir,
