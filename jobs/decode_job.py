@@ -8,9 +8,8 @@ Sandbox:
     python jobs/decode_job.py --input /tmp/enc --output /tmp/tokens_out --cpus 32
 
 Reads every blocks file under ``<input>/blocks`` and writes the reconstructed
-token table (doc_id, tokens, n_tok, source) — one output file per blocks
-file, each task slot exporting a contiguous share of them, zero shuffle,
-bit-identical to the original source by the roundtrip law
+token table (doc_id, tokens, n_tok, source) — one task per blocks file, zero
+shuffle, bit-identical to the original source by the roundtrip law
 (rl_encoding.v:133-144).
 """
 

@@ -18,10 +18,12 @@ entirely into the Python workers:
   the row-group list, deterministic output file name, atomic rename on finish;
   retries overwrite with byte-identical content (uniqueness law,
   rl_encoding.v:1524-1538),
-* the scheduling unit is the task *slot*: every job runs at most
-  ``defaultParallelism`` Python tasks, each over a contiguous, equal-count
-  run of the job's splits (:func:`_slot_tasks`), so the fixed cost of a
-  Spark Python task is paid once per slot, not once per split.
+* the batch encode and its verify run at most ``defaultParallelism``
+  Python tasks, each over a contiguous, equal-count run of the
+  byte-balanced :func:`plan_splits` splits (:func:`_slot_tasks`), so the
+  fixed cost of a Spark Python task is paid once per slot, not once per
+  split; every other job (streaming encode, decode, count-runs, sampling,
+  compaction) runs one Spark task per split, file or bin.
 
 Measured on a 32-core host: ~2x the throughput of the through-JVM pipeline
 this module replaced.
@@ -77,20 +79,29 @@ def _spark_tasks(spark: SparkSession, tasks: pd.DataFrame, k: int):
 
 
 def _slot_tasks(spark: SparkSession, tasks: pd.DataFrame):
-    """The task relation of a files-plane job (encode, verify, decode,
-    count-runs, sample, compaction): at most one partition per task slot
-    (``defaultParallelism``), each running its contiguous share of the
-    tasks one after another in one Python task.  A Spark Python task has
-    a fixed dispatch cost (~0.1 s of executor run time for a few ms of
-    worker code on a 4-core host), so one task per split pays it once per
-    split; the split stays the unit of lineage, resume and output files.
-    The job's splits are LPT-balanced by bytes already
-    (:func:`plan_splits`), so equal-count runs of them are balanced too.
-    A failed task re-runs its whole run; every output is written under an
-    ``.inprogress`` name and renamed, its bytes deterministic, and the
-    manifest merges only after the job returns, so a retry stays
-    idempotent."""
-    k = min(len(tasks), spark.sparkContext.defaultParallelism)
+    """The task relation of a job over :func:`plan_splits` splits (the
+    batch encode, and the verify of a batch-encoded, uncompacted dataset):
+    at most one partition per task slot (``defaultParallelism``), each
+    running its contiguous share of the splits one after another in one
+    Python task.  A Spark Python task has a fixed dispatch cost (~0.1 s
+    of executor run time for a few ms of worker code on a 4-core host),
+    so one task per split pays it once per split; the split stays the
+    unit of lineage, resume and output files.  ``plan_splits`` balances
+    the splits by bytes (LPT), so equal-count runs of them are balanced
+    too; the other jobs' units (per-file stream splits, blocks files,
+    compaction bins) are not, and keep one task each.
+
+    The slot count is the cores registered when the job is submitted, so
+    packing assumes a fixed-size cluster.  Under dynamic allocation a
+    job's backlog of pending tasks is what asks for executors, so there
+    every split keeps its own task.  A failed task re-runs its whole run
+    of splits; every output is written under an ``.inprogress`` name and
+    renamed, its bytes deterministic, and the manifest merges only after
+    the job returns, so a retry stays idempotent."""
+    n = len(tasks)
+    sc = spark.sparkContext
+    dynamic = sc.getConf().get("spark.dynamicAllocation.enabled", "false")
+    k = n if dynamic.lower() == "true" else min(n, sc.defaultParallelism)
     return _spark_tasks(spark, tasks, k)
 
 
@@ -404,7 +415,7 @@ def sample_pass(
             "pieces": [json.dumps(s["pieces"]) for s in sampled],
         }
     )
-    rows = _slot_tasks(spark, tasks_pdf).mapInPandas(
+    rows = _spark_tasks(spark, tasks_pdf, len(sampled)).mapInPandas(
         _sample_worker, SAMPLE_SCHEMA
     ).collect()
     per_source: dict[str, dict] = {}
@@ -685,12 +696,17 @@ def verify_files_dataset(
         todo.extend(planned[sid] for sid in sorted(wanted))
     if not todo:
         return {"splits": 0, "docs": 0, "tokens": 0, "mismatches": 0}
-    tasks_df = _slot_tasks(spark, pd.DataFrame(
+    tasks = pd.DataFrame(
         {
             "split_id": [s["split_id"] for s in todo],
             "pieces": [json.dumps(s["pieces"]) for s in todo],
         }
-    ))
+    )
+    tasks_df = (
+        _slot_tasks(spark, tasks)
+        if _batch_planned(out_dir)
+        else _spark_tasks(spark, tasks, len(tasks))
+    )
     syms = _load_symbols(out_dir)
     results = tasks_df.mapInPandas(
         _make_verify_worker(
@@ -713,6 +729,17 @@ def verify_files_dataset(
         "tokens": sum(int(r["n_tokens"]) for r in results),
         "mismatches": sum(int(r["mismatches"]) for r in results),
     }
+
+
+def _batch_planned(out_dir: str) -> bool:
+    """Whether every live split of a token dataset is a
+    :func:`plan_splits` split, so that its verify can pack them per slot:
+    the dataset was never streamed (:mod:`rlv.streaming` cuts splits per
+    file) nor compacted (a merged row replays several splits' lineage)."""
+    if os.path.exists(f"{_split_manifest_path(out_dir)}/stream_plan.json"):
+        return False
+    pdf = _read_manifest_pdf(out_dir)
+    return pdf is None or not (pdf["status"] == "compacted").any()
 
 
 DECODE_RESULT_SCHEMA = "file string, n_docs bigint, n_tokens bigint"
@@ -829,9 +856,7 @@ def decode_files_dataset(
     spark: SparkSession, enc_dir: str, out_dir: str, resume: bool = True
 ) -> dict:
     """Decode every blocks file under ``enc_dir`` back into a token table at
-    ``out_dir`` (one output file per blocks file, zero shuffle; each
-    slot's Spark task exports a contiguous share of the files,
-    :func:`_slot_tasks`).  Returns
+    ``out_dir`` (one task per blocks file, zero shuffle).  Returns
     {files, docs, tokens, files_skipped}.
 
     With ``resume``, files whose output already exists are skipped — output
@@ -871,7 +896,9 @@ def decode_files_dataset(
     if not files:
         return {"files": 0, "docs": 0, "tokens": 0, "files_skipped": skipped}
     syms = _load_symbols(enc_dir)
-    rows = _slot_tasks(spark, pd.DataFrame({"file": files})).mapInPandas(
+    rows = _spark_tasks(
+        spark, pd.DataFrame({"file": files}), len(files)
+    ).mapInPandas(
         _make_decode_worker(
             out_dir,
             symbols_hex=tuple(s.hex() for s in syms) if syms is not None else None,
@@ -945,12 +972,12 @@ def count_runs_files(
     if num_tasks is None:
         num_tasks = 4 * spark.sparkContext.defaultParallelism
     splits = plan_splits(input_dir, num_tasks)
-    tasks_df = _slot_tasks(spark, pd.DataFrame(
+    tasks_df = _spark_tasks(spark, pd.DataFrame(
         {
             "split_id": [s["split_id"] for s in splits],
             "pieces": [json.dumps(s["pieces"]) for s in splits],
         }
-    ))
+    ), len(splits))
     rows = tasks_df.mapInPandas(_count_runs_worker, COUNT_SCHEMA).collect()
     return {
         "docs": sum(int(r["n_docs"]) for r in rows),
@@ -1124,9 +1151,8 @@ def compact_blocks(
     spark: SparkSession, out_dir: str, target_bytes: int = 128 * 1024 * 1024
 ) -> dict:
     """Iceberg-style small-file compaction: bin-pack live blocks files up to
-    ``target_bytes`` and rewrite each bin as one file, in Spark tasks (each
-    slot's task merges a contiguous share of the bins, :func:`_slot_tasks`;
-    the data never funnels through the driver; at 100 TB the rewrite
+    ``target_bytes`` and rewrite each bin as one file — each bin as ONE SPARK
+    TASK (the data never funnels through the driver; at 100 TB the rewrite
     bandwidth is the cluster's, not one node's).
 
     Crash-safe protocol, data before metadata: tasks write each merged file
@@ -1246,13 +1272,13 @@ def compact_blocks(
                     ),
                 }
             )
-        tasks_df = _slot_tasks(spark, pd.DataFrame(
+        tasks_df = _spark_tasks(spark, pd.DataFrame(
             {
                 "new_sid": [s["new_sid"] for s in specs],
                 "sids": [json.dumps(s["sids"]) for s in specs],
                 "has_sidecar": [str(s["has_sidecar"]) for s in specs],
             }
-        ))
+        ), len(specs))
         results = {
             str(r["new_sid"]): r
             for r in tasks_df.mapInPandas(
@@ -1353,9 +1379,9 @@ def encode_files_dataset(
     if num_tasks is None:
         num_tasks = 4 * spark.sparkContext.defaultParallelism
     splits = plan_splits(input_dir, num_tasks)
-    return encode_splits(
-        spark, splits, out_dir, resume=resume, string_cols=string_cols,
-        fsst_symbols=fsst_symbols, disable_codecs=disable_codecs,
+    return _encode_splits(
+        spark, splits, out_dir, True, resume, string_cols, fsst_symbols,
+        disable_codecs,
     )
 
 
@@ -1406,12 +1432,23 @@ def encode_splits(
     fsst_symbols: list[bytes] | None = None,
     disable_codecs=(),
 ) -> dict:
-    """Encode an explicit split list (shared by the batch directory walk and
-    the streaming micro-batch path).
+    """Encode an explicit split list (the streaming micro-batch path), one
+    Spark task per split: the list's splits need not be byte-balanced.
 
     ``disable_codecs`` (codec ids or names, e.g. ``("delta",)``) removes
     candidates from the auto-selector — the bench's codec-cost A/B lever.
     RLE is not removable (budget invariant)."""
+    return _encode_splits(
+        spark, splits, out_dir, False, resume, string_cols, fsst_symbols,
+        disable_codecs,
+    )
+
+
+def _encode_splits(spark, splits, out_dir, packed, resume, string_cols,
+                   fsst_symbols, disable_codecs) -> dict:
+    """:func:`encode_splits`, packed per slot (:func:`_slot_tasks`) when
+    ``packed`` — for the byte-balanced :func:`plan_splits` splits of
+    :func:`encode_files_dataset` — else one Spark task per split."""
     blocks_dir = f"{out_dir}/blocks"
     os.makedirs(blocks_dir, exist_ok=True)
     _check_codec_mask(out_dir, _resolve_codec_ids(disable_codecs))
@@ -1450,8 +1487,13 @@ def encode_splits(
             "pieces": [json.dumps(s["pieces"]) for s in todo],
         }
     )
+    tasks_df = (
+        _slot_tasks(spark, tasks_pdf)
+        if packed
+        else _spark_tasks(spark, tasks_pdf, len(tasks_pdf))
+    )
     t0 = time.perf_counter()
-    results = _slot_tasks(spark, tasks_pdf).mapInPandas(
+    results = tasks_df.mapInPandas(
         _make_split_worker(
             blocks_dir,
             string_cols=tuple(string_cols),

@@ -802,7 +802,7 @@ def encode_table_files(
         "pieces": [json.dumps(s["pieces"]) for s in todo],
     })
     t0 = time.perf_counter()
-    results = engine_files._slot_tasks(spark, tasks).mapInPandas(
+    results = engine_files._spark_tasks(spark, tasks, len(tasks)).mapInPandas(
         _make_table_split_worker(
             blocks_dir,
             order_col,
@@ -1231,11 +1231,9 @@ def _make_table_verify_worker(blocks_dir: str, schema: dict,
 
 def verify_table_files(spark: SparkSession, enc_dir: str) -> dict:
     """Decode-and-compare every live split against its recorded lineage
-    (zero shuffle; one verify unit per split, and one per ABSORBED
-    SEGMENT of a compacted bin — each replays exactly its own lineage, so
-    verify bandwidth survives compaction like the query layer's; each
-    slot's Spark task runs a contiguous share of the units,
-    :func:`rlv.engine_files._slot_tasks`).  A split is
+    (zero shuffle; one task per split, and one per ABSORBED SEGMENT of a
+    compacted bin — each replays exactly its own lineage, so verify
+    bandwidth survives compaction like the query layer's).  A split is
     promoted to status='verified' only when every one of its segments
     passes.  Returns {splits, rows, mismatches}."""
     schema = _load_table_schema(enc_dir)
@@ -1277,7 +1275,7 @@ def verify_table_files(spark: SparkSession, enc_dir: str) -> dict:
         return {"splits": 0, "rows": 0, "mismatches": 0}
     syms = engine_files._load_symbols(enc_dir)
     tasks = pd.DataFrame(todo, columns=["split_id", "pieces", "segment"])
-    results = engine_files._slot_tasks(spark, tasks).mapInPandas(
+    results = engine_files._spark_tasks(spark, tasks, len(tasks)).mapInPandas(
         _make_table_verify_worker(
             f"{enc_dir}/blocks",
             schema,
@@ -1382,11 +1380,9 @@ def _make_table_decode_worker(out_dir: str, schema: dict,
 def decode_table_files(
     spark: SparkSession, enc_dir: str, out_dir: str
 ) -> dict:
-    """Reconstruct the encoded table (zero shuffle; one export unit per
-    live blocks file, fanned out to one per absorbed segment for
-    compacted bins — export bandwidth survives compaction; each slot's
-    Spark task runs a contiguous share of the units,
-    :func:`rlv.engine_files._slot_tasks`).  Rows come back in
+    """Reconstruct the encoded table (zero shuffle; one task per live
+    blocks file, fanned out to one per absorbed segment for compacted
+    bins — export bandwidth survives compaction).  Rows come back in
     ``order_col`` order within each split; the ``order_col`` column
     itself is decoded data, so any global order can be re-established by
     sorting on it."""
@@ -1408,7 +1404,7 @@ def decode_table_files(
         return {"files": 0, "rows": 0}
     os.makedirs(out_dir, exist_ok=True)
     syms = engine_files._load_symbols(enc_dir)
-    rows = engine_files._slot_tasks(spark, tasks).mapInPandas(
+    rows = engine_files._spark_tasks(spark, tasks, len(tasks)).mapInPandas(
         _make_table_decode_worker(
             out_dir,
             schema,
@@ -1625,10 +1621,10 @@ def _spark_run(spark: SparkSession, enc_dir: str, tasks: pd.DataFrame,
     call site of every query operator, and its only Python-worker stage:
     each task yields the reducer's typed Arrow batch, restored in the
     worker, so no Python node follows it.  Query tasks are not packed
-    per slot as the files-plane jobs are: a task's cost is unknown until
-    it is classified, and a clustered range predicate's surviving files
-    are adjacent, so a contiguous run would put all the real work on one
-    core.  Each Python worker process tunes malloc
+    per slot as the batch encode's splits are (``k = n``): a task's cost
+    is unknown until it is classified, and a clustered range predicate's
+    surviving files are adjacent, so a contiguous run would put all the
+    real work on one core.  Each Python worker process tunes malloc
     first (:func:`rlv.util.tune_malloc`); only there: applied to the
     driver by an in-process run, the same settings slowed a wide scan's
     collect to Arrow by ~0.2 s on a 4-core host."""

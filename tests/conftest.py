@@ -27,3 +27,22 @@ def tok_dir(spark, tmp_path_factory):
     df = tokens.synth_tokens(spark, n_rows=400, seed=42)
     df.repartition(4).write.mode("overwrite").parquet(d)
     return d
+
+
+@pytest.fixture(scope="session")
+def spark_job_ids(spark):
+    """``spark_job_ids(fn, group)``: the ids of the Spark jobs ``fn()``
+    launches, tagged with a job group and read once the listener bus has
+    drained (the status store is fed asynchronously)."""
+    sc = spark.sparkContext
+
+    def run(fn, group: str) -> list[int]:
+        sc.setJobGroup(group, "count the jobs of one call")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -549,20 +549,12 @@ def _row_group_input(tok_dir, path, n_groups: int) -> str:
     return str(path)
 
 
-def _stage_task_counts(spark, fn, group: str) -> list[int]:
-    """``numTasks`` of every stage of every Spark job ``fn()`` launches,
-    counted under a job group once the listener bus has drained."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "count the tasks of one call")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    st = sc.statusTracker()
+def _stage_tasks(spark, job_ids) -> list[int]:
+    """``numTasks`` of every stage of the given Spark jobs."""
+    st = spark.sparkContext.statusTracker()
     return [
         st.getStageInfo(s).numTasks
-        for j in st.getJobIdsForGroup(group)
+        for j in job_ids
         for s in st.getJobInfo(j).stageIds
     ]
 
@@ -585,44 +577,64 @@ def _blocks_sha256(out_dir: str) -> str:
     return h.hexdigest()
 
 
-def test_files_jobs_run_one_task_per_slot(spark, tok_dir, tmp_path):
-    """Encode and verify of 4 × defaultParallelism splits each run exactly
-    defaultParallelism Spark tasks, while the dataset keeps one blocks
-    file and one manifest row per split and verifies clean."""
+def test_files_jobs_run_one_task_per_slot(spark, tok_dir, tmp_path,
+                                           spark_job_ids):
+    """The batch encode and its verify over 4 × defaultParallelism
+    ``plan_splits`` splits each run exactly defaultParallelism Spark
+    tasks, while the dataset keeps one blocks file and one manifest row
+    per split and verifies clean.  Jobs whose units are not byte-balanced
+    splits keep one task per unit: decode (per blocks file), an explicit
+    split list (the streaming path) and verify after compaction (per live
+    row)."""
     import glob
+    import os
 
     slots = spark.sparkContext.defaultParallelism
     n_splits = 4 * slots
     src = _row_group_input(tok_dir, tmp_path / "src", n_splits)
     out = str(tmp_path / "enc")
     res = {}
-    enc_tasks = _stage_task_counts(
-        spark,
-        lambda: res.setdefault("enc", engine_files.encode_files_dataset(
-            spark, src, out, num_tasks=n_splits)),
-        "rlv-test-slot-encode",
-    )
-    ver_tasks = _stage_task_counts(
-        spark,
-        lambda: res.setdefault("ver", engine_files.verify_files_dataset(
-            spark, src, out, num_tasks=n_splits)),
-        "rlv-test-slot-verify",
-    )
-    assert enc_tasks == [slots], enc_tasks
-    assert ver_tasks == [slots], ver_tasks
+
+    def tasks(key, fn):
+        return _stage_tasks(spark, spark_job_ids(
+            lambda: res.setdefault(key, fn()), f"rlv-test-slot-{key}"))
+
+    assert tasks("enc", lambda: engine_files.encode_files_dataset(
+        spark, src, out, num_tasks=n_splits)) == [slots]
+    assert tasks("ver", lambda: engine_files.verify_files_dataset(
+        spark, src, out, num_tasks=n_splits)) == [slots]
     assert res["enc"]["splits_encoded"] == n_splits
     assert len(glob.glob(f"{out}/blocks/*.parquet")) == n_splits
     assert len(engine_files._read_manifest_pdf(out)) == n_splits
     assert res["ver"]["splits"] == n_splits
     assert res["ver"]["mismatches"] == 0
 
+    assert tasks("dec", lambda: engine_files.decode_files_dataset(
+        spark, out, str(tmp_path / "dec"))) == [n_splits]
+    assert tasks("list", lambda: engine_files.encode_splits(
+        spark, engine_files.plan_splits(src, n_splits),
+        str(tmp_path / "list"))) == [n_splits]
+
+    # bins of at most two files, the two smallest among them: fewer live
+    # rows than splits, and still more than slots
+    sizes = sorted(os.path.getsize(f)
+                   for f in glob.glob(f"{out}/blocks/*.parquet"))
+    engine_files.compact_blocks(spark, out, target_bytes=sizes[0] + sizes[1])
+    n_live = len(engine_files.live_splits(out))
+    assert slots < n_live < n_splits
+    assert tasks("ver-compacted", lambda: engine_files.verify_files_dataset(
+        spark, src, out, num_tasks=n_splits)) == [n_live]
+    assert res["ver-compacted"]["mismatches"] == 0
+
 
 def test_failed_slot_task_writes_no_manifest_and_resumes(spark, tok_dir,
-                                                         tmp_path):
+                                                         tmp_path,
+                                                         monkeypatch,
+                                                         spark_job_ids):
     """A split that cannot be read, in the middle of a slot's run of
-    splits, fails the whole job before any manifest row is written; with
-    the bad split removed, a resume encodes every split, and its blocks
-    are byte-identical to a clean encode's."""
+    splits, fails the whole batch encode before any manifest row is
+    written; with the bad split removed, a resume encodes every split,
+    and its blocks are byte-identical to a clean encode's."""
     import time
 
     slots = spark.sparkContext.defaultParallelism
@@ -631,10 +643,18 @@ def test_failed_slot_task_writes_no_manifest_and_resumes(spark, tok_dir,
     bad = {"split_id": "0badbadbadbadbad",
            "pieces": [[str(tmp_path / "missing.parquet"), 0]]}
     # 4 * slots + 1 splits: the bad one is third in the first slot's run
-    splits = good[:2] + [bad] + good[2:]
+    monkeypatch.setattr(engine_files, "plan_splits",
+                        lambda d, n: good[:2] + [bad] + good[2:])
     out = str(tmp_path / "enc")
-    with pytest.raises(Exception):
-        engine_files.encode_splits(spark, splits, out)
+
+    def fails():
+        with pytest.raises(Exception):
+            engine_files.encode_files_dataset(spark, src, out,
+                                              num_tasks=4 * slots)
+
+    assert _stage_tasks(spark, spark_job_ids(fails, "rlv-test-slot-fail")) \
+        == [slots]
+    monkeypatch.undo()
     assert engine_files._read_manifest_pdf(out) is None
     # let the failed job's killed tasks drain before the resume reuses
     # their output names
@@ -642,10 +662,31 @@ def test_failed_slot_task_writes_no_manifest_and_resumes(spark, tok_dir,
     deadline = time.time() + 60
     while st.getActiveStageIds() and time.time() < deadline:
         time.sleep(0.2)
+    assert not st.getActiveStageIds()
 
-    resumed = engine_files.encode_splits(spark, good, out)
+    resumed = engine_files.encode_files_dataset(spark, src, out,
+                                                num_tasks=4 * slots)
     assert resumed["splits_encoded"] == len(good)
     assert resumed["splits_skipped"] == 0
     clean = str(tmp_path / "clean")
-    engine_files.encode_splits(spark, good, clean)
+    engine_files.encode_files_dataset(spark, src, clean, num_tasks=4 * slots)
     assert _blocks_sha256(out) == _blocks_sha256(clean)
+
+
+def test_slot_tasks_keep_one_task_per_split_under_dynamic_allocation(
+        spark, monkeypatch):
+    """Packing takes the cores registered now as the slot count, which
+    holds on a fixed-size cluster; under dynamic allocation the backlog
+    of pending tasks asks for executors, so every split keeps its own
+    task."""
+    import pandas as pd
+
+    sc = spark.sparkContext
+    tasks = pd.DataFrame(
+        {"split_id": [str(i) for i in range(4 * sc.defaultParallelism)]})
+    packed = engine_files._slot_tasks(spark, tasks)
+    assert packed.rdd.getNumPartitions() == sc.defaultParallelism
+    conf = sc.getConf().set("spark.dynamicAllocation.enabled", "true")
+    monkeypatch.setattr(sc, "getConf", lambda: conf)
+    assert engine_files._slot_tasks(spark, tasks).rdd.getNumPartitions() \
+        == len(tasks)

@@ -3981,27 +3981,13 @@ def test_explain_counts_files_not_tasks(spark, orders_dir, tmp_path):
         assert after[k] == before[k], k
 
 
-def _spark_jobs(spark, fn, group: str) -> int:
-    """Number of Spark jobs ``fn()`` launches, counted under a job group
-    once the listener bus has drained (the status store is fed
-    asynchronously)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "count the jobs of one call")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_spark_tasks_relation_is_shuffle_free(spark, orders_dir,
                                               tmp_path):
     """The task relation has no Exchange and carries each task's segment
     exactly (null for a whole-file task) — checked on a mix of a
     compacted dataset's segment tasks and a fresh dataset's whole-file
     tasks.  At ``k = n`` (query dispatch) task i is alone in partition i;
-    at ``k < n`` (a files-plane job packed per slot) there are ``k``
+    at ``k < n`` (a batch encode or verify packed per slot) there are ``k``
     partitions, every task appears exactly once, and the partitions
     concatenated in partition order are the task order."""
     import pandas as pd
@@ -4046,7 +4032,8 @@ def test_spark_tasks_relation_is_shuffle_free(spark, orders_dir,
 
 
 def test_explain_and_metadata_count_launch_no_spark_job(spark, orders_dir,
-                                                         tmp_path):
+                                                         tmp_path,
+                                                         spark_job_ids):
     """EXPLAIN (scan and aggregate) classifies on the driver and returns a
     local relation, and a predicate-free COUNT(*) is served from the
     manifest: collecting any of them launches zero Spark jobs."""
@@ -4069,11 +4056,10 @@ def test_explain_and_metadata_count_launch_no_spark_job(spark, orders_dir,
             spark, out, []).collect()
 
     # control: the counter is not blind
-    assert _spark_jobs(spark, lambda: spark.range(3).collect(),
-                       "rlv-control") >= 1
-    assert _spark_jobs(spark, explain_scan, "rlv-explain-scan") == 0
-    assert _spark_jobs(spark, explain_agg, "rlv-explain-agg") == 0
-    assert _spark_jobs(spark, count_all, "rlv-count-all") == 0
+    assert spark_job_ids(lambda: spark.range(3).collect(), "rlv-control")
+    assert spark_job_ids(explain_scan, "rlv-explain-scan") == []
+    assert spark_job_ids(explain_agg, "rlv-explain-agg") == []
+    assert spark_job_ids(count_all, "rlv-count-all") == []
     n = spark.read.parquet(orders_dir).count()
     [scan], [agg], [cnt] = res["scan"], res["agg"], res["count"]
     assert cnt["n_rows"] == n
@@ -4107,7 +4093,8 @@ def _dispatch_paths(monkeypatch):
         yield path
 
 
-def test_tiny_plans_run_on_the_driver(spark, tmp_path, monkeypatch):
+def test_tiny_plans_run_on_the_driver(spark, tmp_path, monkeypatch,
+                                      spark_job_ids):
     """A plan whose surviving cells fit the cap runs in-process: a tiny
     predicate COUNT(*) launches no Spark job and a tiny scan is a local
     relation with no MapInArrow stage; a scan over the cap still runs
@@ -4139,7 +4126,7 @@ def test_tiny_plans_run_on_the_driver(spark, tmp_path, monkeypatch):
         res["n"] = table_files.count_table_files_where(
             spark, out, tiny).collect()[0]["n_rows"]
 
-    assert _spark_jobs(spark, count, "rlv-tiny-count") == 0
+    assert spark_job_ids(count, "rlv-tiny-count") == []
     assert res["n"] == sum(
         1 for i in range(5000, 6000) if (i * 37) % 1000 <= 499)
 
@@ -4264,7 +4251,7 @@ def test_local_relation_keeps_rows_after_empty_batches(spark):
 
 
 def test_topk_is_one_pass_with_bounded_gather(spark, tmp_path,
-                                              monkeypatch):
+                                              monkeypatch, spark_job_ids):
     """Int-plane top-k is one pass: one task pipeline run
     (:func:`_run_tasks`), no second scan, one Spark job over the cap.
     Each task fetches the sort column at its zone-map survivors, then
@@ -4338,9 +4325,9 @@ def test_topk_is_one_pass_with_bounded_gather(spark, tmp_path,
     monkeypatch.undo()
 
     monkeypatch.setattr(table_files, "_DRIVER_LOCAL_MAX_CELLS", 0)
-    assert _spark_jobs(spark, lambda: table_files.topk_table_files(
+    assert len(spark_job_ids(lambda: table_files.topk_table_files(
         spark, out, "v", k, columns=["k", "v"]).collect(),
-        "rlv-topk-one-pass") == 1
+        "rlv-topk-one-pass")) == 1
 
 
 def test_count_pushdown_matches_python(spark, tmp_path, dispatch):
