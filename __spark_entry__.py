@@ -2454,7 +2454,7 @@ def _q_compacted_group_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     res = engine_files.compact_blocks(spark, out, target_bytes=1 << 40)
     assert res["bins_written"] == 1 and res["files_absorbed"] == 4, res
-    tasks = TF._query_tasks(out)
+    tasks = TF._query_tasks(out).to_pandas()
     assert tasks["file"].nunique() == 1 and len(tasks) == 4, tasks
     assert tasks["segment"].notna().all()
     got = TF.agg_table_files_by(

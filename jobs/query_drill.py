@@ -12,7 +12,8 @@ phase, from `zonemap_stats` / `strdict_stats`) — wall on this host swings
 against DuckDB over the same staged replica files, so the drill is also an
 end-to-end correctness pass at scale.
 
-Usage: python jobs/query_drill.py [--replicas 8] [--cpus 32]
+Usage: python jobs/query_drill.py [--replicas 8]
+                                  [--cpus N (default: all cores)]
                                   [--sf-dir /root/testdata/sf0.1]
 Prints one JSON line (recorded in BASELINE.md "Round-4 query-layer
 scale drill").
@@ -33,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--replicas", type=int, default=8)
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=os.cpu_count())
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--work", default="/tmp/rlv_query_drill")
     ap.add_argument("--compact-target", type=int, default=None,

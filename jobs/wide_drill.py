@@ -20,7 +20,8 @@ whole file per read, making width a hidden multiplier on every query.
 alongside wall time: wall on this host swings ±15%, the byte ratio is
 deterministic and is the claim.
 
-Usage: python jobs/wide_drill.py [--replicas 8] [--cols 24] [--cpus 32]
+Usage: python jobs/wide_drill.py [--replicas 8] [--cols 24]
+                                 [--cpus N (default: all cores)]
 Prints one JSON line (recorded in BASELINE.md).
 """
 
@@ -40,7 +41,7 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--replicas", type=int, default=8)
     ap.add_argument("--cols", type=int, default=24)
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=os.cpu_count())
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--work", default="/tmp/rlv_wide_drill")
     args = ap.parse_args(argv)

@@ -18,12 +18,19 @@ entirely into the Python workers:
   the row-group list, deterministic output file name, atomic rename on finish;
   retries overwrite with byte-identical content (uniqueness law,
   rl_encoding.v:1524-1538),
+* every job dispatches through one runner, :func:`run_file_job`: the
+  driver builds a typed Arrow table of task rows (split id and lineage,
+  file, bin, segment), Spark carries it as a shuffle-free JVM relation,
+  and one ``mapInArrow`` stage hands each Python task its rows as typed
+  dicts and ships back the worker's Arrow result batch — no pandas frame
+  on either side,
 * the batch encode and its verify run at most ``defaultParallelism``
   Python tasks, each over a contiguous, equal-count run of the
-  byte-balanced :func:`plan_splits` splits (:func:`_slot_tasks`), so the
-  fixed cost of a Spark Python task is paid once per slot, not once per
-  split; every other job (streaming encode, decode, count-runs, sampling,
-  compaction) runs one Spark task per split, file or bin.
+  byte-balanced :func:`plan_splits` splits (``packed``), so the fixed
+  cost of a Spark Python task is paid once per slot, not once per split;
+  every other job (streaming encode, decode, count-runs, sampling,
+  compaction, query dispatch) runs one Spark task per split, file, bin
+  or query task.
 
 Measured on a 32-core host: ~2x the throughput of the through-JVM pipeline
 this module replaced.
@@ -31,14 +38,15 @@ this module replaced.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
 import time
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
@@ -57,52 +65,104 @@ RESULT_SCHEMA = (
 )
 
 
-def _spark_tasks(spark: SparkSession, tasks: pd.DataFrame, k: int):
-    """Spark task DataFrame from a frame of string task columns, nulls kept,
-    in ``k`` partitions: ``spark.range`` slices the task ids into ``k``
-    contiguous, equal-count runs (sizes differ by at most one), so the
-    partitions concatenated in partition order are the tasks in frame
-    order.  Each task column is picked out of an array literal by id, so
-    the relation runs in the JVM alone: no Python-worker stage to
-    deserialize a driver list and no shuffle to spread it, ahead of the
-    job's own Python worker."""
-    n = len(tasks)
+# Arrow type of a task column -> the Spark type of its array literal
+_TASK_TYPES = {
+    pa.string(): "string", pa.int64(): "bigint", pa.bool_(): "boolean",
+}
+
+
+def _spark_tasks(spark: SparkSession, tasks: pa.Table, k: int):
+    """Spark task relation of ``tasks`` in ``k`` partitions:
+    ``spark.range`` slices the task ids into ``k`` contiguous, equal-count
+    runs (sizes differ by at most one), so the partitions concatenated in
+    partition order are the tasks in table order.  Each task column is
+    picked out of an array literal by id, typed from its Arrow field
+    (string, bigint or boolean; nulls kept), so the relation runs in the
+    JVM alone: no Python-worker stage to deserialize a driver list and no
+    shuffle to spread it, ahead of the job's own Python worker."""
     pick = (F.col("id") + 1).cast("int")
-    return spark.range(0, n, 1, k).select(*[
+    return spark.range(0, tasks.num_rows, 1, k).select(*[
         F.element_at(
-            F.array(*[F.lit(None if pd.isna(v) else str(v)).cast("string")
-                      for v in tasks[c]]),
+            F.array(*[F.lit(v).cast(_TASK_TYPES[f.type])
+                      for v in tasks.column(f.name).to_pylist()]),
             pick,
-        ).alias(c)
-        for c in tasks.columns
+        ).alias(f.name)
+        for f in tasks.schema
     ])
 
 
-def _slot_tasks(spark: SparkSession, tasks: pd.DataFrame):
-    """The task relation of a job over :func:`plan_splits` splits (the
-    batch encode, and the verify of a batch-encoded, uncompacted dataset):
-    at most one partition per task slot (``defaultParallelism``), each
-    running its contiguous share of the splits one after another in one
-    Python task.  A Spark Python task has a fixed dispatch cost (~0.1 s
-    of executor run time for a few ms of worker code on a 4-core host),
-    so one task per split pays it once per split; the split stays the
-    unit of lineage, resume and output files.  ``plan_splits`` balances
-    the splits by bytes (LPT), so equal-count runs of them are balanced
-    too; the other jobs' units (per-file stream splits, blocks files,
-    compaction bins) are not, and keep one task each.
+@functools.lru_cache(maxsize=256)
+def _arrow_schema(ddl: str):
+    """``(StructType, pyarrow.Schema)`` of a job's output DDL: the one
+    schema definition Python workers type their batches with (Spark's
+    Arrow mapping — int widths, ``date32``, UTC microsecond timestamps,
+    ``decimal128``).  Cached: parsing a DDL is a JVM round trip (~3 ms),
+    a real share of a tiny plan's wall; callers never mutate the
+    result."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-    The slot count is the cores registered when the job is submitted, so
-    packing assumes a fixed-size cluster.  Under dynamic allocation a
-    job's backlog of pending tasks is what asks for executors, so there
-    every split keeps its own task.  A failed task re-runs its whole run
-    of splits; every output is written under an ``.inprogress`` name and
-    renamed, its bytes deterministic, and the manifest merges only after
-    the job returns, so a retry stays idempotent."""
-    n = len(tasks)
+    struct = StructType.fromDDL(ddl)
+    return struct, to_arrow_schema(struct)
+
+
+def run_file_job(spark: SparkSession, tasks: pa.Table, worker, ddl: str,
+                 packed: bool = False) -> DataFrame:
+    """Run ``worker`` over every task row of ``tasks`` in Spark's Python
+    workers, as a lazy DataFrame of ``ddl`` — the one dispatch of every
+    files-plane job and of query dispatch.
+
+    Each task is a dict of the row's typed values (``None`` for a null);
+    ``worker(task)`` returns its result as an Arrow batch of ``ddl``, or
+    as a list of row dicts that the runner types with the DDL's Arrow
+    schema.  Every Python task tunes malloc first
+    (:func:`rlv.util.tune_malloc`).
+
+    The relation is :func:`_spark_tasks` with one partition per task,
+    or, when ``packed``, at most one per task slot
+    (``defaultParallelism``), each running its contiguous share of the
+    tasks one after another in one Python task.  A Spark Python task has
+    a fixed dispatch cost (~0.1 s of executor run time for a few ms of
+    worker code on a 4-core host), so one task per unit pays it once per
+    unit.  Pack only units that are balanced: :func:`plan_splits` splits
+    are LPT-balanced by bytes, so equal-count runs of them are balanced
+    too; per-file stream splits, blocks files, compaction bins and query
+    tasks are not.  The slot count is the cores registered when the job
+    is submitted, so packing assumes a fixed-size cluster: under dynamic
+    allocation a job's backlog of pending tasks is what asks for
+    executors, so there every unit keeps its own task.  A failed task
+    re-runs its whole run of units; every output is written under an
+    ``.inprogress`` name and renamed, its bytes deterministic, and
+    manifests merge only after the job returns, so a retry stays
+    idempotent."""
+    n = tasks.num_rows
     sc = spark.sparkContext
     dynamic = sc.getConf().get("spark.dynamicAllocation.enabled", "false")
-    k = n if dynamic.lower() == "true" else min(n, sc.defaultParallelism)
-    return _spark_tasks(spark, tasks, k)
+    k = (min(n, sc.defaultParallelism)
+         if packed and dynamic.lower() != "true" else n)
+    struct, schema = _arrow_schema(ddl)
+
+    def run(batches):
+        from rlv.util import tune_malloc
+
+        tune_malloc()
+        for b in batches:
+            for task in b.to_pylist():
+                out = worker(task)
+                yield (out if isinstance(out, pa.RecordBatch)
+                       else pa.RecordBatch.from_pylist(out, schema=schema))
+
+    return _spark_tasks(spark, tasks, k).mapInArrow(run, struct)
+
+
+def _split_tasks(splits: list[dict]) -> pa.Table:
+    """``(split_id, pieces)`` task table of a split list, ``pieces`` as
+    JSON."""
+    return pa.table({
+        "split_id": pa.array([s["split_id"] for s in splits], pa.string()),
+        "pieces": pa.array([json.dumps(s["pieces"]) for s in splits],
+                           pa.string()),
+    })
 
 
 def plan_splits(input_dir: str, num_tasks: int) -> list[dict]:
@@ -192,146 +252,134 @@ def _resolve_codec_ids(disable_codecs) -> tuple[int, ...]:
 def _make_split_worker(
     out_blocks_dir: str,
     string_cols: tuple[str, ...] = (),
-    fsst_symbols_hex: tuple[str, ...] | None = None,
+    symbols: list[bytes] | None = None,
     disable_codecs: tuple[int, ...] = (),
 ):
     from rlv.engine import _make_encode_arrow_batches
-    from rlv.util import tune_malloc
 
     _encode_arrow_batches = _make_encode_arrow_batches(tuple(disable_codecs))
 
-    symbols = (
-        [bytes.fromhex(h) for h in fsst_symbols_hex]
-        if fsst_symbols_hex is not None
-        else None
-    )
-
-    def run_split(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow as pa
+    def run_split(task: dict) -> list[dict]:
         import pyarrow.parquet as pq
 
         from rlv import blocks as B
 
-        tune_malloc()
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                split_id = row["split_id"]
-                pieces = json.loads(row["pieces"])
-                t0 = time.perf_counter_ns()
-                out_batches: list[pa.RecordBatch] = []
-                str_parts: dict[str, list] = {c: [] for c in string_cols}
-                by_file: dict[str, list[int]] = {}
-                for path, rg in pieces:
-                    by_file.setdefault(path, []).append(rg)
-                for path, rgs in by_file.items():
-                    pf = pq.ParquetFile(path)
-                    tbl = pf.read_row_groups(
-                        rgs, columns=["doc_id", "tokens", "n_tok", "source"],
-                        use_threads=False,
-                    )
-                    for c in string_cols:
-                        str_parts[c].extend(tbl.column(c).chunks)
-                    for b in tbl.combine_chunks().to_batches(max_chunksize=20000):
-                        out_batches.extend(_encode_arrow_batches(iter([b])))
-                cpu_ns = time.perf_counter_ns() - t0
-                out = pa.Table.from_batches(out_batches)
-                if string_cols:
-                    # string columns go through the engine's own codec
-                    # (STRDICT, optionally with the corpus FSST table) into a
-                    # per-split sidecar; the plain column is dropped from the
-                    # blocks file — per-column encoding, not parquet's
-                    out = out.drop_columns(list(string_cols))
-                    srows = {
-                        "col_name": [], "n_values": [], "enc_bytes": [],
-                        "raw_bytes": [], "block": [],
-                    }
-                    import pyarrow.compute as pc
+        split_id = task["split_id"]
+        pieces = json.loads(task["pieces"])
+        t0 = time.perf_counter_ns()
+        out_batches: list[pa.RecordBatch] = []
+        str_parts: dict[str, list] = {c: [] for c in string_cols}
+        by_file: dict[str, list[int]] = {}
+        for path, rg in pieces:
+            by_file.setdefault(path, []).append(rg)
+        for path, rgs in by_file.items():
+            pf = pq.ParquetFile(path)
+            tbl = pf.read_row_groups(
+                rgs, columns=["doc_id", "tokens", "n_tok", "source"],
+                use_threads=False,
+            )
+            for c in string_cols:
+                str_parts[c].extend(tbl.column(c).chunks)
+            # a zero-row file still yields one empty batch, so an all-empty
+            # split encodes to an empty blocks file of the full schema
+            batches = tbl.combine_chunks().to_batches(max_chunksize=20000)
+            for b in batches or [pa.RecordBatch.from_pylist([], tbl.schema)]:
+                out_batches.extend(_encode_arrow_batches(iter([b])))
+        cpu_ns = time.perf_counter_ns() - t0
+        out = pa.Table.from_batches(out_batches)
+        if string_cols:
+            # string columns go through the engine's own codec
+            # (STRDICT, optionally with the corpus FSST table) into a
+            # per-split sidecar; the plain column is dropped from the
+            # blocks file — per-column encoding, not parquet's
+            out = out.drop_columns(list(string_cols))
+            srows = {
+                "col_name": [], "n_values": [], "enc_bytes": [],
+                "raw_bytes": [], "block": [],
+            }
+            import pyarrow.compute as pc
 
-                    for c in string_cols:
-                        arr = (
-                            pa.concat_arrays(str_parts[c])
-                            if str_parts[c]
-                            else pa.array([], pa.string())
-                        )
-                        if arr.null_count:
-                            raise ValueError(
-                                f"split {split_id}: column {c!r} contains "
-                                "NULLs — the string codec stores values, not "
-                                "validity; filter or fill before encoding"
-                            )
-                        blk = B.encode_strings(arr, symbols)
-                        # inline roundtrip check, same discipline as
-                        # strings_pass: a sidecar that cannot decode back
-                        # bit-identically must fail the task, not be written
-                        # (whole-column Arrow equality, no per-row Python)
-                        want = arr.cast(pa.binary())
-                        back = B.decode_strings_arrow(blk, symbols)
-                        ok = len(back) == len(want) and (
-                            len(want) == 0
-                            or bool(pc.all(pc.equal(back, want)).as_py())
-                        )
-                        if not ok:
-                            raise ValueError(
-                                f"split {split_id}: STRDICT roundtrip "
-                                f"mismatch on column {c!r}"
-                            )
-                        srows["col_name"].append(c)
-                        srows["n_values"].append(len(arr))
-                        srows["enc_bytes"].append(len(blk))
-                        srows["raw_bytes"].append(
-                            int(
-                                pc.sum(pc.binary_length(want)).as_py() or 0
-                            )
-                        )
-                        srows["block"].append(blk)
-                    sdir = os.path.join(
-                        os.path.dirname(out_blocks_dir), "strings"
-                    )
-                    os.makedirs(sdir, exist_ok=True)
-                    sfinal = os.path.join(sdir, f"{split_id}.parquet")
-                    stmp = sfinal + ".inprogress"
-                    pq.write_table(
-                        pa.table(
-                            {
-                                "col_name": pa.array(srows["col_name"]),
-                                "n_values": pa.array(
-                                    srows["n_values"], pa.int64()
-                                ),
-                                "enc_bytes": pa.array(
-                                    srows["enc_bytes"], pa.int64()
-                                ),
-                                "raw_bytes": pa.array(
-                                    srows["raw_bytes"], pa.int64()
-                                ),
-                                "block": pa.array(srows["block"], pa.binary()),
-                            }
-                        ),
-                        stmp,
-                    )
-                    os.replace(stmp, sfinal)
-                final = os.path.join(out_blocks_dir, f"{split_id}.parquet")
-                tmp = final + ".inprogress"
-                pq.write_table(out, tmp, compression="zstd")
-                os.replace(tmp, final)
-                codec_ids = out.column("codec_id").to_numpy()
-                hist = {
-                    str(int(k)): int(v)
-                    for k, v in zip(*np.unique(codec_ids, return_counts=True))
-                }
-                yield pd.DataFrame(
-                    {
-                        "split_id": [split_id],
-                        "n_docs": [len(out)],
-                        "n_tokens": [int(out.column("n_tok").to_numpy().sum())],
-                        "n_runs": [int(out.column("n_runs").to_numpy().sum())],
-                        "bytes_out": [int(out.column("enc_bytes").to_numpy().sum())],
-                        "naive_rle_bytes": [
-                            int(out.column("naive_bytes").to_numpy().sum())
-                        ],
-                        "codec_hist": [json.dumps(hist, sort_keys=True)],
-                        "encode_cpu_ns": [cpu_ns],
-                    }
+            for c in string_cols:
+                arr = (
+                    pa.concat_arrays(str_parts[c])
+                    if str_parts[c]
+                    else pa.array([], pa.string())
                 )
+                if arr.null_count:
+                    raise ValueError(
+                        f"split {split_id}: column {c!r} contains "
+                        "NULLs — the string codec stores values, not "
+                        "validity; filter or fill before encoding"
+                    )
+                blk = B.encode_strings(arr, symbols)
+                # inline roundtrip check, same discipline as
+                # strings_pass: a sidecar that cannot decode back
+                # bit-identically must fail the task, not be written
+                # (whole-column Arrow equality, no per-row Python)
+                want = arr.cast(pa.binary())
+                back = B.decode_strings_arrow(blk, symbols)
+                ok = len(back) == len(want) and (
+                    len(want) == 0
+                    or bool(pc.all(pc.equal(back, want)).as_py())
+                )
+                if not ok:
+                    raise ValueError(
+                        f"split {split_id}: STRDICT roundtrip "
+                        f"mismatch on column {c!r}"
+                    )
+                srows["col_name"].append(c)
+                srows["n_values"].append(len(arr))
+                srows["enc_bytes"].append(len(blk))
+                srows["raw_bytes"].append(
+                    int(
+                        pc.sum(pc.binary_length(want)).as_py() or 0
+                    )
+                )
+                srows["block"].append(blk)
+            sdir = os.path.join(
+                os.path.dirname(out_blocks_dir), "strings"
+            )
+            os.makedirs(sdir, exist_ok=True)
+            sfinal = os.path.join(sdir, f"{split_id}.parquet")
+            stmp = sfinal + ".inprogress"
+            pq.write_table(
+                pa.table(
+                    {
+                        "col_name": pa.array(srows["col_name"]),
+                        "n_values": pa.array(
+                            srows["n_values"], pa.int64()
+                        ),
+                        "enc_bytes": pa.array(
+                            srows["enc_bytes"], pa.int64()
+                        ),
+                        "raw_bytes": pa.array(
+                            srows["raw_bytes"], pa.int64()
+                        ),
+                        "block": pa.array(srows["block"], pa.binary()),
+                    }
+                ),
+                stmp,
+            )
+            os.replace(stmp, sfinal)
+        final = os.path.join(out_blocks_dir, f"{split_id}.parquet")
+        tmp = final + ".inprogress"
+        pq.write_table(out, tmp, compression="zstd")
+        os.replace(tmp, final)
+        codec_ids = out.column("codec_id").to_numpy()
+        hist = {
+            str(int(k)): int(v)
+            for k, v in zip(*np.unique(codec_ids, return_counts=True))
+        }
+        return [{
+            "split_id": split_id,
+            "n_docs": len(out),
+            "n_tokens": int(out.column("n_tok").to_numpy().sum()),
+            "n_runs": int(out.column("n_runs").to_numpy().sum()),
+            "bytes_out": int(out.column("enc_bytes").to_numpy().sum()),
+            "naive_rle_bytes": int(out.column("naive_bytes").to_numpy().sum()),
+            "codec_hist": json.dumps(hist, sort_keys=True),
+            "encode_cpu_ns": cpu_ns,
+        }]
 
     return run_split
 
@@ -343,7 +391,7 @@ SAMPLE_SCHEMA = (
 )
 
 
-def _sample_worker(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _sample_worker(task: dict) -> list[dict]:
     """Per-split codec statistics (north rule's sampling pass): run-length
     histogram, value ranges, distinct-value estimate, and a byte sample of the
     string column for FSST symbol training."""
@@ -351,51 +399,44 @@ def _sample_worker(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
     from rlv.engine import _batch_doc_stats, _list_offsets_values
     from rlv.stats import run_length_histogram
-    from rlv.util import tune_malloc
 
-    tune_malloc()
-    for pdf in pdf_iter:
-        for _, row in pdf.iterrows():
-            pieces = json.loads(row["pieces"])
-            by_file: dict[str, list[int]] = {}
-            for path, rg in pieces:
-                by_file.setdefault(path, []).append(rg)
-            rows = []
-            for path, rgs in by_file.items():
-                tbl = pq.ParquetFile(path).read_row_groups(
-                    rgs, columns=["doc_id", "tokens", "n_tok", "source"],
-                    use_threads=False,
-                ).combine_chunks()
-                offs, vals = _list_offsets_values(tbl.column("tokens").chunk(0)
-                                                  if tbl.column("tokens").num_chunks
-                                                  else tbl.column("tokens"))
-                a = vals[offs[0]:offs[-1]]
-                o = offs - offs[0]
-                (run_len, run_val, _, n_per_doc, minv, maxv, rpd, _, ndv,
-                 *_rest) = _batch_doc_stats(a, o)
-                src = np.asarray(tbl.column("source").to_pylist())
-                text_sample = b"|".join(
-                    s.encode("utf-8") for s in src[:64].tolist()
-                )[:65536]
-                for source in np.unique(src):
-                    m = src == source
-                    rows.append(
-                        {
-                            "split_id": str(row["split_id"]),
-                            "source": str(source),
-                            "n_docs": int(m.sum()),
-                            "n_tokens": int(n_per_doc[m].sum()),
-                            "n_runs": int(rpd[m].sum()),
-                            "min_val": int(minv[m].min()) if m.any() else 0,
-                            "max_val": int(maxv[m].max()) if m.any() else 0,
-                            "ndv_est": int(ndv[m].max()) if m.any() else 0,
-                            "run_hist": json.dumps(
-                                run_length_histogram(run_len)
-                            ),
-                            "sample_text": text_sample,
-                        }
-                    )
-            yield pd.DataFrame(rows)
+    by_file: dict[str, list[int]] = {}
+    for path, rg in json.loads(task["pieces"]):
+        by_file.setdefault(path, []).append(rg)
+    rows = []
+    for path, rgs in by_file.items():
+        tbl = pq.ParquetFile(path).read_row_groups(
+            rgs, columns=["doc_id", "tokens", "n_tok", "source"],
+            use_threads=False,
+        ).combine_chunks()
+        offs, vals = _list_offsets_values(tbl.column("tokens").chunk(0)
+                                          if tbl.column("tokens").num_chunks
+                                          else tbl.column("tokens"))
+        a = vals[offs[0]:offs[-1]]
+        o = offs - offs[0]
+        (run_len, run_val, _, n_per_doc, minv, maxv, rpd, _, ndv,
+         *_rest) = _batch_doc_stats(a, o)
+        src = np.asarray(tbl.column("source").to_pylist())
+        text_sample = b"|".join(
+            s.encode("utf-8") for s in src[:64].tolist()
+        )[:65536]
+        for source in np.unique(src):
+            m = src == source
+            rows.append(
+                {
+                    "split_id": task["split_id"],
+                    "source": str(source),
+                    "n_docs": int(m.sum()),
+                    "n_tokens": int(n_per_doc[m].sum()),
+                    "n_runs": int(rpd[m].sum()),
+                    "min_val": int(minv[m].min()) if m.any() else 0,
+                    "max_val": int(maxv[m].max()) if m.any() else 0,
+                    "ndv_est": int(ndv[m].max()) if m.any() else 0,
+                    "run_hist": json.dumps(run_length_histogram(run_len)),
+                    "sample_text": text_sample,
+                }
+            )
+    return rows
 
 
 def sample_pass(
@@ -409,15 +450,9 @@ def sample_pass(
 
     splits = plan_splits(input_dir, num_tasks)
     sampled = splits[::every_kth] or splits[:1]
-    tasks_pdf = pd.DataFrame(
-        {
-            "split_id": [s["split_id"] for s in sampled],
-            "pieces": [json.dumps(s["pieces"]) for s in sampled],
-        }
-    )
-    rows = _spark_tasks(spark, tasks_pdf, len(sampled)).mapInPandas(
-        _sample_worker, SAMPLE_SCHEMA
-    ).collect()
+    rows = run_file_job(
+        spark, _split_tasks(sampled), _sample_worker, SAMPLE_SCHEMA
+    ).toArrow().to_pylist()
     per_source: dict[str, dict] = {}
     text_sample = bytearray()
     for r in rows:
@@ -426,12 +461,12 @@ def sample_pass(
             {"n_docs": 0, "n_tokens": 0, "n_runs": 0,
              "min_val": 2**63 - 1, "max_val": -(2**63), "ndv_est": 0},
         )
-        s["n_docs"] += int(r["n_docs"])
-        s["n_tokens"] += int(r["n_tokens"])
-        s["n_runs"] += int(r["n_runs"])
-        s["min_val"] = min(s["min_val"], int(r["min_val"]))
-        s["max_val"] = max(s["max_val"], int(r["max_val"]))
-        s["ndv_est"] = max(s["ndv_est"], int(r["ndv_est"]))
+        s["n_docs"] += r["n_docs"]
+        s["n_tokens"] += r["n_tokens"]
+        s["n_runs"] += r["n_runs"]
+        s["min_val"] = min(s["min_val"], r["min_val"])
+        s["max_val"] = max(s["max_val"], r["max_val"])
+        s["ndv_est"] = max(s["ndv_est"], r["ndv_est"])
         if len(text_sample) < 65536:
             text_sample += bytes(r["sample_text"])
     symbols = fsst.train_symbols(bytes(text_sample))
@@ -479,7 +514,7 @@ def _read_sidecar_strings(
     return pa.concat_arrays(parts)
 
 
-def _make_verify_worker(blocks_dir: str, symbols_hex: tuple[str, ...] | None = None):
+def _make_verify_worker(blocks_dir: str, symbols: list[bytes] | None = None):
     """Per-split verify: re-read the split's SOURCE row groups (its lineage)
     and its blocks file, decode, and compare in-task.
 
@@ -491,158 +526,145 @@ def _make_verify_worker(blocks_dir: str, symbols_hex: tuple[str, ...] | None = N
     """
     from rlv import blocks as B
     from rlv.engine import _list_offsets_values
-    from rlv.util import tune_malloc
 
-    symbols = (
-        [bytes.fromhex(h) for h in symbols_hex]
-        if symbols_hex is not None
-        else None
-    )
-
-    def run_verify(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow as pa
+    def run_verify(task: dict) -> list[dict]:
         import pyarrow.parquet as pq
 
-        tune_malloc()
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                split_id = row["split_id"]
-                pieces = json.loads(row["pieces"])
-                by_file: dict[str, list[int]] = {}
-                for path, rg in pieces:
-                    by_file.setdefault(path, []).append(rg)
-                src = pa.concat_tables(
-                    pq.ParquetFile(p).read_row_groups(
-                        rgs, columns=["doc_id", "tokens", "source"],
-                        use_threads=False,
-                    )
-                    for p, rgs in by_file.items()
-                ).combine_chunks()
-                blk = pq.read_table(
-                    os.path.join(blocks_dir, f"{split_id}.parquet"),
-                    columns=["doc_id", "block"],
-                ).combine_chunks()
-                src_ids = src.column("doc_id").to_pandas()
-                blk_ids = blk.column("doc_id").to_pandas()
-                extra_docs = 0
-                if len(blk) == len(src) and src_ids.equals(blk_ids):
-                    order = None
-                else:  # retries/compaction may reorder a rewritten file
-                    pos = pd.Series(
-                        np.arange(len(blk_ids)), index=blk_ids.to_numpy()
-                    )
-                    if not pos.index.is_unique:
-                        pos = pos.groupby(level=0).first()
-                    aligned = pos.reindex(src_ids.to_numpy())
-                    order = aligned.to_numpy()
-                    # blocks rows no src doc claims (junk/duplicates) are NOT
-                    # bit-identical output and must count as mismatches
-                    extra_docs = len(blk_ids) - int(aligned.notna().sum())
-                offs, vals = _list_offsets_values(src.column("tokens"))
-                a = vals[offs[0]:offs[-1]]
-                o = offs - offs[0]
-                n = len(src)
-                blocks_col = blk.column("block").combine_chunks()
-                if order is None:
-                    blobs = blocks_col.to_pylist()
-                else:
-                    # vectorized alignment: Arrow take on the reorder indices;
-                    # missing docs (NaN) take index 0 then get None'd (decode
-                    # treats None as empty, which never matches nonempty)
-                    missing = np.isnan(order)
-                    idx = np.where(missing, 0, order).astype(np.int64)
-                    blobs = blocks_col.take(pa.array(idx)).to_pylist()
-                    for i in np.flatnonzero(missing):
-                        blobs[i] = None
-                exp_sizes = np.diff(o)
+        split_id = task["split_id"]
+        pieces = json.loads(task["pieces"])
+        by_file: dict[str, list[int]] = {}
+        for path, rg in pieces:
+            by_file.setdefault(path, []).append(rg)
+        src = pa.concat_tables(
+            pq.ParquetFile(p).read_row_groups(
+                rgs, columns=["doc_id", "tokens", "source"],
+                use_threads=False,
+            )
+            for p, rgs in by_file.items()
+        ).combine_chunks()
+        blk = pq.read_table(
+            os.path.join(blocks_dir, f"{split_id}.parquet"),
+            columns=["doc_id", "block"],
+        ).combine_chunks()
+        src_ids = src.column("doc_id").to_pandas()
+        blk_ids = blk.column("doc_id").to_pandas()
+        extra_docs = 0
+        if len(blk) == len(src) and src_ids.equals(blk_ids):
+            order = None
+        else:  # retries/compaction may reorder a rewritten file
+            pos = pd.Series(
+                np.arange(len(blk_ids)), index=blk_ids.to_numpy()
+            )
+            if not pos.index.is_unique:
+                pos = pos.groupby(level=0).first()
+            aligned = pos.reindex(src_ids.to_numpy())
+            order = aligned.to_numpy()
+            # blocks rows no src doc claims (junk/duplicates) are NOT
+            # bit-identical output and must count as mismatches
+            extra_docs = len(blk_ids) - int(aligned.notna().sum())
+        offs, vals = _list_offsets_values(src.column("tokens"))
+        a = vals[offs[0]:offs[-1]]
+        o = offs - offs[0]
+        n = len(src)
+        blocks_col = blk.column("block").combine_chunks()
+        if order is None:
+            blobs = blocks_col.to_pylist()
+        else:
+            # vectorized alignment: Arrow take on the reorder indices;
+            # missing docs (NaN) take index 0 then get None'd (decode
+            # treats None as empty, which never matches nonempty)
+            missing = np.isnan(order)
+            idx = np.where(missing, 0, order).astype(np.int64)
+            blobs = blocks_col.take(pa.array(idx)).to_pylist()
+            for i in np.flatnonzero(missing):
+                blobs[i] = None
+        exp_sizes = np.diff(o)
+        try:
+            dec, dec_off0 = B.decode_blocks_batch(
+                blobs, np.int32, expected=exp_sizes
+            )
+            lens = np.diff(dec_off0)
+        except Exception:
+            # corrupt blocks raise (the decode guards,
+            # rl_encoding.v:4016-4023); verify must report the split,
+            # not die — retry per doc so one bad block only fails its
+            # own doc (an empty decode never matches a nonempty one);
+            # the per-doc budget keeps forged sizes unallocatable
+            parts = []
+            for k, b in enumerate(blobs):
                 try:
-                    dec, dec_off0 = B.decode_blocks_batch(
-                        blobs, np.int32, expected=exp_sizes
+                    p, _ = B.decode_blocks_batch(
+                        [b], np.int32, expected=exp_sizes[k:k + 1]
                     )
-                    lens = np.diff(dec_off0)
+                    parts.append(p)
                 except Exception:
-                    # corrupt blocks raise (the decode guards,
-                    # rl_encoding.v:4016-4023); verify must report the split,
-                    # not die — retry per doc so one bad block only fails its
-                    # own doc (an empty decode never matches a nonempty one);
-                    # the per-doc budget keeps forged sizes unallocatable
-                    parts = []
-                    for k, b in enumerate(blobs):
-                        try:
-                            p, _ = B.decode_blocks_batch(
-                                [b], np.int32, expected=exp_sizes[k:k + 1]
-                            )
-                            parts.append(p)
-                        except Exception:
-                            parts.append(np.empty(0, np.int32))
-                    dec = (
-                        np.concatenate(parts) if parts else np.empty(0, np.int32)
-                    )
-                    lens = np.fromiter((p.size for p in parts), np.int64, n)
-                n_per_doc = np.diff(o)
-                bad_len = np.flatnonzero(lens != n_per_doc)
-                if bad_len.size == 0 and dec.size == a.size:
-                    neq = np.flatnonzero(a != dec)
-                    bad_docs = np.unique(np.searchsorted(o, neq, side="right") - 1)
-                    mismatches = int(bad_docs.size)
-                else:
-                    # compare only the length-matching docs, count the rest bad
-                    mismatches = int(bad_len.size)
-                    dec_off = np.zeros(n + 1, dtype=np.int64)
-                    np.cumsum(lens, out=dec_off[1:])
-                    ok_docs = np.flatnonzero(lens == n_per_doc)
-                    for i in ok_docs:
-                        if not np.array_equal(
-                            a[o[i]:o[i + 1]], dec[dec_off[i]:dec_off[i + 1]]
-                        ):
-                            mismatches += 1
-                # string sidecar check: decoded sidecar values must equal the
-                # source column, doc-aligned through the same `order` map —
-                # a dataset's string plane is verified with the same rigor as
-                # its tokens, never assumed
-                str_mismatches = 0
-                side = _read_sidecar_strings(
-                    os.path.join(blocks_dir, f"{split_id}.parquet"),
-                    "source",
-                    symbols,
-                )
-                if side is not None:
-                    if len(side) != len(blk):
-                        # truncated/corrupt sidecar: every doc unverifiable
-                        str_mismatches = n
-                    else:
-                        # vectorized compare, same discipline as the token
-                        # path: Arrow take on the reorder indices + one
-                        # whole-column equality kernel
-                        import pyarrow.compute as pc
+                    parts.append(np.empty(0, np.int32))
+            dec = (
+                np.concatenate(parts) if parts else np.empty(0, np.int32)
+            )
+            lens = np.fromiter((p.size for p in parts), np.int64, n)
+        n_per_doc = np.diff(o)
+        bad_len = np.flatnonzero(lens != n_per_doc)
+        if bad_len.size == 0 and dec.size == a.size:
+            neq = np.flatnonzero(a != dec)
+            bad_docs = np.unique(np.searchsorted(o, neq, side="right") - 1)
+            mismatches = int(bad_docs.size)
+        else:
+            # compare only the length-matching docs, count the rest bad
+            mismatches = int(bad_len.size)
+            dec_off = np.zeros(n + 1, dtype=np.int64)
+            np.cumsum(lens, out=dec_off[1:])
+            ok_docs = np.flatnonzero(lens == n_per_doc)
+            for i in ok_docs:
+                if not np.array_equal(
+                    a[o[i]:o[i + 1]], dec[dec_off[i]:dec_off[i + 1]]
+                ):
+                    mismatches += 1
+        # string sidecar check: decoded sidecar values must equal the
+        # source column, doc-aligned through the same `order` map —
+        # a dataset's string plane is verified with the same rigor as
+        # its tokens, never assumed
+        str_mismatches = 0
+        side = _read_sidecar_strings(
+            os.path.join(blocks_dir, f"{split_id}.parquet"),
+            "source",
+            symbols,
+        )
+        if side is not None:
+            if len(side) != len(blk):
+                # truncated/corrupt sidecar: every doc unverifiable
+                str_mismatches = n
+            else:
+                # vectorized compare, same discipline as the token
+                # path: Arrow take on the reorder indices + one
+                # whole-column equality kernel
+                import pyarrow.compute as pc
 
-                        want = (
-                            src.column("source")
-                            .cast(side.type)  # binary, or large_binary >2GiB
-                            .combine_chunks()
-                        )
-                        if order is None:
-                            eq = pc.equal(side, want).to_numpy(
-                                zero_copy_only=False
-                            )
-                        else:
-                            missing = np.isnan(order)
-                            take_idx = np.where(missing, 0, order).astype(
-                                np.int64
-                            )
-                            eq = pc.equal(
-                                side.take(pa.array(take_idx)), want
-                            ).to_numpy(zero_copy_only=False)
-                            eq[missing] = False
-                        str_mismatches = int(n - np.count_nonzero(eq))
-                yield pd.DataFrame(
-                    {
-                        "split_id": [split_id],
-                        "n_docs": [n],
-                        "n_tokens": [int(a.size)],
-                        "mismatches": [mismatches + extra_docs + str_mismatches],
-                    }
+                want = (
+                    src.column("source")
+                    .cast(side.type)  # binary, or large_binary >2GiB
+                    .combine_chunks()
                 )
+                if order is None:
+                    eq = pc.equal(side, want).to_numpy(
+                        zero_copy_only=False
+                    )
+                else:
+                    missing = np.isnan(order)
+                    take_idx = np.where(missing, 0, order).astype(
+                        np.int64
+                    )
+                    eq = pc.equal(
+                        side.take(pa.array(take_idx)), want
+                    ).to_numpy(zero_copy_only=False)
+                    eq[missing] = False
+                str_mismatches = int(n - np.count_nonzero(eq))
+        return [{
+            "split_id": split_id,
+            "n_docs": n,
+            "n_tokens": int(a.size),
+            "mismatches": mismatches + extra_docs + str_mismatches,
+        }]
 
     return run_verify
 
@@ -696,28 +718,12 @@ def verify_files_dataset(
         todo.extend(planned[sid] for sid in sorted(wanted))
     if not todo:
         return {"splits": 0, "docs": 0, "tokens": 0, "mismatches": 0}
-    tasks = pd.DataFrame(
-        {
-            "split_id": [s["split_id"] for s in todo],
-            "pieces": [json.dumps(s["pieces"]) for s in todo],
-        }
-    )
-    tasks_df = (
-        _slot_tasks(spark, tasks)
-        if _batch_planned(out_dir)
-        else _spark_tasks(spark, tasks, len(tasks))
-    )
-    syms = _load_symbols(out_dir)
-    results = tasks_df.mapInPandas(
-        _make_verify_worker(
-            f"{out_dir}/blocks",
-            symbols_hex=(
-                tuple(s.hex() for s in syms) if syms is not None else None
-            ),
-        ),
-        VERIFY_SCHEMA,
-    ).collect()
-    passed = {str(r["split_id"]) for r in results if int(r["mismatches"]) == 0}
+    results = run_file_job(
+        spark, _split_tasks(todo),
+        _make_verify_worker(f"{out_dir}/blocks", _load_symbols(out_dir)),
+        VERIFY_SCHEMA, packed=_batch_planned(out_dir),
+    ).toArrow().to_pylist()
+    passed = {r["split_id"] for r in results if r["mismatches"] == 0}
     pdf = _read_manifest_pdf(out_dir)
     if pdf is not None and passed:
         sel = pdf["split_id"].astype(str).isin(passed) & (pdf["status"] == "done")
@@ -725,9 +731,9 @@ def verify_files_dataset(
         _write_manifest_pdf(out_dir, pdf)
     return {
         "splits": len(results),
-        "docs": sum(int(r["n_docs"]) for r in results),
-        "tokens": sum(int(r["n_tokens"]) for r in results),
-        "mismatches": sum(int(r["mismatches"]) for r in results),
+        "docs": sum(r["n_docs"] for r in results),
+        "tokens": sum(r["n_tokens"] for r in results),
+        "mismatches": sum(r["mismatches"] for r in results),
     }
 
 
@@ -769,7 +775,7 @@ def _tokens_list_array(flat: "np.ndarray", offs: "np.ndarray"):
     )
 
 
-def _make_decode_worker(out_dir: str, symbols_hex: tuple[str, ...] | None = None):
+def _make_decode_worker(out_dir: str, symbols: list[bytes] | None = None):
     """Per-file decode: blocks parquet -> token-table parquet (the read/export
     direction, python-native like the encode).  Output rows carry
     (doc_id, tokens, n_tok, source); file name mirrors the blocks file so the
@@ -779,75 +785,62 @@ def _make_decode_worker(out_dir: str, symbols_hex: tuple[str, ...] | None = None
     the split's STRDICT sidecar, using the dataset's recorded FSST table when
     one exists."""
     from rlv import blocks as B
-    from rlv.util import tune_malloc
 
-    symbols = (
-        [bytes.fromhex(h) for h in symbols_hex]
-        if symbols_hex is not None
-        else None
-    )
-
-    def run_decode(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow as pa
+    def run_decode(task: dict) -> list[dict]:
         import pyarrow.parquet as pq
 
-        tune_malloc()
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                have = pq.ParquetFile(path).schema_arrow.names
-                cols = ["doc_id", "n_tok", "block"] + (
-                    ["source"] if "source" in have else []
+        path = task["file"]
+        have = pq.ParquetFile(path).schema_arrow.names
+        cols = ["doc_id", "n_tok", "block"] + (
+            ["source"] if "source" in have else []
+        )
+        tbl = pq.read_table(path, columns=cols).combine_chunks()
+        declared = tbl.column("n_tok").to_numpy().astype(np.int64)
+        # declared n_tok is the decode-size budget: header/size
+        # disagreement raises before any allocation
+        flat, offs = B.decode_blocks_batch(
+            tbl.column("block").to_pylist(), np.int32, expected=declared
+        )
+        tokens_col = _tokens_list_array(flat, offs)
+        if "source" in have:
+            source_col = tbl.column("source")
+        else:
+            vals = _read_sidecar_strings(path, "source", symbols)
+            if vals is None:
+                raise FileNotFoundError(
+                    f"blocks file {os.path.basename(path)} has no "
+                    "plain source column and no strings sidecar"
                 )
-                tbl = pq.read_table(path, columns=cols).combine_chunks()
-                declared = tbl.column("n_tok").to_numpy().astype(np.int64)
-                # declared n_tok is the decode-size budget: header/size
-                # disagreement raises before any allocation
-                flat, offs = B.decode_blocks_batch(
-                    tbl.column("block").to_pylist(), np.int32, expected=declared
+            if len(vals) != len(tbl):
+                raise ValueError(
+                    f"strings sidecar for {os.path.basename(path)} "
+                    f"holds {len(vals)} values for {len(tbl)} docs"
                 )
-                tokens_col = _tokens_list_array(flat, offs)
-                if "source" in have:
-                    source_col = tbl.column("source")
-                else:
-                    vals = _read_sidecar_strings(path, "source", symbols)
-                    if vals is None:
-                        raise FileNotFoundError(
-                            f"blocks file {os.path.basename(path)} has no "
-                            "plain source column and no strings sidecar"
-                        )
-                    if len(vals) != len(tbl):
-                        raise ValueError(
-                            f"strings sidecar for {os.path.basename(path)} "
-                            f"holds {len(vals)} values for {len(tbl)} docs"
-                        )
-                    # Arrow cast binary -> utf8 validates encoding and builds
-                    # the column without a per-row Python decode (large
-                    # variants keep 64-bit offsets past 2 GiB)
-                    source_col = vals.cast(
-                        pa.large_string()
-                        if pa.types.is_large_binary(vals.type)
-                        else pa.string()
-                    )
-                out = pa.table(
-                    {
-                        "doc_id": tbl.column("doc_id"),
-                        "tokens": tokens_col,
-                        "n_tok": tbl.column("n_tok"),
-                        "source": source_col,
-                    }
-                )
-                final = os.path.join(out_dir, os.path.basename(path))
-                tmp = final + ".inprogress"
-                pq.write_table(out, tmp, compression="zstd")
-                os.replace(tmp, final)
-                yield pd.DataFrame(
-                    {
-                        "file": [os.path.basename(path)],
-                        "n_docs": [len(out)],
-                        "n_tokens": [int(flat.size)],
-                    }
-                )
+            # Arrow cast binary -> utf8 validates encoding and builds
+            # the column without a per-row Python decode (large
+            # variants keep 64-bit offsets past 2 GiB)
+            source_col = vals.cast(
+                pa.large_string()
+                if pa.types.is_large_binary(vals.type)
+                else pa.string()
+            )
+        out = pa.table(
+            {
+                "doc_id": tbl.column("doc_id"),
+                "tokens": tokens_col,
+                "n_tok": tbl.column("n_tok"),
+                "source": source_col,
+            }
+        )
+        final = os.path.join(out_dir, os.path.basename(path))
+        tmp = final + ".inprogress"
+        pq.write_table(out, tmp, compression="zstd")
+        os.replace(tmp, final)
+        return [{
+            "file": os.path.basename(path),
+            "n_docs": len(out),
+            "n_tokens": int(flat.size),
+        }]
 
     return run_decode
 
@@ -895,20 +888,15 @@ def decode_files_dataset(
         files = todo
     if not files:
         return {"files": 0, "docs": 0, "tokens": 0, "files_skipped": skipped}
-    syms = _load_symbols(enc_dir)
-    rows = _spark_tasks(
-        spark, pd.DataFrame({"file": files}), len(files)
-    ).mapInPandas(
-        _make_decode_worker(
-            out_dir,
-            symbols_hex=tuple(s.hex() for s in syms) if syms is not None else None,
-        ),
+    rows = run_file_job(
+        spark, pa.table({"file": pa.array(files, pa.string())}),
+        _make_decode_worker(out_dir, _load_symbols(enc_dir)),
         DECODE_RESULT_SCHEMA,
-    ).collect()
+    ).toArrow().to_pylist()
     return {
         "files": len(rows),
-        "docs": sum(int(r["n_docs"]) for r in rows),
-        "tokens": sum(int(r["n_tokens"]) for r in rows),
+        "docs": sum(r["n_docs"] for r in rows),
+        "tokens": sum(r["n_tokens"] for r in rows),
         "files_skipped": skipped,
     }
 
@@ -916,7 +904,7 @@ def decode_files_dataset(
 COUNT_SCHEMA = "split_id string, n_docs bigint, n_tokens bigint, n_runs bigint"
 
 
-def _count_runs_worker(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _count_runs_worker(task: dict) -> list[dict]:
     """Per-split run counting straight off the parquet row groups — the
     count_runs facet (rl_encoding.v:467-481) at scan speed: the JVM never
     touches a token (the through-JVM Arrow transfer of the list column costs
@@ -924,44 +912,38 @@ def _count_runs_worker(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     import pyarrow.parquet as pq
 
     from rlv.engine import _list_offsets_values
-    from rlv.util import tune_malloc
 
-    tune_malloc()
-    for pdf in pdf_iter:
-        for _, row in pdf.iterrows():
-            pieces = json.loads(row["pieces"])
-            by_file: dict[str, list[int]] = {}
-            for path, rg in pieces:
-                by_file.setdefault(path, []).append(rg)
-            n_docs = n_tokens = n_runs = 0
-            for path, rgs in by_file.items():
-                tbl = pq.ParquetFile(path).read_row_groups(
-                    rgs, columns=["tokens"], use_threads=False
-                ).combine_chunks()
-                offs, vals = _list_offsets_values(tbl.column("tokens"))
-                a = vals[offs[0]:offs[-1]]
-                o = offs - offs[0]
-                n_docs += o.size - 1
-                n_tokens += int(a.size)
-                if a.size:
-                    boundary = int(np.count_nonzero(a[1:] != a[:-1]))
-                    doc_starts = o[1:-1]
-                    # unique: empty docs repeat an offset but one position can
-                    # only start one run
-                    doc_starts = np.unique(doc_starts[doc_starts < a.size])
-                    ds = doc_starts[doc_starts > 0]
-                    # doc-start positions where values happen to be equal
-                    # across the doc seam still start a new run
-                    seam_equal = int(np.count_nonzero(a[ds] == a[ds - 1]))
-                    n_runs += boundary + 1 + seam_equal
-            yield pd.DataFrame(
-                {
-                    "split_id": [row["split_id"]],
-                    "n_docs": [n_docs],
-                    "n_tokens": [n_tokens],
-                    "n_runs": [n_runs],
-                }
-            )
+    pieces = json.loads(task["pieces"])
+    by_file: dict[str, list[int]] = {}
+    for path, rg in pieces:
+        by_file.setdefault(path, []).append(rg)
+    n_docs = n_tokens = n_runs = 0
+    for path, rgs in by_file.items():
+        tbl = pq.ParquetFile(path).read_row_groups(
+            rgs, columns=["tokens"], use_threads=False
+        ).combine_chunks()
+        offs, vals = _list_offsets_values(tbl.column("tokens"))
+        a = vals[offs[0]:offs[-1]]
+        o = offs - offs[0]
+        n_docs += o.size - 1
+        n_tokens += int(a.size)
+        if a.size:
+            boundary = int(np.count_nonzero(a[1:] != a[:-1]))
+            doc_starts = o[1:-1]
+            # unique: empty docs repeat an offset but one position can
+            # only start one run
+            doc_starts = np.unique(doc_starts[doc_starts < a.size])
+            ds = doc_starts[doc_starts > 0]
+            # doc-start positions where values happen to be equal
+            # across the doc seam still start a new run
+            seam_equal = int(np.count_nonzero(a[ds] == a[ds - 1]))
+            n_runs += boundary + 1 + seam_equal
+    return [{
+        "split_id": task["split_id"],
+        "n_docs": n_docs,
+        "n_tokens": n_tokens,
+        "n_runs": n_runs,
+    }]
 
 
 def count_runs_files(
@@ -972,17 +954,13 @@ def count_runs_files(
     if num_tasks is None:
         num_tasks = 4 * spark.sparkContext.defaultParallelism
     splits = plan_splits(input_dir, num_tasks)
-    tasks_df = _spark_tasks(spark, pd.DataFrame(
-        {
-            "split_id": [s["split_id"] for s in splits],
-            "pieces": [json.dumps(s["pieces"]) for s in splits],
-        }
-    ), len(splits))
-    rows = tasks_df.mapInPandas(_count_runs_worker, COUNT_SCHEMA).collect()
+    rows = run_file_job(
+        spark, _split_tasks(splits), _count_runs_worker, COUNT_SCHEMA
+    ).toArrow().to_pylist()
     return {
-        "docs": sum(int(r["n_docs"]) for r in rows),
-        "tokens": sum(int(r["n_tokens"]) for r in rows),
-        "runs": sum(int(r["n_runs"]) for r in rows),
+        "docs": sum(r["n_docs"] for r in rows),
+        "tokens": sum(r["n_tokens"] for r in rows),
+        "runs": sum(r["n_runs"] for r in rows),
     }
 
 
@@ -1102,47 +1080,32 @@ def _make_compact_worker(blocks_dir: str, strings_dir: str):
                     w.write_table(run)
         return n_rows
 
-    def run_compact(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run_compact(task: dict) -> list[dict]:
         import pyarrow.parquet as pq
 
-        from rlv.util import tune_malloc
-
-        tune_malloc()
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                new_sid = str(row["new_sid"])
-                sids = json.loads(row["sids"])
-                members = [
-                    pq.read_table(
-                        os.path.join(blocks_dir, f"{sid}.parquet")
-                    )
-                    for sid in sids
-                ]
-                final = os.path.join(blocks_dir, f"{new_sid}.parquet")
-                tmp = final + ".inprogress"
-                n_rows = _write_segmented(tmp, members, "zstd")
-                os.replace(tmp, final)
-                if row["has_sidecar"] == "True":
-                    side_members = [
-                        pq.read_table(
-                            os.path.join(strings_dir, f"{sid}.parquet")
-                        )
-                        for sid in sids
-                    ]
-                    sfinal = os.path.join(strings_dir, f"{new_sid}.parquet")
-                    stmp = sfinal + ".inprogress"
-                    # zstd matches the fresh-sidecar writer
-                    # (table_files._write_grouped) so both generations
-                    # share one on-disk codec
-                    _write_segmented(stmp, side_members, "zstd")
-                    os.replace(stmp, sfinal)
-                yield pd.DataFrame(
-                    {
-                        "new_sid": [new_sid],
-                        "n_files": [len(sids)],
-                        "n_rows": [n_rows],
-                    }
-                )
+        new_sid = task["new_sid"]
+        sids = json.loads(task["sids"])
+        members = [
+            pq.read_table(os.path.join(blocks_dir, f"{sid}.parquet"))
+            for sid in sids
+        ]
+        final = os.path.join(blocks_dir, f"{new_sid}.parquet")
+        tmp = final + ".inprogress"
+        n_rows = _write_segmented(tmp, members, "zstd")
+        os.replace(tmp, final)
+        if task["has_sidecar"]:
+            side_members = [
+                pq.read_table(os.path.join(strings_dir, f"{sid}.parquet"))
+                for sid in sids
+            ]
+            sfinal = os.path.join(strings_dir, f"{new_sid}.parquet")
+            stmp = sfinal + ".inprogress"
+            # zstd matches the fresh-sidecar writer
+            # (table_files._write_grouped) so both generations share one
+            # on-disk codec
+            _write_segmented(stmp, side_members, "zstd")
+            os.replace(stmp, sfinal)
+        return [{"new_sid": new_sid, "n_files": len(sids), "n_rows": n_rows}]
 
     return run_compact
 
@@ -1272,25 +1235,25 @@ def compact_blocks(
                     ),
                 }
             )
-        tasks_df = _spark_tasks(spark, pd.DataFrame(
-            {
-                "new_sid": [s["new_sid"] for s in specs],
-                "sids": [json.dumps(s["sids"]) for s in specs],
-                "has_sidecar": [str(s["has_sidecar"]) for s in specs],
-            }
-        ), len(specs))
+        tasks = pa.table({
+            "new_sid": pa.array([s["new_sid"] for s in specs], pa.string()),
+            "sids": pa.array([json.dumps(s["sids"]) for s in specs],
+                             pa.string()),
+            "has_sidecar": pa.array([s["has_sidecar"] for s in specs],
+                                    pa.bool_()),
+        })
         results = {
-            str(r["new_sid"]): r
-            for r in tasks_df.mapInPandas(
-                _make_compact_worker(blocks_dir, strings_dir),
+            r["new_sid"]: r
+            for r in run_file_job(
+                spark, tasks, _make_compact_worker(blocks_dir, strings_dir),
                 COMPACT_RESULT_SCHEMA,
-            ).collect()
+            ).toArrow().to_pylist()
         }
         # every bin's data must exist and carry exactly the absorbed rows
         # BEFORE any manifest flip — the data-before-metadata ordering
         for s in specs:
             r = results.get(s["new_sid"])
-            if r is None or int(r["n_rows"]) != s["exp_rows"]:
+            if r is None or r["n_rows"] != s["exp_rows"]:
                 raise RuntimeError(
                     f"compaction task for bin {s['new_sid']} "
                     f"{'missing' if r is None else 'row-count mismatch'}"
@@ -1446,7 +1409,7 @@ def encode_splits(
 
 def _encode_splits(spark, splits, out_dir, packed, resume, string_cols,
                    fsst_symbols, disable_codecs) -> dict:
-    """:func:`encode_splits`, packed per slot (:func:`_slot_tasks`) when
+    """:func:`encode_splits`, packed per slot (:func:`run_file_job`) when
     ``packed`` — for the byte-balanced :func:`plan_splits` splits of
     :func:`encode_files_dataset` — else one Spark task per split."""
     blocks_dir = f"{out_dir}/blocks"
@@ -1481,31 +1444,17 @@ def _encode_splits(spark, splits, out_dir, packed, resume, string_cols,
     todo = [s for s in splits if s["split_id"] not in done]
     if not todo:
         return {"splits_encoded": 0, "splits_skipped": len(done), "tokens": 0}
-    tasks_pdf = pd.DataFrame(
-        {
-            "split_id": [s["split_id"] for s in todo],
-            "pieces": [json.dumps(s["pieces"]) for s in todo],
-        }
-    )
-    tasks_df = (
-        _slot_tasks(spark, tasks_pdf)
-        if packed
-        else _spark_tasks(spark, tasks_pdf, len(tasks_pdf))
-    )
     t0 = time.perf_counter()
-    results = tasks_df.mapInPandas(
+    results = run_file_job(
+        spark, _split_tasks(todo),
         _make_split_worker(
             blocks_dir,
             string_cols=tuple(string_cols),
-            fsst_symbols_hex=(
-                tuple(s.hex() for s in fsst_symbols)
-                if fsst_symbols is not None
-                else None
-            ),
+            symbols=fsst_symbols,
             disable_codecs=_resolve_codec_ids(disable_codecs),
         ),
-        RESULT_SCHEMA,
-    ).collect()
+        RESULT_SCHEMA, packed=packed,
+    ).toArrow().to_pylist()
     wall = time.perf_counter() - t0
     pieces_of = {s["split_id"]: json.dumps(s["pieces"]) for s in todo}
     return _merge_split_manifest(spark, out_dir, results, wall, len(done), pieces_of)
@@ -1529,30 +1478,30 @@ def _merge_split_manifest(
         "wall_sec": wall_sec,
     }
     for r in results:
-        cpu_ns = int(r["encode_cpu_ns"])
-        sid = str(r["split_id"])
+        cpu_ns = r["encode_cpu_ns"]
+        sid = r["split_id"]
         prev_attempt = int(old[sid]["attempt"]) if sid in old else 0
         old[sid] = {
             "split_id": sid,
             "status": "done",
-            "n_docs": int(r["n_docs"]),
-            "n_tokens": int(r["n_tokens"]),
-            "n_runs": int(r["n_runs"]),
-            "bytes_in": 4 * int(r["n_tokens"]),
-            "bytes_out": int(r["bytes_out"]),
-            "naive_rle_bytes": int(r["naive_rle_bytes"]),
-            "codec_hist": str(r["codec_hist"]),
+            "n_docs": r["n_docs"],
+            "n_tokens": r["n_tokens"],
+            "n_runs": r["n_runs"],
+            "bytes_in": 4 * r["n_tokens"],
+            "bytes_out": r["bytes_out"],
+            "naive_rle_bytes": r["naive_rle_bytes"],
+            "codec_hist": r["codec_hist"],
             "encode_cpu_ns": cpu_ns,
-            "tokens_per_cpu_sec": (int(r["n_tokens"]) / (cpu_ns / 1e9)) if cpu_ns else 0.0,
+            "tokens_per_cpu_sec": (r["n_tokens"] / (cpu_ns / 1e9)) if cpu_ns else 0.0,
             "attempt": prev_attempt + 1,
             "finished_at": now,
             # split lineage: the exact (file, row_group) list this split's
             # blocks were encoded from — what the zero-shuffle verify replays
             "pieces": (pieces_of or {}).get(sid, ""),
         }
-        summary["tokens"] += int(r["n_tokens"])
-        summary["bytes_out"] += int(r["bytes_out"])
-        summary["naive_rle_bytes"] += int(r["naive_rle_bytes"])
+        summary["tokens"] += r["n_tokens"]
+        summary["bytes_out"] += r["bytes_out"]
+        summary["naive_rle_bytes"] += r["naive_rle_bytes"]
     _write_manifest_pdf(out_dir, pd.DataFrame(list(old.values())))
     if wall_sec > 0:
         summary["tokens_per_sec_wall"] = summary["tokens"] / wall_sec

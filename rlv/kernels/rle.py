@@ -11,7 +11,7 @@ The correspondence each kernel must satisfy is locked by the pytest/hypothesis s
 in ``tests/test_rle_kernel.py`` (one test per cited theorem).
 
 Nothing in this module touches Spark: these kernels run inside Arrow batches in
-``rlv.engine`` via ``mapInPandas``.
+``rlv.engine`` via ``mapInArrow``.
 """
 
 from __future__ import annotations

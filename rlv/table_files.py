@@ -47,17 +47,16 @@ whole table reconstructs bit-identically (:func:`decode_table_files`).
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import time
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
 
 from rlv import engine_files
+from rlv.engine_files import _arrow_schema
 
 TABLE_RESULT_SCHEMA = (
     "split_id string, n_docs bigint, n_tokens bigint, n_runs bigint, "
@@ -395,282 +394,267 @@ def _make_table_split_worker(
     int_cols: tuple[str, ...],
     str_cols: tuple[str, ...],
     rows_per_block: int,
-    fsst_symbols_hex: tuple[str, ...] | None,
+    symbols: list[bytes] | None,
     col_types: dict | None = None,
     index_cols: tuple[str, ...] = (),
 ):
     col_types = col_types or {}
-    from rlv.util import tune_malloc
-
-    symbols = (
-        [bytes.fromhex(h) for h in fsst_symbols_hex]
-        if fsst_symbols_hex is not None
-        else None
-    )
     read_cols = list(dict.fromkeys([order_col, *int_cols, *str_cols]))
 
-    def run_split(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run_split(task: dict) -> list[dict]:
         from decimal import Decimal
 
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         from rlv import blocks as B
         from rlv import selector
         from rlv.stats import chunk_stats
 
-        tune_malloc()
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                split_id = row["split_id"]
-                pieces = json.loads(row["pieces"])
-                t0 = time.perf_counter_ns()
-                by_file: dict[str, list[int]] = {}
-                for path, rg in pieces:
-                    by_file.setdefault(path, []).append(rg)
-                tbl = pa.concat_tables(
-                    pq.ParquetFile(p).read_row_groups(
-                        rgs, columns=read_cols, use_threads=False
-                    )
-                    for p, rgs in by_file.items()
-                ).combine_chunks()
-                if tbl.column(order_col).null_count:
-                    # NULL data values are represented (validity plane);
-                    # a NULL ORDER key has no position in the sequence at
-                    # all, so the row order would be undefined — refuse
-                    raise ValueError(
-                        f"split {split_id}: order column {order_col!r} "
-                        "contains NULLs — the row order would be undefined"
-                    )
-                n_rows = len(tbl)
-                order = np.argsort(
-                    tbl.column(order_col).to_numpy(), kind="stable"
-                )
-                n_blocks = max((n_rows + rows_per_block - 1) // rows_per_block, 1)
-                brows = {
-                    k: []
-                    for k in ("split_seq", "col_name", "block_idx", "n_values",
-                              "n_nulls", "n_runs", "codec_id", "enc_bytes",
-                              "naive_bytes", "min_val", "max_val", "sum_val",
-                              "block")
-                }
-                srows = {
-                    k: []
-                    for k in ("split_seq", "col_name", "block_idx", "ndv",
-                              "raw_bytes", "enc_bytes", "dict_block")
-                }
-                total_vals = total_runs = bytes_out = naive_total = 0
-                nulls_total = dict_bytes = 0
-                hist: dict[int, int] = {}
+        split_id = task["split_id"]
+        pieces = json.loads(task["pieces"])
+        t0 = time.perf_counter_ns()
+        by_file: dict[str, list[int]] = {}
+        for path, rg in pieces:
+            by_file.setdefault(path, []).append(rg)
+        tbl = pa.concat_tables(
+            pq.ParquetFile(p).read_row_groups(
+                rgs, columns=read_cols, use_threads=False
+            )
+            for p, rgs in by_file.items()
+        ).combine_chunks()
+        if tbl.column(order_col).null_count:
+            # NULL data values are represented (validity plane);
+            # a NULL ORDER key has no position in the sequence at
+            # all, so the row order would be undefined — refuse
+            raise ValueError(
+                f"split {split_id}: order column {order_col!r} "
+                "contains NULLs — the row order would be undefined"
+            )
+        n_rows = len(tbl)
+        order = np.argsort(
+            tbl.column(order_col).to_numpy(), kind="stable"
+        )
+        n_blocks = max((n_rows + rows_per_block - 1) // rows_per_block, 1)
+        brows = {
+            k: []
+            for k in ("split_seq", "col_name", "block_idx", "n_values",
+                      "n_nulls", "n_runs", "codec_id", "enc_bytes",
+                      "naive_bytes", "min_val", "max_val", "sum_val",
+                      "block")
+        }
+        srows = {
+            k: []
+            for k in ("split_seq", "col_name", "block_idx", "ndv",
+                      "raw_bytes", "enc_bytes", "dict_block")
+        }
+        total_vals = total_runs = bytes_out = naive_total = 0
+        nulls_total = dict_bytes = 0
+        hist: dict[int, int] = {}
 
-                def emit_block(
-                    col_name: str, bi: int, valid_vals: np.ndarray,
-                    mask: np.ndarray | None,
-                ) -> None:
-                    """One (column, block): auto-select over the VALID values;
-                    a block with NULLs wraps the chosen inner block in the
-                    NULLW validity bitmap (rlv.blocks.wrap_nullable), priced
-                    exactly; a block without NULLs is byte-identical to the
-                    pre-validity format."""
-                    nonlocal total_vals, total_runs, bytes_out, naive_total
-                    nonlocal nulls_total
-                    st = chunk_stats(valid_vals)
-                    codec, size = selector.choose_codec(st)
-                    blk = B.encode_with(codec, valid_vals)
-                    naive = B.naive_rle_bytes(st.n_runs)
-                    if mask is None:
-                        n_vals, n_nulls = valid_vals.size, 0
-                    else:
-                        n_vals = mask.size
-                        n_nulls = int(n_vals - valid_vals.size)
-                        over = B.nullable_overhead(n_vals, valid_vals.size)
-                        blk = B.wrap_nullable(mask, blk)
-                        size += over
-                        # the validity plane is part of this block's budget:
-                        # chosen-inner <= 16 * runs(valid) keeps the sum
-                        # structural (CLAUDE.md invariant 3, extended)
-                        naive += over
-                    if len(blk) != size:
-                        raise AssertionError(
-                            f"exact-size model broke: {len(blk)} != {size}"
-                        )
-                    brows["split_seq"].append(str(split_id))
-                    brows["col_name"].append(col_name)
-                    brows["block_idx"].append(bi)
-                    brows["n_values"].append(int(n_vals))
-                    brows["n_nulls"].append(n_nulls)
-                    brows["n_runs"].append(int(st.n_runs))
-                    brows["codec_id"].append(int(codec))
-                    brows["enc_bytes"].append(len(blk))
-                    brows["naive_bytes"].append(naive)
-                    # zone map over the VALID values (meaningless for an
-                    # all-NULL block: n_runs == 0 marks it) — the pruned
-                    # scan's min/max block-skipping statistic
-                    brows["min_val"].append(int(st.min_val))
-                    brows["max_val"].append(int(st.max_val))
-                    # exact sum of the VALID values: with min/max/counts it
-                    # makes a full-matching block's count/sum/min/max/avg a
-                    # metadata-only aggregate — the value payload is never
-                    # read.  Exact Python int (no int64 wrap), stored as
-                    # decimal(38,0): |sum| < rows_per_block * 2^63 << 10^38
-                    brows["sum_val"].append(B.exact_sum_i64(valid_vals))
-                    brows["block"].append(blk)
-                    total_vals += int(n_vals)
-                    total_runs += int(st.n_runs)
-                    nulls_total += n_nulls
-                    bytes_out += len(blk)
-                    naive_total += naive
-                    hist[codec] = hist.get(codec, 0) + 1
+        def emit_block(
+            col_name: str, bi: int, valid_vals: np.ndarray,
+            mask: np.ndarray | None,
+        ) -> None:
+            """One (column, block): auto-select over the VALID values;
+            a block with NULLs wraps the chosen inner block in the
+            NULLW validity bitmap (rlv.blocks.wrap_nullable), priced
+            exactly; a block without NULLs is byte-identical to the
+            pre-validity format."""
+            nonlocal total_vals, total_runs, bytes_out, naive_total
+            nonlocal nulls_total
+            st = chunk_stats(valid_vals)
+            codec, size = selector.choose_codec(st)
+            blk = B.encode_with(codec, valid_vals)
+            naive = B.naive_rle_bytes(st.n_runs)
+            if mask is None:
+                n_vals, n_nulls = valid_vals.size, 0
+            else:
+                n_vals = mask.size
+                n_nulls = int(n_vals - valid_vals.size)
+                over = B.nullable_overhead(n_vals, valid_vals.size)
+                blk = B.wrap_nullable(mask, blk)
+                size += over
+                # the validity plane is part of this block's budget:
+                # chosen-inner <= 16 * runs(valid) keeps the sum
+                # structural (CLAUDE.md invariant 3, extended)
+                naive += over
+            if len(blk) != size:
+                raise AssertionError(
+                    f"exact-size model broke: {len(blk)} != {size}"
+                )
+            brows["split_seq"].append(str(split_id))
+            brows["col_name"].append(col_name)
+            brows["block_idx"].append(bi)
+            brows["n_values"].append(int(n_vals))
+            brows["n_nulls"].append(n_nulls)
+            brows["n_runs"].append(int(st.n_runs))
+            brows["codec_id"].append(int(codec))
+            brows["enc_bytes"].append(len(blk))
+            brows["naive_bytes"].append(naive)
+            # zone map over the VALID values (meaningless for an
+            # all-NULL block: n_runs == 0 marks it) — the pruned
+            # scan's min/max block-skipping statistic
+            brows["min_val"].append(int(st.min_val))
+            brows["max_val"].append(int(st.max_val))
+            # exact sum of the VALID values: with min/max/counts it
+            # makes a full-matching block's count/sum/min/max/avg a
+            # metadata-only aggregate — the value payload is never
+            # read.  Exact Python int (no int64 wrap), stored as
+            # decimal(38,0): |sum| < rows_per_block * 2^63 << 10^38
+            brows["sum_val"].append(B.exact_sum_i64(valid_vals))
+            brows["block"].append(blk)
+            total_vals += int(n_vals)
+            total_runs += int(st.n_runs)
+            nulls_total += n_nulls
+            bytes_out += len(blk)
+            naive_total += naive
+            hist[codec] = hist.get(codec, 0) + 1
 
-                for c in int_cols:
-                    # onto the int64 plane: CHECKED Arrow cast for plain
-                    # ints (a uint64 value past int64 range raises here
-                    # instead of numpy-wrapping to a negative), epoch cast
-                    # for timestamps/dates, total-order keys for floats
-                    col = _plane_cast(tbl.column(c), col_types.get(c))
-                    if col.null_count:
-                        mask = col.is_valid().to_numpy(zero_copy_only=False)[order]
-                        vals = col.fill_null(0).to_numpy()[order]
-                    else:
-                        mask = None
-                        vals = col.to_numpy()[order]
-                    for bi in range(n_blocks):
-                        sl = slice(bi * rows_per_block, (bi + 1) * rows_per_block)
-                        a = vals[sl]
-                        if a.size == 0:
-                            continue
-                        m = mask[sl] if mask is not None else None
-                        if m is not None and m.all():
-                            m = None
-                        valid_a = a if m is None else a[m]
-                        emit_block(c, bi, valid_a, m)
-                        if c in index_cols and valid_a.size:
-                            # membership index: the block's sorted-distinct
-                            # plane values as order-preserving binary keys
-                            # in the dictionary sidecar — point lookups on
-                            # UNCLUSTERED keys prune like string eq scans
-                            uniq = _idx_key_array(valid_a)
-                            dict_block = B.encode_strings(uniq, symbols)
-                            srows["split_seq"].append(str(split_id))
-                            srows["col_name"].append(c)
-                            srows["block_idx"].append(bi)
-                            srows["ndv"].append(len(uniq))
-                            srows["raw_bytes"].append(8 * len(uniq))
-                            srows["enc_bytes"].append(len(dict_block))
-                            srows["dict_block"].append(dict_block)
-                            dict_bytes += len(dict_block)
-                for c in str_cols:
-                    arr = tbl.column(c).cast(pa.binary()).take(
-                        pa.array(order)
-                    )
-                    for bi in range(n_blocks):
-                        ablk = arr.slice(
-                            bi * rows_per_block,
-                            min(rows_per_block,
-                                n_rows - bi * rows_per_block),
-                        )
-                        if len(ablk) == 0:
-                            continue
-                        m = (
-                            ablk.is_valid().to_numpy(zero_copy_only=False)
-                            if ablk.null_count
-                            else None
-                        )
-                        codes, dict_block, ndv, raw = _block_string_codes(
-                            ablk.drop_null() if m is not None else ablk,
-                            symbols,
-                        )
-                        srows["split_seq"].append(str(split_id))
-                        srows["col_name"].append(c)
-                        srows["block_idx"].append(bi)
-                        srows["ndv"].append(ndv)
-                        srows["raw_bytes"].append(raw)
-                        srows["enc_bytes"].append(len(dict_block))
-                        srows["dict_block"].append(dict_block)
-                        dict_bytes += len(dict_block)
-                        # the dense-code stream (VALID rows only) rides the
-                        # INT selector; NULL positions live in the code
-                        # block's validity wrapper
-                        emit_block(c, bi, codes, m)
-                cpu_ns = time.perf_counter_ns() - t0
-                out = pa.table(
-                    {
-                        "split_seq": pa.array(brows["split_seq"], pa.string()),
-                        "col_name": pa.array(brows["col_name"], pa.string()),
-                        "block_idx": pa.array(brows["block_idx"], pa.int32()),
-                        "n_values": pa.array(brows["n_values"], pa.int64()),
-                        "n_nulls": pa.array(brows["n_nulls"], pa.int64()),
-                        "n_runs": pa.array(brows["n_runs"], pa.int64()),
-                        "codec_id": pa.array(brows["codec_id"], pa.int32()),
-                        "enc_bytes": pa.array(brows["enc_bytes"], pa.int64()),
-                        "naive_bytes": pa.array(
-                            brows["naive_bytes"], pa.int64()
-                        ),
-                        "min_val": pa.array(brows["min_val"], pa.int64()),
-                        "max_val": pa.array(brows["max_val"], pa.int64()),
-                        "sum_val": pa.array(
-                            [Decimal(x) for x in brows["sum_val"]],
-                            pa.decimal128(38, 0),
-                        ),
-                        "block": pa.array(brows["block"], pa.binary()),
-                    }
+        for c in int_cols:
+            # onto the int64 plane: CHECKED Arrow cast for plain
+            # ints (a uint64 value past int64 range raises here
+            # instead of numpy-wrapping to a negative), epoch cast
+            # for timestamps/dates, total-order keys for floats
+            col = _plane_cast(tbl.column(c), col_types.get(c))
+            if col.null_count:
+                mask = col.is_valid().to_numpy(zero_copy_only=False)[order]
+                vals = col.fill_null(0).to_numpy()[order]
+            else:
+                mask = None
+                vals = col.to_numpy()[order]
+            for bi in range(n_blocks):
+                sl = slice(bi * rows_per_block, (bi + 1) * rows_per_block)
+                a = vals[sl]
+                if a.size == 0:
+                    continue
+                m = mask[sl] if mask is not None else None
+                if m is not None and m.all():
+                    m = None
+                valid_a = a if m is None else a[m]
+                emit_block(c, bi, valid_a, m)
+                if c in index_cols and valid_a.size:
+                    # membership index: the block's sorted-distinct
+                    # plane values as order-preserving binary keys
+                    # in the dictionary sidecar — point lookups on
+                    # UNCLUSTERED keys prune like string eq scans
+                    uniq = _idx_key_array(valid_a)
+                    dict_block = B.encode_strings(uniq, symbols)
+                    srows["split_seq"].append(str(split_id))
+                    srows["col_name"].append(c)
+                    srows["block_idx"].append(bi)
+                    srows["ndv"].append(len(uniq))
+                    srows["raw_bytes"].append(8 * len(uniq))
+                    srows["enc_bytes"].append(len(dict_block))
+                    srows["dict_block"].append(dict_block)
+                    dict_bytes += len(dict_block)
+        for c in str_cols:
+            arr = tbl.column(c).cast(pa.binary()).take(
+                pa.array(order)
+            )
+            for bi in range(n_blocks):
+                ablk = arr.slice(
+                    bi * rows_per_block,
+                    min(rows_per_block,
+                        n_rows - bi * rows_per_block),
                 )
-                final = os.path.join(out_blocks_dir, f"{split_id}.parquet")
-                tmp = final + ".inprogress"
-                _write_grouped(tmp, out)
-                os.replace(tmp, final)
-                if srows["col_name"]:
-                    sdir = os.path.join(
-                        os.path.dirname(out_blocks_dir), "strings"
-                    )
-                    os.makedirs(sdir, exist_ok=True)
-                    sfinal = os.path.join(sdir, f"{split_id}.parquet")
-                    stmp = sfinal + ".inprogress"
-                    _write_grouped(
-                        stmp,
-                        pa.table(
-                            {
-                                "split_seq": pa.array(
-                                    srows["split_seq"], pa.string()
-                                ),
-                                "col_name": pa.array(
-                                    srows["col_name"], pa.string()
-                                ),
-                                "block_idx": pa.array(
-                                    srows["block_idx"], pa.int32()
-                                ),
-                                "ndv": pa.array(srows["ndv"], pa.int64()),
-                                "raw_bytes": pa.array(
-                                    srows["raw_bytes"], pa.int64()
-                                ),
-                                "enc_bytes": pa.array(
-                                    srows["enc_bytes"], pa.int64()
-                                ),
-                                "dict_block": pa.array(
-                                    srows["dict_block"], pa.binary()
-                                ),
-                            }
-                        ),
-                    )
-                    os.replace(stmp, sfinal)
-                yield pd.DataFrame(
-                    {
-                        "split_id": [split_id],
-                        "n_docs": [n_rows],
-                        "n_tokens": [total_vals],
-                        "n_runs": [total_runs],
-                        "bytes_out": [bytes_out],
-                        "naive_rle_bytes": [naive_total],
-                        "codec_hist": [
-                            json.dumps(
-                                {str(k): v for k, v in sorted(hist.items())}
-                            )
-                        ],
-                        "encode_cpu_ns": [cpu_ns],
-                        "n_nulls": [nulls_total],
-                        "dict_bytes": [dict_bytes],
-                    }
+                if len(ablk) == 0:
+                    continue
+                m = (
+                    ablk.is_valid().to_numpy(zero_copy_only=False)
+                    if ablk.null_count
+                    else None
                 )
+                codes, dict_block, ndv, raw = _block_string_codes(
+                    ablk.drop_null() if m is not None else ablk,
+                    symbols,
+                )
+                srows["split_seq"].append(str(split_id))
+                srows["col_name"].append(c)
+                srows["block_idx"].append(bi)
+                srows["ndv"].append(ndv)
+                srows["raw_bytes"].append(raw)
+                srows["enc_bytes"].append(len(dict_block))
+                srows["dict_block"].append(dict_block)
+                dict_bytes += len(dict_block)
+                # the dense-code stream (VALID rows only) rides the
+                # INT selector; NULL positions live in the code
+                # block's validity wrapper
+                emit_block(c, bi, codes, m)
+        cpu_ns = time.perf_counter_ns() - t0
+        out = pa.table(
+            {
+                "split_seq": pa.array(brows["split_seq"], pa.string()),
+                "col_name": pa.array(brows["col_name"], pa.string()),
+                "block_idx": pa.array(brows["block_idx"], pa.int32()),
+                "n_values": pa.array(brows["n_values"], pa.int64()),
+                "n_nulls": pa.array(brows["n_nulls"], pa.int64()),
+                "n_runs": pa.array(brows["n_runs"], pa.int64()),
+                "codec_id": pa.array(brows["codec_id"], pa.int32()),
+                "enc_bytes": pa.array(brows["enc_bytes"], pa.int64()),
+                "naive_bytes": pa.array(
+                    brows["naive_bytes"], pa.int64()
+                ),
+                "min_val": pa.array(brows["min_val"], pa.int64()),
+                "max_val": pa.array(brows["max_val"], pa.int64()),
+                "sum_val": pa.array(
+                    [Decimal(x) for x in brows["sum_val"]],
+                    pa.decimal128(38, 0),
+                ),
+                "block": pa.array(brows["block"], pa.binary()),
+            }
+        )
+        final = os.path.join(out_blocks_dir, f"{split_id}.parquet")
+        tmp = final + ".inprogress"
+        _write_grouped(tmp, out)
+        os.replace(tmp, final)
+        if srows["col_name"]:
+            sdir = os.path.join(
+                os.path.dirname(out_blocks_dir), "strings"
+            )
+            os.makedirs(sdir, exist_ok=True)
+            sfinal = os.path.join(sdir, f"{split_id}.parquet")
+            stmp = sfinal + ".inprogress"
+            _write_grouped(
+                stmp,
+                pa.table(
+                    {
+                        "split_seq": pa.array(
+                            srows["split_seq"], pa.string()
+                        ),
+                        "col_name": pa.array(
+                            srows["col_name"], pa.string()
+                        ),
+                        "block_idx": pa.array(
+                            srows["block_idx"], pa.int32()
+                        ),
+                        "ndv": pa.array(srows["ndv"], pa.int64()),
+                        "raw_bytes": pa.array(
+                            srows["raw_bytes"], pa.int64()
+                        ),
+                        "enc_bytes": pa.array(
+                            srows["enc_bytes"], pa.int64()
+                        ),
+                        "dict_block": pa.array(
+                            srows["dict_block"], pa.binary()
+                        ),
+                    }
+                ),
+            )
+            os.replace(stmp, sfinal)
+        return [{
+            "split_id": split_id,
+            "n_docs": n_rows,
+            "n_tokens": total_vals,
+            "n_runs": total_runs,
+            "bytes_out": bytes_out,
+            "naive_rle_bytes": naive_total,
+            "codec_hist": json.dumps(
+                {str(k): v for k, v in sorted(hist.items())}
+            ),
+            "encode_cpu_ns": cpu_ns,
+            "n_nulls": nulls_total,
+            "dict_bytes": dict_bytes,
+        }]
 
     return run_split
 
@@ -797,28 +781,21 @@ def encode_table_files(
     todo = [s for s in splits if s["split_id"] not in done]
     if not todo:
         return {"splits_encoded": 0, "splits_skipped": len(done), "tokens": 0}
-    tasks = pd.DataFrame({
-        "split_id": [s["split_id"] for s in todo],
-        "pieces": [json.dumps(s["pieces"]) for s in todo],
-    })
     t0 = time.perf_counter()
-    results = engine_files._spark_tasks(spark, tasks, len(tasks)).mapInPandas(
+    results = engine_files.run_file_job(
+        spark, engine_files._split_tasks(todo),
         _make_table_split_worker(
             blocks_dir,
             order_col,
             tuple(int_cols),
             tuple(str_cols),
             int(rows_per_block),
-            (
-                tuple(s.hex() for s in fsst_symbols)
-                if fsst_symbols is not None
-                else None
-            ),
+            fsst_symbols,
             col_types=schema["int_col_types"],
             index_cols=tuple(sorted(index_cols or ())),
         ),
         TABLE_RESULT_SCHEMA,
-    ).collect()
+    ).toArrow().to_pylist()
     wall = time.perf_counter() - t0
     pieces_of = {s["split_id"]: json.dumps(s["pieces"]) for s in todo}
     summary = engine_files._merge_split_manifest(
@@ -827,8 +804,8 @@ def encode_table_files(
     # dict sidecar bytes are tracked OUTSIDE bytes_out (the token plane's
     # sidecar discipline), so bytes_out <= naive_rle_bytes stays structural
     # for string-heavy tables; n_nulls records the validity-plane mass
-    summary["dict_bytes"] = sum(int(r["dict_bytes"]) for r in results)
-    summary["n_nulls"] = sum(int(r["n_nulls"]) for r in results)
+    summary["dict_bytes"] = sum(r["dict_bytes"] for r in results)
+    summary["n_nulls"] = sum(r["n_nulls"] for r in results)
     return summary
 
 
@@ -1110,121 +1087,106 @@ def _pieces_map(split_id: str, pieces_json: str) -> dict[str, list]:
 
 
 def _make_table_verify_worker(blocks_dir: str, schema: dict,
-                              symbols_hex: tuple[str, ...] | None):
+                              symbols: list[bytes] | None):
     """Per-file lineage verify: for EACH split segment recorded in the blocks
     file (one, or several after compaction), re-read that split's SOURCE row
     groups, sort by order_col, decode the segment, and compare every column
     in-task (NULL-safe) — the token plane's zero-shuffle verify discipline on
     arbitrary tables.  ``mismatches`` counts rows where ANY column differs."""
-    from rlv.util import tune_malloc
-
-    symbols = (
-        [bytes.fromhex(h) for h in symbols_hex]
-        if symbols_hex is not None
-        else None
-    )
     order_col = schema["order_col"]
     read_cols = list(dict.fromkeys(
         [order_col, *schema["int_cols"], *schema["str_cols"]]
     ))
 
-    def run_verify(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow as pa
+    def run_verify(task: dict) -> list[dict]:
         import pyarrow.parquet as pq
 
-        tune_malloc()
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                split_id = str(row["split_id"])
-                seg_scope = _task_seg(row)
-                pmap = _pieces_map(split_id, str(row["pieces"]))
-                bpath = os.path.join(blocks_dir, f"{split_id}.parquet")
-                btbl = pq.read_table(
-                    bpath,
-                    filters=(
-                        [("split_seq", "=", seg_scope)]
-                        if seg_scope is not None else None
-                    ),
-                ).combine_chunks()
-                side = _read_dict_sidecar(bpath, split_id, seg=seg_scope)
-                n_total = 0
-                mismatches = 0
-                seen: set[str] = set()
-                for seq, seg in _split_segments(btbl, split_id):
-                    seen.add(seq)
-                    pieces = pmap.get(seq)
-                    by_file: dict[str, list[int]] = {}
-                    for path, rg in pieces or []:
-                        by_file.setdefault(path, []).append(rg)
-                    src = pa.concat_tables(
-                        pq.ParquetFile(p).read_row_groups(
-                            rgs, columns=read_cols, use_threads=False
-                        )
-                        for p, rgs in by_file.items()
-                    ).combine_chunks() if by_file else None
-                    if src is None:
-                        # a segment with no recorded lineage is unverifiable:
-                        # count every one of its rows as a mismatch
-                        mismatches += _segment_rows(seg)
-                        continue
-                    order = np.argsort(
-                        src.column(order_col).to_numpy(), kind="stable"
-                    )
-                    n = len(src)
-                    n_total += n
-                    bad = np.zeros(n, dtype=bool)
-                    try:
-                        cols = _decode_split_columns(
-                            seg, side, schema, symbols, seq
-                        )
-                    except Exception:
-                        # corrupt blocks must report, not kill the pass
-                        cols = None
-                        bad[:] = True
-                    if cols is not None:
-                        col_types = schema.get("int_col_types") or {}
-                        for c in [*schema["int_cols"], *schema["str_cols"]]:
-                            got = cols[c]
-                            want_col = src.column(c)
-                            if c in schema["str_cols"]:
-                                want_col = want_col.cast(got.type)
-                            else:
-                                # same plane mapping the encode side used
-                                # (epoch ints / float total-order keys)
-                                want_col = _plane_cast(
-                                    want_col, col_types.get(c)
-                                )
-                            want = want_col.take(pa.array(order))
-                            if len(got) != n:
-                                bad[:] = True
-                            else:
-                                bad |= _null_safe_neq(got, want)
-                    mismatches += int(bad.sum())
-                # segments the manifest knows but the file lost are data
-                # loss: count every row their recorded lineage says they
-                # held (source footers, opened once per file).  Reporting
-                # the loss must never itself crash — sources may have been
-                # archived after a passing verify, so an unreadable footer
-                # degrades to counting one mismatch per lost piece
-                for seq in set(pmap) - seen:
-                    lost_by_file: dict[str, list[int]] = {}
-                    for path, rg in pmap[seq]:
-                        lost_by_file.setdefault(path, []).append(rg)
-                    for path, rgs in lost_by_file.items():
-                        try:
-                            meta = pq.ParquetFile(path).metadata
-                            mismatches += sum(
-                                meta.row_group(rg).num_rows for rg in rgs
-                            )
-                        except Exception:
-                            mismatches += len(rgs)
-                yield pd.DataFrame(
-                    {
-                        "split_id": [split_id],
-                        "n_rows": [n_total],
-                        "mismatches": [mismatches],
-                    }
+        split_id = task["split_id"]
+        seg_scope = task["segment"]
+        pmap = _pieces_map(split_id, task["pieces"])
+        bpath = os.path.join(blocks_dir, f"{split_id}.parquet")
+        btbl = pq.read_table(
+            bpath,
+            filters=(
+                [("split_seq", "=", seg_scope)]
+                if seg_scope is not None else None
+            ),
+        ).combine_chunks()
+        side = _read_dict_sidecar(bpath, split_id, seg=seg_scope)
+        n_total = 0
+        mismatches = 0
+        seen: set[str] = set()
+        for seq, seg in _split_segments(btbl, split_id):
+            seen.add(seq)
+            pieces = pmap.get(seq)
+            by_file: dict[str, list[int]] = {}
+            for path, rg in pieces or []:
+                by_file.setdefault(path, []).append(rg)
+            src = pa.concat_tables(
+                pq.ParquetFile(p).read_row_groups(
+                    rgs, columns=read_cols, use_threads=False
                 )
+                for p, rgs in by_file.items()
+            ).combine_chunks() if by_file else None
+            if src is None:
+                # a segment with no recorded lineage is unverifiable:
+                # count every one of its rows as a mismatch
+                mismatches += _segment_rows(seg)
+                continue
+            order = np.argsort(
+                src.column(order_col).to_numpy(), kind="stable"
+            )
+            n = len(src)
+            n_total += n
+            bad = np.zeros(n, dtype=bool)
+            try:
+                cols = _decode_split_columns(
+                    seg, side, schema, symbols, seq
+                )
+            except Exception:
+                # corrupt blocks must report, not kill the pass
+                cols = None
+                bad[:] = True
+            if cols is not None:
+                col_types = schema.get("int_col_types") or {}
+                for c in [*schema["int_cols"], *schema["str_cols"]]:
+                    got = cols[c]
+                    want_col = src.column(c)
+                    if c in schema["str_cols"]:
+                        want_col = want_col.cast(got.type)
+                    else:
+                        # same plane mapping the encode side used
+                        # (epoch ints / float total-order keys)
+                        want_col = _plane_cast(
+                            want_col, col_types.get(c)
+                        )
+                    want = want_col.take(pa.array(order))
+                    if len(got) != n:
+                        bad[:] = True
+                    else:
+                        bad |= _null_safe_neq(got, want)
+            mismatches += int(bad.sum())
+        # segments the manifest knows but the file lost are data
+        # loss: count every row their recorded lineage says they
+        # held (source footers, opened once per file).  Reporting
+        # the loss must never itself crash — sources may have been
+        # archived after a passing verify, so an unreadable footer
+        # degrades to counting one mismatch per lost piece
+        for seq in set(pmap) - seen:
+            lost_by_file: dict[str, list[int]] = {}
+            for path, rg in pmap[seq]:
+                lost_by_file.setdefault(path, []).append(rg)
+            for path, rgs in lost_by_file.items():
+                try:
+                    meta = pq.ParquetFile(path).metadata
+                    mismatches += sum(
+                        meta.row_group(rg).num_rows for rg in rgs
+                    )
+                except Exception:
+                    mismatches += len(rgs)
+        return [{
+            "split_id": split_id, "n_rows": n_total, "mismatches": mismatches,
+        }]
 
     return run_verify
 
@@ -1273,20 +1235,19 @@ def verify_table_files(spark: SparkSession, enc_dir: str) -> dict:
                          "segment": None})
     if not todo:
         return {"splits": 0, "rows": 0, "mismatches": 0}
-    syms = engine_files._load_symbols(enc_dir)
-    tasks = pd.DataFrame(todo, columns=["split_id", "pieces", "segment"])
-    results = engine_files._spark_tasks(spark, tasks, len(tasks)).mapInPandas(
-        _make_table_verify_worker(
-            f"{enc_dir}/blocks",
-            schema,
-            tuple(s.hex() for s in syms) if syms is not None else None,
-        ),
+    tasks = pa.Table.from_pylist(todo, schema=pa.schema(
+        [(c, pa.string()) for c in ("split_id", "pieces", "segment")]
+    ))
+    results = engine_files.run_file_job(
+        spark, tasks,
+        _make_table_verify_worker(f"{enc_dir}/blocks", schema,
+                                  engine_files._load_symbols(enc_dir)),
         TABLE_VERIFY_SCHEMA,
-    ).collect()
+    ).toArrow().to_pylist()
     bad_by_split: dict[str, int] = {}
     for r in results:
-        sid = str(r["split_id"])
-        bad_by_split[sid] = bad_by_split.get(sid, 0) + int(r["mismatches"])
+        sid = r["split_id"]
+        bad_by_split[sid] = bad_by_split.get(sid, 0) + r["mismatches"]
     passed = {sid for sid, m in bad_by_split.items() if m == 0}
     pdf = engine_files._read_manifest_pdf(enc_dir)
     if pdf is not None and passed:
@@ -1297,82 +1258,65 @@ def verify_table_files(spark: SparkSession, enc_dir: str) -> dict:
         engine_files._write_manifest_pdf(enc_dir, pdf)
     return {
         "splits": n_splits,
-        "rows": sum(int(r["n_rows"]) for r in results),
-        "mismatches": sum(int(r["mismatches"]) for r in results),
+        "rows": sum(r["n_rows"] for r in results),
+        "mismatches": sum(r["mismatches"] for r in results),
     }
 
 
 def _make_table_decode_worker(out_dir: str, schema: dict,
-                              symbols_hex: tuple[str, ...] | None):
-    from rlv.util import tune_malloc
+                              symbols: list[bytes] | None):
 
-    symbols = (
-        [bytes.fromhex(h) for h in symbols_hex]
-        if symbols_hex is not None
-        else None
-    )
-
-    def run_decode(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow as pa
+    def run_decode(task: dict) -> list[dict]:
         import pyarrow.parquet as pq
 
-        tune_malloc()
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg_scope = _task_seg(row)
-                tbl = pq.read_table(
-                    path,
-                    filters=(
-                        [("split_seq", "=", seg_scope)]
-                        if seg_scope is not None else None
-                    ),
-                ).combine_chunks()
-                side = _read_dict_sidecar(path, file_sid, seg=seg_scope)
-                seg_cols = [
-                    _decode_split_columns(seg, side, schema, symbols, seq)
-                    for seq, seg in _split_segments(tbl, file_sid)
-                ]
-                cols: dict = {}
-                for c in [*schema["int_cols"], *schema["str_cols"]]:
-                    parts = [sc[c] for sc in seg_cols]
-                    if len({p.type for p in parts}) > 1:
-                        parts = [p.cast(pa.large_binary()) for p in parts]
-                    cols[c] = pa.concat_arrays(parts)
-                # restore recorded source types (widths, timestamps/dates,
-                # floats from their total-order keys; pre-r4 datasets have
-                # no record and keep the internal int64)
-                col_types = schema.get("int_col_types") or {}
-                for c in schema["int_cols"]:
-                    cols[c] = _restore_plane(
-                        cols[c], col_types.get(c, "int64")
-                    )
-                for c in schema["str_cols"]:
-                    cols[c] = cols[c].cast(
-                        pa.large_string()
-                        if pa.types.is_large_binary(cols[c].type)
-                        else pa.string()
-                    )
-                out = pa.table(cols)
-                # a segment task of a compacted bin writes its own output
-                # file (unique per task; the restored dir is a plain
-                # parquet dataset either way)
-                name = (
-                    os.path.basename(path) if seg_scope is None
-                    else f"{file_sid}.{seg_scope}.parquet"
-                )
-                final = os.path.join(out_dir, name)
-                tmp = final + ".inprogress"
-                pq.write_table(out, tmp, compression="zstd")
-                os.replace(tmp, final)
-                yield pd.DataFrame(
-                    {
-                        "file": [name],
-                        "n_rows": [len(out)],
-                        "n_cols": [out.num_columns],
-                    }
-                )
+        path = task["file"]
+        file_sid = os.path.splitext(os.path.basename(path))[0]
+        seg_scope = task["segment"]
+        tbl = pq.read_table(
+            path,
+            filters=(
+                [("split_seq", "=", seg_scope)]
+                if seg_scope is not None else None
+            ),
+        ).combine_chunks()
+        side = _read_dict_sidecar(path, file_sid, seg=seg_scope)
+        seg_cols = [
+            _decode_split_columns(seg, side, schema, symbols, seq)
+            for seq, seg in _split_segments(tbl, file_sid)
+        ]
+        cols: dict = {}
+        for c in [*schema["int_cols"], *schema["str_cols"]]:
+            parts = [sc[c] for sc in seg_cols]
+            if len({p.type for p in parts}) > 1:
+                parts = [p.cast(pa.large_binary()) for p in parts]
+            cols[c] = pa.concat_arrays(parts)
+        # restore recorded source types (widths, timestamps/dates,
+        # floats from their total-order keys; pre-r4 datasets have
+        # no record and keep the internal int64)
+        col_types = schema.get("int_col_types") or {}
+        for c in schema["int_cols"]:
+            cols[c] = _restore_plane(
+                cols[c], col_types.get(c, "int64")
+            )
+        for c in schema["str_cols"]:
+            cols[c] = cols[c].cast(
+                pa.large_string()
+                if pa.types.is_large_binary(cols[c].type)
+                else pa.string()
+            )
+        out = pa.table(cols)
+        # a segment task of a compacted bin writes its own output
+        # file (unique per task; the restored dir is a plain
+        # parquet dataset either way)
+        name = (
+            os.path.basename(path) if seg_scope is None
+            else f"{file_sid}.{seg_scope}.parquet"
+        )
+        final = os.path.join(out_dir, name)
+        tmp = final + ".inprogress"
+        pq.write_table(out, tmp, compression="zstd")
+        os.replace(tmp, final)
+        return [{"file": name, "n_rows": len(out), "n_cols": out.num_columns}]
 
     return run_decode
 
@@ -1399,22 +1343,18 @@ def decode_table_files(
             f"{[os.path.basename(f) for f in lost[:5]]}"
         )
     tasks = _query_tasks(enc_dir)
-    if tasks.empty:
-        os.makedirs(out_dir, exist_ok=True)
-        return {"files": 0, "rows": 0}
     os.makedirs(out_dir, exist_ok=True)
-    syms = engine_files._load_symbols(enc_dir)
-    rows = engine_files._spark_tasks(spark, tasks, len(tasks)).mapInPandas(
-        _make_table_decode_worker(
-            out_dir,
-            schema,
-            tuple(s.hex() for s in syms) if syms is not None else None,
-        ),
+    if tasks.num_rows == 0:
+        return {"files": 0, "rows": 0}
+    rows = engine_files.run_file_job(
+        spark, tasks,
+        _make_table_decode_worker(out_dir, schema,
+                                  engine_files._load_symbols(enc_dir)),
         DECODE_RESULT_SCHEMA,
-    ).collect()
+    ).toArrow().to_pylist()
     return {
         "files": len(rows),
-        "rows": sum(int(r["n_rows"]) for r in rows),
+        "rows": sum(r["n_rows"] for r in rows),
     }
 
 
@@ -1447,8 +1387,9 @@ def _live_block_files(enc_dir: str) -> list[str]:
     )
 
 
-def _query_tasks(enc_dir: str) -> pd.DataFrame:
-    """Per-(file, segment) task frame of the query operators (scan / agg /
+def _query_tasks(enc_dir: str) -> pa.Table:
+    """Per-(file, segment) task table (both string columns) of the query
+    operators (scan / agg /
     group / distinct / top-k): a freshly-encoded split is one whole-file
     task (``segment`` None); a compacted bin fans out to ONE TASK PER
     ABSORBED SPLIT — enumerated from the manifest's lineage map, no file
@@ -1484,24 +1425,8 @@ def _query_tasks(enc_dir: str) -> pd.DataFrame:
         for s in segments:
             files.append(path)
             segs.append(s)
-    return pd.DataFrame(
-        {"file": files, "segment": pd.Series(segs, dtype=object)}
-    )
-
-
-@functools.lru_cache(maxsize=256)
-def _arrow_schema(ddl: str):
-    """``(StructType, pyarrow.Schema)`` of an operator's output DDL: the
-    one schema definition both dispatch paths type their batches with
-    (Spark's Arrow mapping — int widths, ``date32``, UTC microsecond
-    timestamps, ``decimal128``).  Cached: parsing a DDL is a JVM round
-    trip (~3 ms), a real share of a tiny plan's wall; callers never
-    mutate the result."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    struct = StructType.fromDDL(ddl)
-    return struct, to_arrow_schema(struct)
+    return pa.table({"file": pa.array(files, pa.string()),
+                     "segment": pa.array(segs, pa.string())})
 
 
 def _typed_batch(cols: dict, schema, aliases: dict):
@@ -1575,7 +1500,7 @@ def _task_frame(plan: _Plan, reducer, schema):
 _DRIVER_LOCAL_MAX_CELLS = 1 << 17
 
 
-def _driver_local_batches(enc_dir: str, tasks: pd.DataFrame, reducer,
+def _driver_local_batches(enc_dir: str, tasks: pa.Table, reducer,
                           specs: list[dict], schema) -> list | None:
     """The block pipeline's typed batches over ``tasks``, run in this
     process, or None when the plan is not tiny.  The decision classifies
@@ -1587,8 +1512,9 @@ def _driver_local_batches(enc_dir: str, tasks: pd.DataFrame, reducer,
     symbols = engine_files._load_symbols(enc_dir)
     plans = []
     cells = 0
-    for path, seg in _task_rows(tasks):
-        plan = _classify_file(path, seg, specs, reducer.cols, symbols)
+    for t in tasks.to_pylist():
+        plan = _classify_file(t["file"], t["segment"], specs, reducer.cols,
+                              symbols)
         plans.append(plan)
         cells += len(reducer.cols) * plan.rows_surviving
         if cells > _DRIVER_LOCAL_MAX_CELLS:
@@ -1596,10 +1522,10 @@ def _driver_local_batches(enc_dir: str, tasks: pd.DataFrame, reducer,
     return [_task_frame(p, reducer, schema) for p in plans]
 
 
-def _run_tasks(spark: SparkSession, enc_dir: str, tasks: pd.DataFrame,
+def _run_tasks(spark: SparkSession, enc_dir: str, tasks: pa.Table,
                reducer, specs: list[dict]):
     """Run a query operator, the block pipeline with its ``reducer``,
-    over its :func:`_query_tasks` frame, as a DataFrame of the reducer's
+    over its :func:`_query_tasks` table, as a DataFrame of the reducer's
     typed output (``reducer.ddl``).  A tiny plan (see
     :func:`_driver_local_batches`; an empty task list is one) runs in
     this process and returns a local relation built from the same Arrow
@@ -1614,42 +1540,31 @@ def _run_tasks(spark: SparkSession, enc_dir: str, tasks: pd.DataFrame,
     return _local_relation(spark, reducer.ddl, batches)
 
 
-def _spark_run(spark: SparkSession, enc_dir: str, tasks: pd.DataFrame,
+def _spark_run(spark: SparkSession, enc_dir: str, tasks: pa.Table,
                reducer, specs: list[dict]):
-    """The block pipeline as one ``mapInArrow`` task per query task on
-    the :func:`rlv.engine_files._spark_tasks` relation — the one Spark
-    call site of every query operator, and its only Python-worker stage:
-    each task yields the reducer's typed Arrow batch, restored in the
-    worker, so no Python node follows it.  Query tasks are not packed
-    per slot as the batch encode's splits are (``k = n``): a task's cost
-    is unknown until it is classified, and a clustered range predicate's
-    surviving files are adjacent, so a contiguous run would put all the
-    real work on one core.  Each Python worker process tunes malloc
-    first (:func:`rlv.util.tune_malloc`); only there: applied to the
-    driver by an in-process run, the same settings slowed a wide scan's
-    collect to Arrow by ~0.2 s on a 4-core host."""
-    symbols_hex = _symbols_hex(enc_dir)
-    struct, schema = _arrow_schema(reducer.ddl)
-
-    def run(batches):
-        from rlv.util import tune_malloc
-
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for b in batches:
-            for path, seg in zip(b.column("file").to_pylist(),
-                                 b.column("segment").to_pylist()):
-                yield _task_frame(
-                    _classify_file(path, seg, specs, reducer.cols, symbols),
-                    reducer, schema,
-                )
-
-    return engine_files._spark_tasks(spark, tasks, len(tasks)).mapInArrow(
-        run, struct
+    """The block pipeline as one Spark task per query task, dispatched
+    by :func:`rlv.engine_files.run_file_job` — the one Spark call site of
+    every query operator, and its only Python-worker stage: each task
+    classifies its ``(file, segment)`` and yields the reducer's typed
+    Arrow batch, restored in the worker, so no Python node follows it.
+    The DataFrame stays lazy for the caller's own operators.  Query
+    tasks are not packed per slot as the batch encode's splits are: a
+    task's cost is unknown until it is classified, and a clustered range
+    predicate's surviving files are adjacent, so a contiguous run would
+    put all the real work on one core.  Malloc is tuned in the Python
+    workers only: applied to the driver by an in-process run, the same
+    settings slowed a wide scan's collect to Arrow by ~0.2 s on a 4-core
+    host."""
+    symbols = engine_files._load_symbols(enc_dir)
+    schema = _arrow_schema(reducer.ddl)[1]
+    return engine_files.run_file_job(
+        spark, tasks,
+        lambda t: _task_frame(
+            _classify_file(t["file"], t["segment"], specs, reducer.cols,
+                           symbols),
+            reducer, schema,
+        ),
+        reducer.ddl,
     )
 
 
@@ -2768,11 +2683,6 @@ def strdict_stats(enc_dir: str, col: str, value: str) -> dict:
     return {"blocks_total": total, "blocks_matching": match}
 
 
-def _symbols_hex(enc_dir: str) -> tuple[str, ...] | None:
-    syms = engine_files._load_symbols(enc_dir)
-    return tuple(s.hex() for s in syms) if syms is not None else None
-
-
 def _scan_out_names(schema: dict, col: str,
                     columns: list[str] | None) -> list[str]:
     """Validate and default the scan projection (shared by the range and
@@ -2985,14 +2895,6 @@ class _Plan:
     @property
     def rows_surviving(self) -> int:
         return sum(self.nv[k] for k in self.cls)
-
-
-def _task_rows(tasks: pd.DataFrame):
-    """``(file, segment)`` of each row of a :func:`_query_tasks` frame;
-    segment None scopes the task to the whole file, a split id to that
-    absorbed split of a compacted file."""
-    for _, row in tasks.iterrows():
-        yield row["file"], _task_seg(row)
 
 
 def _classify_file(path: str, seg: str | None, specs: list[dict],
@@ -3565,16 +3467,6 @@ def _gather_strings(plan, col: str, keys: list, offs: np.ndarray,
     return pa.concat_arrays(parts)
 
 
-def _task_seg(row) -> str | None:
-    """Segment a task row is scoped to (None = the whole file): workers
-    read it from the optional ``segment`` task column so a compacted file
-    fans out to one task per absorbed split."""
-    seg = row.get("segment")
-    if seg is None or (isinstance(seg, float) and np.isnan(seg)):
-        return None
-    return str(seg)
-
-
 class _AggReducer(_Reducer):
     """Aggregate reducer for a CONJUNCTION of predicates: one labeled
     ``(n_rows, n_vals, sum_val, min_val, max_val)`` row per value column.
@@ -3731,7 +3623,7 @@ def agg_table_files_where(
     reducer = _AggReducer(schema, value_cols)
     from pyspark.sql import functions as F
 
-    if tasks.empty:  # no task emits a partial: fold the identity row
+    if tasks.num_rows == 0:  # no task emits a partial: fold the identity row
         partials = _local_relation(spark, reducer.ddl, [_typed_batch(
             reducer.fold(None, [], None), _arrow_schema(reducer.ddl)[1],
             reducer.aliases,
@@ -4390,9 +4282,10 @@ def _explain_bill(enc_dir: str, specs: list[dict], reducer) -> dict:
     out to several segment tasks but is still one file."""
     tasks = _query_tasks(enc_dir)
     symbols = engine_files._load_symbols(enc_dir)
-    bill = {"files": int(tasks["file"].nunique())}
-    for path, seg in _task_rows(tasks):
-        plan = _classify_file(path, seg, specs, reducer.cols, symbols)
+    bill = {"files": len(set(tasks.column("file").to_pylist()))}
+    for t in tasks.to_pylist():
+        plan = _classify_file(t["file"], t["segment"], specs, reducer.cols,
+                              symbols)
         for k, v in _explain_task(plan, reducer).items():
             bill[k] = bill.get(k, 0) + int(v)
     return bill

@@ -188,6 +188,41 @@ def test_decode_files_dataset_roundtrip(spark, tok_dir, tmp_path):
     assert bad == 0
 
 
+def test_batch_encode_of_an_empty_source_file(spark, tmp_path):
+    """A zero-row source file still has one row group, so ``plan_splits``
+    gives it a split of its own: the batch encode writes it an empty
+    blocks file (a manifest row with ``n_docs == 0``), verify passes and
+    decode restores the source."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "src"
+    src.mkdir()
+    schema = pa.schema([("doc_id", pa.string()),
+                        ("tokens", pa.list_(pa.int32())),
+                        ("n_tok", pa.int32()), ("source", pa.string())])
+    pq.write_table(schema.empty_table(), src / "a.parquet")
+    pq.write_table(pa.table({"doc_id": ["d0", "d1"],
+                             "tokens": [[1, 1, 2], [5]], "n_tok": [3, 1],
+                             "source": ["x", "y"]}, schema=schema),
+                   src / "b.parquet")
+    assert pq.ParquetFile(src / "a.parquet").metadata.num_row_groups == 1
+    out = str(tmp_path / "enc")
+    enc = engine_files.encode_files_dataset(spark, str(src), out,
+                                            num_tasks=4)
+    assert enc["splits_encoded"] == 2
+    man = engine_files._read_manifest_pdf(out)
+    assert sorted(man["n_docs"]) == [0, 2]
+    ver = engine_files.verify_files_dataset(spark, str(src), out)
+    assert ver["mismatches"] == 0 and ver["docs"] == 2
+    restored = str(tmp_path / "restored")
+    dec = engine_files.decode_files_dataset(spark, out, restored)
+    assert dec["files"] == 2 and dec["docs"] == 2
+    got = pq.read_table(restored).sort_by("doc_id")
+    assert got.select(schema.names).to_pylist() == \
+        pq.read_table(src / "b.parquet").to_pylist()
+
+
 def test_compact_blocks(spark, tok_dir, tmp_path):
     """Compaction regroups files without touching block bytes; resume,
     verify (via merged lineage), and decode all still work."""
@@ -679,14 +714,17 @@ def test_slot_tasks_keep_one_task_per_split_under_dynamic_allocation(
     holds on a fixed-size cluster; under dynamic allocation the backlog
     of pending tasks asks for executors, so every split keeps its own
     task."""
-    import pandas as pd
+    import pyarrow as pa
 
     sc = spark.sparkContext
-    tasks = pd.DataFrame(
+    tasks = pa.table(
         {"split_id": [str(i) for i in range(4 * sc.defaultParallelism)]})
-    packed = engine_files._slot_tasks(spark, tasks)
-    assert packed.rdd.getNumPartitions() == sc.defaultParallelism
+
+    def packed():
+        return engine_files.run_file_job(
+            spark, tasks, lambda t: [t], "split_id string", packed=True)
+
+    assert packed().rdd.getNumPartitions() == sc.defaultParallelism
     conf = sc.getConf().set("spark.dynamicAllocation.enabled", "true")
     monkeypatch.setattr(sc, "getConf", lambda: conf)
-    assert engine_files._slot_tasks(spark, tasks).rdd.getNumPartitions() \
-        == len(tasks)
+    assert packed().rdd.getNumPartitions() == len(tasks)

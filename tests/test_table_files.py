@@ -755,12 +755,11 @@ def _pipeline_frames(enc_dir, reducer, specs=()):
     schema = table_files._arrow_schema(reducer.ddl)[1]
     return [
         table_files._task_frame(
-            table_files._classify_file(path, seg, list(specs),
+            table_files._classify_file(t["file"], t["segment"], list(specs),
                                        reducer.cols, symbols),
             reducer, schema,
         ).to_pandas()
-        for path, seg in table_files._task_rows(
-            table_files._query_tasks(enc_dir))
+        for t in table_files._query_tasks(enc_dir).to_pylist()
     ]
 
 
@@ -3811,7 +3810,7 @@ def test_query_tasks_fan_out_per_segment(spark, orders_dir, tmp_path):
     _encode(spark, orders_dir, out)
     n_files = len(glob.glob(f"{out}/blocks/*.parquet"))
     assert n_files >= 2
-    pre_tasks = table_files._query_tasks(out)
+    pre_tasks = table_files._query_tasks(out).to_pandas()
     assert len(pre_tasks) == n_files
     assert pre_tasks["segment"].isna().all()
 
@@ -3855,7 +3854,7 @@ def test_query_tasks_fan_out_per_segment(spark, orders_dir, tmp_path):
     merged = glob.glob(f"{out}/blocks/*.parquet")
     assert len(merged) == 1
     # fan-out: as many tasks as absorbed splits, each segment-scoped
-    post_tasks = table_files._query_tasks(out)
+    post_tasks = table_files._query_tasks(out).to_pandas()
     assert len(post_tasks) == n_files
     assert post_tasks["segment"].notna().all()
     assert post_tasks["file"].nunique() == 1
@@ -3931,7 +3930,7 @@ def test_recompaction_preserves_segments_and_results(spark, orders_dir,
     assert r2["bins_written"] >= 1
     merged = glob.glob(f"{out}/blocks/*.parquet")
     assert len(merged) == 1
-    tasks = table_files._query_tasks(out)
+    tasks = table_files._query_tasks(out).to_pandas()
     assert len(tasks) == n_files and tasks["segment"].notna().all()
     assert probe() == before
     v = table_files.verify_table_files(spark, out)
@@ -3983,14 +3982,18 @@ def test_explain_counts_files_not_tasks(spark, orders_dir, tmp_path):
 
 def test_spark_tasks_relation_is_shuffle_free(spark, orders_dir,
                                               tmp_path):
-    """The task relation has no Exchange and carries each task's segment
-    exactly (null for a whole-file task) — checked on a mix of a
-    compacted dataset's segment tasks and a fresh dataset's whole-file
-    tasks.  At ``k = n`` (query dispatch) task i is alone in partition i;
-    at ``k < n`` (a batch encode or verify packed per slot) there are ``k``
-    partitions, every task appears exactly once, and the partitions
-    concatenated in partition order are the task order."""
-    import pandas as pd
+    """The task relation has no Exchange and carries each task's typed
+    columns exactly (a null segment for a whole-file task, a boolean, a
+    bigint) — checked on a mix of a compacted dataset's segment tasks and
+    a fresh dataset's whole-file tasks.  At ``k = n`` (query dispatch)
+    task i is alone in partition i; at ``k < n`` (a batch encode or
+    verify packed per slot) there are ``k`` partitions, every task
+    appears exactly once, and the partitions concatenated in partition
+    order are the task order.  The runner hands each worker the task as
+    Python values: ``None``, ``bool`` and ``int``, not strings."""
+    import json
+
+    import pyarrow as pa
 
     merged = str(tmp_path / "merged")
     _encode(spark, orders_dir, merged)
@@ -3999,36 +4002,54 @@ def test_spark_tasks_relation_is_shuffle_free(spark, orders_dir,
     _encode(spark, orders_dir, fresh)
     seg_tasks = table_files._query_tasks(merged)
     whole_tasks = table_files._query_tasks(fresh)
-    assert len(seg_tasks) >= 2 and seg_tasks["segment"].notna().all()
-    assert whole_tasks["segment"].isna().all()
-    tasks = pd.concat([seg_tasks, whole_tasks], ignore_index=True)
+    assert len(seg_tasks) >= 2 and seg_tasks["segment"].null_count == 0
+    assert whole_tasks["segment"].null_count == len(whole_tasks)
+    tasks = pa.concat_tables([seg_tasks, whole_tasks])
+    n = len(tasks)
+    tasks = tasks.append_column(
+        "flag", pa.array([i % 3 == 0 for i in range(n)], pa.bool_())
+    ).append_column(
+        "big", pa.array([(1 << 40) + i for i in range(n)], pa.int64())
+    )
+    cols = tasks.column_names
+    want = [tuple(t.values()) for t in tasks.to_pylist()]
 
-    rel = engine_files._spark_tasks(spark, tasks, len(tasks))
+    rel = engine_files._spark_tasks(spark, tasks, n)
     plan = rel._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
-    assert rel.rdd.getNumPartitions() == len(tasks)
-    rows = rel.select(
-        F.spark_partition_id().alias("pid"), "file", "segment"
-    ).collect()
-    assert sorted(r["pid"] for r in rows) == list(range(len(tasks)))
-    by_pid = {r["pid"]: (r["file"], r["segment"]) for r in rows}
-    for i, (f, s) in enumerate(zip(tasks["file"], tasks["segment"])):
-        assert by_pid[i] == (f, s), i
+    assert rel.rdd.getNumPartitions() == n
+    rows = rel.select(F.spark_partition_id().alias("pid"), *cols).collect()
+    assert sorted(r["pid"] for r in rows) == list(range(n))
+    by_pid = {r["pid"]: tuple(r[c] for c in cols) for r in rows}
+    for i, t in enumerate(want):
+        assert by_pid[i] == t, i
 
-    want = list(zip(tasks["file"], tasks["segment"]))
-    for k in sorted({1, 2, len(tasks) - 1}):
+    for k in sorted({1, 2, n - 1}):
         rel = engine_files._spark_tasks(spark, tasks, k)
         plan = rel._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, (k, plan)
         assert rel.rdd.getNumPartitions() == k
         rows = rel.select(
-            F.spark_partition_id().alias("pid"), "file", "segment"
+            F.spark_partition_id().alias("pid"), *cols
         ).collect()
         # a stable sort by partition id: rows keep their order within one
         rows = sorted(rows, key=lambda r: r["pid"])
-        assert [(r["file"], r["segment"]) for r in rows] == want, k
+        assert [tuple(r[c] for c in cols) for r in rows] == want, k
         sizes = [sum(r["pid"] == p for r in rows) for p in range(k)]
         assert max(sizes) - min(sizes) <= 1, (k, sizes)
+
+    seen = engine_files.run_file_job(
+        spark, tasks,
+        lambda t: [{"task": json.dumps(t),
+                    "types": [type(t[c]).__name__ for c in cols]}],
+        "task string, types array<string>",
+    ).toArrow().to_pylist()
+    assert [tuple(json.loads(r["task"]).values()) for r in seen] == want
+    n_seg = len(seg_tasks)
+    assert all(r["types"] == ["str", "str", "bool", "int"]
+               for r in seen[:n_seg])
+    assert all(r["types"] == ["str", "NoneType", "bool", "int"]
+               for r in seen[n_seg:])
 
 
 def test_explain_and_metadata_count_launch_no_spark_job(spark, orders_dir,
