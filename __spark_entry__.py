@@ -28,6 +28,7 @@ if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
 from rlv import engine, textops, tokens  # noqa: E402
+from rlv import table_files as TF  # noqa: E402
 
 _SHIPPED: set[int] = set()
 
@@ -647,8 +648,6 @@ def _q_stream_chunked_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rl_encoding.v:4695-4715) — so the oracle is the plain run_decompose SQL,
     making the stateful streaming path itself hash-checked."""
     _ensure_shipped(spark)
-    import tempfile
-
     from rlv import streaming
 
     df = _token_df(spark, sf_dir)
@@ -814,6 +813,28 @@ def _q_token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _encode_duck(
+    spark: SparkSession, prefix: str, sql: str, **encode_kw
+) -> str:
+    """Encode the rows of the DuckDB query ``sql`` on the table files plane
+    into a fresh temp dir and return it: the source is written to
+    ``<dir>/_src.parquet`` in 2048-row row groups, then
+    ``TF.encode_table_files`` runs with ``rows_per_block=2048, num_tasks=2``
+    unless ``encode_kw`` overrides them."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    _ensure_shipped(spark)
+    out = tempfile.mkdtemp(prefix=prefix)
+    src_path = f"{out}/_src.parquet"
+    pq.write_table(duckdb.sql(sql).arrow(), src_path, row_group_size=2048)
+    TF.encode_table_files(
+        spark, [src_path], out,
+        **{"rows_per_block": 2048, "num_tasks": 2, **encode_kw},
+    )
+    return out
+
+
 def _table_files_global_blocks(
     spark: SparkSession, src_table, out: str, **encode_kw
 ) -> DataFrame:
@@ -831,8 +852,6 @@ def _table_files_global_blocks(
     import pyarrow.parquet as pq
 
     from rlv import engine_files
-    from rlv import table_files as TF
-
     src_path = f"{out}/_src.parquet"
     rows_per_block = encode_kw["rows_per_block"]
     pq.write_table(src_table, src_path, row_group_size=rows_per_block)
@@ -866,8 +885,6 @@ def _q_table_encode_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact codec-size model, so the files plane's per-column selection +
     exact sizes are checked end to end against independently derived SQL."""
     _ensure_shipped(spark)
-    import tempfile
-
     import pyarrow.parquet as pq
 
     out = tempfile.mkdtemp(prefix="rlv_tf_q_")
@@ -909,8 +926,6 @@ def _q_table_encode_nullable(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes) is independently derived in SQL.  Runs at num_tasks=2 with the
     same global block re-key as `table_encode_files`."""
     _ensure_shipped(spark)
-    import tempfile
-
     import duckdb
 
     out = tempfile.mkdtemp(prefix="rlv_tfn_q_")
@@ -992,28 +1007,13 @@ def _q_zonemap_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     The checkable facet is exactness: the pruned scan must return precisely
     the rows a plain SQL WHERE returns (NULLs excluded, BETWEEN
     semantics), on a NULLABLE column."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_zm_q_")
-    import pyarrow.parquet as pq
-
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_zm_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS custkey_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey", int_cols=["o_orderkey", "custkey_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.scan_table_files(spark, out, "custkey_n", 100, 499)
     return got.select(
@@ -1029,16 +1029,8 @@ def _q_zonemap_scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary sidecar.  The checkable facet: (predicate pushdown ×
     column pruning × NULL preservation) must equal a plain SQL
     SELECT-WHERE, exactly."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_zmp_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_zmp_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS custkey_n, "
@@ -1046,16 +1038,10 @@ def _q_zonemap_scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         "     ELSE o_orderkey % 1000 END AS total_n, "
         "CASE WHEN o_orderkey % 5 = 3 THEN NULL "
         "     ELSE o_orderpriority END AS pri_s "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "custkey_n", "total_n"],
         str_cols=["pri_s"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.scan_table_files(
         spark, out, "custkey_n", 100, 499,
@@ -1080,30 +1066,16 @@ def _q_dict_filter_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain SELECT-WHERE over the same derivation.  (The
     nullable projection is named so the unique non-null order key sorts
     first in the driver's column-sorted compare.)"""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_dfs_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_dfs_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS opt_custkey, "
         "CASE WHEN o_orderkey % 5 = 3 THEN NULL ELSE o_orderpriority END "
         "  AS pri_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "opt_custkey"], str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.scan_table_files_eq(
         spark, out, "pri_n", "1-URGENT",
@@ -1127,30 +1099,16 @@ def _q_dict_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     The predicate column is NULLABLE (NULL never matches BETWEEN) and the
     projection carries a nullable int column through the same scan.  The
     oracle is the plain SELECT-WHERE-BETWEEN under binary collation."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_drs_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_drs_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS opt_custkey, "
         "CASE WHEN o_orderkey % 5 = 3 THEN NULL ELSE o_orderpriority END "
         "  AS pri_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "opt_custkey"], str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.scan_table_files_str_range(
         spark, out, "pri_n", "2", "4z",
@@ -1173,31 +1131,17 @@ def _q_dict_prefix_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIKE filtering, served by our sidecar.  The predicate column is a
     derived 100-value tag (NULLABLE: NULL never matches LIKE); the oracle
     is the plain SELECT-WHERE-LIKE over the same derivation."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_dps_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_dps_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS opt_custkey, "
         "CASE WHEN o_orderkey % 6 = 2 THEN NULL "
         "     ELSE 'grp' || lpad(CAST(o_custkey % 100 AS VARCHAR), 3, '0') "
         "END AS tag_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "opt_custkey"], str_cols=["tag_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.scan_table_files_prefix(
         spark, out, "tag_n", "grp04",
@@ -1220,16 +1164,8 @@ def _q_where_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate.  All three predicate columns are NULLABLE (SQL AND: a NULL
     in any predicate drops the row); the oracle is the plain
     SELECT-WHERE with the stacked conjunction."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_whr_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_whr_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS custkey_n, "
@@ -1238,15 +1174,9 @@ def _q_where_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CASE WHEN o_orderkey % 6 = 2 THEN NULL "
         "     ELSE 'grp' || lpad(CAST(o_custkey % 100 AS VARCHAR), 3, '0') "
         "END AS tag_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "custkey_n"], str_cols=["pri_n", "tag_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.scan_table_files_where(
         spark, out,
@@ -1273,30 +1203,16 @@ def _q_dpp_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to the dim for its attribute.  The fact's key column is NULLABLE
     (SQL join: NULL never matches); the oracle is the plain SQL
     join-with-filter."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_dpp_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_dpp_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS opt_custkey, "
         "CASE WHEN o_orderkey % 5 = 3 THEN NULL ELSE o_orderpriority END "
         "  AS pri_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "opt_custkey"], str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     # runtime-filtered dim: the priorities sorting below '4', with an
     # attribute to carry through the join
@@ -1331,30 +1247,16 @@ def _q_int_in_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks whose value is a literal full-match.  Stacked with a string
     membership so the conjunction machinery carries both.  The oracle is
     plain SQL ``WHERE v IN (...) AND s IN (...)``."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_iin_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_iin_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey % 250 END "
         "  AS code_n, "
         "CASE WHEN o_orderkey % 5 = 3 THEN NULL ELSE o_orderpriority END "
         "  AS pri_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "code_n"], str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.scan_table_files_where(
         spark, out,
@@ -1379,16 +1281,8 @@ def _q_null_pred_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     matcher over ENTRIES (a block whose whole dictionary is the literal
     prunes; NULL still never matches — SQL three-valued ``<>``).  The
     oracle is the plain SQL ``IS NULL AND <>`` conjunction."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_nul_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_nul_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS custkey_n, "
@@ -1397,15 +1291,9 @@ def _q_null_pred_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CASE WHEN o_orderkey % 6 = 2 THEN NULL "
         "     ELSE 'grp' || lpad(CAST(o_custkey % 100 AS VARCHAR), 3, '0') "
         "END AS tag_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "custkey_n"], str_cols=["pri_n", "tag_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.scan_table_files_where(
         spark, out,
@@ -1429,16 +1317,8 @@ def _q_neg_pred_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary), NOT IN complements dictionary membership, and IS NOT NULL
     resolves from block null counts.  The oracle is the plain SQL
     aggregate under the negated conjunction."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_neg_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_neg_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS custkey_n, "
@@ -1446,16 +1326,10 @@ def _q_neg_pred_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "  AS pri_n, "
         "CASE WHEN o_orderkey % 3 = 1 THEN NULL "
         "     ELSE CAST(o_totalprice * 100 AS BIGINT) END AS cents_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "custkey_n", "cents_n"],
         str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     # contract outputs must be driver-hash-stable: no Decimal columns
     return TF.agg_table_files_where(
@@ -1473,16 +1347,8 @@ def _q_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     listed column aggregates in the same pass — k aggregate sets for one
     predicate evaluation, one labeled row per column.  The oracle is the
     per-column SQL aggregate UNION ALL under the same WHERE."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_mag_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_mag_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS opt_custkey, "
@@ -1490,16 +1356,10 @@ def _q_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "     ELSE CAST(o_totalprice * 100 AS BIGINT) END AS cents_n, "
         "CASE WHEN o_orderkey % 5 = 3 THEN NULL ELSE o_orderpriority END "
         "  AS pri_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "opt_custkey", "cents_n"],
         str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     # contract outputs must be driver-hash-stable: no Decimal columns
     # (both sums provably fit int64 at this SF)
@@ -1521,43 +1381,25 @@ def _q_enc_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides served by our blocks: dim blocks prune on zone maps, fact
     blocks containing no surviving dim key never touch payload.  The
     oracle is the plain SQL join under the same dim filter."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    fact_out = tempfile.mkdtemp(prefix="rlv_ejf_q_")
-    dim_out = tempfile.mkdtemp(prefix="rlv_ejd_q_")
-    fact = duckdb.sql(
+    fact_out = _encode_duck(
+        spark, "rlv_ejf_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS opt_custkey, "
         "CASE WHEN o_orderkey % 5 = 3 THEN NULL ELSE o_orderpriority END "
         "  AS pri_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    pq.write_table(fact, f"{fact_out}/_src.parquet", row_group_size=2048)
-    TF.encode_table_files(
-        spark, [f"{fact_out}/_src.parquet"], fact_out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "opt_custkey"], str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
-    dim = duckdb.sql(
+    dim_out = _encode_duck(
+        spark, "rlv_ejd_q_",
         "SELECT row_number() OVER (ORDER BY pri) AS pri_id, pri, pri_len "
         "FROM (SELECT DISTINCT o_orderpriority AS pri, "
         "      CAST(length(o_orderpriority) AS BIGINT) AS pri_len "
-        f"     FROM read_parquet('{sf_dir}/orders.parquet'))"
-    ).arrow()
-    pq.write_table(dim, f"{dim_out}/_src.parquet")
-    TF.encode_table_files(
-        spark, [f"{dim_out}/_src.parquet"], dim_out,
+        f"     FROM read_parquet('{sf_dir}/orders.parquet'))",
         order_col="pri_id",
-        int_cols=["pri_id", "pri_len"], str_cols=["pri"],
-        rows_per_block=2048, num_tasks=1,
+        int_cols=["pri_id", "pri_len"], str_cols=["pri"], num_tasks=1,
     )
     dim_df = TF.scan_table_files_where(
         spark, dim_out, [("between", "pri_len", 5, 8)],
@@ -1588,16 +1430,8 @@ def _q_multi_group_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     maps to a dense local id and the mixed-radix composite aggregates
     once via argsort+reduceat, so per-group Python stays O(key tuples).
     The oracle is the plain SQL two-column GROUP BY."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_mga_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_mga_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS opt_custkey, "
@@ -1605,16 +1439,10 @@ def _q_multi_group_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "  AS pri_n, "
         "CASE WHEN o_orderkey % 11 = 6 THEN NULL "
         "     ELSE o_custkey % 4 END AS bucket_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "opt_custkey", "bucket_n"],
         str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.agg_table_files_by(
         spark, out, "opt_custkey", ["pri_n", "bucket_n"],
@@ -1643,31 +1471,17 @@ def _q_ndv_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     files values; ``null_seen`` mirrors SQL's
     ``count(*) > count(col)`` over the matching rows.  The oracle is the
     plain SQL COUNT DISTINCT under the same WHERE."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_ndv_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_ndv_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS opt_custkey, "
         "CASE WHEN o_orderkey % 6 = 2 THEN NULL "
         "     ELSE 'grp' || lpad(CAST(o_custkey % 100 AS VARCHAR), 3, '0') "
         "END AS tag_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "opt_custkey"], str_cols=["tag_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     return TF.ndv_table_files(
         spark, out, "tag_n",
@@ -1685,16 +1499,8 @@ def _q_or_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     (conjunctions of disjunctions) pushed into the encoded format.  The
     three branches here cross types: int range OR string equality OR
     IS NULL.  The oracle is the plain SQL ``(a OR b OR c) AND d``."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_or_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_or_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS opt_custkey, "
@@ -1703,15 +1509,9 @@ def _q_or_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CASE WHEN o_orderkey % 6 = 2 THEN NULL "
         "     ELSE 'grp' || lpad(CAST(o_custkey % 100 AS VARCHAR), 3, '0') "
         "END AS tag_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "opt_custkey"], str_cols=["pri_n", "tag_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.scan_table_files_where(
         spark, out,
@@ -1738,16 +1538,8 @@ def _q_where_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-match, and otherwise decode only the non-full predicates.  All
     predicate and value columns NULLABLE; the oracle is the plain SQL
     aggregate under the stacked WHERE."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_wagg_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_wagg_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS custkey_n, "
@@ -1755,16 +1547,10 @@ def _q_where_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "  AS pri_n, "
         "CASE WHEN o_orderkey % 3 = 1 THEN NULL "
         "     ELSE CAST(o_totalprice * 100 AS BIGINT) END AS cents_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "custkey_n", "cents_n"],
         str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.agg_table_files_where(
         spark, out, "cents_n",
@@ -1787,30 +1573,16 @@ def _q_count_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     stacks an int zone-map range, a LIKE-prefix dictionary membership,
     and IS NOT NULL (a pure metadata predicate); the oracle is plain SQL
     ``SELECT count(*)`` under the same WHERE."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_cnt_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_cnt_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS custkey_n, "
         "CASE WHEN o_orderkey % 5 = 3 THEN NULL ELSE o_orderpriority END "
         "  AS pri_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "custkey_n"], str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     return TF.count_table_files_where(
         spark, out,
@@ -1827,30 +1599,16 @@ def _q_minmax_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     only boundary (partial) blocks decode the value column and mask.
     Both the predicate and value columns NULLABLE; the oracle is the
     plain SQL min/max under the same WHERE."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_mmx_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_mmx_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS custkey_n, "
         "CASE WHEN o_orderkey % 3 = 1 THEN NULL "
         "     ELSE CAST(o_totalprice * 100 AS BIGINT) END AS cents_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "custkey_n", "cents_n"], str_cols=[],
-        rows_per_block=2048, num_tasks=2,
     )
     return TF.minmax_table_files_where(
         spark, out, "cents_n",
@@ -1867,24 +1625,11 @@ def _q_idx_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     key — zone maps alone cannot prune a scattered key.  The spec is
     classification-only (the paired IN-list spec masks rows exactly), so
     the result equals plain SQL."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_idx_q_")
-    src = pq.read_table(
-        f"{sf_dir}/orders.parquet",
-        columns=["o_orderkey", "o_custkey"],
-    ).sort_by("o_orderkey")
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+    out = _encode_duck(
+        spark, "rlv_idx_q_",
+        "SELECT o_orderkey, o_custkey "
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey", int_cols=["o_orderkey", "o_custkey"],
-        rows_per_block=2048, num_tasks=2,
         index_cols=["o_custkey"],
     )
     return TF.scan_table_files_where(
@@ -1902,27 +1647,14 @@ def _q_str_minmax_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the DISTINCT pipe — full-matching blocks fold their dictionary
     sidecars (the string zone map), only boundary blocks decode — with
     SQL NULL semantics on a NULLABLE string column under an int range."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_smm_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_smm_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 5 = 3 THEN NULL ELSE o_orderpriority END "
         "  AS pri_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey", int_cols=["o_orderkey"],
-        str_cols=["pri_n"], rows_per_block=2048, num_tasks=2,
+        str_cols=["pri_n"],
     )
     return TF.minmax_table_files_where(
         spark, out, "pri_n",
@@ -1940,8 +1672,6 @@ def _q_table_encode_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     the temporal plane end to end (decode-side exactness is
     pytest-drilled: tests/test_table_files.py typed-roundtrip)."""
     _ensure_shipped(spark)
-    import tempfile
-
     import pyarrow.parquet as pq
 
     out = tempfile.mkdtemp(prefix="rlv_tft_q_")
@@ -1972,11 +1702,7 @@ def _enc_typed_orders(spark: SparkSession, sf_dir: str) -> str:
     (o_orderkey int64, o_orderdate timestamp[us], o_totalprice float64)
     through the files plane — timestamps as epoch ints, floats as IEEE-754
     total-order keys."""
-    import tempfile
-
     import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
 
     out = tempfile.mkdtemp(prefix="rlv_typed_q_")
     src = pq.read_table(
@@ -2004,8 +1730,6 @@ def _q_ts_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure_shipped(spark)
     import datetime as dt
 
-    from rlv import table_files as TF
-
     out = _enc_typed_orders(spark, sf_dir)
     got = TF.scan_table_files_where(
         spark, out,
@@ -2028,8 +1752,6 @@ def _q_float_pred_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     float VALUES' bit-exactness and IN-list/zero semantics are
     pytest-drilled: tests/test_table_files.py typed-operators)."""
     _ensure_shipped(spark)
-    from rlv import table_files as TF
-
     out = _enc_typed_orders(spark, sf_dir)
     got = TF.scan_table_files_where(
         spark, out,
@@ -2047,8 +1769,6 @@ def _q_ts_group_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     value aggregates ride the plain-int plane.  Epoch-bigint output keys
     make the oracle compare exact."""
     _ensure_shipped(spark)
-    from rlv import table_files as TF
-
     out = _enc_typed_orders(spark, sf_dir)
     got = TF.agg_table_files_by(
         spark, out, "o_orderkey", "o_orderdate",
@@ -2066,33 +1786,18 @@ def _enc_dec_lineitem(spark: SparkSession, sf_dir: str) -> str:
     lineitem with its currency doubles DECLARED decimal(scale 2) — the
     plane stores the exact scaled integers, so sums push down exactly —
     plus the shipdate timestamp and a synthesized unique order column."""
-    import tempfile
-
-    import duckdb
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_decq_")
-    src = duckdb.sql(
+    return _encode_duck(
+        spark, "rlv_decq_",
         "SELECT row_number() OVER (ORDER BY l_orderkey, l_linenumber) "
         "  AS row_ord, l_orderkey, l_quantity, l_extendedprice, "
         "  l_shipdate, l_returnflag "
-        f"FROM read_parquet('{sf_dir}/lineitem.parquet')"
-    ).arrow()
-    import pyarrow.parquet as pq
-
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/lineitem.parquet')",
         order_col="row_ord",
         int_cols=["row_ord", "l_orderkey", "l_quantity",
                   "l_extendedprice", "l_shipdate"],
         str_cols=["l_returnflag"],
         decimal_cols={"l_quantity": 2, "l_extendedprice": 2},
-        rows_per_block=2048, num_tasks=2,
     )
-    return out
 
 
 def _q_dec_sum_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2106,8 +1811,6 @@ def _q_dec_sum_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     in DuckDB."""
     _ensure_shipped(spark)
     import datetime as dt
-
-    from rlv import table_files as TF
 
     out = _enc_dec_lineitem(spark, sf_dir)
     got = TF.agg_table_files_where(
@@ -2135,8 +1838,6 @@ def _q_dec_group_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly equal to SQL's."""
     _ensure_shipped(spark)
     import datetime as dt
-
-    from rlv import table_files as TF
 
     out = _enc_dec_lineitem(spark, sf_dir)
     got = TF.agg_table_files_by(
@@ -2167,16 +1868,8 @@ def _q_where_group_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     conjunctive aggregate — partial blocks decode only the predicates not
     full-matching there.  The oracle is the plain SQL GROUP BY under the
     stacked WHERE."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_wgag_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_wgag_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS custkey_n, "
@@ -2187,16 +1880,10 @@ def _q_where_group_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "END AS tag_n, "
         "CASE WHEN o_orderkey % 3 = 1 THEN NULL "
         "     ELSE CAST(o_totalprice * 100 AS BIGINT) END AS cents_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "custkey_n", "cents_n"],
         str_cols=["pri_n", "tag_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.agg_table_files_by(
         spark, out, "cents_n", "pri_n",
@@ -2223,12 +1910,8 @@ def _q_ctas_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     source derivation — filter exactness, NULL preservation, and width
     restore THROUGH encode → scan → re-encode → scan."""
     _ensure_shipped(spark)
-    import tempfile
-
     import duckdb
     import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
 
     out = tempfile.mkdtemp(prefix="rlv_ctas_q_")
     src = duckdb.sql(
@@ -2280,12 +1963,8 @@ def _q_clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     zone maps from useless (every block spans the range) to
     O(selectivity).  The oracle is the plain SELECT-WHERE."""
     _ensure_shipped(spark)
-    import tempfile
-
     import duckdb
     import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
 
     out = tempfile.mkdtemp(prefix="rlv_clu_q_")
     src = duckdb.sql(
@@ -2325,30 +2004,16 @@ def _q_pushdown_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-semantics surface (NULL pred never matches; count(v)/sum/min/max
     skip NULL values) rides through the validity plane.  The oracle is the
     plain SQL aggregate over the same derivation."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_agg_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_agg_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS custkey_n, "
         "CASE WHEN o_orderkey % 3 = 1 THEN NULL "
         "     ELSE CAST(o_totalprice * 100 AS BIGINT) END AS cents_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "custkey_n", "cents_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.agg_table_files(spark, out, "cents_n", "custkey_n", 100, 499)
     return got.select(
@@ -2372,30 +2037,16 @@ def _q_group_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     column-sorted row compare never orders None against str); NULL values
     are skipped by n_vals/sum/min/max via the validity plane.  The oracle
     is the plain SQL GROUP BY over the same derivation."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_gagg_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_gagg_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 11 = 5 THEN NULL ELSE o_orderpriority END "
         "  AS pri_n, "
         "CASE WHEN o_orderkey % 3 = 1 THEN NULL "
         "     ELSE CAST(o_totalprice * 100 AS BIGINT) END AS cents_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "cents_n"], str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.agg_table_files_by(
         spark, out, "cents_n", "pri_n",
@@ -2425,8 +2076,6 @@ def _q_compacted_group_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups.  The oracle is the plain SQL GROUP BY over the same
     derivation — compaction must be invisible to every result byte."""
     _ensure_shipped(spark)
-    import tempfile
-
     import duckdb
     import pyarrow.parquet as pq
 
@@ -2481,28 +2130,14 @@ def _q_dict_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate column is NULLABLE; NULL projects as '~null~' in BOTH engines
     (driver's column-sorted compare never orders None against str).  Oracle
     = plain SELECT DISTINCT over the same derivation."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_dist_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_dist_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 5 = 3 THEN NULL ELSE o_orderpriority END "
         "  AS pri_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey"], str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.distinct_table_files(spark, out, "pri_n")
     return got.select(
@@ -2521,27 +2156,13 @@ def _q_int_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     low-NDV so the no-expansion codecs actually get selected; NULL projects
     as -999999 in BOTH engines.  Oracle = plain SELECT DISTINCT over the
     same derivation."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_idist_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_idist_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 9 = 4 THEN NULL "
         "     ELSE o_custkey % 97 END AS code_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey", int_cols=["o_orderkey", "code_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.distinct_table_files(spark, out, "code_n")
     return got.select(
@@ -2557,30 +2178,16 @@ def _q_dict_in_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     nullable int) — blocks prune when their dictionary contains no literal;
     survivors match per-block code SETS.  One literal is absent from the
     data on purpose.  Oracle = plain SQL WHERE ... IN (...)."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_in_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_in_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 5 = 3 THEN NULL ELSE o_orderpriority END "
         "  AS pri_n, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS opt_custkey "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "opt_custkey"], str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     return TF.scan_table_files_in(
         spark, out, "pri_n", ["2-HIGH", "4-NOT SPECIFIED", "9-MISSING"],
@@ -2595,28 +2202,14 @@ def _q_topk_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     order column in the projection makes the tie-broken row set
     deterministic.  Oracle = plain ``WHERE col IS NOT NULL ORDER BY col
     [DESC], key LIMIT k`` per direction, UNION ALL."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_topk_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_topk_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 3 = 1 THEN NULL "
         "     ELSE o_custkey % 97 END AS v_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "v_n"], str_cols=[],
-        rows_per_block=2048, num_tasks=2,
     )
     asc = TF.topk_table_files(spark, out, "v_n", 25, ascending=True)
     desc = TF.topk_table_files(spark, out, "v_n", 25, ascending=False)
@@ -2635,30 +2228,16 @@ def _q_where_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     conjunctive scan.  Tie-heavy NULLABLE sort column, NULLABLE string
     predicate, both directions.  Oracle = plain ``WHERE ... AND col IS NOT
     NULL ORDER BY col [DESC], key LIMIT k`` per direction, UNION ALL."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_wtopk_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_wtopk_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 3 = 1 THEN NULL "
         "     ELSE o_custkey % 97 END AS v_n, "
         "CASE WHEN o_orderkey % 5 = 3 THEN NULL ELSE o_orderpriority END "
         "  AS pri_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "v_n"], str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     preds = [("in", "pri_n", ["1-URGENT", "4-NOT SPECIFIED"]),
              ("between", "o_orderkey", 1000, 14000)]
@@ -2681,30 +2260,16 @@ def _q_where_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics (the NULL row appears iff a MATCHING row is NULL, not
     whenever the column has NULLs).  NULL projects as '~null~' in both
     engines; the oracle is the plain SQL DISTINCT-WHERE."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_wdis_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_wdis_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS custkey_n, "
         "CASE WHEN o_orderkey % 5 = 3 THEN NULL ELSE o_orderpriority END "
         "  AS pri_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "custkey_n"], str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.distinct_table_files(
         spark, out, "pri_n",
@@ -2723,30 +2288,16 @@ def _q_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     min_int/max_int (documented asymmetry: int blocks store values, string
     blocks per-block ranks).  Oracle = plain SQL aggregates per column,
     UNION ALL."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_stats_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_stats_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS custkey_n, "
         "CASE WHEN o_orderkey % 5 = 3 THEN NULL ELSE o_orderpriority END "
         "  AS pri_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "custkey_n"], str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     return TF.stats_table_files(spark, out)
 
@@ -3311,40 +2862,22 @@ def _q_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DPP shape without the star-join restriction.  The fact key is
     NULLABLE (SQL inner join: NULL keys never match).  The oracle is the
     plain SQL join under both WHEREs."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    fact_out = tempfile.mkdtemp(prefix="rlv_fjf_q_")
-    dim_out = tempfile.mkdtemp(prefix="rlv_fjd_q_")
-    fact = duckdb.sql(
+    fact_out = _encode_duck(
+        spark, "rlv_fjf_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS ck, "
         "CASE WHEN o_orderkey % 3 = 1 THEN NULL "
         "     ELSE o_orderkey % 1000 END AS total_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    pq.write_table(fact, f"{fact_out}/_src.parquet", row_group_size=2048)
-    TF.encode_table_files(
-        spark, [f"{fact_out}/_src.parquet"], fact_out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "ck", "total_n"],
-        rows_per_block=2048, num_tasks=2,
     )
-    dim = duckdb.sql(
+    dim_out = _encode_duck(
+        spark, "rlv_fjd_q_",
         "SELECT c_custkey AS ck, c_nationkey AS nat "
-        f"FROM read_parquet('{sf_dir}/customer.parquet') ORDER BY c_custkey"
-    ).arrow()
-    pq.write_table(dim, f"{dim_out}/_src.parquet", row_group_size=2048)
-    TF.encode_table_files(
-        spark, [f"{dim_out}/_src.parquet"], dim_out,
-        order_col="ck", int_cols=["ck", "nat"],
-        rows_per_block=2048, num_tasks=1,
+        f"FROM read_parquet('{sf_dir}/customer.parquet') ORDER BY c_custkey",
+        order_col="ck", int_cols=["ck", "nat"], num_tasks=1,
     )
     got = TF.join_table_files(
         spark, fact_out, dim_out, on="ck",
@@ -3371,16 +2904,8 @@ def _q_or_of_and(spark: SparkSession, sf_dir: str) -> DataFrame:
     With r4's AND-of-OR this closes every one-alternation WHERE clause.
     The oracle is the plain SQL ``(a AND b) OR c`` under a top-level
     conjunct."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_ooa_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_ooa_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS custkey_n, "
@@ -3389,15 +2914,9 @@ def _q_or_of_and(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CASE WHEN o_orderkey % 6 = 2 THEN NULL "
         "     ELSE 'grp' || lpad(CAST(o_custkey % 100 AS VARCHAR), 3, '0') "
         "END AS tag_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "custkey_n"], str_cols=["pri_n", "tag_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.scan_table_files_where(
         spark, out,
@@ -3424,31 +2943,17 @@ def _q_dict_contains_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload IO, survivors match per-block rank sets.  SQL
     ``tag LIKE '%p0%' AND tag LIKE '%5'`` under binary semantics; NULL
     never matches."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_dcs_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_dcs_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS opt_custkey, "
         "CASE WHEN o_orderkey % 6 = 2 THEN NULL "
         "     ELSE 'grp' || lpad(CAST(o_custkey % 100 AS VARCHAR), 3, '0') "
         "END AS tag_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "opt_custkey"], str_cols=["tag_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.scan_table_files_where(
         spark, out,
@@ -3473,30 +2978,16 @@ def _q_str_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     order column projected, so the selected row SET is deterministic
     (``ORDER BY pri_n, o_orderkey LIMIT k``); NULLs excluded as in SQL
     ORDER BY ... LIMIT under a NOT NULL filter."""
-    _ensure_shipped(spark)
-    import tempfile
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from rlv import table_files as TF
-
-    out = tempfile.mkdtemp(prefix="rlv_stk_q_")
-    src = duckdb.sql(
+    out = _encode_duck(
+        spark, "rlv_stk_q_",
         "SELECT o_orderkey, "
         "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END "
         "  AS custkey_n, "
         "CASE WHEN o_orderkey % 5 = 3 THEN NULL ELSE o_orderpriority END "
         "  AS pri_n "
-        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey"
-    ).arrow()
-    src_path = f"{out}/_src.parquet"
-    pq.write_table(src, src_path, row_group_size=2048)
-    TF.encode_table_files(
-        spark, [src_path], out,
+        f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey",
         int_cols=["o_orderkey", "custkey_n"], str_cols=["pri_n"],
-        rows_per_block=2048, num_tasks=2,
     )
     got = TF.topk_table_files(
         spark, out, "pri_n", 400, ascending=True,

@@ -6,8 +6,8 @@ Cluster:
         [--tasks N] [--no-resume] [--verify]
 
 Sandbox (local[N] stands in for N executors):
-    python jobs/encode_job.py --input /tmp/rlv_bench/tokens_r480000_s42 \
-        --output /tmp/enc --cpus 32 --verify
+    python jobs/encode_job.py --input <tokens parquet dir> \
+        --output /tmp/enc --cpus 4 --verify
 
 Build the zip for --py-files with:  python -m zipfile -c rlv.zip rlv
 The job runs the python-native scan (rlv.engine_files): Spark schedules

@@ -43,7 +43,8 @@ Cluster:
          their own pruned scans; broadcast + runtime filter decided from
          the format's metadata)
 
-Sandbox: python jobs/query_job.py <action> ... --cpus 32
+Sandbox: python jobs/query_job.py <action> ... [--cpus N]
+(without --cpus the session is Spark's default, local[*]: all cores)
 """
 
 from __future__ import annotations

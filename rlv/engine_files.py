@@ -690,6 +690,7 @@ def verify_files_dataset(
     no_pieces: list[str] = []
     live = live_splits(out_dir)  # compacted rows have no file of their own
     if live is not None:
+        live_block_files(out_dir, live)
         for rec in live.to_dict("records"):
             # a recorded-but-EMPTY pieces list ("[]") is as lineage-less as a
             # missing one — handing it to the worker would concat zero tables
@@ -858,18 +859,7 @@ def decode_files_dataset(
     blocks_dir = f"{enc_dir}/blocks"
     live = live_splits(enc_dir)
     if live is not None:
-        # manifest-driven file set; a live row without its data file is an
-        # integrity violation — exporting around it would silently drop docs
-        files = sorted(
-            os.path.join(blocks_dir, f"{sid}.parquet")
-            for sid in live["split_id"].astype(str)
-        )
-        lost = [f for f in files if not os.path.exists(f)]
-        if lost:
-            raise FileNotFoundError(
-                f"manifest lists live splits whose blocks files are missing: "
-                f"{[os.path.basename(f) for f in lost[:5]]}"
-            )
+        files = live_block_files(enc_dir, live)
     else:
         files = sorted(
             os.path.join(blocks_dir, f)
@@ -1024,6 +1014,26 @@ def live_splits(out_dir: str):
     if pdf is None:
         return None
     return pdf[pdf["status"].isin(["done", "verified"])]
+
+
+def live_block_files(out_dir: str, live) -> list[str]:
+    """Sorted blocks files of ``live``, the rows :func:`live_splits`
+    returned for ``out_dir``, checked on the driver before any job reads
+    them.  A live row whose blocks file is missing is an integrity
+    violation: verifying or exporting around it would drop its rows, and a
+    worker opening it would fail only with a wrapped Spark error.  Raises
+    FileNotFoundError naming the missing files."""
+    files = sorted(
+        os.path.join(out_dir, "blocks", f"{sid}.parquet")
+        for sid in live["split_id"].astype(str)
+    )
+    lost = [os.path.basename(f) for f in files if not os.path.exists(f)]
+    if lost:
+        raise FileNotFoundError(
+            f"manifest lists live splits whose blocks files are missing "
+            f"under {out_dir}/blocks: {lost[:5]}"
+        )
+    return files
 
 
 def grouped_slices(tbl):

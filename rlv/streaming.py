@@ -215,36 +215,20 @@ def _plan_batch_files(files: list[str], split_target_bytes: int) -> list[dict]:
     return splits
 
 
-def encode_stream(
+def _file_stream(
     spark: SparkSession,
     input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str | None = None,
-    num_tasks: int | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-    schema=None,
-    split_target_bytes: int = 16 * 1024 * 1024,
+    checkpoint_dir: str,
+    schema,
+    available_now: bool,
+    max_files_per_trigger: int | None,
+    encode_files,
 ):
-    """Start (and, with ``available_now``, run to completion) the streaming
-    encode of ``input_dir`` into ``out_dir``.
-
-    ``schema`` (a StructType or DDL string) lets a continuous service start
-    on an EMPTY landing directory — the normal deployment order for ingest;
-    without it the schema is inferred from files already present, which
-    raises if there are none yet.
-
-    Splits are planned PER FILE (``_plan_batch_files``) so replayed files
-    produce identical split ids no matter how micro-batches regroup them —
-    the manifest layer of the exactly-once story depends on it.
-    ``num_tasks`` is retained for API compatibility; parallelism follows the
-    split count (file bytes / ``split_target_bytes``).
-
-    Returns the StreamingQuery (already awaited when ``available_now``).
-    """
-    if checkpoint_dir is None:
-        checkpoint_dir = f"{out_dir}/_stream_checkpoint"
-    _check_split_target(out_dir, split_target_bytes)
+    """The one file-stream driver of both planes: a parquet ``readStream``
+    over ``input_dir`` whose ``foreachBatch`` hands each micro-batch's
+    source file list (from ``input_file_name``) to ``encode_files``.
+    Without ``schema`` it is inferred from the files already present.
+    Returns the StreamingQuery, already awaited when ``available_now``."""
     if schema is None:
         try:
             schema = spark.read.parquet(input_dir).schema
@@ -266,12 +250,11 @@ def encode_stream(
             # the checkpoint is about to mark these consumed; skipping them
             # silently would be permanent data loss, so fail the batch
             raise FileNotFoundError(
-                f"streaming batch {batch_id}: source files missing: {missing[:3]}"
+                f"stream batch {batch_id} of {input_dir}: source files "
+                f"missing: {missing[:3]}"
             )
-        if not files:
-            return
-        splits = _plan_batch_files(files, split_target_bytes)
-        engine_files.encode_splits(spark, splits, out_dir, resume=True)
+        if files:
+            encode_files(files)
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -289,6 +272,46 @@ def encode_stream(
     return q
 
 
+def encode_stream(
+    spark: SparkSession,
+    input_dir: str,
+    out_dir: str,
+    checkpoint_dir: str | None = None,
+    available_now: bool = True,
+    max_files_per_trigger: int | None = None,
+    schema=None,
+    split_target_bytes: int = 16 * 1024 * 1024,
+):
+    """Start (and, with ``available_now``, run to completion) the streaming
+    encode of ``input_dir`` into ``out_dir``.
+
+    ``schema`` (a StructType or DDL string) lets a continuous service start
+    on an EMPTY landing directory — the normal deployment order for ingest;
+    without it the schema is inferred from files already present, which
+    raises if there are none yet.
+
+    Splits are planned PER FILE (``_plan_batch_files``) so replayed files
+    produce identical split ids no matter how micro-batches regroup them —
+    the manifest layer of the exactly-once story depends on it.
+    Parallelism follows the split count (file bytes /
+    ``split_target_bytes``).
+
+    Returns the StreamingQuery (already awaited when ``available_now``).
+    """
+    if checkpoint_dir is None:
+        checkpoint_dir = f"{out_dir}/_stream_checkpoint"
+    _check_split_target(out_dir, split_target_bytes)
+
+    def encode_files(files: list[str]) -> None:
+        splits = _plan_batch_files(files, split_target_bytes)
+        engine_files.encode_splits(spark, splits, out_dir, resume=True)
+
+    return _file_stream(
+        spark, input_dir, checkpoint_dir, schema, available_now,
+        max_files_per_trigger, encode_files,
+    )
+
+
 def table_encode_stream(
     spark: SparkSession,
     input_dir: str,
@@ -298,7 +321,6 @@ def table_encode_stream(
     str_cols: list[str] = (),
     rows_per_block: int = 4096,
     checkpoint_dir: str | None = None,
-    num_tasks: int | None = None,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
     schema=None,
@@ -328,35 +350,9 @@ def table_encode_stream(
 
     if checkpoint_dir is None:
         checkpoint_dir = f"{out_dir}/_table_stream_checkpoint"
-    if num_tasks is None:
-        num_tasks = 4 * spark.sparkContext.defaultParallelism
     _check_split_target(out_dir, split_target_bytes)
-    if schema is None:
-        try:
-            schema = spark.read.parquet(input_dir).schema
-        except Exception as e:
-            raise ValueError(
-                f"cannot infer the stream schema from {input_dir!r} (empty or "
-                "unreadable landing directory); pass schema= to start the "
-                "stream before the first file arrives"
-            ) from e
 
-    def process_batch(batch_df, batch_id: int) -> None:
-        files = [
-            _local_path(r[0])
-            for r in batch_df.select(F.input_file_name()).distinct().collect()
-        ]
-        files = [f for f in files if f]
-        missing = [f for f in files if not os.path.exists(f)]
-        if missing:
-            # the checkpoint is about to mark these consumed; skipping them
-            # silently would be permanent data loss, so fail the batch
-            raise FileNotFoundError(
-                f"table stream batch {batch_id}: source files missing: "
-                f"{missing[:3]}"
-            )
-        if not files:
-            return
+    def encode_files(files: list[str]) -> None:
         table_files.encode_table_files(
             spark,
             sorted(files),
@@ -365,7 +361,6 @@ def table_encode_stream(
             int_cols=list(int_cols),
             str_cols=list(str_cols),
             rows_per_block=rows_per_block,
-            num_tasks=num_tasks,
             resume=True,
             fsst_symbols=fsst_symbols,
             splits=_plan_batch_files(files, split_target_bytes),
@@ -373,17 +368,7 @@ def table_encode_stream(
             index_cols=index_cols,
         )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _file_stream(
+        spark, input_dir, checkpoint_dir, schema, available_now,
+        max_files_per_trigger, encode_files,
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        q = writer.start()
-    return q

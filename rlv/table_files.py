@@ -1206,6 +1206,7 @@ def verify_table_files(spark: SparkSession, enc_dir: str) -> dict:
     live = engine_files.live_splits(enc_dir)
     if live is None:
         return {"splits": 0, "rows": 0, "mismatches": 0}
+    engine_files.live_block_files(enc_dir, live)
     todo = []
     n_splits = 0
     for rec in live.to_dict("records"):
@@ -1217,7 +1218,8 @@ def verify_table_files(spark: SparkSession, enc_dir: str) -> dict:
         sid = str(rec["split_id"])
         n_splits += 1
         bpath = os.path.join(enc_dir, "blocks", f"{sid}.parquet")
-        if isinstance(pieces, dict) and len(pieces) > 1 and                 "split_seq" in pq.ParquetFile(bpath).schema_arrow.names:
+        if (isinstance(pieces, dict) and len(pieces) > 1
+                and "split_seq" in pq.ParquetFile(bpath).schema_arrow.names):
             # compacted bin: one verify task per absorbed segment, each
             # replaying exactly its own lineage against its own row
             # groups — a lost segment shows as a zero-row read whose
@@ -1333,15 +1335,9 @@ def decode_table_files(
     schema = _load_table_schema(enc_dir)
     if schema is None:
         raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
-    # the curated lost-file check runs BEFORE the task planner (which
-    # opens merged files' footers and would raise a raw not-found first)
-    files = _live_block_files(enc_dir)
-    lost = [f for f in files if not os.path.exists(f)]
-    if lost:
-        raise FileNotFoundError(
-            f"manifest lists live splits with missing blocks files: "
-            f"{[os.path.basename(f) for f in lost[:5]]}"
-        )
+    # the lost-file check runs BEFORE the task planner (which opens
+    # merged files' footers and would raise a raw not-found first)
+    _live_block_files(enc_dir)
     tasks = _query_tasks(enc_dir)
     os.makedirs(out_dir, exist_ok=True)
     if tasks.num_rows == 0:
@@ -1377,14 +1373,12 @@ def _live_block_files(enc_dir: str) -> list[str]:
     (:func:`zonemap_stats`, :func:`strdict_stats`,
     :func:`_restored_bytes`); query operators run per (file, segment)
     task from :func:`_query_tasks`.  Raises when the dataset has no
-    manifest yet."""
+    manifest yet or a live blocks file is missing
+    (:func:`rlv.engine_files.live_block_files`)."""
     live = engine_files.live_splits(enc_dir)
     if live is None:
         raise FileNotFoundError(f"no manifest at {enc_dir}")
-    return sorted(
-        os.path.join(enc_dir, "blocks", f"{sid}.parquet")
-        for sid in live["split_id"].astype(str)
-    )
+    return engine_files.live_block_files(enc_dir, live)
 
 
 def _query_tasks(enc_dir: str) -> pa.Table:

@@ -11,7 +11,7 @@ Two deterministic sources, no external data:
 * :func:`synth_token_pdf` / :func:`synth_tokens` — seeded numpy generator for
   the FIXTURES.md §2 row families (uniform / alternating / ramps / mixed
   geometric runs / low-ndv / high-entropy / zipf-skewed lengths), used by tests
-  and by ``bench.py`` to reach realistic scale.
+  and by ``perfbench`` to reach realistic scale.
 """
 
 from __future__ import annotations

@@ -104,3 +104,47 @@ def test_hour_bucket_floor_semantics_pre_epoch(spark):
         for us in (-1_800_000_000, 1_800_000_000, -1, -63_158_400_000_000)
     ]
     assert out == expect
+
+
+# The driver oracle-checks only the FIRST 50 entries of queries(), so its
+# order is part of the contract: a reorder silently drops surfaces from
+# the checked window.  Slot 47 (1-based) is compacted_group_agg.
+QUERY_ORDER = [
+    "count_pushdown", "minmax_pushdown", "table_encode_temporal",
+    "ts_range_scan", "float_pred_scan", "ts_group_rollup",
+    "dec_sum_pushdown", "dec_group_rollup", "str_minmax_pushdown",
+    "idx_point_lookup", "where_group_agg", "ctas_roundtrip",
+    "where_topk", "where_distinct", "int_in_scan", "null_pred_scan",
+    "neg_pred_agg", "or_pushdown", "ndv_pushdown", "multi_group_agg",
+    "enc_join", "multi_agg", "table_stats", "topk_pushdown",
+    "doc_length_stats", "token_heavy_hitters", "event_window_rollup",
+    "event_sessionize", "neardup_clusters", "stratified_sample",
+    "bigram_heavy_hitters", "event_asof_join", "sequence_pack",
+    "codec_mix", "fact_join", "or_of_and", "dict_contains_scan",
+    "str_topk", "table_encode_files", "table_encode_nullable",
+    "where_aggregate", "count_runs", "roundtrip_verify",
+    "codec_selection", "chunked_encode", "string_codec_verify",
+    "compacted_group_agg", "dedup_exact", "minhash_bands",
+    "zonemap_scan", "run_decompose", "maxrun_byte", "maxrun_normalize",
+    "compression_summary", "run_length_histogram",
+    "string_codec_shared", "ann_topk", "ann_lsh_buckets",
+    "text_quality", "doc_fingerprint", "simhash",
+    "simhash_neardup_pairs", "simhash_bucket_stats", "ngram_jaccard",
+    "lang_id", "embedding_neardup", "embedding_neardup_bucketed",
+    "ann_ivf_cells", "ann_ivf_cells_trained", "ann_ivf_topk",
+    "multimodal_features", "frame_sample", "stream_chunked_runs",
+    "minhash_neardup_pairs", "zonemap_scan_project",
+    "pushdown_aggregate", "group_agg_pushdown", "dict_filter_scan",
+    "dict_distinct", "int_distinct", "dict_in_scan", "dict_range_scan",
+    "dict_prefix_scan", "where_pushdown", "dpp_semijoin",
+    "clustered_scan",
+]
+
+
+def test_contract_shape_is_frozen():
+    """queries() keeps its frozen names and order, and oracle_sql() has
+    exactly the same keys (no Spark needed)."""
+    assert list(entrymod.queries()) == QUERY_ORDER
+    assert QUERY_ORDER[46] == "compacted_group_agg"
+    assert set(entrymod.oracle_sql()) == set(QUERY_ORDER)
+    assert len(entrymod.oracle_sql()) == len(QUERY_ORDER)

@@ -32,14 +32,14 @@ def test_stream_encodes_arriving_files(spark, landing, tmp_path):
     # first arrival: two files
     shutil.copy(files[0], d)
     shutil.copy(files[1], d)
-    streaming.encode_stream(spark, d, out, num_tasks=4)
+    streaming.encode_stream(spark, d, out)
     m1 = engine_files._read_manifest_pdf(out)
     docs1 = int(m1["n_docs"].sum())
     assert docs1 > 0
 
     # second arrival: one more file; only its splits are newly encoded
     shutil.copy(files[2], d)
-    streaming.encode_stream(spark, d, out, num_tasks=4)
+    streaming.encode_stream(spark, d, out)
     m2 = engine_files._read_manifest_pdf(out)
     assert int(m2["n_docs"].sum()) > docs1
     assert (m2["attempt"] == 1).all()  # nothing was re-encoded
@@ -72,13 +72,13 @@ def test_stream_restart_is_idempotent(spark, landing, tmp_path):
         if not os.path.exists(os.path.join(d, os.path.basename(f))):
             shutil.copy(f, d)
     out = str(tmp_path / "enc2")
-    streaming.encode_stream(spark, d, out, num_tasks=4)
+    streaming.encode_stream(spark, d, out)
     m1 = engine_files._read_manifest_pdf(out).sort_values("split_id")
     # re-run with a FRESH checkpoint: streaming re-delivers every file, but
     # the split manifest skips all done work (and a replay would rewrite
     # byte-identical blocks anyway)
     streaming.encode_stream(
-        spark, d, out, checkpoint_dir=str(tmp_path / "cp2"), num_tasks=4
+        spark, d, out, checkpoint_dir=str(tmp_path / "cp2")
     )
     m2 = engine_files._read_manifest_pdf(out).sort_values("split_id")
     assert (m2["attempt"] == 1).all()
@@ -282,7 +282,6 @@ def test_table_encode_stream_two_arrivals_and_restart(spark, tmp_path):
         int_cols=["o_orderkey", "o_custkey"],
         str_cols=["o_orderstatus"],
         rows_per_block=2048,
-        num_tasks=2,
     )
 
     # first arrival
@@ -355,7 +354,6 @@ def test_table_stream_typed_and_decimal_columns(spark, tmp_path):
         order_col="o_orderkey",
         int_cols=["o_orderkey", "o_orderdate", "o_totalprice"],
         rows_per_block=2048,
-        num_tasks=2,
         decimal_cols={"o_totalprice": 2},
     )
     streaming.table_encode_stream(spark, d, out, **kw)
@@ -390,9 +388,9 @@ def test_stream_split_target_pinned_to_dataset(spark, landing, tmp_path):
         if not os.path.exists(os.path.join(d, os.path.basename(f))):
             shutil.copy(f, d)
     out = str(tmp_path / "enc_tgt")
-    streaming.encode_stream(spark, d, out, num_tasks=4)
+    streaming.encode_stream(spark, d, out)
     with pytest.raises(ValueError, match="split_target_bytes"):
         streaming.encode_stream(
             spark, d, out, checkpoint_dir=str(tmp_path / "cp_tgt"),
-            num_tasks=4, split_target_bytes=32 * 1024 * 1024,
+            split_target_bytes=32 * 1024 * 1024,
         )

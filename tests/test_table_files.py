@@ -5086,3 +5086,39 @@ def test_random_clause_sweep_matches_sql(spark, tmp_path, dispatch):
         assert (ex["blocks_full"], ex["blocks_partial"]) == (
             classes.count("full"), classes.count("partial")
         ), (trial, preds, where)
+
+
+def test_lost_live_blocks_file_fails_on_the_driver(
+    spark, spark_job_ids, tok_dir, orders_dir, tmp_path
+):
+    """A live split whose blocks file is gone fails verify and decode on
+    BOTH planes with a FileNotFoundError naming that file, raised on the
+    driver before any Spark job starts (not a worker PythonException)."""
+    import os
+
+    tok_out = str(tmp_path / "tok_enc")
+    engine_files.encode_files_dataset(spark, tok_dir, tok_out, num_tasks=4)
+    tab_out = str(tmp_path / "tab_enc")
+    _encode(spark, orders_dir, tab_out)
+    calls = {
+        "token_verify": (tok_out, lambda: engine_files.verify_files_dataset(
+            spark, tok_dir, tok_out)),
+        "token_decode": (tok_out, lambda: engine_files.decode_files_dataset(
+            spark, tok_out, str(tmp_path / "tok_dec"))),
+        "table_verify": (tab_out, lambda: table_files.verify_table_files(
+            spark, tab_out)),
+        "table_decode": (tab_out, lambda: table_files.decode_table_files(
+            spark, tab_out, str(tmp_path / "tab_dec"))),
+    }
+    lost = {}
+    for out in (tok_out, tab_out):
+        live = engine_files.live_splits(out)
+        assert len(live) >= 2
+        lost[out] = f"{sorted(live['split_id'].astype(str))[1]}.parquet"
+        os.remove(f"{out}/blocks/{lost[out]}")
+    for name, (out, call) in calls.items():
+        def run():
+            with pytest.raises(FileNotFoundError, match=lost[out]):
+                call()
+
+        assert spark_job_ids(run, f"lost-{name}") == [], name
