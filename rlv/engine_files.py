@@ -891,69 +891,6 @@ def decode_files_dataset(
     }
 
 
-COUNT_SCHEMA = "split_id string, n_docs bigint, n_tokens bigint, n_runs bigint"
-
-
-def _count_runs_worker(task: dict) -> list[dict]:
-    """Per-split run counting straight off the parquet row groups — the
-    count_runs facet (rl_encoding.v:467-481) at scan speed: the JVM never
-    touches a token (the through-JVM Arrow transfer of the list column costs
-    more than the whole computation)."""
-    import pyarrow.parquet as pq
-
-    from rlv.engine import _list_offsets_values
-
-    pieces = json.loads(task["pieces"])
-    by_file: dict[str, list[int]] = {}
-    for path, rg in pieces:
-        by_file.setdefault(path, []).append(rg)
-    n_docs = n_tokens = n_runs = 0
-    for path, rgs in by_file.items():
-        tbl = pq.ParquetFile(path).read_row_groups(
-            rgs, columns=["tokens"], use_threads=False
-        ).combine_chunks()
-        offs, vals = _list_offsets_values(tbl.column("tokens"))
-        a = vals[offs[0]:offs[-1]]
-        o = offs - offs[0]
-        n_docs += o.size - 1
-        n_tokens += int(a.size)
-        if a.size:
-            boundary = int(np.count_nonzero(a[1:] != a[:-1]))
-            doc_starts = o[1:-1]
-            # unique: empty docs repeat an offset but one position can
-            # only start one run
-            doc_starts = np.unique(doc_starts[doc_starts < a.size])
-            ds = doc_starts[doc_starts > 0]
-            # doc-start positions where values happen to be equal
-            # across the doc seam still start a new run
-            seam_equal = int(np.count_nonzero(a[ds] == a[ds - 1]))
-            n_runs += boundary + 1 + seam_equal
-    return [{
-        "split_id": task["split_id"],
-        "n_docs": n_docs,
-        "n_tokens": n_tokens,
-        "n_runs": n_runs,
-    }]
-
-
-def count_runs_files(
-    spark: SparkSession, input_dir: str, num_tasks: int | None = None
-) -> dict:
-    """Corpus-level run statistics via the python-native scan plane.
-    Returns {docs, tokens, runs}."""
-    if num_tasks is None:
-        num_tasks = 4 * spark.sparkContext.defaultParallelism
-    splits = plan_splits(input_dir, num_tasks)
-    rows = run_file_job(
-        spark, _split_tasks(splits), _count_runs_worker, COUNT_SCHEMA
-    ).toArrow().to_pylist()
-    return {
-        "docs": sum(r["n_docs"] for r in rows),
-        "tokens": sum(r["n_tokens"] for r in rows),
-        "runs": sum(r["n_runs"] for r in rows),
-    }
-
-
 def _split_manifest_path(out_dir: str) -> str:
     return f"{out_dir}/manifest"
 

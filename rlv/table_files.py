@@ -132,8 +132,6 @@ def _dec_alias_parts(alias: str) -> tuple[int, str] | None:
 
 def _arrow_type_of_alias(alias: str):
     """Arrow type a recorded alias decodes back to."""
-    import pyarrow as pa
-
     ts = _ts_alias_parts(alias)
     if ts:
         return pa.timestamp(ts[0], tz=ts[1])
@@ -222,8 +220,6 @@ def _plane_cast(col, alias: str | None):
     worker (values in), the verify worker (source side of the compare),
     and predicate-literal normalization.  NULLs stay NULLs; plain-int is
     the CHECKED Arrow cast (an out-of-range value raises, never wraps)."""
-    import pyarrow as pa
-
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     kind = _plane_kind(alias)
@@ -276,8 +272,6 @@ def _plane_cast(col, alias: str | None):
 def _restore_plane(arr, alias: str | None):
     """Inverse of :func:`_plane_cast`: one decoded int64 column back to its
     recorded source type, NULLs intact."""
-    import pyarrow as pa
-
     if alias is None or alias == "int64":
         return arr
     kind = _plane_kind(alias)
@@ -315,8 +309,6 @@ def _idx_key_array(valid_vals: np.ndarray):
     """Sorted-distinct index keys of one block's valid plane values, as an
     Arrow binary array (vectorized: flip sign bits, big-endian view, one
     buffer — no per-value Python)."""
-    import pyarrow as pa
-
     u = (
         np.unique(valid_vals.astype(np.int64, copy=False))
         ^ np.int64(-(2 ** 63))
@@ -369,7 +361,6 @@ def _block_string_codes(arr, symbols):
     """One string block -> (int code stream, STRDICT dictionary block, ndv,
     raw payload bytes).  Codes index the block's distinct values in bytewise
     sort order; everything runs as Arrow/numpy kernels."""
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     from rlv import blocks as B
@@ -978,8 +969,6 @@ def _decode_split_columns(btbl, side, schema: dict, symbols, split_seq: str):
     verify and decode workers (ints as int64, strings as binary; NULLs
     restored from the NULLW validity wrappers).  Raises on corrupt blocks;
     blocks of a column concatenate in block_idx order."""
-    import pyarrow as pa
-
     from rlv import blocks as B
 
     per_col: dict[str, list[tuple[int, bytes, int]]] = {}
@@ -1430,8 +1419,6 @@ def _typed_batch(cols: dict, schema, aliases: dict):
     inverse; every column is then cast to its field type.  Values not
     yet Arrow (Python lists) are built at the plane's int64 or at the
     field type."""
-    import pyarrow as pa
-
     arrays = []
     for f in schema:
         v = cols[f.name]
@@ -1448,8 +1435,6 @@ def _typed_batch(cols: dict, schema, aliases: dict):
 def _plane_array(vals: np.ndarray, valid: np.ndarray):
     """Decoded plane values as an int64 Arrow array, NULL where not
     ``valid``."""
-    import pyarrow as pa
-
     return pa.array(vals, pa.int64(),
                     mask=None if valid.all() else ~valid)
 
@@ -1459,8 +1444,6 @@ def _local_relation(spark: SparkSession, ddl: str, batches: list):
     until the caller's own operators, and no Python-worker stage.  Empty
     batches are dropped first: Spark 4.1 loses the rows that follow an
     empty batch inside an Arrow table's stream."""
-    import pyarrow as pa
-
     struct, schema = _arrow_schema(ddl)
     return spark.createDataFrame(
         pa.Table.from_batches([b for b in batches if b.num_rows], schema),
@@ -1520,7 +1503,11 @@ def _run_tasks(spark: SparkSession, enc_dir: str, tasks: pa.Table,
                reducer, specs: list[dict]):
     """Run a query operator, the block pipeline with its ``reducer``,
     over its :func:`_query_tasks` table, as a DataFrame of the reducer's
-    typed output (``reducer.ddl``).  A tiny plan (see
+    typed output (``reducer.ddl``) for the caller's own Spark operators:
+    the scan, GROUP BY, DISTINCT, ANALYZE and top-k, whose outputs grow
+    with rows or key NDV.  The aggregate, COUNT and MIN/MAX, whose
+    partials are at most tasks x value columns rows, fold them in this
+    process instead (:func:`_task_batches`).  A tiny plan (see
     :func:`_driver_local_batches`; an empty task list is one) runs in
     this process and returns a local relation built from the same Arrow
     batches: no Spark job until the caller's own operators, and never a
@@ -1532,6 +1519,22 @@ def _run_tasks(spark: SparkSession, enc_dir: str, tasks: pa.Table,
     if batches is None:
         return _spark_run(spark, enc_dir, tasks, reducer, specs)
     return _local_relation(spark, reducer.ddl, batches)
+
+
+def _task_batches(spark: SparkSession, enc_dir: str, tasks: pa.Table,
+                  reducer, specs: list[dict]) -> list:
+    """Every task's typed Arrow batch of ``reducer.ddl``, in this
+    process, for an operator that folds its partials here: a tiny plan's
+    in-process batches (:func:`_driver_local_batches`), else the one
+    Spark stage (:func:`_spark_run`) collected with ``toArrow()`` — one
+    job, and no second one to combine at most tasks x value columns
+    rows."""
+    schema = _arrow_schema(reducer.ddl)[1]
+    batches = _driver_local_batches(enc_dir, tasks, reducer, specs, schema)
+    if batches is None:
+        batches = _spark_run(spark, enc_dir, tasks, reducer,
+                             specs).toArrow().cast(schema).to_batches()
+    return batches
 
 
 def _spark_run(spark: SparkSession, enc_dir: str, tasks: pa.Table,
@@ -1774,7 +1777,6 @@ def _literals_matcher(values: tuple[bytes, ...]):
     """Per-block dictionary matcher for eq / IN-list literals: matching
     codes are the per-block ranks of the literals the dictionary contains."""
     def match(uniq) -> np.ndarray:
-        import pyarrow as pa
         import pyarrow.compute as pc
 
         # one is_in pass over the dictionary: O(ndv + literals), not a
@@ -1872,7 +1874,6 @@ def _str_range_matcher(lo_b: bytes, hi_b: bytes):
     Spark both default to): matching codes are the dictionary entries
     inside the closed range, computed vectorized over the (small) sidecar."""
     def match(uniq) -> np.ndarray:
-        import pyarrow as pa
         import pyarrow.compute as pc
 
         m = pc.and_(
@@ -1891,7 +1892,6 @@ def _str_prefix_matcher(prefix: bytes):
     and fail the equality).  The empty prefix matches every valid entry —
     SQL's ``LIKE '%'``."""
     def match(uniq) -> np.ndarray:
-        import pyarrow as pa
         import pyarrow.compute as pc
 
         if not prefix:
@@ -2033,7 +2033,7 @@ def _norm_preds(schema: dict, preds, _top: bool = True) -> list[dict]:
         "prefix": 3, "not_prefix": 3, "isnull": 2, "notnull": 2,
         "contains": 3, "not_contains": 3, "suffix": 3, "not_suffix": 3,
     }
-    for p in preds:
+    for p in list(preds or ()):
         if not isinstance(p, (tuple, list)) or len(p) < 2:
             raise ValueError(f"malformed predicate {p!r}")
         kind, col = p[0], p[1]
@@ -2046,7 +2046,7 @@ def _norm_preds(schema: dict, preds, _top: bool = True) -> list[dict]:
                     f"malformed predicate {p!r}: 'and' takes one list of "
                     "conjunct predicates"
                 )
-            specs.extend(_norm_preds(schema, list(col), _top=_top))
+            specs.extend(_norm_preds(schema, col, _top=_top))
             continue
         if kind == "or":
             if len(p) != 2 or not isinstance(col, (tuple, list)):
@@ -2058,7 +2058,7 @@ def _norm_preds(schema: dict, preds, _top: bool = True) -> list[dict]:
             for b in col:
                 if isinstance(b, (tuple, list)) and len(b) == 2 \
                         and b[0] == "and":
-                    conj = _norm_preds(schema, list(b[1]), _top=False)
+                    conj = _norm_preds(schema, b[1], _top=False)
                     if any(c["kind"] in ("or", "andgroup") for c in conj):
                         raise ValueError(
                             "OR branches nest at most one AND level: "
@@ -2242,7 +2242,7 @@ def scan_table_files_where(
     schema = _load_table_schema(enc_dir)
     if schema is None:
         raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
-    specs = _norm_preds(schema, list(preds))
+    specs = _norm_preds(schema, preds)
     return _run_scan_tasks(spark, enc_dir, schema,
                            _where_out_names(schema, specs, columns), specs)
 
@@ -2574,7 +2574,7 @@ def ctas_table_files(
             "against another run's stage would mix lineages)"
         )
     out_names = _where_out_names(
-        schema, _norm_preds(schema, list(preds)), columns
+        schema, _norm_preds(schema, preds), columns
     )
     order_col = schema["order_col"]
     if cluster_by is None:
@@ -2661,7 +2661,6 @@ def strdict_stats(enc_dir: str, col: str, value: str) -> dict:
             f"{col!r} is not a string column of this dataset "
             f"(str_cols={schema['str_cols']})"
         )
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     syms = engine_files._load_symbols(enc_dir)
@@ -3406,8 +3405,6 @@ class _ScanReducer(_Reducer):
         """The projected columns at the rows ``seg_mask(keys, offsets)``
         keeps in each segment's run of ``keys``: plane columns as int64
         Arrow arrays, string columns as binary ones."""
-        import pyarrow as pa
-
         outs: dict[str, list] = {c: [] for c in self.cols}
         for seq, skeys in _segments(keys):
             offs = _block_offsets(plan, skeys)
@@ -3440,8 +3437,6 @@ def _gather_strings(plan, col: str, keys: list, offs: np.ndarray,
     """Kept rows (``m``) of one segment's decoded string column as one
     Arrow binary array: per block, the kept codes index the block's
     dictionary; a NULL code gathers a NULL value."""
-    import pyarrow as pa
-
     parts = []
     for i, key in enumerate(keys):
         sl = slice(int(offs[i]), int(offs[i + 1]))
@@ -3472,14 +3467,15 @@ class _AggReducer(_Reducer):
     classifies and masks for ALL value columns: k aggregate sets cost one
     predicate evaluation, not k.  Decimal-declared value columns
     (:func:`_uniform_dec_parts`) restore min/max to their source float
-    type in the worker; plain-int ones stay bigint."""
+    type in the worker; plain-int ones stay bigint.  ``sum_val`` is in
+    SQL units (:func:`_sql_sums`), so partials fold by plain sums."""
 
     def __init__(self, schema: dict, value_cols: list[str]):
         self.cols = list(value_cols)
-        mm, self.aliases = _agg_minmax(schema, self.cols)
+        self.scale, mm, self.aliases = _agg_fields(schema, self.cols)
         self.ddl = (
             "val_col string, n_rows bigint, n_vals bigint, "
-            f"sum_val decimal(38,0), min_val {mm}, max_val {mm}"
+            f"sum_val decimal(38,{self.scale}), min_val {mm}, max_val {mm}"
         )
 
     def need(self, plan, keys):
@@ -3538,9 +3534,10 @@ class _AggReducer(_Reducer):
         return {
             "val_col": self.cols,
             "n_rows": [n_rows] * len(self.cols),
-            **{f: [stats[vc][i] for vc in self.cols]
-               for i, f in enumerate(("n_vals", "sum_val", "min_val",
-                                      "max_val"))},
+            **_sql_sums({f: [stats[vc][i] for vc in self.cols]
+                         for i, f in enumerate(("n_vals", "sum_val",
+                                                "min_val", "max_val"))},
+                        self.scale),
         }
 
 
@@ -3564,11 +3561,12 @@ def agg_table_files(
     O(selectivity) — the same shape a warehouse gets from page-stats
     pushdown, served by our metadata.
 
-    One task per (blocks file, segment) emits a partial (in-process on
-    the driver for a tiny plan, :func:`_run_tasks`); a K-row (K = tasks)
-    final combine produces the row — the only data ever shuffled.
-    ``sum_val`` is decimal(38,0): per-block sums are exact Python ints
-    (:func:`rlv.blocks.exact_sum_i64`), and 38 digits absorbs any
+    One task per (blocks file, segment) emits one partial row, and this
+    process folds the partials (:func:`_task_batches`): a tiny plan runs
+    in-process with no Spark job, any other as one Spark stage, and no
+    row is shuffled.  ``sum_val`` is decimal(38,0): per-block sums are
+    exact Python ints (:func:`rlv.blocks.exact_sum_i64`), and 38 digits
+    absorbs any
     real-world table (10^38 > rows * max|int64|), where a bigint
     accumulator could wrap.  SQL NULL semantics throughout: NULL predicate
     rows never match; ``n_vals``/``sum``/``min``/``max`` skip NULL values;
@@ -3612,63 +3610,48 @@ def agg_table_files_where(
     for vc in value_cols:
         schema = _require_int_col(enc_dir, vc)
         _require_summable(schema, vc)
-    specs = _norm_preds(schema, list(preds))
-    tasks = _query_tasks(enc_dir)
+    specs = _norm_preds(schema, preds)
     reducer = _AggReducer(schema, value_cols)
-    from pyspark.sql import functions as F
-
-    if tasks.num_rows == 0:  # no task emits a partial: fold the identity row
-        partials = _local_relation(spark, reducer.ddl, [_typed_batch(
-            reducer.fold(None, [], None), _arrow_schema(reducer.ddl)[1],
-            reducer.aliases,
-        )])
-    else:
-        partials = _run_tasks(spark, enc_dir, tasks, reducer, specs)
-    combined = partials.groupBy("val_col").agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_vals").alias("n_vals"),
-        F.sum("sum_val").alias("_raw_sum"),
-        F.min("min_val").alias("min_val"),
-        F.max("max_val").alias("max_val"),
-    ).select(
-        "val_col",
-        F.coalesce(F.col("n_rows"), F.lit(0)).cast("bigint").alias("n_rows"),
-        F.coalesce(F.col("n_vals"), F.lit(0)).cast("bigint").alias("n_vals"),
-        F.when(F.coalesce(F.col("n_vals"), F.lit(0)) == 0, F.lit(None))
-        .otherwise(F.col("_raw_sum"))
-        .cast("decimal(38,0)")
-        .alias("_sum"),
-        "min_val",
-        "max_val",
-    ).select(
-        "val_col", "n_rows", "n_vals",
-        _sum_out(schema, value_cols, F.col("_sum")), "min_val", "max_val",
-    )
-    return combined if multi else combined.drop("val_col")
+    out_schema = _arrow_schema(reducer.ddl)[1]
+    # the identity row keeps one output row per value column when no
+    # task emits a partial
+    parts = pa.Table.from_batches([
+        _typed_batch(reducer.fold(None, [], None), out_schema,
+                     reducer.aliases),
+        *_task_batches(spark, enc_dir, _query_tasks(enc_dir), reducer,
+                       specs),
+    ], out_schema)
+    out = parts.group_by("val_col", use_threads=False).aggregate([
+        ("n_rows", "sum"), ("n_vals", "sum"), ("sum_val", "sum"),
+        ("min_val", "min"), ("max_val", "max"),
+    ]).rename_columns(out_schema.names).cast(out_schema)
+    df = _local_relation(spark, reducer.ddl, out.to_batches())
+    return df if multi else df.drop("val_col")
 
 
-def _sum_out(schema: dict, value_cols: list[str], total):
-    """``sum_val`` in SQL units from an aggregate's exact plane sum
-    ``total``: decimal(38,0), or decimal(38,s) for decimal-declared
-    value columns (their plane holds the values scaled by 10^s).  Min
-    and max need nothing here: they arrive restored (:func:`_agg_minmax`)."""
-    from pyspark.sql import functions as F
+def _sql_sums(cols: dict, scale: int) -> dict:
+    """An aggregate reducer's output ``cols`` with its exact plane sums
+    (ints) turned into SQL's ``decimal(38,scale)`` ``sum_val``: NULL
+    where ``n_vals`` is 0.  A decimal-declared column's plane holds its
+    values times 10^scale, so the decimal(38,0) plane sums are viewed at
+    the scale, never divided: no digit can round."""
+    cols["sum_val"] = pa.array(
+        [s if n else None for s, n in zip(cols["sum_val"], cols["n_vals"])],
+        pa.decimal128(38, 0),
+    ).view(pa.decimal128(38, scale))
+    return cols
 
+
+def _agg_fields(schema: dict, value_cols: list[str]) -> tuple:
+    """``(sum scale, min/max type, restore aliases)`` of an aggregate's
+    value fields: decimal-declared value columns sum at their scale and
+    restore min/max to their source float type in the worker; plain-int
+    ones sum at scale 0 and keep bigint plane min/max."""
     dec = _uniform_dec_parts(schema, value_cols)
-    total = total.cast("decimal(38,0)")
-    if dec is not None:
-        total = (total / F.lit(10 ** dec[0])).cast(f"decimal(38,{dec[0]})")
-    return total.alias("sum_val")
-
-
-def _agg_minmax(schema: dict, value_cols: list[str]) -> tuple[str, dict]:
-    """Type and restore aliases of an aggregate's ``min_val``/``max_val``
-    fields: decimal-declared value columns restore to their source float
-    type in the worker, plain-int ones stay bigint plane values."""
-    if _uniform_dec_parts(schema, value_cols) is None:
-        return "bigint", {}
+    if dec is None:
+        return 0, "bigint", {}
     alias = _col_alias(schema, value_cols[0])
-    return (_typed_field_type(schema, value_cols[0]),
+    return (dec[0], _typed_field_type(schema, value_cols[0]),
             {"min_val": alias, "max_val": alias})
 
 
@@ -3727,8 +3710,9 @@ def count_table_files_where(spark: SparkSession, enc_dir: str, preds):
     With NO predicates (``preds`` None/empty), ``SELECT count(*)`` is
     served from the MANIFEST alone — live splits' recorded row counts,
     zero Spark jobs, zero file IO (the statistics-served count a
-    warehouse gives you).  A tiny predicate plan (:func:`_run_tasks`)
-    counts on the driver and folds there too: zero Spark jobs as well."""
+    warehouse gives you).  With predicates, this process sums the
+    per-task counts (:func:`_task_batches`): a tiny plan counts
+    in-process with zero Spark jobs, any other runs one Spark stage."""
     schema = _load_table_schema(enc_dir)
     if schema is None:
         raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
@@ -3739,23 +3723,13 @@ def count_table_files_where(spark: SparkSession, enc_dir: str, preds):
             else int(sum(int(n) for n in live["n_docs"]))
         )
         return _one_row_frame(spark, {"n_rows": total}, "n_rows bigint")
-    specs = _norm_preds(schema, list(preds))
+    specs = _norm_preds(schema, preds)
     reducer = _CountReducer(specs)
-    tasks = _query_tasks(enc_dir)
-    from pyspark.sql import functions as F
-
-    # a tiny plan folds on the driver: a local one-row frame, 0 Spark jobs
-    local = _driver_local_batches(enc_dir, tasks, reducer, specs,
-                                  _arrow_schema(reducer.ddl)[1])
-    if local is not None:
-        return _one_row_frame(spark, {"n_rows": sum(
-            b.column("n_rows")[0].as_py() for b in local
-        )}, reducer.ddl)
-    parts = _spark_run(spark, enc_dir, tasks, reducer, specs)
-    return parts.agg(
-        F.coalesce(F.sum("n_rows"), F.lit(0)).cast("bigint")
-        .alias("n_rows")
-    )
+    batches = _task_batches(spark, enc_dir, _query_tasks(enc_dir), reducer,
+                            specs)
+    return _one_row_frame(spark, {"n_rows": sum(
+        n for b in batches for n in b.column("n_rows").to_pylist()
+    )}, reducer.ddl)
 
 
 class _MinMaxReducer(_Reducer):
@@ -3813,27 +3787,50 @@ def minmax_table_files_where(spark: SparkSession, enc_dir: str,
     at all: pass the order column's full range) the answer folds almost
     entirely from metadata; only partial (boundary) blocks decode.
 
+    Each task emits one ``(min_val, max_val)`` partial, and this process
+    folds them (:func:`_task_batches`, :func:`_sql_extreme`): a tiny plan
+    runs in-process with zero Spark jobs, any other as one Spark stage.
+
     A STRING value column routes through the DISTINCT pipe instead: full
     blocks fold their dictionary sidecars (the per-block sorted-distinct
     valid values — the string zone map), partial blocks decode and mask;
     min/max are the binary-collation fold over the distinct set."""
-    from pyspark.sql import functions as F
-
     schema = _load_table_schema(enc_dir)
     if schema is not None and value_col in schema.get("str_cols", ()):
+        from pyspark.sql import functions as F
+
         dv = distinct_table_files(spark, enc_dir, value_col, preds=preds)
         return dv.agg(
             F.min(value_col).alias("min_val"),
             F.max(value_col).alias("max_val"),
         )
     schema = _require_int_col(enc_dir, value_col)
-    specs = _norm_preds(schema, list(preds))
-    parts = _run_tasks(spark, enc_dir, _query_tasks(enc_dir),
-                       _MinMaxReducer(schema, value_col), specs)
-    return parts.agg(
-        F.min("min_val").alias("min_val"),
-        F.max("max_val").alias("max_val"),
+    specs = _norm_preds(schema, preds)
+    reducer = _MinMaxReducer(schema, value_col)
+    out_schema = _arrow_schema(reducer.ddl)[1]
+    parts = pa.Table.from_batches(
+        _task_batches(spark, enc_dir, _query_tasks(enc_dir), reducer, specs),
+        out_schema,
     )
+    return _local_relation(spark, reducer.ddl, pa.table({
+        "min_val": _sql_extreme(parts.column("min_val"), min),
+        "max_val": _sql_extreme(parts.column("max_val"), max),
+    }, schema=out_schema).to_batches())
+
+
+def _sql_extreme(col, pick):
+    """The value SQL's MIN (``pick=min``) or MAX (``pick=max``) takes from
+    the partials ``col``, as a one-value Arrow column: NULLs skipped, NaN
+    of either sign above +inf, -0.0 tied with 0.0 (the first partial wins
+    a tie).  Arrow's own min/max skip NaN, so they cannot fold floats;
+    the winner is taken from ``col`` itself, so a NaN payload and a
+    float32 keep their bits."""
+    vals = col.to_pylist()
+    idx = [i for i, v in enumerate(vals) if v is not None]
+    if not idx:
+        return pa.nulls(1, col.type)
+    return col.take([pick(idx, key=lambda i: (
+        (1, 0) if vals[i] != vals[i] else (0, vals[i])))])
 
 
 def _group_seg_agg(keys: np.ndarray, vals: np.ndarray,
@@ -3908,13 +3905,13 @@ class _GroupReducer(_Reducer):
         self.group_cols = list(group_cols)
         self.str_groups = set(group_cols) & set(schema["str_cols"])
         self.cols = list(dict.fromkeys([value_col, *group_cols]))
-        mm, mm_aliases = _agg_minmax(schema, [value_col])
+        self.scale, mm, mm_aliases = _agg_fields(schema, [value_col])
         self.aliases = {**_plane_aliases(schema, self.group_cols),
                         **mm_aliases}
         self.ddl = (
             f"{_typed_ddl(schema, self.group_cols)}, n_rows bigint, "
-            f"n_vals bigint, sum_val decimal(38,0), min_val {mm}, "
-            f"max_val {mm}"
+            f"n_vals bigint, sum_val decimal(38,{self.scale}), "
+            f"min_val {mm}, max_val {mm}"
         )
 
     def _single(self, plan, keys) -> set:
@@ -4018,7 +4015,7 @@ class _GroupReducer(_Reducer):
         for i, f in enumerate(("n_rows", "n_vals", "sum_val", "min_val",
                                "max_val")):
             cols[f] = [acc[t][i] for t in groups]
-        return cols
+        return _sql_sums(cols, self.scale)
 
 
 def agg_table_files_by(
@@ -4091,7 +4088,7 @@ def agg_table_files_by(
     elif lo is not None or hi is not None:
         raise ValueError("lo/hi require pred_col")
     else:
-        specs = _norm_preds(schema, list(preds)) if preds else []
+        specs = _norm_preds(schema, preds) if preds else []
     from pyspark.sql import functions as F
 
     partials = _run_tasks(
@@ -4099,21 +4096,14 @@ def agg_table_files_by(
         _GroupReducer(schema, value_col, group_cols), specs,
     )
     # the keys arrive restored, so Spark's own grouping merges -0.0 with
-    # 0.0 and pools every NaN, as SQL does
+    # 0.0 and pools every NaN, as SQL does; a partial's sum_val is NULL
+    # when it has no valid value, so the sum is SQL's
     return partials.groupBy(*group_cols).agg(
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_vals").alias("n_vals"),
-        F.sum("sum_val").alias("_sum"),
+        F.sum("sum_val").alias("sum_val"),
         F.min("min_val").alias("min_val"),
         F.max("max_val").alias("max_val"),
-    ).select(
-        *group_cols,
-        F.col("n_rows").cast("bigint").alias("n_rows"),
-        F.col("n_vals").cast("bigint").alias("n_vals"),
-        _sum_out(schema, [value_col],
-                 F.when(F.col("n_vals") == 0, F.lit(None))
-                 .otherwise(F.col("_sum"))),
-        "min_val", "max_val",
     )
 
 
@@ -4150,8 +4140,6 @@ class _DistinctReducer(_Reducer):
         return {}
 
     def fold(self, plan, keys, blk) -> dict:
-        import pyarrow as pa
-
         from rlv import blocks as B
 
         col = self.cols[0]
@@ -4246,7 +4234,7 @@ def distinct_table_files(spark: SparkSession, enc_dir: str, col: str,
             f"{col!r} is not a column of this dataset "
             f"(int_cols={schema['int_cols']} str_cols={schema['str_cols']})"
         )
-    specs = _norm_preds(schema, list(preds)) if preds else []
+    specs = _norm_preds(schema, preds) if preds else []
     # the values arrive restored, so Spark's DISTINCT merges -0.0 with
     # 0.0 and pools every NaN, as SQL does
     return _run_tasks(
@@ -4316,7 +4304,7 @@ def explain_agg_table_files(
     for vc in value_cols:
         schema = _require_int_col(enc_dir, vc)
         _require_summable(schema, vc)
-    specs = _norm_preds(schema, list(preds))
+    specs = _norm_preds(schema, preds)
     bill = _explain_bill(enc_dir, specs, _AggReducer(schema, value_cols))
     return _one_row_frame(spark, bill, AGG_EXPLAIN_SCHEMA)
 
@@ -4327,7 +4315,7 @@ def _scan_bill(enc_dir: str, preds, columns: list[str] | None) -> dict:
     schema = _load_table_schema(enc_dir)
     if schema is None:
         raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
-    specs = _norm_preds(schema, list(preds))
+    specs = _norm_preds(schema, preds)
     out_names = _where_out_names(schema, specs, columns)
     return _explain_bill(enc_dir, specs,
                          _ScanReducer(schema, specs, out_names))
@@ -4589,7 +4577,6 @@ def _str_bound_matcher(bound: bytes, ascending: bool):
     entries ``<= bound`` (ascending) or ``>= bound`` (descending),
     bytewise — UTF-8 byte order == code-point order."""
     def match(uniq) -> np.ndarray:
-        import pyarrow as pa
         import pyarrow.compute as pc
 
         cmp = pc.less_equal if ascending else pc.greater_equal
@@ -4659,7 +4646,7 @@ def _topk_table_files_str(
     onto the conjunction."""
     from pyspark.sql import functions as F
 
-    specs = _norm_preds(schema, list(preds)) if preds else []
+    specs = _norm_preds(schema, preds) if preds else []
     out_names = _scan_out_names(schema, col, columns)
     cand = _run_tasks(
         spark, enc_dir, _query_tasks(enc_dir),
@@ -4830,7 +4817,7 @@ def topk_table_files(
             preds,
         )
     schema = _require_int_col(enc_dir, col)
-    specs = _norm_preds(schema, list(preds)) if preds else []
+    specs = _norm_preds(schema, preds) if preds else []
     out_names = _scan_out_names(schema, col, columns)
     # the sort column rides along even when the caller's projection omits
     # it (orderBy needs it resolved), then drops before returning

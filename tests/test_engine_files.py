@@ -156,17 +156,6 @@ def test_count_runs_pass_matches_runs_pass(spark, tok_dir):
     assert set(direct) == {r["doc_id"] for r in tok.select("doc_id").collect()}
 
 
-def test_count_runs_files_matches_pass(spark, tok_dir):
-    res = engine_files.count_runs_files(spark, tok_dir, num_tasks=6)
-    tok = spark.read.parquet(tok_dir)
-    agg = engine.count_runs_pass(tok).agg(
-        F.count("*").alias("d"), F.sum("n_runs").alias("r")
-    ).collect()[0]
-    assert res["docs"] == agg["d"]
-    assert res["runs"] == agg["r"]
-    assert res["tokens"] == tok.agg(F.sum("n_tok")).collect()[0][0]
-
-
 def test_decode_files_dataset_roundtrip(spark, tok_dir, tmp_path):
     """Export direction: decode_files_dataset reconstructs the token table
     bit-identically (rle_correct, rl_encoding.v:133-144, end to end)."""

@@ -960,7 +960,7 @@ def test_typed_columns_survive_compaction(spark, tmp_path):
     assert len(after) > 100
 
 
-def test_decimal_declared_columns_exact_sums(spark, tmp_path):
+def test_decimal_declared_columns_exact_sums(spark, tmp_path, monkeypatch):
     """decimal_cols: currency doubles store their exact scaled integers —
     SUM/AVG push down exactly (decimal(38,s) outputs), min/max/scan
     literals tighten on the double grid (on-grid literals like 0.05 whose
@@ -1003,30 +1003,31 @@ def test_decimal_declared_columns_exact_sums(spark, tmp_path):
     duck.sql(
         f"CREATE VIEW t AS SELECT * FROM read_parquet('{d}/part0.parquet')"
     )
-    [r] = table_files.agg_table_files(
-        spark, out, "price_n", "k", 100, 4099
-    ).collect()
     [w] = duck.sql(
         "SELECT count(*), count(price_n), "
         "CAST(sum(CAST(round(price_n*100) AS BIGINT)) AS DECIMAL(38,2))"
         "/100, min(price_n), max(price_n) "
         "FROM t WHERE k BETWEEN 100 AND 4099"
     ).fetchall()
-    assert (r.n_rows, r.n_vals, Decimal(str(r.sum_val)),
-            r.min_val, r.max_val) == \
-        (w[0], w[1], Decimal(str(w[2])), w[3], w[4])
-    # grouped sums, decimal-typed
-    gg = table_files.agg_table_files_by(
-        spark, out, "price_n", "g",
-        preds=[("between", "k", 0, n)],
-    ).collect()
     wg = duck.sql(
         "SELECT g, count(*), CAST(sum(CAST(round(price_n*100) AS BIGINT))"
         " AS DECIMAL(38,2))/100 FROM t GROUP BY 1 ORDER BY 1"
     ).fetchall()
-    assert sorted(
-        (r["g"], r.n_rows, Decimal(str(r.sum_val))) for r in gg
-    ) == [(a, c, Decimal(str(s))) for a, c, s in wg]
+    for path in _dispatch_paths(monkeypatch):
+        [r] = table_files.agg_table_files(
+            spark, out, "price_n", "k", 100, 4099
+        ).collect()
+        assert (r.n_rows, r.n_vals, Decimal(str(r.sum_val)),
+                r.min_val, r.max_val) == \
+            (w[0], w[1], Decimal(str(w[2])), w[3], w[4]), path
+        # grouped sums, decimal-typed
+        gg = table_files.agg_table_files_by(
+            spark, out, "price_n", "g",
+            preds=[("between", "k", 0, n)],
+        ).collect()
+        assert sorted(
+            (r["g"], r.n_rows, Decimal(str(r.sum_val))) for r in gg
+        ) == [(a, c, Decimal(str(s))) for a, c, s in wg], path
     # double-grid literal semantics: 0.05-style (binary-inexact) literals
     lo, hi = 1.05, 499.95
     got = table_files.scan_table_files_where(
@@ -4176,14 +4177,18 @@ def _python_nodes(df) -> dict:
         "MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")}
 
 
-def test_one_python_node_per_operator(spark, tmp_path, monkeypatch):
+def test_one_python_node_per_operator(spark, tmp_path, monkeypatch,
+                                      spark_job_ids):
     """Every pushdown operator crosses into Python once: over the
     driver-local cap its executed plan holds exactly one MapInArrow and
     no other Python node (no ArrowEvalPython restore, no MapInPandas);
-    a tiny plan holds none.  Both plans return the same rows.  The table
-    has int32, float64, float32, timestamp, date and string columns; the
-    join's small dimension side stays under the cap, so only its fact
-    side runs on the workers."""
+    a tiny plan holds none.  The aggregate, COUNT and MIN/MAX fold their
+    partials in this process: the call and its collect launch exactly
+    one Spark job over the cap and none under it, and the returned frame
+    has no Python node on either path.  Both plans return the same rows.
+    The table has int32, float64, float32, timestamp, date and string
+    columns; the join's small dimension side stays under the cap, so
+    only its fact side runs on the workers."""
     import os
 
     import pyarrow as pa
@@ -4238,7 +4243,28 @@ def test_one_python_node_per_operator(spark, tmp_path, monkeypatch):
             spark, fact, dim, on="i", preds_a=preds, columns_a=["x"],
             columns_b=["name"]),
     }
+
+    def folded(name, op, cap):
+        """(sorted rows, Spark jobs of the call and its collect)."""
+        monkeypatch.setattr(table_files, "_DRIVER_LOCAL_MAX_CELLS", cap)
+        out = {}
+
+        def run():
+            out["df"] = op()
+            out["rows"] = sorted(tuple(r) for r in out["df"].collect())
+
+        jobs = spark_job_ids(run, f"rlv-fold-{name}-{cap}")
+        assert not any(_python_nodes(out["df"]).values()), (name, cap)
+        return out["rows"], jobs
+
     for name, op in ops.items():
+        if name in ("agg", "count", "minmax"):
+            rows, jobs = folded(name, op, 1000)
+            assert len(jobs) == 1, (name, jobs)
+            tiny_rows, jobs = folded(name, op, 1 << 62)
+            assert jobs == [], (name, jobs)
+            assert tiny_rows == rows, name
+            continue
         # 1000 cells: every fact-side plan is over it, the 50-row
         # dimension (100 cells) under it
         monkeypatch.setattr(table_files, "_DRIVER_LOCAL_MAX_CELLS", 1000)
@@ -5122,3 +5148,41 @@ def test_lost_live_blocks_file_fails_on_the_driver(
                 call()
 
         assert spark_job_ids(run, f"lost-{name}") == [], name
+
+
+@pytest.fixture(scope="module")
+def tiny_enc(spark, tmp_path_factory):
+    """A 100-row two-int-column dataset, encoded once for the module."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("tiny")
+    pq.write_table(pa.table({"k": pa.array(range(100), pa.int64()),
+                             "v": pa.array(range(100), pa.int64())}),
+                   str(d / "src.parquet"))
+    out = str(d / "enc")
+    table_files.encode_table_files(
+        spark, [str(d / "src.parquet")], out, order_col="k",
+        int_cols=["k", "v"], rows_per_block=32, num_tasks=1,
+    )
+    return out
+
+
+@pytest.mark.parametrize("preds", [None, []], ids=["none", "empty"])
+@pytest.mark.parametrize("op", ["agg", "minmax", "explain_agg",
+                                "explain_scan"])
+def test_missing_preds_refuse_clearly(spark, tiny_enc, op, preds):
+    """Operators that need a predicate refuse a missing one, ``None`` or
+    ``[]``, with the same clear ValueError."""
+    call = {
+        "agg": lambda: table_files.agg_table_files_where(
+            spark, tiny_enc, "v", preds),
+        "minmax": lambda: table_files.minmax_table_files_where(
+            spark, tiny_enc, "v", preds),
+        "explain_agg": lambda: table_files.explain_agg_table_files(
+            spark, tiny_enc, "v", preds),
+        "explain_scan": lambda: table_files.explain_scan_table_files(
+            spark, tiny_enc, preds),
+    }[op]
+    with pytest.raises(ValueError, match="at least one predicate"):
+        call()
