@@ -20,7 +20,7 @@ entirely into the Python workers:
   rl_encoding.v:1524-1538),
 * every job dispatches through one runner, :func:`run_file_job`: the
   driver builds a typed Arrow table of task rows (split id and lineage,
-  file, bin, segment), Spark carries it as a shuffle-free JVM relation,
+  file, bin, segment), Spark runs a ``spark.range`` of the task ids,
   and one ``mapInArrow`` stage hands each Python task its rows as typed
   dicts and ships back the worker's Arrow result batch — no pandas frame
   on either side,
@@ -48,7 +48,6 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 SPLIT_MANIFEST_SCHEMA = (
@@ -63,32 +62,6 @@ RESULT_SCHEMA = (
     "bytes_out bigint, naive_rle_bytes bigint, codec_hist string, "
     "encode_cpu_ns bigint"
 )
-
-
-# Arrow type of a task column -> the Spark type of its array literal
-_TASK_TYPES = {
-    pa.string(): "string", pa.int64(): "bigint", pa.bool_(): "boolean",
-}
-
-
-def _spark_tasks(spark: SparkSession, tasks: pa.Table, k: int):
-    """Spark task relation of ``tasks`` in ``k`` partitions:
-    ``spark.range`` slices the task ids into ``k`` contiguous, equal-count
-    runs (sizes differ by at most one), so the partitions concatenated in
-    partition order are the tasks in table order.  Each task column is
-    picked out of an array literal by id, typed from its Arrow field
-    (string, bigint or boolean; nulls kept), so the relation runs in the
-    JVM alone: no Python-worker stage to deserialize a driver list and no
-    shuffle to spread it, ahead of the job's own Python worker."""
-    pick = (F.col("id") + 1).cast("int")
-    return spark.range(0, tasks.num_rows, 1, k).select(*[
-        F.element_at(
-            F.array(*[F.lit(v).cast(_TASK_TYPES[f.type])
-                      for v in tasks.column(f.name).to_pylist()]),
-            pick,
-        ).alias(f.name)
-        for f in tasks.schema
-    ])
 
 
 @functools.lru_cache(maxsize=256)
@@ -118,7 +91,8 @@ def run_file_job(spark: SparkSession, tasks: pa.Table, worker, ddl: str,
     schema.  Every Python task tunes malloc first
     (:func:`rlv.util.tune_malloc`).
 
-    The relation is :func:`_spark_tasks` with one partition per task,
+    The relation is ``spark.range`` over the task ids — shuffle-free and
+    JVM-only — with one partition per task,
     or, when ``packed``, at most one per task slot
     (``defaultParallelism``), each running its contiguous share of the
     tasks one after another in one Python task.  A Spark Python task has
@@ -134,25 +108,34 @@ def run_file_job(spark: SparkSession, tasks: pa.Table, worker, ddl: str,
     re-runs its whole run of units; every output is written under an
     ``.inprogress`` name and renamed, its bytes deterministic, and
     manifests merge only after the job returns, so a retry stays
-    idempotent."""
-    n = tasks.num_rows
-    sc = spark.sparkContext
-    dynamic = sc.getConf().get("spark.dynamicAllocation.enabled", "false")
-    k = (min(n, sc.defaultParallelism)
-         if packed and dynamic.lower() != "true" else n)
+    idempotent.  The task rows ride to the workers with ``worker``
+    itself, and each Python task looks its rows up by id, so no task
+    value becomes a plan literal: as array literals they cost ~50 ms of
+    driver round trips to build and ~20 ms to evaluate per job (4 tasks,
+    4-core host)."""
+    n = k = tasks.num_rows
+    if packed:
+        sc = spark.sparkContext
+        dynamic = sc.getConf().get("spark.dynamicAllocation.enabled", "false")
+        if dynamic.lower() != "true":
+            k = min(n, sc.defaultParallelism)
     struct, schema = _arrow_schema(ddl)
+    rows = tasks.to_pylist()
 
     def run(batches):
         from rlv.util import tune_malloc
 
         tune_malloc()
         for b in batches:
-            for task in b.to_pylist():
-                out = worker(task)
+            for i in b.column("id").to_pylist():
+                out = worker(rows[i])
                 yield (out if isinstance(out, pa.RecordBatch)
                        else pa.RecordBatch.from_pylist(out, schema=schema))
 
-    return _spark_tasks(spark, tasks, k).mapInArrow(run, struct)
+    # spark.range slices the task ids into k contiguous, equal-count runs
+    # (sizes differ by at most one), so the partitions concatenated in
+    # partition order are the tasks in table order
+    return spark.range(0, n, 1, k).mapInArrow(run, struct)
 
 
 def _split_tasks(splits: list[dict]) -> pa.Table:

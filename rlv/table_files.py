@@ -200,6 +200,14 @@ def _sql_order_keys(keys: np.ndarray, alias: str | None) -> np.ndarray:
                     np.where(v == 0, 0, keys))
 
 
+def _sql_rank(col, alias: str | None) -> np.ndarray:
+    """A restored NULL-free column ranked in SQL order: its plane keys
+    (:func:`_plane_cast`, the encode map) through
+    :func:`_sql_order_keys`."""
+    return _sql_order_keys(
+        _plane_cast(col, alias).to_numpy(zero_copy_only=False), alias)
+
+
 def _sql_order_zone(mn: np.ndarray, mx: np.ndarray, alias: str | None):
     """Block zone maps (plane-key min/max) bounding the blocks' values in
     SQL order (:func:`_sql_order_keys`).  A float block whose min key is
@@ -1504,10 +1512,12 @@ def _run_tasks(spark: SparkSession, enc_dir: str, tasks: pa.Table,
     """Run a query operator, the block pipeline with its ``reducer``,
     over its :func:`_query_tasks` table, as a DataFrame of the reducer's
     typed output (``reducer.ddl``) for the caller's own Spark operators:
-    the scan, GROUP BY, DISTINCT, ANALYZE and top-k, whose outputs grow
-    with rows or key NDV.  The aggregate, COUNT and MIN/MAX, whose
-    partials are at most tasks x value columns rows, fold them in this
-    process instead (:func:`_task_batches`).  A tiny plan (see
+    the scan, DISTINCT, ANALYZE, string top-k's threshold pass and a
+    GROUP BY whose partials nothing bounds before the job runs, whose
+    outputs grow with rows or key NDV.  The aggregate, COUNT, MIN/MAX,
+    int top-k, a bounded GROUP BY and the join's runtime filter fold
+    their partials in this process instead (:func:`_task_batches`).  A
+    tiny plan (see
     :func:`_driver_local_batches`; an empty task list is one) runs in
     this process and returns a local relation built from the same Arrow
     batches: no Spark job until the caller's own operators, and never a
@@ -1522,19 +1532,22 @@ def _run_tasks(spark: SparkSession, enc_dir: str, tasks: pa.Table,
 
 
 def _task_batches(spark: SparkSession, enc_dir: str, tasks: pa.Table,
-                  reducer, specs: list[dict]) -> list:
-    """Every task's typed Arrow batch of ``reducer.ddl``, in this
-    process, for an operator that folds its partials here: a tiny plan's
-    in-process batches (:func:`_driver_local_batches`), else the one
-    Spark stage (:func:`_spark_run`) collected with ``toArrow()`` — one
-    job, and no second one to combine at most tasks x value columns
-    rows."""
+                  reducer, specs: list[dict]) -> pa.Table:
+    """Every task's typed Arrow batch of ``reducer.ddl`` as one table in
+    task order, in this process, for an operator that folds its
+    partials here: a tiny plan's in-process batches
+    (:func:`_driver_local_batches`), else the one Spark stage
+    (:func:`_spark_run`) collected with ``toArrow()`` — one job, and no
+    second one to combine partials whose count is bounded before the
+    job runs (tasks x value columns for the aggregate, k x tasks for
+    int top-k, :func:`_group_rows_bound` for a GROUP BY, the
+    runtime-filter guard's rows for the join's key set)."""
     schema = _arrow_schema(reducer.ddl)[1]
     batches = _driver_local_batches(enc_dir, tasks, reducer, specs, schema)
     if batches is None:
-        batches = _spark_run(spark, enc_dir, tasks, reducer,
-                             specs).toArrow().cast(schema).to_batches()
-    return batches
+        return _spark_run(spark, enc_dir, tasks, reducer,
+                          specs).toArrow().cast(schema)
+    return pa.Table.from_batches(batches, schema)
 
 
 def _spark_run(spark: SparkSession, enc_dir: str, tasks: pa.Table,
@@ -2330,6 +2343,24 @@ def _restored_bytes(enc_dir: str, schema: dict, cols: list[str],
     return int(rows * width)
 
 
+def _join_rows(a: pa.Table, b: pa.Table, on: list[str], how: str) -> int:
+    """Exact row count of ``a`` joined to ``b`` on ``on`` (``how``
+    ``"inner"`` or ``"left"``), from the two sides' key counts alone:
+    the sum over key tuples present on both sides of the product of
+    their counts, where a key holding a NULL never matches; LEFT adds
+    the rows of ``a`` that match nothing."""
+    import pyarrow.compute as pc
+
+    counts = [t.select(on).drop_null().group_by(on, use_threads=False)
+              .aggregate([([], "count_all")]) for t in (a, b)]
+    m = counts[0].join(counts[1].rename_columns([*on, "count_b"]), on,
+                       join_type="inner", use_threads=False)
+    n = pc.sum(pc.multiply(m["count_all"], m["count_b"])).as_py() or 0
+    if how == "left":
+        n += a.num_rows - (pc.sum(m["count_all"]).as_py() or 0)
+    return n
+
+
 def join_table_files(
     spark: SparkSession, enc_a: str, enc_b: str, on,
     preds_a=None, preds_b=None,
@@ -2340,13 +2371,13 @@ def join_table_files(
     return_plan: bool = False,
     how: str = "inner",
 ):
-    """General INNER join between two encoded datasets — the plan that
-    runs when :func:`semijoin_scan_table_files`'s driver-collected
-    runtime filter is the wrong shape (fact x fact, high-cardinality
-    dims).  Both sides leave the format through their own conjunctive
-    pruned scans (predicates prune blocks; the projection is pushed down
-    to join keys + requested columns), then a plain Spark join runs on
-    the restored relations.
+    """General INNER or LEFT join between two encoded datasets — the
+    plan that runs when :func:`semijoin_scan_table_files`'s
+    driver-collected runtime filter is the wrong shape (fact x fact,
+    high-cardinality dims).  Both sides leave the format through their
+    own conjunctive pruned scans (predicates prune blocks; the
+    projection is pushed down to join keys + requested columns), and
+    the restored relations join in this process or in Spark (below).
 
     Plan choices are decided from the format's own metadata, before a
     payload byte moves:
@@ -2363,7 +2394,8 @@ def join_table_files(
     * **Runtime filter** — on a single-column join whose key is a plain
       int or string column, the smaller side's distinct keys (metadata-
       cheap: dictionary sidecars / codec-level distinct through
-      :func:`distinct_table_files`) push into the LARGER side's scan as
+      :class:`_DistinctReducer`, its per-task sets made unique in this
+      process by :func:`_task_batches`) push into the LARGER side's scan as
       an ``int_in`` / ``in`` predicate when there are at most
       ``runtime_filter_max_keys`` of them — the DPP shape, shrinking the
       fact scan before the join instead of after it.  More keys than the
@@ -2374,8 +2406,19 @@ def join_table_files(
       heavy side with few distinct keys loses a filter it could have
       used.  Results are unaffected either way.
     * **Driver-local sides** — each side's scan runs in this process when
-      its plan is tiny (:func:`_run_tasks`); ``plan`` records it as
-      ``driver_local_a`` / ``driver_local_b``.
+      its plan is tiny (:func:`_driver_local_batches`, run once per
+      side); ``plan`` records it as ``driver_local_a`` /
+      ``driver_local_b``.  Any other side is one Spark stage
+      (:func:`_spark_run`).
+    * **Driver join** — when both sides are driver-local, every ``on``
+      column is a plain int or string (the runtime filter's own
+      restriction: float keys would need SQL's ``-0.0``/NaN merge) and
+      the exact output (:func:`_join_rows`, from the two sides' key
+      counts) times the output columns is at most
+      ``_DRIVER_LOCAL_MAX_CELLS``, the sides join in this process with
+      ``pa.Table.join`` and the result is a local relation: no Spark
+      job.  Otherwise Spark joins the two relations.  ``plan`` records
+      the choice as ``driver_join``.
 
     ``on`` is one column name or a list present on BOTH sides with equal
     restored Spark types; non-key projected columns must not collide
@@ -2495,39 +2538,62 @@ def join_table_files(
         alias = (kschema.get("int_col_types") or {}).get(key, "int64")
         is_str = key in set(kschema["str_cols"])
         if is_str or _plane_kind(alias) == "int":
-            keys = [
-                r[key]
-                for r in distinct_table_files(
-                    spark, filter_src["enc"], key,
-                    preds=filter_src["preds"],
-                ).limit(runtime_filter_max_keys + 2).collect()
-                if r[key] is not None
-            ]
+            import pyarrow.compute as pc
+
+            keys = pc.unique(_task_batches(
+                spark, filter_src["enc"], _query_tasks(filter_src["enc"]),
+                _DistinctReducer(kschema, key),
+                _norm_preds(kschema, filter_src["preds"]),
+            ).column(key).drop_null()).to_pylist()
             if 0 < len(keys) <= runtime_filter_max_keys:
                 filter_dst["preds"] = list(filter_dst["preds"]) + [
                     ("in" if is_str else "int_in", key, keys)
                 ]
                 plan["runtime_filter_keys"] = len(keys)
 
-    dfs = {}
-    for s in sides:
-        dfs[id(s)] = scan_table_files_where(
-            spark, s["enc"], s["preds"], columns=s["columns"]
-        )
     for name, s in zip("ab", sides):
-        plan[f"driver_local_{name}"] = "MapInArrow" not in (
-            dfs[id(s)]._jdf.queryExecution().logical().toString()
-        )
+        s["specs"] = _norm_preds(s["schema"], s["preds"])
+        s["reducer"] = _ScanReducer(s["schema"], s["specs"], _where_out_names(
+            s["schema"], s["specs"], s["columns"]))
+        s["tasks"] = _query_tasks(s["enc"])
+        s["arrow"] = _arrow_schema(s["reducer"].ddl)[1]
+        s["batches"] = _driver_local_batches(
+            s["enc"], s["tasks"], s["reducer"], s["specs"], s["arrow"])
+        plan[f"driver_local_{name}"] = s["batches"] is not None
+    rest = [[c for c in s["columns"] if c not in on_cols] for s in sides]
+    out_names = [*on_cols, *rest[0], *rest[1]]
+    plan["driver_join"] = False
+    if plan["driver_local_a"] and plan["driver_local_b"] and all(
+        c in s["schema"]["str_cols"]
+        or _plane_kind(_col_alias(s["schema"], c)) == "int"
+        for s in sides for c in on_cols
+    ):
+        ta, tb = (pa.Table.from_batches(s["batches"], s["arrow"])
+                  for s in sides)
+        plan["driver_join"] = _join_rows(ta, tb, on_cols, how) \
+            * len(out_names) <= _DRIVER_LOCAL_MAX_CELLS
+    if plan["driver_join"]:
+        # NULL keys never match in pyarrow's hash join, as in SQL
+        out = ta.join(tb, on_cols, use_threads=False, join_type=(
+            "inner" if how == "inner" else "left outer")).select(out_names)
+        df = _local_relation(spark, ", ".join(filter(None, (
+            _typed_ddl(sides[0]["schema"], [*on_cols, *rest[0]]),
+            _typed_ddl(sides[1]["schema"], rest[1]),
+        ))), out.to_batches())
+        return (df, plan) if return_plan else df
+    dfs = {
+        id(s): _spark_run(spark, s["enc"], s["tasks"], s["reducer"],
+                          s["specs"])
+        if s["batches"] is None
+        else _local_relation(spark, s["reducer"].ddl, s["batches"])
+        for s in sides
+    }
     small_df, big_df = dfs[id(small)], dfs[id(big)]
     if plan["broadcast"]:
         small_df = F.broadcast(small_df)
     # LEFT: A must be the left operand (big/small were remapped above so
     # big IS side A); inner is orientation-free
-    out = big_df.join(small_df, on=on_cols, how=how).select(
-        *on_cols,
-        *[c for c in sides[0]["columns"] if c not in on_cols],
-        *[c for c in sides[1]["columns"] if c not in on_cols],
-    )
+    out = big_df.join(small_df, on=on_cols, how=how).select(*out_names)
     return (out, plan) if return_plan else out
 
 
@@ -3619,7 +3685,7 @@ def agg_table_files_where(
         _typed_batch(reducer.fold(None, [], None), out_schema,
                      reducer.aliases),
         *_task_batches(spark, enc_dir, _query_tasks(enc_dir), reducer,
-                       specs),
+                       specs).to_batches(),
     ], out_schema)
     out = parts.group_by("val_col", use_threads=False).aggregate([
         ("n_rows", "sum"), ("n_vals", "sum"), ("sum_val", "sum"),
@@ -3725,11 +3791,10 @@ def count_table_files_where(spark: SparkSession, enc_dir: str, preds):
         return _one_row_frame(spark, {"n_rows": total}, "n_rows bigint")
     specs = _norm_preds(schema, preds)
     reducer = _CountReducer(specs)
-    batches = _task_batches(spark, enc_dir, _query_tasks(enc_dir), reducer,
-                            specs)
+    parts = _task_batches(spark, enc_dir, _query_tasks(enc_dir), reducer,
+                          specs)
     return _one_row_frame(spark, {"n_rows": sum(
-        n for b in batches for n in b.column("n_rows").to_pylist()
-    )}, reducer.ddl)
+        parts.column("n_rows").to_pylist())}, reducer.ddl)
 
 
 class _MinMaxReducer(_Reducer):
@@ -3807,15 +3872,12 @@ def minmax_table_files_where(spark: SparkSession, enc_dir: str,
     schema = _require_int_col(enc_dir, value_col)
     specs = _norm_preds(schema, preds)
     reducer = _MinMaxReducer(schema, value_col)
-    out_schema = _arrow_schema(reducer.ddl)[1]
-    parts = pa.Table.from_batches(
-        _task_batches(spark, enc_dir, _query_tasks(enc_dir), reducer, specs),
-        out_schema,
-    )
+    parts = _task_batches(spark, enc_dir, _query_tasks(enc_dir), reducer,
+                          specs)
     return _local_relation(spark, reducer.ddl, pa.table({
         "min_val": _sql_extreme(parts.column("min_val"), min),
         "max_val": _sql_extreme(parts.column("max_val"), max),
-    }, schema=out_schema).to_batches())
+    }, schema=parts.schema).to_batches())
 
 
 def _sql_extreme(col, pick):
@@ -4037,15 +4099,23 @@ def agg_table_files_by(
     blocks are never read, full-match blocks skip the predicate decode, only
     boundary blocks decode it.
 
-    Scale shape: one task per (blocks file, segment) — or one in-process
-    run for a tiny plan (:func:`_run_tasks`) — computes per-group
+    Scale shape: one task per (blocks file, segment) computes per-group
     partials with ``argsort`` + ``reduceat`` (per-group Python is
-    O(groups), never rows); the only shuffle carries <= groups x files
-    partial rows into a tiny final combine — map-side partial
-    aggregation over the compressed format.  SQL semantics throughout: NULL group keys pool into one NULL
-    group, NULL predicate rows never match, ``n_vals``/``sum``/``min``/
-    ``max`` skip NULL values (``sum_val`` is NULL for a group with no valid
-    values, exact decimal(38,0) otherwise).
+    O(groups), never rows) — map-side partial aggregation over the
+    compressed format.  When every key column is a string or a
+    non-float ``index_cols`` int and the bound on the partial rows from
+    the sidecars' per-block NDV (:func:`_group_rows_bound`) is small,
+    this process folds the partials with pyarrow (:func:`_task_batches`:
+    no Spark job for a tiny plan, one Spark stage otherwise) into a
+    local relation.  Any other GROUP BY (float keys, whose SQL merge of
+    ``-0.0``/``0.0`` and NaN payloads pyarrow's grouping lacks; plain
+    int keys; a bound over the cap) runs the stage through
+    :func:`_run_tasks` and Spark's own ``groupBy`` combines at most
+    groups x tasks partial rows.  SQL semantics throughout: NULL group
+    keys pool into one NULL group, NULL predicate rows never match,
+    ``n_vals``/``sum``/``min``/``max`` skip NULL values (``sum_val`` is
+    NULL for a group with no valid values, exact decimal(38,0)
+    otherwise).
 
     ``preds`` generalizes the single range to a CONJUNCTION of the same
     predicate kinds :func:`scan_table_files_where` takes (mutually
@@ -4059,8 +4129,8 @@ def agg_table_files_by(
     NULL slot — NULLs participate in key tuples, SQL multi-key
     semantics), the ids combine in mixed radix with re-densification so
     the composite can never overflow, and the same argsort+reduceat
-    aggregation runs once over the composite; the shuffle carries
-    ≤ (distinct key tuples) × files partial rows."""
+    aggregation runs once over the composite; the final fold combines
+    ≤ (distinct key tuples) × tasks partial rows."""
     schema = _require_int_col(enc_dir, value_col)
     _require_summable(schema, value_col)
     group_cols = (list(group_col) if isinstance(group_col, (list, tuple))
@@ -4089,22 +4159,72 @@ def agg_table_files_by(
         raise ValueError("lo/hi require pred_col")
     else:
         specs = _norm_preds(schema, preds) if preds else []
+    tasks = _query_tasks(enc_dir)
+    reducer = _GroupReducer(schema, value_col, group_cols)
+    bound = _group_rows_bound(enc_dir, schema, group_cols, len(tasks))
+    if bound is not None and \
+            bound * (len(group_cols) + 5) <= _DRIVER_LOCAL_MAX_CELLS:
+        parts = _task_batches(spark, enc_dir, tasks, reducer, specs)
+        out = parts.group_by(group_cols, use_threads=False).aggregate([
+            ("n_rows", "sum"), ("n_vals", "sum"), ("sum_val", "sum"),
+            ("min_val", "min"), ("max_val", "max"),
+        ]).rename_columns(parts.schema.names).cast(parts.schema)
+        return _local_relation(spark, reducer.ddl, out.to_batches())
     from pyspark.sql import functions as F
 
-    partials = _run_tasks(
-        spark, enc_dir, _query_tasks(enc_dir),
-        _GroupReducer(schema, value_col, group_cols), specs,
-    )
-    # the keys arrive restored, so Spark's own grouping merges -0.0 with
-    # 0.0 and pools every NaN, as SQL does; a partial's sum_val is NULL
-    # when it has no valid value, so the sum is SQL's
-    return partials.groupBy(*group_cols).agg(
+    # float keys arrive restored, so Spark's own grouping merges -0.0
+    # with 0.0 and pools every NaN, as SQL does; a partial's sum_val is
+    # NULL when it has no valid value, so the sum is SQL's
+    return _run_tasks(spark, enc_dir, tasks, reducer, specs).groupBy(
+        *group_cols
+    ).agg(
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_vals").alias("n_vals"),
         F.sum("sum_val").alias("sum_val"),
         F.min("min_val").alias("min_val"),
         F.max("max_val").alias("max_val"),
     )
+
+
+def _group_rows_bound(enc_dir: str, schema: dict, group_cols: list[str],
+                      n_tasks: int) -> int | None:
+    """Upper bound on the partial rows a GROUP BY over ``group_cols``
+    emits, known before it runs, or None when a key column has no
+    per-block NDV (float keys, whose pyarrow grouping would split
+    ``-0.0``/``0.0`` and NaN payloads, and plain int keys).  String and
+    ``index_cols`` keys record each block's ``ndv`` in the dictionary
+    sidecar, so a block holds at most the product over key columns of
+    (``ndv`` + 1, the NULL slot) key tuples; a block with no sidecar row
+    for a column (all NULL there) counts 1 for it.  The bound sums that
+    over the live blocks, one sidecar metadata read per live file, plus
+    one row per task for the all-NULL tuple of blocks that no key
+    column has a sidecar row for."""
+    import pyarrow.parquet as pq
+
+    strs = set(schema["str_cols"])
+    idx = set(schema.get("index_cols", ()))
+    if not all(g in strs or (
+        g in idx and _plane_kind(_col_alias(schema, g)) not in ("f32", "f64")
+    ) for g in group_cols):
+        return None
+    tuples: dict = {}
+    for path in _live_block_files(enc_dir):
+        spath = _sidecar_path(path)
+        if not os.path.exists(spath):
+            continue
+        side = pq.ParquetFile(spath)
+        t = side.read(columns=["col_name", "block_idx", "ndv", *(
+            ["split_seq"] if "split_seq" in side.schema_arrow.names else []
+        )])
+        seqs = (t.column("split_seq").to_pylist()
+                if "split_seq" in t.column_names else [None] * t.num_rows)
+        for name, seq, bi, n in zip(t.column("col_name").to_pylist(), seqs,
+                                    t.column("block_idx").to_pylist(),
+                                    t.column("ndv").to_pylist()):
+            if name in group_cols:
+                key = (path, seq, bi)
+                tuples[key] = tuples.get(key, 1) * (n + 1)
+    return sum(tuples.values()) + n_tasks
 
 
 class _DistinctReducer(_Reducer):
@@ -4790,21 +4910,21 @@ def topk_table_files(
     BY col, order_col LIMIT k``); without it, ties at the boundary are
     arbitrary, as in SQL.
 
-    One pass, no full sort anywhere: one task per (blocks file, segment)
-    — in-process on the driver for a tiny plan (:func:`_run_tasks`) —
-    emits its own k best rows, already projected (:class:`_TopkReducer`:
-    it decodes ``col`` only at the blocks its zone-map plan keeps,
-    :func:`_topk_survivors`, and the projection only at the at most k
-    blocks holding the chosen rows), and Spark's TakeOrdered picks the k
-    rows from at most k x tasks.
+    One pass, no full sort of the table: one task per (blocks file,
+    segment) emits its own k best rows, already projected
+    (:class:`_TopkReducer`: it decodes ``col`` only at the blocks its
+    zone-map plan keeps, :func:`_topk_survivors`, and the projection
+    only at the at most k blocks holding the chosen rows).  This process
+    ranks those at most k x tasks partials (:func:`_task_batches`: a
+    tiny plan runs in-process with no Spark job, any other as one Spark
+    stage) and returns the k best as a local relation whose rows are
+    already in ``ORDER BY`` order.
 
     ``preds`` restricts the ranking to rows matching a CONJUNCTION of the
     same five predicate kinds :func:`scan_table_files_where` takes (SQL
     ``WHERE ... AND col IS NOT NULL ORDER BY col LIMIT k``): the bound
     comes from FULL-matching blocks' exact counts and partial blocks
     mask."""
-    from pyspark.sql import functions as F
-
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
     schema = _load_table_schema(enc_dir)
@@ -4820,14 +4940,21 @@ def topk_table_files(
     specs = _norm_preds(schema, preds) if preds else []
     out_names = _scan_out_names(schema, col, columns)
     # the sort column rides along even when the caller's projection omits
-    # it (orderBy needs it resolved), then drops before returning
+    # it (the ranking needs it), then drops before returning
     scan_names = out_names if col in out_names else [*out_names, col]
-    rows = _run_tasks(
-        spark, enc_dir, _query_tasks(enc_dir),
-        _TopkReducer(schema, col, int(k), ascending, scan_names), specs,
-    )
-    sort_cols = [F.col(col).asc() if ascending else F.col(col).desc()]
+    reducer = _TopkReducer(schema, col, int(k), ascending, scan_names)
+    parts = _task_batches(spark, enc_dir, _query_tasks(enc_dir), reducer,
+                          specs)
+    rank = _sql_rank(parts[col], reducer.alias)
+    sort_keys = [rank if ascending else ~rank]
     order_col = schema["order_col"]
     if order_col in out_names and order_col != col:
-        sort_cols.append(F.col(order_col).asc())
-    return rows.orderBy(*sort_cols).limit(k).select(*out_names)
+        sort_keys.append(
+            _sql_rank(parts[order_col], _col_alias(schema, order_col)))
+    # lexsort is stable: rows tied on every key keep partial order (task,
+    # then row); its last key is the primary one
+    pick = np.lexsort(sort_keys[::-1])[:k]
+    return _local_relation(
+        spark, _typed_ddl(schema, out_names),
+        parts.take(pick).select(out_names).to_batches(),
+    )

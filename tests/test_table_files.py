@@ -3982,19 +3982,21 @@ def test_explain_counts_files_not_tasks(spark, orders_dir, tmp_path):
 
 
 def test_spark_tasks_relation_is_shuffle_free(spark, orders_dir,
-                                              tmp_path):
-    """The task relation has no Exchange and carries each task's typed
-    columns exactly (a null segment for a whole-file task, a boolean, a
-    bigint) — checked on a mix of a compacted dataset's segment tasks and
-    a fresh dataset's whole-file tasks.  At ``k = n`` (query dispatch)
-    task i is alone in partition i; at ``k < n`` (a batch encode or
-    verify packed per slot) there are ``k`` partitions, every task
-    appears exactly once, and the partitions concatenated in partition
-    order are the task order.  The runner hands each worker the task as
-    Python values: ``None``, ``bool`` and ``int``, not strings."""
+                                              tmp_path, monkeypatch):
+    """The task relation of :func:`engine_files.run_file_job` has no
+    Exchange, and every worker gets its task's typed columns exactly (a
+    null segment for a whole-file task, a boolean, a bigint) — checked on
+    a mix of a compacted dataset's segment tasks and a fresh dataset's
+    whole-file tasks.  Unpacked (query dispatch), task i runs alone in
+    partition i; packed per slot with ``k < n`` slots (a batch encode or
+    verify), there are ``k`` partitions, every task runs exactly once,
+    and the partitions concatenated in partition order are the task
+    order.  The runner hands each worker the task as Python values:
+    ``None``, ``bool`` and ``int``, not strings."""
     import json
 
     import pyarrow as pa
+    from pyspark import SparkContext, TaskContext
 
     merged = str(tmp_path / "merged")
     _encode(spark, orders_dir, merged)
@@ -4015,42 +4017,38 @@ def test_spark_tasks_relation_is_shuffle_free(spark, orders_dir,
     cols = tasks.column_names
     want = [tuple(t.values()) for t in tasks.to_pylist()]
 
-    rel = engine_files._spark_tasks(spark, tasks, n)
-    plan = rel._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert rel.rdd.getNumPartitions() == n
-    rows = rel.select(F.spark_partition_id().alias("pid"), *cols).collect()
-    assert sorted(r["pid"] for r in rows) == list(range(n))
-    by_pid = {r["pid"]: tuple(r[c] for c in cols) for r in rows}
-    for i, t in enumerate(want):
-        assert by_pid[i] == t, i
+    def job(packed):
+        return engine_files.run_file_job(
+            spark, tasks,
+            lambda t: [{"pid": TaskContext.get().partitionId(),
+                        "task": json.dumps(t),
+                        "types": [type(t[c]).__name__ for c in cols]}],
+            "pid int, task string, types array<string>", packed=packed,
+        )
 
-    for k in sorted({1, 2, n - 1}):
-        rel = engine_files._spark_tasks(spark, tasks, k)
+    def check(rel, k):
         plan = rel._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, (k, plan)
         assert rel.rdd.getNumPartitions() == k
-        rows = rel.select(
-            F.spark_partition_id().alias("pid"), *cols
-        ).collect()
-        # a stable sort by partition id: rows keep their order within one
-        rows = sorted(rows, key=lambda r: r["pid"])
-        assert [tuple(r[c] for c in cols) for r in rows] == want, k
-        sizes = [sum(r["pid"] == p for r in rows) for p in range(k)]
+        seen = rel.toArrow().to_pylist()
+        assert [tuple(json.loads(r["task"]).values()) for r in seen] == want
+        pids = [r["pid"] for r in seen]
+        assert pids == sorted(pids), k
+        sizes = [pids.count(p) for p in range(k)]
         assert max(sizes) - min(sizes) <= 1, (k, sizes)
+        return seen
 
-    seen = engine_files.run_file_job(
-        spark, tasks,
-        lambda t: [{"task": json.dumps(t),
-                    "types": [type(t[c]).__name__ for c in cols]}],
-        "task string, types array<string>",
-    ).toArrow().to_pylist()
-    assert [tuple(json.loads(r["task"]).values()) for r in seen] == want
+    seen = check(job(False), n)
+    assert [r["pid"] for r in seen] == list(range(n))
     n_seg = len(seg_tasks)
     assert all(r["types"] == ["str", "str", "bool", "int"]
                for r in seen[:n_seg])
     assert all(r["types"] == ["str", "NoneType", "bool", "int"]
                for r in seen[n_seg:])
+    for k in sorted({1, 2, n - 1}):
+        monkeypatch.setattr(SparkContext, "defaultParallelism",
+                            property(lambda self, k=k: k))
+        check(job(True), k)
 
 
 def test_explain_and_metadata_count_launch_no_spark_job(spark, orders_dir,
@@ -4182,13 +4180,15 @@ def test_one_python_node_per_operator(spark, tmp_path, monkeypatch,
     """Every pushdown operator crosses into Python once: over the
     driver-local cap its executed plan holds exactly one MapInArrow and
     no other Python node (no ArrowEvalPython restore, no MapInPandas);
-    a tiny plan holds none.  The aggregate, COUNT and MIN/MAX fold their
-    partials in this process: the call and its collect launch exactly
-    one Spark job over the cap and none under it, and the returned frame
-    has no Python node on either path.  Both plans return the same rows.
-    The table has int32, float64, float32, timestamp, date and string
-    columns; the join's small dimension side stays under the cap, so
-    only its fact side runs on the workers."""
+    a tiny plan holds none.  The aggregate, COUNT, MIN/MAX, int top-k
+    and a string-key GROUP BY fold their partials in this process: the
+    call and its collect launch exactly one Spark job over the cap and
+    none under it, and the returned frame has no Python node on either
+    path.  A float-key GROUP BY keeps Spark's fold, so its frame holds
+    the one MapInArrow.  Both plans return the same rows.  The table has
+    int32, float64, float32, timestamp, date and string columns; the
+    join's small dimension side stays under the cap, so only its fact
+    side runs on the workers."""
     import os
 
     import pyarrow as pa
@@ -4235,6 +4235,8 @@ def test_one_python_node_per_operator(spark, tmp_path, monkeypatch,
             spark, fact, "x", preds),
         "group": lambda: table_files.agg_table_files_by(
             spark, fact, "i", ["y", "s"], preds=preds),
+        "group_str": lambda: table_files.agg_table_files_by(
+            spark, fact, "i", ["s"], preds=preds),
         "distinct": lambda: table_files.distinct_table_files(
             spark, fact, "ts", preds=preds),
         "topk": lambda: table_files.topk_table_files(
@@ -4258,7 +4260,7 @@ def test_one_python_node_per_operator(spark, tmp_path, monkeypatch,
         return out["rows"], jobs
 
     for name, op in ops.items():
-        if name in ("agg", "count", "minmax"):
+        if name in ("agg", "count", "minmax", "topk", "group_str"):
             rows, jobs = folded(name, op, 1000)
             assert len(jobs) == 1, (name, jobs)
             tiny_rows, jobs = folded(name, op, 1 << 62)
@@ -4300,7 +4302,7 @@ def test_local_relation_keeps_rows_after_empty_batches(spark):
 def test_topk_is_one_pass_with_bounded_gather(spark, tmp_path,
                                               monkeypatch, spark_job_ids):
     """Int-plane top-k is one pass: one task pipeline run
-    (:func:`_run_tasks`), no second scan, one Spark job over the cap.
+    (:func:`_task_batches`), no second scan, one Spark job over the cap.
     Each task fetches the sort column at its zone-map survivors, then
     the other projected columns at no more than k blocks.  Heavy ties
     at the k-th value (5 distinct values, k=100) break on the order
@@ -4341,7 +4343,8 @@ def test_topk_is_one_pass_with_bounded_gather(spark, tmp_path,
             assert got == want, asc
 
     fetches, runs = [], []
-    real_fetch, real_run = table_files._fetch_payloads, table_files._run_tasks
+    real_fetch, real_run = (table_files._fetch_payloads,
+                            table_files._task_batches)
 
     def spy_fetch(path, file_sid, seg, need):
         fetches.append({c: set(v) for c, v in need.items() if v})
@@ -4357,7 +4360,7 @@ def test_topk_is_one_pass_with_bounded_gather(spark, tmp_path,
     k = 3
     monkeypatch.setattr(table_files, "_DRIVER_LOCAL_MAX_CELLS", 1 << 62)
     monkeypatch.setattr(table_files, "_fetch_payloads", spy_fetch)
-    monkeypatch.setattr(table_files, "_run_tasks", spy_run)
+    monkeypatch.setattr(table_files, "_task_batches", spy_run)
     monkeypatch.setattr(table_files, "_run_scan_tasks", no_scan)
     got = table_files.topk_table_files(
         spark, out, "v", k, columns=["k", "v", "s"]).collect()
@@ -4943,6 +4946,87 @@ def test_ctas_keeps_string_index_cols(spark, tmp_path):
         1 for i in range(100, 3000) if i % 97 == 5)
 
 
+def _clause_leaf(rng):
+    """One random predicate leaf and its SQL."""
+    kind = rng.integers(0, 12)
+    if kind in (0, 1):  # int range, sometimes inverted/empty
+        a, b = int(rng.integers(-50, 1050)), int(rng.integers(-50, 1050))
+        if rng.random() < 0.8 and a > b:
+            a, b = b, a
+        neg = "NOT " if kind == 1 else ""
+        return (("not_between" if kind == 1 else "between",
+                 "v_n", a, b),
+                f"v_n {neg}BETWEEN {a} AND {b}")
+    if kind == 2:
+        vals = sorted({int(x) for x in rng.integers(-5, 1005, 4)})
+        return (("int_in", "v_n", vals),
+                f"v_n IN ({', '.join(map(str, vals))})")
+    if kind in (3, 4):  # eq/ne incl. an absent literal
+        t = (f"w{int(rng.integers(0, 22)):02d}"
+             if rng.random() < 0.9 else "zzz")
+        op = ("eq", "=") if kind == 3 else ("ne", "<>")
+        return ((op[0], "tag_n", t), f"tag_n {op[1]} '{t}'")
+    if kind in (5, 6):
+        vals = sorted({f"w{int(x):02d}" for x in rng.integers(0, 22, 3)})
+        lst = ", ".join(f"'{v}'" for v in vals)
+        if kind == 5:
+            return (("in", "tag_n", vals), f"tag_n IN ({lst})")
+        return (("not_in", "tag_n", vals), f"tag_n NOT IN ({lst})")
+    if kind == 7:
+        p = ["w0", "w1", "w", "x"][int(rng.integers(0, 4))]
+        if rng.random() < 0.5:
+            return (("prefix", "tag_n", p), f"tag_n LIKE '{p}%'")
+        return (("not_prefix", "tag_n", p),
+                f"tag_n NOT LIKE '{p}%'")
+    if kind == 8:
+        s = ["0", "1", "05", "9"][int(rng.integers(0, 4))]
+        if rng.random() < 0.5:
+            return (("contains", "tag_n", s), f"tag_n LIKE '%{s}%'")
+        return (("suffix", "tag_n", s), f"tag_n LIKE '%{s}'")
+    if kind == 9:
+        lo, hi = sorted([f"w{int(rng.integers(0, 22)):02d}",
+                         f"w{int(rng.integers(0, 22)):02d}"])
+        return (("str_between", "tag_n", lo, hi),
+                f"tag_n BETWEEN '{lo}' AND '{hi}'")
+    col = ["v_n", "tag_n"][int(rng.integers(0, 2))]
+    if kind == 10:
+        return (("isnull", col), f"{col} IS NULL")
+    return (("notnull", col), f"{col} IS NOT NULL")
+
+
+def _clause_node(rng):
+    """A leaf, or an OR node whose branches may be AND pairs."""
+    if rng.random() < 0.45:
+        branches, sqls = [], []
+        for _ in range(int(rng.integers(2, 4))):
+            if rng.random() < 0.4:
+                l1, s1 = _clause_leaf(rng)
+                l2, s2 = _clause_leaf(rng)
+                branches.append(("and", [l1, l2]))
+                sqls.append(f"({s1} AND {s2})")
+            else:
+                l, s = _clause_leaf(rng)
+                branches.append(l)
+                sqls.append(s)
+        return ("or", branches), "(" + " OR ".join(sqls) + ")"
+    return _clause_leaf(rng)
+
+
+def _random_clause(rng):
+    """One seeded random WHERE clause over the sweep table's ``v_n``
+    (int, about 0-1000) and ``tag_n`` (string ``w00``-``w18``) columns:
+    an AND of one to three nodes, each a leaf of any predicate kind
+    (negations, validity, the LIKE family and degenerate literals such as
+    inverted ranges and absent values) or an OR of leaves and AND pairs.
+    Returns ``(preds, sql)``."""
+    preds, sqls = [], []
+    for _ in range(int(rng.integers(1, 4))):
+        p, s = _clause_node(rng)
+        preds.append(p)
+        sqls.append(s)
+    return preds, " AND ".join(sqls)
+
+
 def test_random_clause_sweep_matches_sql(spark, tmp_path, dispatch):
     """Seeded adversarial sweep over the WHOLE predicate algebra: 40
     random one-alternation clauses (every leaf kind incl. negations,
@@ -4985,68 +5069,6 @@ def test_random_clause_sweep_matches_sql(spark, tmp_path, dispatch):
     )
     rng = np.random.default_rng(20260818)
 
-    def leaf():
-        kind = rng.integers(0, 12)
-        if kind in (0, 1):  # int range, sometimes inverted/empty
-            a, b = int(rng.integers(-50, 1050)), int(rng.integers(-50, 1050))
-            if rng.random() < 0.8 and a > b:
-                a, b = b, a
-            neg = "NOT " if kind == 1 else ""
-            return (("not_between" if kind == 1 else "between",
-                     "v_n", a, b),
-                    f"v_n {neg}BETWEEN {a} AND {b}")
-        if kind == 2:
-            vals = sorted({int(x) for x in rng.integers(-5, 1005, 4)})
-            return (("int_in", "v_n", vals),
-                    f"v_n IN ({', '.join(map(str, vals))})")
-        if kind in (3, 4):  # eq/ne incl. an absent literal
-            t = (f"w{int(rng.integers(0, 22)):02d}"
-                 if rng.random() < 0.9 else "zzz")
-            op = ("eq", "=") if kind == 3 else ("ne", "<>")
-            return ((op[0], "tag_n", t), f"tag_n {op[1]} '{t}'")
-        if kind in (5, 6):
-            vals = sorted({f"w{int(x):02d}" for x in rng.integers(0, 22, 3)})
-            lst = ", ".join(f"'{v}'" for v in vals)
-            if kind == 5:
-                return (("in", "tag_n", vals), f"tag_n IN ({lst})")
-            return (("not_in", "tag_n", vals), f"tag_n NOT IN ({lst})")
-        if kind == 7:
-            p = ["w0", "w1", "w", "x"][int(rng.integers(0, 4))]
-            if rng.random() < 0.5:
-                return (("prefix", "tag_n", p), f"tag_n LIKE '{p}%'")
-            return (("not_prefix", "tag_n", p),
-                    f"tag_n NOT LIKE '{p}%'")
-        if kind == 8:
-            s = ["0", "1", "05", "9"][int(rng.integers(0, 4))]
-            if rng.random() < 0.5:
-                return (("contains", "tag_n", s), f"tag_n LIKE '%{s}%'")
-            return (("suffix", "tag_n", s), f"tag_n LIKE '%{s}'")
-        if kind == 9:
-            lo, hi = sorted([f"w{int(rng.integers(0, 22)):02d}",
-                             f"w{int(rng.integers(0, 22)):02d}"])
-            return (("str_between", "tag_n", lo, hi),
-                    f"tag_n BETWEEN '{lo}' AND '{hi}'")
-        col = ["v_n", "tag_n"][int(rng.integers(0, 2))]
-        if kind == 10:
-            return (("isnull", col), f"{col} IS NULL")
-        return (("notnull", col), f"{col} IS NOT NULL")
-
-    def node():
-        if rng.random() < 0.45:  # OR node, branches may be AND groups
-            branches, sqls = [], []
-            for _ in range(int(rng.integers(2, 4))):
-                if rng.random() < 0.4:
-                    l1, s1 = leaf()
-                    l2, s2 = leaf()
-                    branches.append(("and", [l1, l2]))
-                    sqls.append(f"({s1} AND {s2})")
-                else:
-                    l, s = leaf()
-                    branches.append(l)
-                    sqls.append(s)
-            return ("or", branches), "(" + " OR ".join(sqls) + ")"
-        return leaf()
-
     enc_bytes = {}
     for path in glob.glob(f"{out}/blocks/*.parquet"):
         t = pq.read_table(path, columns=["col_name", "block_idx",
@@ -5086,12 +5108,7 @@ def test_random_clause_sweep_matches_sql(spark, tmp_path, dispatch):
 
     duck = duckdb.connect()
     for trial in range(40):
-        preds, sqls = [], []
-        for _ in range(int(rng.integers(1, 4))):
-            p, s = node()
-            preds.append(p)
-            sqls.append(s)
-        where = " AND ".join(sqls)
+        preds, where = _random_clause(rng)
         got = table_files.count_table_files_where(
             spark, out, preds).collect()[0]["n_rows"]
         want = duck.sql(

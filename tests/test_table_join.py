@@ -89,6 +89,7 @@ def test_join_matches_sql_and_pushes_runtime_filter(spark, joined):
     # both sides are far under the driver-local cell cap
     assert plan["driver_local_a"] is True
     assert plan["driver_local_b"] is True
+    assert plan["driver_join"] is True
     # the runtime filter must SHRINK the fact side's decode bill
     [unfiltered] = TF.explain_scan_table_files(
         spark, joined["fact_enc"],
@@ -133,6 +134,7 @@ def test_join_on_spark_workers_is_identical(spark, joined, monkeypatch):
     )
     assert plan["driver_local_a"] is False
     assert plan["driver_local_b"] is False
+    assert plan["driver_join"] is False
     got = sorted(
         (r["cust"], r["o_orderkey"], r["cents"], r["segment"])
         for r in df.collect()
