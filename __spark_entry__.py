@@ -1015,7 +1015,9 @@ def _q_zonemap_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey",
         order_col="o_orderkey", int_cols=["o_orderkey", "custkey_n"],
     )
-    got = TF.scan_table_files(spark, out, "custkey_n", 100, 499)
+    got = TF.scan_table_files_where(
+        spark, out, [("between", "custkey_n", 100, 499)]
+    )
     return got.select(
         F.col("o_orderkey").cast("bigint").alias("o_orderkey"),
         F.col("custkey_n").cast("bigint").alias("custkey_n"),
@@ -1043,8 +1045,8 @@ def _q_zonemap_scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         int_cols=["o_orderkey", "custkey_n", "total_n"],
         str_cols=["pri_s"],
     )
-    got = TF.scan_table_files(
-        spark, out, "custkey_n", 100, 499,
+    got = TF.scan_table_files_where(
+        spark, out, [("between", "custkey_n", 100, 499)],
         columns=["o_orderkey", "pri_s", "total_n"],
     )
     return got.select(
@@ -1056,7 +1058,8 @@ def _q_zonemap_scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_dict_filter_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STRING-equality pushdown into the encoded format
-    (:func:`rlv.table_files.scan_table_files_eq`): blocks prune on
+    (:func:`rlv.table_files.scan_table_files_where`, one ``eq``
+    predicate): blocks prune on
     dictionary-sidecar MEMBERSHIP (the literal's absence from a block's
     sorted-distinct dictionary is the skip statistic — the string
     counterpart of int zone maps), survivors match their per-block dense
@@ -1077,8 +1080,8 @@ def _q_dict_filter_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="o_orderkey",
         int_cols=["o_orderkey", "opt_custkey"], str_cols=["pri_n"],
     )
-    got = TF.scan_table_files_eq(
-        spark, out, "pri_n", "1-URGENT",
+    got = TF.scan_table_files_where(
+        spark, out, [("eq", "pri_n", "1-URGENT")],
         columns=["o_orderkey", "pri_n", "opt_custkey"],
     )
     return got.select(
@@ -1090,7 +1093,8 @@ def _q_dict_filter_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_dict_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STRING-range pushdown into the encoded format
-    (:func:`rlv.table_files.scan_table_files_str_range`): string columns
+    (:func:`rlv.table_files.scan_table_files_where`, one ``str_between``
+    predicate): string columns
     have no value zone map, but each block's dictionary sidecar IS its
     sorted-distinct valid values, so ``BETWEEN`` evaluates per block
     against the sidecar alone — blocks with no in-range entry prune
@@ -1110,8 +1114,8 @@ def _q_dict_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="o_orderkey",
         int_cols=["o_orderkey", "opt_custkey"], str_cols=["pri_n"],
     )
-    got = TF.scan_table_files_str_range(
-        spark, out, "pri_n", "2", "4z",
+    got = TF.scan_table_files_where(
+        spark, out, [("str_between", "pri_n", "2", "4z")],
         columns=["o_orderkey", "pri_n", "opt_custkey"],
     )
     return got.select(
@@ -1123,7 +1127,8 @@ def _q_dict_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_dict_prefix_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIKE-prefix pushdown into the encoded format
-    (:func:`rlv.table_files.scan_table_files_prefix`): the prefix
+    (:func:`rlv.table_files.scan_table_files_where`, one ``prefix``
+    predicate): the prefix
     predicate evaluates vectorized against each block's dictionary
     sidecar (``binary_slice`` equality over the sorted-distinct entries),
     blocks with no prefixed entry prune without touching their payload,
@@ -1143,8 +1148,8 @@ def _q_dict_prefix_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="o_orderkey",
         int_cols=["o_orderkey", "opt_custkey"], str_cols=["tag_n"],
     )
-    got = TF.scan_table_files_prefix(
-        spark, out, "tag_n", "grp04",
+    got = TF.scan_table_files_where(
+        spark, out, [("prefix", "tag_n", "grp04")],
         columns=["o_orderkey", "tag_n", "opt_custkey"],
     )
     return got.select(
@@ -1939,8 +1944,8 @@ def _q_ctas_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows_per_block=2048,
     )
     n_rows = int(src.num_rows)
-    got = TF.scan_table_files(
-        spark, dst, "o_orderkey", 0, n_rows + 1,
+    got = TF.scan_table_files_where(
+        spark, dst, [("between", "o_orderkey", 0, n_rows + 1)],
         columns=["o_orderkey", "pri_n", "opt_custkey"],
     )
     return got.select(
@@ -1983,8 +1988,8 @@ def _q_clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         int_cols=["o_orderkey", "val_n"],
         rows_per_block=2048, num_tasks=4,
     )
-    got = TF.scan_table_files(
-        spark, enc, "val_n", 100, 299,
+    got = TF.scan_table_files_where(
+        spark, enc, [("between", "val_n", 100, 299)],
         columns=["o_orderkey", "val_n"],
     )
     return got.select(
@@ -1995,11 +2000,12 @@ def _q_clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_pushdown_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregation pushed INTO the encoded format
-    (:func:`rlv.table_files.agg_table_files`): count/sum/min/max over a
-    range predicate computed from the blocks — zone maps classify predicate
-    blocks as pruned / full-match / partial, full-match value blocks
-    aggregate without decoding the predicate (RLE blocks sum their run list
-    without ever expanding), and only range-boundary blocks decode.  Both
+    (:func:`rlv.table_files.agg_table_files_where`): count/sum/min/max
+    over a range predicate computed from the blocks — zone maps classify
+    predicate blocks as pruned / full-match / partial, full-match value
+    blocks aggregate without decoding the predicate (RLE blocks sum their
+    run list without ever expanding), and only range-boundary blocks
+    decode.  Both
     the predicate and the value column are NULLABLE, so the whole
     NULL-semantics surface (NULL pred never matches; count(v)/sum/min/max
     skip NULL values) rides through the validity plane.  The oracle is the
@@ -2015,7 +2021,9 @@ def _q_pushdown_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="o_orderkey",
         int_cols=["o_orderkey", "custkey_n", "cents_n"],
     )
-    got = TF.agg_table_files(spark, out, "cents_n", "custkey_n", 100, 499)
+    got = TF.agg_table_files_where(
+        spark, out, "cents_n", [("between", "custkey_n", 100, 499)]
+    )
     return got.select(
         "n_rows",
         "n_vals",
@@ -2050,7 +2058,7 @@ def _q_group_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     got = TF.agg_table_files_by(
         spark, out, "cents_n", "pri_n",
-        pred_col="o_orderkey", lo=3000, hi=45000,
+        preds=[("between", "o_orderkey", 3000, 45000)],
     )
     return got.select(
         F.coalesce(F.col("pri_n"), F.lit("~null~")).alias("grp"),
@@ -2173,7 +2181,8 @@ def _q_int_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_dict_in_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-list membership pushdown
-    (:func:`rlv.table_files.scan_table_files_in`): ``col IN (a, b, missing)``
+    (:func:`rlv.table_files.scan_table_files_where`, one ``in`` predicate):
+    ``col IN (a, b, missing)``
     on a NULLABLE dictionary column, projected to (key, predicate col,
     nullable int) — blocks prune when their dictionary contains no literal;
     survivors match per-block code SETS.  One literal is absent from the
@@ -2189,8 +2198,9 @@ def _q_dict_in_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="o_orderkey",
         int_cols=["o_orderkey", "opt_custkey"], str_cols=["pri_n"],
     )
-    return TF.scan_table_files_in(
-        spark, out, "pri_n", ["2-HIGH", "4-NOT SPECIFIED", "9-MISSING"],
+    return TF.scan_table_files_where(
+        spark, out,
+        [("in", "pri_n", ["2-HIGH", "4-NOT SPECIFIED", "9-MISSING"])],
         columns=["o_orderkey", "pri_n", "opt_custkey"],
     )
 

@@ -140,14 +140,16 @@ def main(argv=None) -> int:
 
     def run_battery():
         # 1. full scan (every block decodes): the no-pruning baseline
-        timed("scan_full", lambda: TF.scan_table_files(
-            spark, out, "k", 0, kmax, columns=["k", "cents"]).count(),
+        timed("scan_full", lambda: TF.scan_table_files_where(
+            spark, out, [("between", "k", 0, kmax)],
+            columns=["k", "cents"]).count(),
             want=n_rows)
 
         # 2. 1% range on the clustered order column
         lo, hi = kmax // 2, kmax // 2 + kmax // 100
-        e = timed("scan_range_1pct", lambda: TF.scan_table_files(
-            spark, out, "k", lo, hi, columns=["k", "cents"]).count(),
+        e = timed("scan_range_1pct", lambda: TF.scan_table_files_where(
+            spark, out, [("between", "k", lo, hi)],
+            columns=["k", "cents"]).count(),
             want=dsql(f"SELECT count(*) FROM SRC WHERE k BETWEEN {lo} "
                       f"AND {hi}")[0])
         zs = TF.zonemap_stats(out, "k", lo, hi)
@@ -160,8 +162,8 @@ def main(argv=None) -> int:
             dsql("SELECT custkey_n FROM SRC WHERE custkey_n IS NOT NULL "
                  "ORDER BY custkey_n LIMIT 1 OFFSET 1000")[0]
         ).zfill(6)
-        e = timed("scan_str_eq", lambda: TF.scan_table_files_eq(
-            spark, out, "clerk", lit,
+        e = timed("scan_str_eq", lambda: TF.scan_table_files_where(
+            spark, out, [("eq", "clerk", lit)],
             columns=["k", "clerk"]).count(),
             want=dsql(f"SELECT count(*) FROM SRC WHERE clerk = '{lit}'")[0])
         ss = TF.strdict_stats(out, "clerk", lit)
@@ -193,8 +195,9 @@ def main(argv=None) -> int:
         # 5. decode-free aggregate (full-range predicate: every block
         #    full-matches, value blocks aggregate from run lists)
         def agg_full():
-            r = TF.agg_table_files(
-                spark, out, "cents", "k", 0, kmax).collect()[0]
+            r = TF.agg_table_files_where(
+                spark, out, "cents",
+                [("between", "k", 0, kmax)]).collect()[0]
             return (r["n_rows"], int(r["sum_val"]))
         timed("agg_pushdown_full", agg_full,
               want=tuple(dsql("SELECT count(*), sum(cents) FROM SRC")))

@@ -145,8 +145,9 @@ def main(argv=None) -> int:
               for c in vcols
           ))
     lo, hi = kmax // 2, kmax // 2 + kmax // 100
-    timed("scan_2col", lambda: TF.scan_table_files(
-        spark, out, "k", lo, hi, columns=["k", vcols[0]]).count(),
+    timed("scan_2col", lambda: TF.scan_table_files_where(
+        spark, out, [("between", "k", lo, hi)],
+        columns=["k", vcols[0]]).count(),
         want=dsql(f"SELECT count(*) FROM SRC WHERE k BETWEEN {lo} "
                   f"AND {hi}")[0])
 

@@ -15,7 +15,7 @@ Wire layout under ``out_dir``:
   ``(split_seq, col_name, block_idx, n_values, n_nulls, n_runs, codec_id,
   enc_bytes, naive_bytes, min_val, max_val, sum_val, block)``.  ``min_val``/
   ``max_val`` are the block's zone map over its VALID values (r4) — the
-  block-skipping statistic :func:`scan_table_files` prunes on — and
+  block-skipping statistic :func:`scan_table_files_where` prunes on — and
   ``sum_val`` their exact decimal(38,0) sum, the stat that serves
   full-matching aggregate blocks without a payload read.  String columns contribute their
   per-block dense-code stream (codes = rank of the value among the block's
@@ -931,8 +931,8 @@ def _read_dict_sidecar(
     disambiguates (col, block) keys in files that absorbed several splits
     through compaction; a pre-r4 sidecar without the column keys everything
     under ``default_seq``.  ``col`` (one name or a list) filters the read to
-    those columns' dictionaries (the membership-pruning pass of
-    :func:`scan_table_files_eq`; the projection pass of both scans);
+    those columns' dictionaries (the membership-pruning pass and the
+    projection pass of :func:`scan_table_files_where`);
     ``block_idx`` additionally restricts to those block ordinals (the
     over-read across compacted segments is harmless — callers key by
     (seq, col, block)); ``seg`` restricts a segment-scoped task of a
@@ -1723,9 +1723,8 @@ def _plane_in_keys(schema: dict, col: str, vals) -> np.ndarray:
 
 def _require_int_col(enc_dir: str, col: str) -> dict:
     """Load the table schema and validate ``col`` is a zone-mapped int
-    column — shared by the scan and its stats sibling so both fail the same
-    way on typos and string columns (whose per-block dense-rank codes carry
-    meaningless min/max for value predicates)."""
+    column, so a typo or a string column (whose per-block dense-rank codes
+    carry meaningless min/max for value predicates) fails on the driver."""
     schema = _load_table_schema(enc_dir)
     if schema is None:
         raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
@@ -1803,84 +1802,6 @@ def _literals_matcher(values: tuple[bytes, ...]):
     return match
 
 
-def scan_table_files(
-    spark: SparkSession, enc_dir: str, col: str, lo: int, hi: int,
-    columns: list[str] | None = None,
-):
-    """Pruned projection scan over an encoded table: rows where ``lo <=
-    col <= hi`` (NULLs excluded, SQL BETWEEN semantics), projected to
-    ``columns`` — any mix of int columns (returned at their recorded
-    source widths, NULLs preserved) and string columns (dictionary-gathered
-    per block, NULLs preserved).  ``columns=None`` keeps the classic shape:
-    ``(order_col, col)``, or just ``(order_col,)`` when the scanned column
-    IS the sort key.
-
-    One task per live (blocks file, segment), zero shuffle; a tiny plan
-    runs on the driver instead (:func:`_run_tasks`).  The zone-map predicate
-    runs as PARQUET FILTERS on a payload-free metadata read first, so
-    pruned blocks are neither decoded NOR materialized from disk; only
-    surviving block ordinals' payloads are fetched — and only for the
-    PROJECTED columns, so a 2-column read of a 50-column table never
-    touches the other 48 (column pruning inside our own format).  On a
-    sorted or clustered column the scan touches O(selectivity) of the
-    data, the same block-skipping a warehouse gets from parquet page
-    stats, here served by OUR metadata so the payload format never needs
-    parquet's reader.  :func:`zonemap_stats` reports the pruning ratio
-    from metadata alone.  Predicate column must be int (string zone maps
-    would need order statistics the dictionary sidecar does not record —
-    by design: dense codes are per-block ranks)."""
-    schema = _require_int_col(enc_dir, col)
-    out_names = _scan_out_names(schema, col, columns)
-    return _run_scan_tasks(
-        spark, enc_dir, schema, out_names,
-        [{"kind": "range", "col": col,
-          "lo": _plane_literal(schema, col, lo, "lo"),
-          "hi": _plane_literal(schema, col, hi, "hi")}],
-    )
-
-
-def scan_table_files_eq(
-    spark: SparkSession, enc_dir: str, col: str, value: str,
-    columns: list[str] | None = None,
-):
-    """STRING-equality pushdown into the encoded format: rows where
-    ``col = value`` (NULL never matches, SQL equality), projected to
-    ``columns`` (default ``(order_col, col)``) — the string counterpart of
-    :func:`scan_table_files`'s int range scan.
-
-    String blocks carry per-block dense-rank codes plus a dictionary
-    sidecar of the block's sorted distinct VALID values, so equality prunes
-    on dictionary MEMBERSHIP: phase 1 decodes only the (small) sidecar and
-    keeps blocks whose dictionary contains the literal, recording the
-    literal's per-block rank; phase 2 fetches payloads for survivors only
-    and matches their code streams against that rank.  A selective literal
-    touches O(blocks containing it) payload bytes — the dictionary-page
-    filtering a warehouse gets from parquet, served by our sidecar (and the
-    reason string columns need no value zone maps: ranks are per-block,
-    membership is the pruning statistic; see :func:`strdict_stats`)."""
-    return _scan_one(spark, enc_dir, ("eq", col, value), columns)
-
-
-def scan_table_files_in(
-    spark: SparkSession, enc_dir: str, col: str, values: list[str],
-    columns: list[str] | None = None,
-):
-    """STRING IN-list pushdown into the encoded format: rows where
-    ``col IN (values...)`` (NULL never matches, SQL membership), projected
-    to ``columns`` (default ``(order_col, col)``) — the multi-literal
-    generalization of :func:`scan_table_files_eq`.
-
-    Phase 1 decodes only the dictionary sidecars and keeps blocks whose
-    dictionary contains AT LEAST ONE literal, recording the present
-    literals' per-block ranks; phase 2 fetches survivors' payloads and
-    matches each block's code stream against its own code SET.  Pruning is
-    the union of the single-literal membership prunes, so a selective
-    literal list touches O(blocks containing any literal) payload bytes.
-    Duplicates in ``values`` collapse; an empty list is refused (SQL's
-    ``IN ()`` is a syntax error)."""
-    return _scan_one(spark, enc_dir, ("in", col, list(values)), columns)
-
-
 def _str_range_matcher(lo_b: bytes, hi_b: bytes):
     """Per-block dictionary matcher for ``lo <= col <= hi`` (bytewise —
     UTF-8 byte order == code-point order, the binary collation DuckDB and
@@ -1952,44 +1873,6 @@ def _str_suffix_matcher(suffix: bytes):
         return np.flatnonzero(m.to_numpy(zero_copy_only=False))
 
     return match
-
-
-def scan_table_files_str_range(
-    spark: SparkSession, enc_dir: str, col: str, lo: str, hi: str,
-    columns: list[str] | None = None,
-):
-    """STRING-range pushdown into the encoded format: rows where
-    ``lo <= col <= hi`` (NULL never matches, SQL BETWEEN under binary
-    collation), projected to ``columns`` (default ``(order_col, col)``).
-
-    Int columns prune on value zone maps; string columns don't record one
-    — but they don't need to: each block's dictionary sidecar IS its
-    sorted-distinct valid values, so the range predicate evaluates
-    per-block against the (small) sidecar alone.  A block prunes when NO
-    dictionary entry falls in [lo, hi]; survivors match their code stream
-    against the in-range entries' rank set, and a block whose whole
-    dictionary is in range keeps every valid row without an isin pass.
-    ``lo > hi`` is the SQL empty range.  Payload bytes read are O(blocks
-    containing an in-range value) — string zone-map pruning served by the
-    sidecar."""
-    return _scan_one(spark, enc_dir, ("str_between", col, lo, hi), columns)
-
-
-def scan_table_files_prefix(
-    spark: SparkSession, enc_dir: str, col: str, prefix: str,
-    columns: list[str] | None = None,
-):
-    """LIKE-prefix pushdown into the encoded format: rows where
-    ``col LIKE 'prefix%'`` (NULL never matches), projected to ``columns``
-    (default ``(order_col, col)``).
-
-    Same membership machinery as :func:`scan_table_files_str_range`: the
-    prefix predicate evaluates against each block's dictionary sidecar
-    (vectorized ``binary_slice`` equality over the sorted-distinct
-    entries), blocks with no prefixed entry prune without touching their
-    payload, and survivors match per-block rank sets.  The empty prefix is
-    SQL's ``LIKE '%'`` — every non-NULL row."""
-    return _scan_one(spark, enc_dir, ("prefix", col, prefix), columns)
 
 
 def _invert_matcher(match):
@@ -2236,8 +2119,8 @@ def scan_table_files_where(
     ``("notnull", col)`` validity predicates on either column kind; and
     ``("or", [leaf, ...])`` disjunction nodes over any of the above (one
     level — AND-of-OR expresses arbitrary WHERE clauses in conjunctive
-    normal form) — the same predicates the single-predicate scans push
-    down, here evaluated together in ONE pass.
+    normal form), all evaluated together in ONE pass.  A one-element
+    list is a single-predicate scan.
 
     The per-file surviving block set is the INTERSECTION of every
     predicate's block prune (int ranges via parquet filters on the
@@ -2247,17 +2130,18 @@ def scan_table_files_where(
     selective predicate — the same multiplicative skipping a warehouse
     gets from stacking page-stat and dictionary filters.  Row masks AND
     together (OR nodes union their leaf masks first); each predicate
-    keeps SQL NULL semantics (NULL never matches, except ``isnull``),
-    and all projection paths (int widths, string gathers, NULL
-    preservation) are shared with the single-predicate scans.  One task
-    per live (blocks file, segment), zero shuffle; a tiny plan runs on
-    the driver instead (:func:`_run_tasks`)."""
+    keeps SQL NULL semantics (NULL never matches, except ``isnull``).
+    Int columns come back at their recorded source widths and string
+    columns through the per-block dictionaries, NULLs preserved.  One
+    task per live (blocks file, segment), zero shuffle; a tiny plan runs
+    on the driver instead (:func:`_run_tasks`)."""
     schema = _load_table_schema(enc_dir)
     if schema is None:
         raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
     specs = _norm_preds(schema, preds)
-    return _run_scan_tasks(spark, enc_dir, schema,
-                           _where_out_names(schema, specs, columns), specs)
+    reducer = _ScanReducer(schema, specs,
+                           _where_out_names(schema, specs, columns))
+    return _run_tasks(spark, enc_dir, _query_tasks(enc_dir), reducer, specs)
 
 
 def semijoin_scan_table_files(
@@ -2308,11 +2192,9 @@ def semijoin_scan_table_files(
     out_names = _scan_out_names(schema, col, columns)
     if not keys:
         return _local_relation(spark, _typed_ddl(schema, out_names), [])
-    if col in schema["str_cols"]:
-        return scan_table_files_in(spark, enc_dir, col, keys,
-                                   columns=out_names)
+    kind = "in" if col in schema["str_cols"] else "int_in"
     return scan_table_files_where(
-        spark, enc_dir, [("int_in", col, keys)], columns=out_names
+        spark, enc_dir, [(kind, col, keys)], columns=out_names
     )
 
 
@@ -2468,7 +2350,7 @@ def join_table_files(
         ]
         sides.append({
             "enc": enc_dir, "schema": schema, "preds": eff_preds,
-            "columns": out_names,
+            "columns": out_names, "tasks": _query_tasks(enc_dir),
         })
     for c in on_cols:
         ta = _typed_field_type(sides[0]["schema"], c)
@@ -2491,7 +2373,7 @@ def join_table_files(
             f"how must be 'inner' or 'left', got {how!r}"
         )
     for s in sides:
-        bill = _scan_bill(s["enc"], s["preds"], s["columns"])
+        bill = _scan_bill(s["enc"], s["tasks"], s["preds"], s["columns"])
         s["payload_bytes"] = bill.get("payload_bytes", 0)
         s["rows_surviving"] = bill.get("rows_surviving", 0)
         s["restored_bytes"] = _restored_bytes(
@@ -2541,7 +2423,7 @@ def join_table_files(
             import pyarrow.compute as pc
 
             keys = pc.unique(_task_batches(
-                spark, filter_src["enc"], _query_tasks(filter_src["enc"]),
+                spark, filter_src["enc"], filter_src["tasks"],
                 _DistinctReducer(kschema, key),
                 _norm_preds(kschema, filter_src["preds"]),
             ).column(key).drop_null()).to_pylist()
@@ -2555,7 +2437,6 @@ def join_table_files(
         s["specs"] = _norm_preds(s["schema"], s["preds"])
         s["reducer"] = _ScanReducer(s["schema"], s["specs"], _where_out_names(
             s["schema"], s["specs"], s["columns"]))
-        s["tasks"] = _query_tasks(s["enc"])
         s["arrow"] = _arrow_schema(s["reducer"].ddl)[1]
         s["batches"] = _driver_local_batches(
             s["enc"], s["tasks"], s["reducer"], s["specs"], s["arrow"])
@@ -2744,8 +2625,8 @@ def strdict_stats(enc_dir: str, col: str, value: str) -> dict:
 
 def _scan_out_names(schema: dict, col: str,
                     columns: list[str] | None) -> list[str]:
-    """Validate and default the scan projection (shared by the range and
-    equality scans)."""
+    """Validate ``columns``, or default the projection to ``(order_col,
+    col)`` (just ``(order_col,)`` when ``col`` is the order column)."""
     order_col = schema["order_col"]
     if columns is None:
         return [order_col] if col == order_col else [order_col, col]
@@ -2773,28 +2654,6 @@ def _where_out_names(schema: dict, specs: list[dict],
     if columns is None:
         return list(dict.fromkeys([schema["order_col"], *pred_cols]))
     return _scan_out_names(schema, pred_cols[0], columns)
-
-
-def _scan_one(spark: SparkSession, enc_dir: str, pred: tuple,
-              columns: list[str] | None):
-    """A single-predicate scan: ``pred`` normalized like any
-    :func:`scan_table_files_where` leaf, projected to ``columns``
-    (default ``(order_col, col)``)."""
-    schema = _load_table_schema(enc_dir)
-    if schema is None:
-        raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
-    specs = _norm_preds(schema, [pred])
-    return _run_scan_tasks(spark, enc_dir, schema,
-                           _scan_out_names(schema, pred[1], columns), specs)
-
-
-def _run_scan_tasks(spark: SparkSession, enc_dir: str, schema: dict,
-                    out_names: list[str], specs: list[dict]):
-    """The pruned scan of ``specs`` projected to ``out_names``, dispatched
-    by :func:`_run_tasks`; every column comes back at its restored type
-    (shared tail of every scan)."""
-    return _run_tasks(spark, enc_dir, _query_tasks(enc_dir),
-                      _ScanReducer(schema, specs, out_names), specs)
 
 
 def _int_pred_class(p: dict, nv: int, nn: int, nr: int, mn: int, mx: int):
@@ -3607,52 +3466,22 @@ class _AggReducer(_Reducer):
         }
 
 
-def agg_table_files(
-    spark: SparkSession, enc_dir: str, value_col: str,
-    pred_col: str, lo: int, hi: int,
+def agg_table_files_where(
+    spark: SparkSession, enc_dir: str, value_col: str, preds,
 ):
     """Aggregation pushed into the encoded format: one row
     ``(n_rows, n_vals, sum_val, min_val, max_val)`` equal to SQL's
 
     ``SELECT count(*), count(v), sum(v), min(v), max(v) FROM t
-    WHERE p BETWEEN lo AND hi``
+    WHERE p1 AND p2 AND ...``
 
-    computed FROM THE BLOCKS, never materializing the table.  Zone maps
-    classify every predicate block as pruned / full-match / partial from
-    metadata alone; full-match value blocks aggregate via
-    :func:`rlv.blocks.agg_block` (an RLE block sums its run list without
-    expanding — the compute-over-compressed identity), and only partial
-    (range-boundary) blocks decode the predicate column.  On a sorted or
-    clustered predicate the decode cost is O(boundary blocks), not
-    O(selectivity) — the same shape a warehouse gets from page-stats
-    pushdown, served by our metadata.
-
-    One task per (blocks file, segment) emits one partial row, and this
-    process folds the partials (:func:`_task_batches`): a tiny plan runs
-    in-process with no Spark job, any other as one Spark stage, and no
-    row is shuffled.  ``sum_val`` is decimal(38,0): per-block sums are
-    exact Python ints (:func:`rlv.blocks.exact_sum_i64`), and 38 digits
-    absorbs any
+    for a CONJUNCTION of the predicates :func:`scan_table_files_where`
+    takes.  An empty match returns ``(0, 0, NULL, NULL, NULL)``.
+    ``sum_val`` is decimal(38,0) (decimal(38,s) for a decimal-declared
+    column): per-block sums are exact Python ints
+    (:func:`rlv.blocks.exact_sum_i64`), and 38 digits absorbs any
     real-world table (10^38 > rows * max|int64|), where a bigint
-    accumulator could wrap.  SQL NULL semantics throughout: NULL predicate
-    rows never match; ``n_vals``/``sum``/``min``/``max`` skip NULL values;
-    an empty match returns ``(0, 0, NULL, NULL, NULL)``."""
-    _require_int_col(enc_dir, pred_col)
-    return agg_table_files_where(
-        spark, enc_dir, value_col,
-        [("between", pred_col, lo, hi)],
-    )
-
-
-def agg_table_files_where(
-    spark: SparkSession, enc_dir: str, value_col: str, preds,
-):
-    """Aggregation pushed into the encoded format under a CONJUNCTION of
-    predicates: the same ``(n_rows, n_vals, sum_val, min_val, max_val)``
-    row as :func:`agg_table_files`, for ``WHERE p1 AND p2 AND ...`` with
-    the same five predicate kinds :func:`scan_table_files_where` takes
-    (int zone-map ranges; string eq / IN / BETWEEN / prefix via the
-    dictionary sidecars).
+    accumulator could wrap.
 
     Each predicate classifies every block pruned / full-match / partial
     from metadata and sidecars alone; the combined class is pruned if ANY
@@ -4082,22 +3911,23 @@ class _GroupReducer(_Reducer):
 
 def agg_table_files_by(
     spark: SparkSession, enc_dir: str, value_col: str, group_col: str,
-    pred_col: str | None = None, lo: int | None = None,
-    hi: int | None = None, preds=None,
+    preds=None,
 ):
     """GROUP BY pushed into the encoded format: one row per group equal to
 
     ``SELECT g, count(*), count(v), sum(v), min(v), max(v) FROM t
-    [WHERE p BETWEEN lo AND hi] GROUP BY g``
+    [WHERE p1 AND p2 AND ...] GROUP BY g``
 
     computed FROM THE BLOCKS — the grouped counterpart of
-    :func:`agg_table_files`.  ``group_col`` may be a STRING column (grouping
-    runs over per-block dictionary CODES; each block's small sidecar decodes
-    once to name its groups — the strings themselves never materialize
-    per-row) or an INT column (raw values key the groups).  An optional
-    int-range predicate reuses the zone-map block classification: pruned
-    blocks are never read, full-match blocks skip the predicate decode, only
-    boundary blocks decode it.
+    :func:`agg_table_files_where`.  ``group_col`` may be a STRING column
+    (grouping runs over per-block dictionary CODES; each block's small
+    sidecar decodes once to name its groups — the strings themselves never
+    materialize per-row) or an INT column (raw values key the groups).
+    The optional ``preds`` is a conjunction of the predicates
+    :func:`scan_table_files_where` takes, with
+    :func:`agg_table_files_where`'s block classification and mask
+    semantics: pruned blocks are never read, full-match blocks skip the
+    predicate decode, only boundary blocks decode it.
 
     Scale shape: one task per (blocks file, segment) computes per-group
     partials with ``argsort`` + ``reduceat`` (per-group Python is
@@ -4116,12 +3946,6 @@ def agg_table_files_by(
     ``n_vals``/``sum``/``min``/``max`` skip NULL values (``sum_val`` is
     NULL for a group with no valid values, exact decimal(38,0)
     otherwise).
-
-    ``preds`` generalizes the single range to a CONJUNCTION of the same
-    predicate kinds :func:`scan_table_files_where` takes (mutually
-    exclusive with ``pred_col``/``lo``/``hi``): per-predicate block
-    classification and mask semantics are exactly
-    :func:`agg_table_files_where`'s.
 
     ``group_col`` may also be a LIST of columns (``GROUP BY a, b, ...``,
     any mix of int and string): per block each key column maps to a dense
@@ -4146,19 +3970,7 @@ def agg_table_files_by(
                 f"int_cols={schema['int_cols']} "
                 f"str_cols={schema['str_cols']}"
             )
-    if pred_col is not None:
-        if preds is not None:
-            raise ValueError("pass either pred_col/lo/hi or preds, not both")
-        if lo is None or hi is None:
-            raise ValueError("pred_col requires lo and hi")
-        _require_int_col(enc_dir, pred_col)
-        specs = _norm_preds(
-            schema, [("between", pred_col, lo, hi)]
-        )
-    elif lo is not None or hi is not None:
-        raise ValueError("lo/hi require pred_col")
-    else:
-        specs = _norm_preds(schema, preds) if preds else []
+    specs = _norm_preds(schema, preds) if preds else []
     tasks = _query_tasks(enc_dir)
     reducer = _GroupReducer(schema, value_col, group_cols)
     bound = _group_rows_bound(enc_dir, schema, group_cols, len(tasks))
@@ -4376,13 +4188,13 @@ AGG_EXPLAIN_SCHEMA = (
 )
 
 
-def _explain_bill(enc_dir: str, specs: list[dict], reducer) -> dict:
-    """Sum :func:`_explain_task` over the dataset's query tasks ON THE
-    DRIVER: the pass reads only metadata columns and sidecars (a few KB
-    per file), so it runs in-process, not as a Spark job.  ``files``
+def _explain_bill(enc_dir: str, tasks: pa.Table, specs: list[dict],
+                  reducer) -> dict:
+    """Sum :func:`_explain_task` over the dataset's query ``tasks`` ON
+    THE DRIVER: the pass reads only metadata columns and sidecars (a few
+    KB per file), so it runs in-process, not as a Spark job.  ``files``
     counts LIVE FILES (planner-known), not tasks: a compacted bin fans
     out to several segment tasks but is still one file."""
-    tasks = _query_tasks(enc_dir)
     symbols = engine_files._load_symbols(enc_dir)
     bill = {"files": len(set(tasks.column("file").to_pylist()))}
     for t in tasks.to_pylist():
@@ -4425,19 +4237,21 @@ def explain_agg_table_files(
         schema = _require_int_col(enc_dir, vc)
         _require_summable(schema, vc)
     specs = _norm_preds(schema, preds)
-    bill = _explain_bill(enc_dir, specs, _AggReducer(schema, value_cols))
+    bill = _explain_bill(enc_dir, _query_tasks(enc_dir), specs,
+                         _AggReducer(schema, value_cols))
     return _one_row_frame(spark, bill, AGG_EXPLAIN_SCHEMA)
 
 
-def _scan_bill(enc_dir: str, preds, columns: list[str] | None) -> dict:
-    """The scan EXPLAIN bill as a dict (see
+def _scan_bill(enc_dir: str, tasks: pa.Table, preds,
+               columns: list[str] | None) -> dict:
+    """The scan EXPLAIN bill over ``tasks`` as a dict (see
     :func:`explain_scan_table_files`)."""
     schema = _load_table_schema(enc_dir)
     if schema is None:
         raise FileNotFoundError(f"no table schema recorded at {enc_dir}")
     specs = _norm_preds(schema, preds)
     out_names = _where_out_names(schema, specs, columns)
-    return _explain_bill(enc_dir, specs,
+    return _explain_bill(enc_dir, tasks, specs,
                          _ScanReducer(schema, specs, out_names))
 
 
@@ -4466,7 +4280,8 @@ def explain_scan_table_files(
     that only partially survives.  On a zone-map-clustered predicate the
     two converge (segments survive or prune wholesale)."""
     return _one_row_frame(
-        spark, _scan_bill(enc_dir, preds, columns), EXPLAIN_SCHEMA
+        spark, _scan_bill(enc_dir, _query_tasks(enc_dir), preds, columns),
+        EXPLAIN_SCHEMA
     )
 
 
@@ -4768,10 +4583,9 @@ def _topk_table_files_str(
 
     specs = _norm_preds(schema, preds) if preds else []
     out_names = _scan_out_names(schema, col, columns)
-    cand = _run_tasks(
-        spark, enc_dir, _query_tasks(enc_dir),
-        _TopkStrReducer(col, int(k), ascending), specs,
-    )
+    tasks = _query_tasks(enc_dir)
+    cand = _run_tasks(spark, enc_dir, tasks,
+                      _TopkStrReducer(col, int(k), ascending), specs)
     cands = sorted(
         {r["val"] for r in cand.collect() if r["val"] is not None}
     )
@@ -4799,7 +4613,9 @@ def _topk_table_files_str(
     else:
         # under a conjunction the scan must still drop NULLs of col
         bound_specs.extend(_norm_preds(schema, [("notnull", col)]))
-    scan = _run_scan_tasks(spark, enc_dir, schema, scan_names, bound_specs)
+    scan = _run_tasks(spark, enc_dir, tasks,
+                      _ScanReducer(schema, bound_specs, scan_names),
+                      bound_specs)
     sort_cols = [F.col(col).asc() if ascending else F.col(col).desc()]
     order_col = schema["order_col"]
     if order_col in out_names and order_col != col:
@@ -4900,8 +4716,8 @@ def topk_table_files(
     (``ascending``) or largest valid values of ``col`` (NULLs excluded,
     SQL ``WHERE col IS NOT NULL ORDER BY col LIMIT k``, floats in SQL
     order: NaN above every number, ``-0.0`` equal to ``0.0``), projected
-    like :func:`scan_table_files`.  ``col`` may be an int-plane column
-    (one pass, below) or a dictionary STRING column
+    to ``columns`` (default ``(order_col, col)``).  ``col`` may be an
+    int-plane column (one pass, below) or a dictionary STRING column
     (:func:`_topk_table_files_str`: candidates from the sorted-distinct
     sidecars alone, threshold as a one-sided string bound, final pass the
     membership-pruned scan — binary collation, as everywhere).  When the

@@ -1,14 +1,16 @@
-"""Differential sweep of the operators that finish in the calling process:
-int-plane top-k, GROUP BY and the join, each under seeded random WHERE
-clauses, checked against DuckDB on both query dispatch paths.
+"""Differential sweep of the pushdown operators whose partials fold in the
+calling process, or may: the aggregate, COUNT, MIN/MAX, DISTINCT, int-plane
+top-k, GROUP BY and the join, each under seeded random WHERE clauses,
+checked against DuckDB on both query dispatch paths.
 
 The fact table is adversarial for pyarrow's semantics, which differ from
 SQL's: a float column with NaN payloads of both signs, -0.0/0.0 and
 +-inf (pyarrow's ``group_by`` splits them, ``sort_indices`` ranks them by
-IEEE order), int64 values past 2^53, a timestamp, a date, a low-NDV and a
-high-NDV string and an ``index_cols`` int, every column but the order
-column holding NULLs.  The dimension table repeats and omits join keys,
-so joins are many-to-many, hit NULL keys and leave LEFT rows unmatched.
+IEEE order, ``min_max`` skips NaN), int64 values past 2^53, a timestamp,
+a date, a low-NDV and a high-NDV string and an ``index_cols`` int, every
+column but the order column holding NULLs.  The dimension table repeats
+and omits join keys, so joins are many-to-many, hit NULL keys and leave
+LEFT rows unmatched.
 """
 
 from __future__ import annotations
@@ -99,12 +101,15 @@ def _tables(tmp_path, rng):
 
 def test_fold_sweep_matches_sql(spark, tmp_path, monkeypatch):
     """16 random clauses that keep rows and one that keeps none; each
-    runs one top-k (int, float or timestamp sort column, both
-    directions, with and without the order column projected), one GROUP
-    BY (string, index-int, string+index and float keys) and one join
-    (inner and LEFT, on an int and on a string key), cycling through the
-    variants, on the Spark workers and in this process.  Every result
-    equals DuckDB's; a top-k's rows come back in ``ORDER BY`` order.
+    runs one aggregate (an int value column, a near-2^53 one, or both in
+    one pass), one COUNT, one MIN/MAX (int, float or timestamp column),
+    one DISTINCT (low-NDV string, index-int or float column), one top-k
+    (int, float or timestamp sort column, both directions, with and
+    without the order column projected), one GROUP BY (string,
+    index-int, string+index and float keys) and one join (inner and
+    LEFT, on an int and on a string key), cycling through the variants,
+    on the Spark workers and in this process.  Every result equals
+    DuckDB's; a top-k's rows come back in ``ORDER BY`` order.
     The GROUP BY's driver-side bound covers every partial row it emits,
     and the in-process join runs exactly when the plan is tiny."""
     rng = np.random.default_rng(20261020)
@@ -139,6 +144,9 @@ def test_fold_sweep_matches_sql(spark, tmp_path, monkeypatch):
             [])
         assert bound >= parts.num_rows > 0, g
 
+    aggs = ["v_n", "big", ["v_n", "big"]]
+    extremes = ["big", "x", "ts"]
+    distincts = ["tag_n", "ix", "x"]
     topks = [(c, asc, with_k) for c in ("big", "x", "ts")
              for asc in (True, False) for with_k in (True, False)]
     joins = [(key, how) for key in ("ix", "tag_n")
@@ -153,10 +161,24 @@ def test_fold_sweep_matches_sql(spark, tmp_path, monkeypatch):
     clauses.append(([("between", "v_n", 2000, 3000)],
                     "v_n BETWEEN 2000 AND 3000"))
     for trial, (preds, where) in enumerate(clauses):
+        vals = aggs[trial % len(aggs)]
+        ec = extremes[trial % len(extremes)]
+        dc = distincts[trial % len(distincts)]
         c, asc, with_k = topks[trial % len(topks)]
         kk = int(rng.choice([1, 5, 40]))
         g = groups[trial % len(groups)]
         key, how = joins[trial % len(joins)]
+        want_agg = _rows(duck.sql(" UNION ALL ".join(
+            ("SELECT " + (f"'{v}', " if isinstance(vals, list) else "")
+             + f"count(*), count({v}), sum({v}), min({v}), max({v}) "
+             f"FROM fact WHERE {where}")
+            for v in (vals if isinstance(vals, list) else [vals]))).arrow())
+        want_count = _rows(duck.sql(
+            f"SELECT count(*) FROM fact WHERE {where}").arrow())
+        want_minmax = _rows(duck.sql(
+            f"SELECT min({ec}), max({ec}) FROM fact WHERE {where}").arrow())
+        want_distinct = _rows(duck.sql(
+            f"SELECT DISTINCT {dc} FROM fact WHERE {where}").arrow())
         direction = "ASC" if asc else "DESC"
         want_topk = _rows(duck.sql(
             f"SELECT k, {c} FROM fact WHERE ({where}) AND {c} IS NOT NULL "
@@ -169,8 +191,20 @@ def test_fold_sweep_matches_sql(spark, tmp_path, monkeypatch):
             f"SELECT a.{key}, a.k, b.dv FROM (SELECT * FROM fact WHERE "
             f"{where}) a {how.upper()} JOIN dim b ON a.{key} = b.{key}"
         ).arrow())
-        ctx = (trial, where, c, asc, with_k, kk, g, key, how)
+        ctx = (trial, where, vals, ec, dc, c, asc, with_k, kk, g, key, how)
         for path in _dispatch_paths(monkeypatch):
+            got = _rows(table_files.agg_table_files_where(
+                spark, fact, vals, preds).toArrow())
+            assert got == want_agg, (path, ctx)
+            got = _rows(table_files.count_table_files_where(
+                spark, fact, preds).toArrow())
+            assert got == want_count, (path, ctx)
+            got = _rows(table_files.minmax_table_files_where(
+                spark, fact, ec, preds).toArrow())
+            assert got == want_minmax, (path, ctx)
+            got = _rows(table_files.distinct_table_files(
+                spark, fact, dc, preds=preds).toArrow())
+            assert got == want_distinct, (path, ctx)
             got = _rows(table_files.topk_table_files(
                 spark, fact, c, kk, ascending=asc,
                 columns=["k", c, "hs"] if with_k else [c, "tag_n"],

@@ -360,8 +360,8 @@ def test_table_stream_typed_and_decimal_columns(spark, tmp_path):
     assert table_files._load_table_schema(out)["int_col_types"][
         "o_totalprice"] == "dec2:double"
     assert table_files.verify_table_files(spark, out)["mismatches"] == 0
-    [r] = table_files.agg_table_files(
-        spark, out, "o_totalprice", "o_orderkey", 1, 10 ** 9
+    [r] = table_files.agg_table_files_where(
+        spark, out, "o_totalprice", [("between", "o_orderkey", 1, 10 ** 9)]
     ).collect()
     [w] = duckdb.sql(
         "SELECT CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS "

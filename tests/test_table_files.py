@@ -391,7 +391,8 @@ def test_zonemap_pruned_scan(spark, tmp_path):
     st = table_files.zonemap_stats(out, "band_n", lo, hi)
     # the clustered column must prune hard: 5 bands ~= 500 rows of 20000
     assert st["blocks_matching"] < st["blocks_total"] // 3, st
-    got = table_files.scan_table_files(spark, out, "band_n", lo, hi)
+    got = table_files.scan_table_files_where(
+        spark, out, [("between", "band_n", lo, hi)])
     assert dict(got.dtypes) == {"k": "bigint", "band_n": "int"}
     rows = sorted((r["k"], r["band_n"]) for r in got.collect())
     want = sorted(
@@ -401,7 +402,8 @@ def test_zonemap_pruned_scan(spark, tmp_path):
     assert rows == want and len(rows) > 0
     # a non-int column is refused with the valid set named
     with pytest.raises(ValueError, match="int column"):
-        table_files.scan_table_files(spark, out, "nope", 0, 1)
+        table_files.scan_table_files_where(
+            spark, out, [("between", "nope", 0, 1)])
 
 
 def test_zonemap_scan_projection(spark, tmp_path):
@@ -435,8 +437,8 @@ def test_zonemap_scan_projection(spark, tmp_path):
         str_cols=["tag_s"], rows_per_block=512, num_tasks=2,
     )
     lo, hi = 20, 29
-    got = table_files.scan_table_files(
-        spark, out, "band_n", lo, hi,
+    got = table_files.scan_table_files_where(
+        spark, out, [("between", "band_n", lo, hi)],
         columns=["k", "tag_s", "extra_n", "band_n"],
     )
     assert got.columns == ["k", "tag_s", "extra_n", "band_n"]
@@ -458,20 +460,20 @@ def test_zonemap_scan_projection(spark, tmp_path):
     assert any(r[1] is None for r in rows)
     assert any(r[2] is None for r in rows)
     # projection without the predicate column is legal too
-    slim = table_files.scan_table_files(
-        spark, out, "band_n", lo, hi, columns=["tag_s"]
+    slim = table_files.scan_table_files_where(
+        spark, out, [("between", "band_n", lo, hi)], columns=["tag_s"]
     )
     assert slim.columns == ["tag_s"]
     assert sorted(
         (r["tag_s"] or "") for r in slim.collect()
     ) == sorted((t or "") for _, t, _, _ in want)
     with pytest.raises(ValueError, match="unknown column"):
-        table_files.scan_table_files(
-            spark, out, "band_n", lo, hi, columns=["nope"]
+        table_files.scan_table_files_where(
+            spark, out, [("between", "band_n", lo, hi)], columns=["nope"]
         )
     with pytest.raises(ValueError, match="duplicate"):
-        table_files.scan_table_files(
-            spark, out, "band_n", lo, hi, columns=["k", "k"]
+        table_files.scan_table_files_where(
+            spark, out, [("between", "band_n", lo, hi)], columns=["k", "k"]
         )
 
 
@@ -495,7 +497,8 @@ def test_zonemap_scan_on_order_column(spark, tmp_path):
     )
     st = table_files.zonemap_stats(out, "k", 1000, 1099)
     assert st["blocks_matching"] <= 2 and st["blocks_total"] >= 18
-    got = table_files.scan_table_files(spark, out, "k", 1000, 1099)
+    got = table_files.scan_table_files_where(
+        spark, out, [("between", "k", 1000, 1099)])
     assert got.columns == ["k"] and dict(got.dtypes) == {"k": "int"}
     assert sorted(r["k"] for r in got.collect()) == list(range(1000, 1100))
     with pytest.raises(ValueError, match="int column"):
@@ -532,7 +535,8 @@ def test_agg_pushdown_matches_sql(spark, tmp_path):
         rows_per_block=1024, num_tasks=2,
     )
     lo, hi = 40, 59  # spans full blocks AND boundary blocks
-    got = table_files.agg_table_files(spark, out, "val_n", "band_n", lo, hi)
+    got = table_files.agg_table_files_where(
+        spark, out, "val_n", [("between", "band_n", lo, hi)])
     [r] = got.collect()
     match = [i for i in range(n) if band[i] is not None and lo <= band[i] <= hi]
     vals = [val[i] for i in match if val[i] is not None]
@@ -541,22 +545,23 @@ def test_agg_pushdown_matches_sql(spark, tmp_path):
     assert int(r["sum_val"]) == sum(vals)
     assert (r["min_val"], r["max_val"]) == (min(vals), max(vals))
     # value == predicate column: mask implies validity
-    [r2] = table_files.agg_table_files(
-        spark, out, "band_n", "band_n", lo, hi
+    [r2] = table_files.agg_table_files_where(
+        spark, out, "band_n", [("between", "band_n", lo, hi)]
     ).collect()
     bands = [band[i] for i in match]
     assert (r2["n_rows"], r2["n_vals"]) == (len(match), len(match))
     assert int(r2["sum_val"]) == sum(bands)
     assert (r2["min_val"], r2["max_val"]) == (lo, hi)
     # empty match: SQL shape (0, 0, NULL, NULL, NULL)
-    [r3] = table_files.agg_table_files(
-        spark, out, "val_n", "band_n", 10**6, 2 * 10**6
+    [r3] = table_files.agg_table_files_where(
+        spark, out, "val_n", [("between", "band_n", 10**6, 2 * 10**6)]
     ).collect()
     assert (r3["n_rows"], r3["n_vals"]) == (0, 0)
     assert r3["sum_val"] is None and r3["min_val"] is None
     # a string / unknown predicate or value column is refused
     with pytest.raises(ValueError, match="int column"):
-        table_files.agg_table_files(spark, out, "nope", "band_n", lo, hi)
+        table_files.agg_table_files_where(
+            spark, out, "nope", [("between", "band_n", lo, hi)])
 
 
 def test_agg_pushdown_survives_compaction_and_wide_sums(spark, tmp_path):
@@ -593,8 +598,8 @@ def test_agg_pushdown_survives_compaction_and_wide_sums(spark, tmp_path):
     want = [big[i] for i in range(lo, hi + 1)]
 
     def check():
-        [r] = table_files.agg_table_files(
-            spark, out, "big_n", "k", lo, hi
+        [r] = table_files.agg_table_files_where(
+            spark, out, "big_n", [("between", "k", lo, hi)]
         ).collect()
         assert r["n_rows"] == r["n_vals"] == len(want)
         assert int(r["sum_val"]) == sum(want)
@@ -676,8 +681,8 @@ def test_agg_full_blocks_are_metadata_only(spark, tmp_path, monkeypatch):
     assert got2["val_n"]["n_vals"] == len(want)
     assert any(f.get("val_n") for f in fetched)  # fallback read payload
     # and the Spark-level operator agrees end to end on the old generation
-    [r3] = table_files.agg_table_files(spark, out, "val_n", "k", lo, hi
-                                       ).collect()
+    [r3] = table_files.agg_table_files_where(
+        spark, out, "val_n", [("between", "k", lo, hi)]).collect()
     assert int(r3["sum_val"]) == sum(want)
     # EXPLAIN on the old generation bills the fallback payload exactly
     [ex_old] = table_files.explain_agg_table_files(
@@ -926,8 +931,8 @@ def test_typed_query_operators_match_duckdb(spark, tmp_path):
             "SELECT DISTINCT o_orderdate FROM t").fetchall()
     )
     with pytest.raises(ValueError, match="logical type"):
-        table_files.agg_table_files(
-            spark, out, "o_totalprice", "o_orderkey", 1, 100
+        table_files.agg_table_files_where(
+            spark, out, "o_totalprice", [("between", "o_orderkey", 1, 100)]
         )
     with pytest.raises(ValueError, match="NaN literal"):
         table_files.scan_table_files_where(
@@ -1014,8 +1019,8 @@ def test_decimal_declared_columns_exact_sums(spark, tmp_path, monkeypatch):
         " AS DECIMAL(38,2))/100 FROM t GROUP BY 1 ORDER BY 1"
     ).fetchall()
     for path in _dispatch_paths(monkeypatch):
-        [r] = table_files.agg_table_files(
-            spark, out, "price_n", "k", 100, 4099
+        [r] = table_files.agg_table_files_where(
+            spark, out, "price_n", [("between", "k", 100, 4099)]
         ).collect()
         assert (r.n_rows, r.n_vals, Decimal(str(r.sum_val)),
                 r.min_val, r.max_val) == \
@@ -1270,7 +1275,8 @@ def test_float32_columns_roundtrip_and_scan(spark, tmp_path):
     # float32 decimal: exact sums on the scaled plane
     from decimal import Decimal
 
-    [r] = table_files.agg_table_files(spark, out, "c", "k", 0, n).collect()
+    [r] = table_files.agg_table_files_where(
+        spark, out, "c", [("between", "k", 0, n)]).collect()
     [w] = duck.sql(
         "SELECT CAST(sum(CAST(round(CAST(c AS DOUBLE)*100) AS BIGINT)) "
         "AS DECIMAL(38,2))/100 FROM t"
@@ -1421,8 +1427,8 @@ def test_ctas_propagates_decimal_declarations(spark, tmp_path):
     )
     dtypes = table_files._load_table_schema(dst)["int_col_types"]
     assert dtypes["price"] == "dec2:double"
-    [r] = table_files.agg_table_files(
-        spark, dst, "price", "k", 0, n
+    [r] = table_files.agg_table_files_where(
+        spark, dst, "price", [("between", "k", 0, n)]
     ).collect()
     want = [price[i] for i in range(500, 3500)]
     assert r.n_vals == len(want)
@@ -1643,8 +1649,9 @@ def test_string_eq_scan_dictionary_pruning(spark, tmp_path):
     )
     st = table_files.strdict_stats(out, "tag_s", "rare")
     assert st["blocks_matching"] <= 2 < st["blocks_total"]
-    got = table_files.scan_table_files_eq(
-        spark, out, "tag_s", "rare", columns=["k", "tag_s", "extra_n"]
+    got = table_files.scan_table_files_where(
+        spark, out, [("eq", "tag_s", "rare")],
+        columns=["k", "tag_s", "extra_n"],
     )
     rows = sorted(
         (r["k"], r["tag_s"], r["extra_n"]) for r in got.collect()
@@ -1655,19 +1662,21 @@ def test_string_eq_scan_dictionary_pruning(spark, tmp_path):
     assert rows == want and len(rows) > 0
     assert any(r[2] is None for r in rows)  # projected NULLs preserved
     # a frequent value still returns exactly the SQL-equality rows
-    got7 = table_files.scan_table_files_eq(spark, out, "tag_s", "tag3")
+    got7 = table_files.scan_table_files_where(
+        spark, out, [("eq", "tag_s", "tag3")])
     assert sorted(r["k"] for r in got7.collect()) == [
         i for i in range(n) if tag[i] == "tag3"
     ]
     # absent literal: clean empty result, every block pruned
-    assert table_files.scan_table_files_eq(
-        spark, out, "tag_s", "nope"
+    assert table_files.scan_table_files_where(
+        spark, out, [("eq", "tag_s", "nope")]
     ).count() == 0
     assert table_files.strdict_stats(out, "tag_s", "nope") == {
         "blocks_total": st["blocks_total"], "blocks_matching": 0,
     }
     with pytest.raises(ValueError, match="string column"):
-        table_files.scan_table_files_eq(spark, out, "extra_n", "x")
+        table_files.scan_table_files_where(
+            spark, out, [("eq", "extra_n", "x")])
     with pytest.raises(ValueError, match="string column"):
         table_files.strdict_stats(out, "extra_n", "x")
 
@@ -1704,13 +1713,13 @@ def test_scan_carries_corpus_fsst_symbols(spark, tmp_path):
         order_col="k", int_cols=["k"], str_cols=["tag_s"],
         rows_per_block=512, num_tasks=2, fsst_symbols=syms,
     )
-    got = table_files.scan_table_files(
-        spark, out, "k", 100, 299, columns=["k", "tag_s"]
+    got = table_files.scan_table_files_where(
+        spark, out, [("between", "k", 100, 299)], columns=["k", "tag_s"]
     )
     rows = sorted((r["k"], r["tag_s"]) for r in got.collect())
     assert rows == [(i, tag[i]) for i in range(100, 300)]
-    goteq = table_files.scan_table_files_eq(
-        spark, out, "tag_s", "prefix_common_payload_0007"
+    goteq = table_files.scan_table_files_where(
+        spark, out, [("eq", "tag_s", "prefix_common_payload_0007")]
     )
     assert sorted(r["k"] for r in goteq.collect()) == [
         i for i in range(n) if i % 50 == 7
@@ -1788,7 +1797,8 @@ def test_group_agg_pushdown_matches_sql(spark, tmp_path, monkeypatch):
         # int group with a range predicate (pruned/full/partial blocks)
         check(
             table_files.agg_table_files_by(
-                spark, out, "v", "grp_i", pred_col="k", lo=1000, hi=4000
+                spark, out, "v", "grp_i",
+                preds=[("between", "k", 1000, 4000)],
             ),
             f"SELECT grp_i, count(*), count(v), sum(v), min(v), max(v) "
             f"FROM read_parquet('{raw}') WHERE k BETWEEN 1000 AND 4000 "
@@ -1796,7 +1806,8 @@ def test_group_agg_pushdown_matches_sql(spark, tmp_path, monkeypatch):
         )
         # string group where the predicate prunes everything -> zero groups
         assert table_files.agg_table_files_by(
-            spark, out, "v", "grp_s", pred_col="k", lo=10**9, hi=2 * 10**9
+            spark, out, "v", "grp_s",
+            preds=[("between", "k", 10**9, 2 * 10**9)],
         ).count() == 0
         # group by the value column itself
         check(
@@ -1806,11 +1817,6 @@ def test_group_agg_pushdown_matches_sql(spark, tmp_path, monkeypatch):
         )
         with pytest.raises(ValueError, match="unknown group column"):
             table_files.agg_table_files_by(spark, out, "v", "nope")
-        with pytest.raises(ValueError, match="requires lo and hi"):
-            table_files.agg_table_files_by(spark, out, "v", "grp_s",
-                                           pred_col="k")
-        with pytest.raises(ValueError, match="require pred_col"):
-            table_files.agg_table_files_by(spark, out, "v", "grp_s", lo=1)
 
 
 def test_group_agg_pushdown_survives_compaction(spark, tmp_path):
@@ -1861,7 +1867,7 @@ def test_group_agg_pushdown_survives_compaction(spark, tmp_path):
              None if r["sum_val"] is None else int(r["sum_val"]),
              r["min_val"], r["max_val"])
             for r in table_files.agg_table_files_by(
-                spark, out, "v", "s", pred_col="k", lo=500, hi=3300
+                spark, out, "v", "s", preds=[("between", "k", 500, 3300)]
             ).collect()
         ),
         key=lambda t: (t[0] is not None, t[0]),
@@ -2236,8 +2242,8 @@ def test_in_list_scan_matches_sql(spark, tmp_path):
     def got_rows(vals):
         return sorted(
             (r["k"], r["tag_n"], r["v_n"]) for r in
-            table_files.scan_table_files_in(
-                spark, out, "tag_n", vals,
+            table_files.scan_table_files_where(
+                spark, out, [("in", "tag_n", vals)],
                 columns=["k", "tag_n", "v_n"]).collect()
         )
 
@@ -2252,8 +2258,8 @@ def test_in_list_scan_matches_sql(spark, tmp_path):
         # single literal: IN degenerates to the eq scan exactly
         eq = sorted(
             (r["k"], r["tag_n"], r["v_n"]) for r in
-            table_files.scan_table_files_eq(
-                spark, out, "tag_n", "w05",
+            table_files.scan_table_files_where(
+                spark, out, [("eq", "tag_n", "w05")],
                 columns=["k", "tag_n", "v_n"]).collect()
         )
         assert got_rows(["w05", "w05"]) == eq  # dupes collapse too
@@ -2263,9 +2269,9 @@ def test_in_list_scan_matches_sql(spark, tmp_path):
     assert res["bins_written"] >= 1
     check()
     with pytest.raises(ValueError, match="at least one literal"):
-        table_files.scan_table_files_in(spark, out, "tag_n", [])
+        table_files.scan_table_files_where(spark, out, [("in", "tag_n", [])])
     with pytest.raises(ValueError, match="string column"):
-        table_files.scan_table_files_in(spark, out, "k", ["x"])
+        table_files.scan_table_files_where(spark, out, [("in", "k", ["x"])])
 
 
 def test_str_range_and_prefix_scan_match_sql(spark, tmp_path):
@@ -2316,8 +2322,8 @@ def test_str_range_and_prefix_scan_match_sql(spark, tmp_path):
     def check():
         got = sorted(
             (r["k"], r["tag_n"], r["v_n"]) for r in
-            table_files.scan_table_files_str_range(
-                spark, out, "tag_n", "w05", "w09",
+            table_files.scan_table_files_where(
+                spark, out, [("str_between", "tag_n", "w05", "w09")],
                 columns=["k", "tag_n", "v_n"]).collect()
         )
         want = sorted(duckdb.sql(
@@ -2327,8 +2333,8 @@ def test_str_range_and_prefix_scan_match_sql(spark, tmp_path):
         assert got == want and len(got) > 0
         gotp = sorted(
             (r["k"], r["band_n"]) for r in
-            table_files.scan_table_files_prefix(
-                spark, out, "band_n", "band1",
+            table_files.scan_table_files_where(
+                spark, out, [("prefix", "band_n", "band1")],
                 columns=["k", "band_n"]).collect()
         )
         wantp = sorted(duckdb.sql(
@@ -2337,14 +2343,14 @@ def test_str_range_and_prefix_scan_match_sql(spark, tmp_path):
         ).fetchall())
         assert gotp == wantp and len(gotp) > 0
         # inverted range is SQL-empty; empty prefix is LIKE '%'
-        assert table_files.scan_table_files_str_range(
-            spark, out, "tag_n", "z", "a").count() == 0
+        assert table_files.scan_table_files_where(
+            spark, out, [("str_between", "tag_n", "z", "a")]).count() == 0
         n_all = duckdb.sql(
             f"SELECT count(*) FROM read_parquet('{src}') "
             "WHERE tag_n IS NOT NULL"
         ).fetchone()[0]
-        assert table_files.scan_table_files_prefix(
-            spark, out, "tag_n", "").count() == n_all
+        assert table_files.scan_table_files_where(
+            spark, out, [("prefix", "tag_n", "")]).count() == n_all
 
     check()
 
@@ -2367,9 +2373,11 @@ def test_str_range_and_prefix_scan_match_sql(spark, tmp_path):
     assert res["bins_written"] >= 1
     check()
     with pytest.raises(ValueError, match="string column"):
-        table_files.scan_table_files_str_range(spark, out, "k", "a", "b")
+        table_files.scan_table_files_where(
+            spark, out, [("str_between", "k", "a", "b")])
     with pytest.raises(ValueError, match="string column"):
-        table_files.scan_table_files_prefix(spark, out, "v_n", "x")
+        table_files.scan_table_files_where(
+            spark, out, [("prefix", "v_n", "x")])
 
 
 def test_where_multi_predicate_scan_matches_sql(spark, tmp_path):
@@ -2560,8 +2568,7 @@ def test_agg_where_mixed_predicates_matches_sql(spark, tmp_path):
 
 def test_group_agg_with_conjunctive_preds(spark, tmp_path):
     """GROUP BY pushdown under a predicate CONJUNCTION (int range ×
-    IN-list) must equal plain SQL GROUP BY, NULL group keys pooled; the
-    legacy pred_col form and the preds form are mutually exclusive."""
+    IN-list) must equal plain SQL GROUP BY, NULL group keys pooled."""
     import os
 
     import duckdb
@@ -2620,10 +2627,6 @@ def test_group_agg_with_conjunctive_preds(spark, tmp_path):
         ).fetchall()
     }
     assert got == want and len(got) > 1 and None in got
-    with pytest.raises(ValueError, match="not both"):
-        table_files.agg_table_files_by(
-            spark, out, "v_n", "band_n", pred_col="k", lo=0, hi=9,
-            preds=[("between", "k", 0, 9)])
 
 
 def test_ctas_table_files(spark, tmp_path):
@@ -2677,8 +2680,8 @@ def test_ctas_table_files(spark, tmp_path):
     assert chk["mismatches"] == 0
     got = sorted(
         (r["k"], r["tag_n"], r["v_n"]) for r in
-        table_files.scan_table_files(
-            spark, dst, "k", 0, n, columns=["k", "tag_n", "v_n"]
+        table_files.scan_table_files_where(
+            spark, dst, [("between", "k", 0, n)], columns=["k", "tag_n", "v_n"]
         ).collect()
     )
     want = sorted(duckdb.sql(
@@ -2698,8 +2701,8 @@ def test_ctas_table_files(spark, tmp_path):
     )
     got2 = sorted(
         (r["k"], r["v_n"]) for r in
-        table_files.scan_table_files(
-            spark, dst2, "v_n", 100, 299, columns=["k", "v_n"]
+        table_files.scan_table_files_where(
+            spark, dst2, [("between", "v_n", 100, 299)], columns=["k", "v_n"]
         ).collect()
     )
     want2 = sorted(duckdb.sql(
@@ -2926,8 +2929,8 @@ def test_cluster_encode_improves_pruning(spark, tmp_path):
     for enc in (plain, clus):
         got = sorted(
             (r["k"], r["v_n"]) for r in
-            table_files.scan_table_files(
-                spark, enc, "v_n", 100, 199,
+            table_files.scan_table_files_where(
+                spark, enc, [("between", "v_n", 100, 199)],
                 columns=["k", "v_n"]).collect()
         )
         assert got == want and len(got) > 0
@@ -3691,8 +3694,8 @@ def test_explain_scan_reports_exact_plan(spark, tmp_path):
     assert ex["rows_surviving"] == zs["rows_in_matching"]
     assert ex["rows_total"] == zs["rows_total"] == n
     # the actual scan returns a subset of the surviving rows
-    got = table_files.scan_table_files(
-        spark, out, "k", lo, hi, columns=["k", "v_n"]).count()
+    got = table_files.scan_table_files_where(
+        spark, out, [("between", "k", lo, hi)], columns=["k", "v_n"]).count()
     assert got <= ex["rows_surviving"]
     assert ex["payload_bytes"] > 0
 
@@ -3825,8 +3828,8 @@ def test_query_tasks_fan_out_per_segment(spark, orders_dir, tmp_path):
                 columns=["o_orderkey", "o_orderstatus"],
             ).collect()
         )
-        agg = table_files.agg_table_files(
-            spark, out, "o_custkey", "o_orderkey", 0, 1 << 40
+        agg = table_files.agg_table_files_where(
+            spark, out, "o_custkey", [("between", "o_orderkey", 0, 1 << 40)]
         ).collect()[0].asDict()
         grp = sorted(
             (r["o_orderstatus"], r["n_rows"], str(r["sum_val"]))
@@ -3904,8 +3907,8 @@ def test_recompaction_preserves_segments_and_results(spark, orders_dir,
     assert n_files >= 4
 
     def probe():
-        agg = table_files.agg_table_files(
-            spark, out, "o_custkey", "o_orderkey", 0, 1 << 40
+        agg = table_files.agg_table_files_where(
+            spark, out, "o_custkey", [("between", "o_orderkey", 0, 1 << 40)]
         ).collect()[0].asDict()
         dis = sorted(
             r["o_orderstatus"]
@@ -4361,7 +4364,7 @@ def test_topk_is_one_pass_with_bounded_gather(spark, tmp_path,
     monkeypatch.setattr(table_files, "_DRIVER_LOCAL_MAX_CELLS", 1 << 62)
     monkeypatch.setattr(table_files, "_fetch_payloads", spy_fetch)
     monkeypatch.setattr(table_files, "_task_batches", spy_run)
-    monkeypatch.setattr(table_files, "_run_scan_tasks", no_scan)
+    monkeypatch.setattr(table_files, "scan_table_files_where", no_scan)
     got = table_files.topk_table_files(
         spark, out, "v", k, columns=["k", "v", "s"]).collect()
     assert [(r["k"], r["v"]) for r in got] == duck.sql(

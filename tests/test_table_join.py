@@ -69,12 +69,24 @@ def _oracle(j, extra_where=""):
     ).fetchall()
 
 
-def test_join_matches_sql_and_pushes_runtime_filter(spark, joined):
+def test_join_matches_sql_and_pushes_runtime_filter(spark, joined,
+                                                    monkeypatch):
+    reads = []
+    real_tasks = TF._query_tasks
+
+    def spy_tasks(enc_dir):
+        reads.append(enc_dir)
+        return real_tasks(enc_dir)
+
+    monkeypatch.setattr(TF, "_query_tasks", spy_tasks)
     df, plan = TF.join_table_files(
         spark, joined["fact_enc"], joined["dim_enc"], on="cust",
         columns_a=["o_orderkey", "cents"], columns_b=["segment"],
         return_plan=True,
     )
+    # each side's task table is read once and shared by its bill, the
+    # runtime filter and its scan
+    assert sorted(reads) == sorted([joined["fact_enc"], joined["dim_enc"]])
     got = sorted(
         (r["cust"], r["o_orderkey"], r["cents"], r["segment"])
         for r in df.collect()

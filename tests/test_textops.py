@@ -268,7 +268,8 @@ def test_simhash_neardup_uncapped_default_superset(docs):
     assert capped <= full
 
 
-def test_cleanup_stages_removes_staged_dirs(spark, docs):
+def test_cleanup_stages_removes_staged_dirs(spark, docs, monkeypatch,
+                                            tmp_path):
     """A long-lived service session can reclaim the scratch disk the staged
     near-dup relations use: after the consuming action, cleanup_stages()
     removes every default-staged dir (ADVICE r3 #1)."""
@@ -276,6 +277,9 @@ def test_cleanup_stages_removes_staged_dirs(spark, docs):
     import tempfile
 
     textops.cleanup_stages()  # isolate from earlier tests in the session
+    # stage under this test's own directory, so another process staging
+    # in the shared temp dir at the same time is not counted
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     before = set(glob.glob(f"{tempfile.gettempdir()}/rlv_stage_*"))
     textops.simhash_neardup_pairs(docs, max_bucket=64).collect()
     during = set(glob.glob(f"{tempfile.gettempdir()}/rlv_stage_*"))
